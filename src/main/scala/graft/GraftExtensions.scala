@@ -65,9 +65,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer extension: bin-bucket pure range joins into equi joins
     // when spark.graft.rangeJoin.binSize is set (inert otherwise)
     e.injectOptimizerRule(_ => graft.plans.RangeBinJoin)
-    // whole-operator extension: native exact global row_number (the
-    // distributed-rank idiom as a physical operator) + its opt-in
-    // Window rewrite (spark.graft.distRank.enabled; inert otherwise)
+    // whole-operator extension: native exact global ranking, running
+    // sum and lag/lead (plans/GlobalRank) + its opt-in Window rewrite
+    // (spark.graft.distRank.enabled; inert otherwise)
     e.injectPlannerStrategy(_ => new graft.plans.GlobalRankStrategy)
     e.injectOptimizerRule(_ => graft.plans.GlobalRankRewrite)
   }

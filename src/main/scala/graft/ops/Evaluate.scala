@@ -20,19 +20,17 @@ object Evaluate {
     * SCALABLE form: never a per-row global sort, and no single-partition
     * window at ANY score cardinality. Rows collapse to one row per
     * distinct score (map-side combinable groupBy); the cumulative
-    * negatives-below walk over the distinct-score axis is DISTRIBUTED —
-    * range-partition the per-score frame on the score, cumsum within each
-    * partition in parallel, add broadcast per-partition offsets (the
-    * `agg_gini` distributed-rank idiom; the only global window runs over
-    * the ≤numPartitions offset rows, metadata scale):
+    * negatives-below walk over the distinct-score axis is the native
+    * GlobalRank running sum (one range exchange + a shuffle-read sum
+    * pass). `score` is unique per row after the groupBy, so its ROWS
+    * frame is already a total order, and nn_below = nn_run − nn:
     *
     *   AUC = Σ_s np_s · (nn_below(s) + nn_s / 2) / (npos · nneg)
     *
     * which is the tie-corrected rank-sum. This holds as an OPERATOR
     * property: a truly continuous score (distinct scores ∝ N) costs one
     * extra range shuffle of the collapsed frame, never a driver-sized
-    * sort (round-10 verdict item 3 — the previous form was bounded by the
-    * DATA's quantization, not by construction).
+    * sort.
     *
     * Exactness: null scores/labels are dropped up front (Spark and SQL
     * engines order NULLs differently — they must never reach the rank
@@ -49,21 +47,9 @@ object Evaluate {
       .groupBy(col(scoreCol).as("score"))
       .agg(sum(col(labelCol)).cast("long").as("np"),
         (count(lit(1)) - sum(col(labelCol))).cast("long").as("nn"))
-    val parted = perS.repartitionByRange(
-      scored.sparkSession.sessionState.conf.numShufflePartitions,
-      col("score"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint() // pin pid across the frame's two consumers
-    val offs = parted.groupBy("pid").agg(sum(col("nn")).as("pnn"))
-      .withColumn("offset", coalesce(sum(col("pnn")).over(
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-    val cum = parted
-      .join(broadcast(offs.select("pid", "offset")), "pid")
-      .withColumn("nn_below", col("offset") +
-        coalesce(sum(col("nn")).over(Window.partitionBy("pid")
-          .orderBy("score").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
+    val cum = graft.plans.GlobalRank.withRunningSum(perS, "nn_run", "nn",
+        ("score", true))
+      .withColumn("nn_below", col("nn_run") - col("nn"))
     cum.agg(
         sum(col("np").cast("decimal(38,0)") *
           (col("nn_below") * 2 + col("nn"))).as("usum2"),

@@ -51,13 +51,10 @@ object RankMode {
   case object CumeDist extends RankMode
 }
 
-/** Native exact global ranking — the physical form of the repo's
-  * distributed-rank idiom (`graft.core.DistRank`, built for `agg_gini`,
-  * re-planned into `eval_auc`/`events_rfm`/`ann_rrf_fusion`), lifted into
-  * a whole-operator Catalyst extension so the NAMED scale-killer shape
+/** Native exact global ranking — graft's one ranking primitive, a
+  * whole-operator Catalyst extension for the NAMED scale-killer shape
   * (`row_number()/rank()/dense_rank() OVER (ORDER BY …)` with no
-  * partition spec — Spark plans it as ONE task sorting the entire frame)
-  * has a first-class operator instead of a seven-step DataFrame recipe.
+  * partition spec — Spark plans it as ONE task sorting the entire frame).
   *
   * Physical plan: the child range-partitions on the sort order (the same
   * exchange a global sort pays — `OrderedDistribution`, EnsureRequirements
@@ -89,11 +86,9 @@ object RankMode {
   * arithmetic above reproduces the single-partition window semantics for
   * ANY sampled boundary choice — ties that span a partition boundary are
   * exactly what the rank/dense_rank fixups repair, and row_number splits
-  * them arbitrarily like `DistRank` (callers pass a total order for
-  * deterministic output). Unlike the DataFrame recipe this operator needs
-  * no `localCheckpoint` pid-pinning: offsets come from a job over the
-  * SAME RDD instance, not from a `spark_partition_id` column that two
-  * plan branches must agree on.
+  * them arbitrarily (callers pass a total order for deterministic
+  * output). Offsets come from a job over the SAME RDD instance that the
+  * map pass streams, so partition placement needs no pinning.
   *
   * At 100 TB: one range exchange (∝ N/partitions per task) + one
   * shuffle-read summary pass, vs the window form's single task holding
@@ -766,24 +761,33 @@ object GlobalRank {
       spark.experimental.extraStrategies = es :+ new GlobalRankStrategy
   }
 
-  private def build(df: DataFrame, outCol: String, mode: RankMode,
-      keys: Seq[(String, Boolean)], dt: DataType = LongType): DataFrame = {
+  /** Resolves `df`'s analyzed plan, its columns by name and the sort
+    * order of `keys`, and wraps the node `mk` builds from them. */
+  private def native(df: DataFrame, keys: Seq[(String, Boolean)])(
+      mk: (LogicalPlan, String => Attribute, Seq[SortOrder]) => LogicalPlan)
+      : DataFrame = {
     val spark = df.sparkSession
     ensureStrategy(spark)
     val plan = df.queryExecution.analyzed
-    val order = keys.map { case (n, asc) =>
-      val a = plan.output.find(_.name == n).getOrElse(
+    def attr(n: String): Attribute =
+      plan.output.find(_.name == n).getOrElse(
         throw new IllegalArgumentException(
           s"column $n not in ${plan.output.map(_.name).mkString(",")}"))
-      SortOrder(a, if (asc) Ascending else Descending)
+    val order = keys.map { case (n, asc) =>
+      SortOrder(attr(n), if (asc) Ascending else Descending)
     }
-    GraftInternal.ofRows(spark, GlobalRankPlan(plan, order,
-      AttributeReference(outCol, dt, nullable = false)(), mode))
+    GraftInternal.ofRows(spark, mk(plan, attr, order))
   }
 
+  private def build(df: DataFrame, outCol: String, mode: RankMode,
+      keys: Seq[(String, Boolean)], dt: DataType = LongType): DataFrame =
+    native(df, keys) { (plan, _, order) =>
+      GlobalRankPlan(plan, order,
+        AttributeReference(outCol, dt, nullable = false)(), mode)
+    }
+
   /** `df` plus LONG column `outCol` = exact global 1-based row_number
-    * under `keys` ((column, ascending) pairs — pass a total order). The
-    * native twin of `DistRank.withRowNumber`.
+    * under `keys` ((column, ascending) pairs — pass a total order).
     */
   def withRowNumber(df: DataFrame, outCol: String,
       keys: (String, Boolean)*): DataFrame =
@@ -849,19 +853,11 @@ object GlobalRank {
       offset: Int, isLag: Boolean,
       keys: Seq[(String, Boolean)]): DataFrame = {
     require(offset > 0, s"shift offset must be positive (got $offset)")
-    val spark = df.sparkSession
-    ensureStrategy(spark)
-    val plan = df.queryExecution.analyzed
-    def attr(n: String): Attribute =
-      plan.output.find(_.name == n).getOrElse(
-        throw new IllegalArgumentException(
-          s"column $n not in ${plan.output.map(_.name).mkString(",")}"))
-    val v = attr(valueCol)
-    val order = keys.map { case (n, asc) =>
-      SortOrder(attr(n), if (asc) Ascending else Descending)
+    native(df, keys) { (plan, attr, order) =>
+      val v = attr(valueCol)
+      GlobalShiftPlan(plan, order, v, offset, isLag,
+        AttributeReference(outCol, v.dataType, nullable = true)())
     }
-    GraftInternal.ofRows(spark, GlobalShiftPlan(plan, order, v, offset,
-      isLag, AttributeReference(outCol, v.dataType, nullable = true)()))
   }
 
   /** `df` plus LONG column `outCol` = exact global running sum of LONG
@@ -871,22 +867,13 @@ object GlobalRank {
     * exchange + a shuffle-read sum pass, never a single-task window.
     */
   def withRunningSum(df: DataFrame, outCol: String, valueCol: String,
-      keys: (String, Boolean)*): DataFrame = {
-    val spark = df.sparkSession
-    ensureStrategy(spark)
-    val plan = df.queryExecution.analyzed
-    def attr(n: String): Attribute =
-      plan.output.find(_.name == n).getOrElse(
-        throw new IllegalArgumentException(
-          s"column $n not in ${plan.output.map(_.name).mkString(",")}"))
-    val v = attr(valueCol)
-    require(v.dataType == LongType,
-      s"withRunningSum needs a LONG value column (got ${v.dataType} " +
-        "for $valueCol — pre-scale decimals to exact integer units)")
-    val order = keys.map { case (n, asc) =>
-      SortOrder(attr(n), if (asc) Ascending else Descending)
+      keys: (String, Boolean)*): DataFrame =
+    native(df, keys) { (plan, attr, order) =>
+      val v = attr(valueCol)
+      require(v.dataType == LongType,
+        s"withRunningSum needs a LONG value column (got ${v.dataType} " +
+          s"for $valueCol — pre-scale decimals to exact integer units)")
+      GlobalPrefixSumPlan(plan, order, v,
+        AttributeReference(outCol, LongType, nullable = false)())
     }
-    GraftInternal.ofRows(spark, GlobalPrefixSumPlan(plan, order, v,
-      AttributeReference(outCol, LongType, nullable = false)()))
-  }
 }

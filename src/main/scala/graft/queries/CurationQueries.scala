@@ -266,33 +266,17 @@ object CurationQueries {
     // Balanced shard assignment: size-sorted round-robin (the classic
     // "sort descending, deal like cards" heuristic — within 1 max-item
     // of perfect token balance) into 8 training shards, so no shard
-    // drags a data-parallel epoch. The global size rank is DISTRIBUTED
-    // via the agg_gini idiom (range-partition on the sort key,
-    // row_number within partitions, broadcast pid offsets) — no
-    // single-partition window at any corpus size; the oracle computes
-    // the same rank with a plain window, proving the distributed rank
-    // exact. Output: the 8-row shard census.
+    // drags a data-parallel epoch. The global size rank is the native
+    // GlobalRank row_number (one range exchange + a shuffle-read summary
+    // pass) — no single-partition window at any corpus size; the oracle
+    // computes the same rank with a plain window, proving the native
+    // rank exact. Output: the 8-row shard census.
     QueryDef("curation_shard_balance",
       (s, dir) => {
         val docs = Tables.read(s, dir, "documents")
           .select(col("doc_id"), col("n_chars"))
-        val parted = docs
-          .repartitionByRange(
-            s.sessionState.conf.numShufflePartitions,
-            col("n_chars").desc, col("doc_id"))
-          .withColumn("pid", spark_partition_id())
-          .localCheckpoint()
-        val offs = parted.groupBy("pid").agg(count(lit(1)).as("cnt"))
-          .withColumn("offset", coalesce(sum("cnt").over(
-            Window.orderBy("pid")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        val ranked = parted
-          .join(broadcast(offs.select("pid", "offset")), "pid")
-          .withColumn("rnk", row_number().over(
-            Window.partitionBy("pid")
-              .orderBy(col("n_chars").desc, col("doc_id")))
-            .cast("long") + col("offset"))
-        ranked
+        graft.plans.GlobalRank.withRowNumber(docs, "rnk",
+            ("n_chars", false), ("doc_id", true))
           .groupBy(pmod(col("rnk") - 1, lit(8)).as("shard"))
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("n_chars"),

@@ -331,10 +331,9 @@ object FunctionQueries {
             "qcut") < 500)
           .select(col("l_extendedprice").as("x"),
             col("l_orderkey").as("k1"), col("l_linenumber").as("k2"))
-        // r15: the native global-rank operator (range exchange + summary
-        // pass) replaces the inlined DistRank recipe — no pid-pinning
-        // checkpoint action, no offset window/broadcast. n comes from one
-        // count agg over the same sample (scan-pruned to the 3 key cols).
+        // Exact rank via the native global-rank operator (one range
+        // exchange + a shuffle-read summary pass). n comes from one count
+        // agg over the same sample (scan-pruned to the 3 key cols).
         val nrow = sampled.agg(count(lit(1)).as("n"))
         val ranked = graft.plans.GlobalRank.withRowNumber(sampled, "rnk",
           ("x", true), ("k1", true), ("k2", true))
@@ -432,35 +431,20 @@ object FunctionQueries {
     // Gini coefficient of customer revenue concentration — the scalar
     // inequality twin of the Pareto readout: G = (2·Σ rank·x −
     // (n+1)·Σx) / (n·Σx) over customers ranked by revenue ascending.
-    // The global rank is DISTRIBUTED: range-partition the per-customer
-    // aggregate on the sort key, row_number WITHIN each partition in
-    // parallel, add broadcast per-partition offsets (the offsets window
-    // runs over ≤32 partition-count rows, metadata scale) — no
-    // single-partition window at any cardinality. The partitioned frame
-    // is checkpointed so spark_partition_id is consistent across its
-    // two consumers. Rank-weighted sums run in DECIMAL(38,0)/HUGEINT
-    // (rank·cents sums past int64 already at ~1e6 customers) with the
-    // truncating ppm division mirrored in both engines.
+    // The global rank is the native GlobalRank row_number (one range
+    // exchange + a shuffle-read summary pass) — no single-partition
+    // window at any cardinality. Rank-weighted sums run in
+    // DECIMAL(38,0)/HUGEINT (rank·cents sums past int64 already at ~1e6
+    // customers) with the truncating ppm division mirrored in both
+    // engines.
     QueryDef("agg_gini",
       (s, dir) => {
         val rev = Tables.read(s, dir, "orders")
           .groupBy("o_custkey")
           .agg((sum(col("o_totalprice").cast("decimal(18,2)")) * 100)
             .cast("long").as("cents"))
-        val parted = rev
-          .repartitionByRange(s.sessionState.conf.numShufflePartitions,
-            col("cents"), col("o_custkey"))
-          .withColumn("pid", spark_partition_id())
-          .localCheckpoint()
-        val offs = parted.groupBy("pid").agg(count(lit(1)).as("cnt"))
-          .withColumn("offset", coalesce(sum("cnt").over(
-            Window.orderBy("pid")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        val ranked = parted
-          .join(broadcast(offs.select("pid", "offset")), "pid")
-          .withColumn("rnk", row_number().over(
-            Window.partitionBy("pid").orderBy("cents", "o_custkey"))
-            .cast("long") + col("offset"))
+        val ranked = graft.plans.GlobalRank.withRowNumber(rev, "rnk",
+          ("cents", true), ("o_custkey", true))
         ranked.agg(count(lit(1)).as("n"),
             sum("cents").cast("decimal(38,0)").as("t"),
             sum(col("rnk").cast("decimal(38,0)") * col("cents")).as("sr"))

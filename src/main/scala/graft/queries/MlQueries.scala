@@ -879,13 +879,11 @@ object MlQueries {
             datediff(col("gday"), col("uday")).as("rec"),
             col("freq"), col("mon"))
           .localCheckpoint() // one user agg feeds three rank exchanges
-        // r15: the three exact quintiles ride the NATIVE global-rank
-        // operator in NTile mode (plans/GlobalRank, the same operator
-        // text_perplexity_bucket gates against a plain-ntile oracle)
-        // instead of the seven-step DistRank recipe — identical bucket
-        // rule (first n%k buckets take ceil(n/k) rows), but no per-rank
-        // pid-pinning checkpoint action, no offset window + broadcast,
-        // and no separate n_tot count subplan: one range exchange + one
+        // The three exact quintiles ride the NATIVE global-rank operator
+        // in NTile mode (plans/GlobalRank, the same operator
+        // text_perplexity_bucket gates against a plain-ntile oracle):
+        // Spark's bucket rule (first n%k buckets take ceil(n/k) rows),
+        // with no separate n_tot count subplan — one range exchange + one
         // shuffle-read summary pass per metric.
         val rr = graft.plans.GlobalRank.withNTile(
           u.select("user_id", "rec"), "r_q", 5,
@@ -964,9 +962,8 @@ object MlQueries {
             sum(col("value").cast("decimal(20,6)")).cast("double")
               .as("mon"))
           .localCheckpoint() // one user agg feeds both rank exchanges
-        // r15: native global row_number (plans/GlobalRank) — same exact
-        // rank under the same total order as the DistRank recipe, minus
-        // the pid-pinning checkpoint action and offset broadcast per rank
+        // Exact ranks via the native global row_number (plans/GlobalRank):
+        // one range exchange + one shuffle-read summary pass per rank
         val ra = graft.plans.GlobalRank.withRowNumber(
           u.select("user_id", "mon"), "ra",
           ("mon", false), ("user_id", true)).select("user_id", "ra")

@@ -1417,19 +1417,18 @@ object PipelineQueries {
 
     // Fluency deciles over the corpus's own bigram-LM score (the
     // text_ngram_lm surface bucketed for curation): EXACT decile of every
-    // scored doc via the NATIVE distributed row_number operator
+    // scored doc via the NATIVE global-rank operator's NTile mode
     // (plans/GlobalRank — range exchange + count pass; no
-    // single-partition window at any N) + ntile's integer bucket rule
-    // from (rank, total), so the plain-ntile oracle gates the
-    // distributed plan exactly. The perplexity-filter step of a curation
+    // single-partition window at any N), whose bucket rule is Spark's
+    // ntile, so the plain-ntile oracle gates the distributed plan
+    // exactly. The perplexity-filter step of a curation
     // pipeline: drop/downweight the bottom deciles.
     QueryDef("text_perplexity_bucket",
       (s, dir) => {
         val lm = TextAnalysis.bigramLmScore(Tables.read(s, dir, "documents"))
           .select("doc_id", "n_bigrams", "avg_p_ppm")
-        // round-13 re-plan: the native NTile mode computes the decile
-        // from position + the summary pass's total — the rank + count
-        // subplan + ntileFromRank composition collapses into ONE operator
+        // The native NTile mode computes the decile from position + the
+        // summary pass's total — ONE operator, no rank + count subplan
         graft.plans.GlobalRank.withNTile(lm, "decile", 10,
             ("avg_p_ppm", true), ("doc_id", true))
           .select(col("decile"), col("n_bigrams"), col("avg_p_ppm"))

@@ -225,6 +225,15 @@ class GlobalRankSpec extends SparkSpec {
         ("event_id", true)).queryExecution.executedPlan
       assert(phys.collectFirst { case w: WindowExec => w }.isEmpty)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    // the value column must be LONG, and the refusal names it
+    val err = intercept[IllegalArgumentException] {
+      GlobalRank.withRunningSum(o.withColumn("dbl", col("micros") / 2),
+        "run", "dbl", ("event_id", true))
+    }
+    assert(err.getMessage.contains("for dbl"), err.getMessage)
+    // a zero-row frame: the sum pass runs over no data, no rows come out
+    assert(GlobalRank.withRunningSum(o.filter(lit(false)), "run", "micros",
+      ("event_id", true)).collect().isEmpty)
   }
 
   test("percent_rank/cume_dist modes match the window form on tie-heavy " +

@@ -69,23 +69,27 @@ class MlOpsSpec extends SparkSpec {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(r.getLong(0) == pos.size && r.getLong(1) == neg.length)
     assert(r.getDouble(2) == want)
-    // plan shape: every global (empty-partition-spec) window must run
-    // over the pid-offsets metadata frame (an aggregate keyed by pid,
-    // ≤ numPartitions rows), never the per-score frame
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
+    // plan shape: no global (empty-partition-spec) window at all — the
+    // negatives-below walk is exactly one native prefix-sum operator
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    import graft.plans.GlobalPrefixSumPlan
     val plan = Evaluate.aucByScore(df, "score", "label")
       .queryExecution.optimizedPlan
     val globalWindows = plan.collect {
       case w: LWindow if w.partitionSpec.isEmpty => w
     }
-    assert(globalWindows.nonEmpty, "expected the bounded offsets window")
-    globalWindows.foreach { w =>
-      val aggKeys = w.child.collect { case a: Aggregate =>
-        a.groupingExpressions.map(_.sql).mkString(",")
-      }
-      assert(aggKeys.exists(_.contains("pid")),
-        s"global window must consume only the pid-offset frame:\n$w")
-    }
+    assert(globalWindows.isEmpty,
+      s"unexpected global window:\n${globalWindows.mkString("\n")}")
+    assert(plan.collect { case p: GlobalPrefixSumPlan => p }.size == 1,
+      s"expected exactly one GlobalPrefixSumPlan:\n$plan")
+  }
+
+  test("aucByScore: an empty scored frame gives one all-NULL row") {
+    import spark.implicits._
+    val empty = Seq.empty[(Double, Int)].toDF("score", "label")
+    val rows = Evaluate.aucByScore(empty, "score", "label").collect()
+    assert(rows.length == 1)
+    assert((0 until 3).forall(rows.head.isNullAt))
   }
 
   test("periodStrength: a constant series yields NULL strength, not NaN") {

@@ -320,13 +320,15 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("eval_auc: the cumulative window sees per-score partials, not rows") {
-    // the aggregate must run BELOW the window: plan order (bottom-up) is
-    // scan → partial/final agg on score → single-partition window
+    // the aggregate must run BELOW the cumulative walk: plan order
+    // (bottom-up) is scan → partial/final agg on score → the native
+    // running sum (GlobalPrefixSum), and no single-partition window at all
     val plan = executed(SparkEntry.queries("eval_auc")(spark, sf)).toString
     val aggIdx = plan.lastIndexOf("HashAggregate")
-    val winIdx = plan.indexOf("Window")
-    assert(winIdx >= 0 && aggIdx > winIdx,
-      s"score aggregation must feed the window, not follow it:\n$plan")
+    val walkIdx = plan.indexOf("GlobalPrefixSum")
+    assert(walkIdx >= 0 && aggIdx > walkIdx,
+      s"score aggregation must feed the running sum, not follow it:\n$plan")
+    assert(!plan.contains("Window"), s"unexpected window:\n$plan")
   }
 
   test("ts_holt_forecast / ts_period_detect: the stream collapses to the " +

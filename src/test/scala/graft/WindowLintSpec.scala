@@ -13,13 +13,12 @@ import org.apache.spark.sql.execution.window.WindowExec
   * A global window IS legitimate when its input is bounded by
   * construction, independent of data volume; each allowlisted query names
   * which bounded class its global frame belongs to:
-  *  - pid-offset frames: the `spark.sql.shuffle.partitions`-row
-  *    per-partition-count table of the DistRank/eval_auc idiom;
   *  - post-TakeOrdered heads: a ≤k-row top-k already reduced by
   *    TakeOrderedAndProject;
   *  - domain grids: hour-of-day / bucket / calendar-day frames whose
   *    cardinality is fixed by the domain, not the corpus.
-  * Anything else must partition its windows (or re-plan onto DistRank).
+  * Anything else must partition its windows (or re-plan onto the native
+  * `graft.plans.GlobalRank` operator).
   */
 class WindowLintSpec extends SparkSpec {
 
@@ -29,16 +28,8 @@ class WindowLintSpec extends SparkSpec {
     * honest when a query re-plans its window away.
     */
   private val allowlist: Map[String, String] = Map(
-    // pid-offset frames (≤ spark.sql.shuffle.partitions rows by
-    // construction — the DistRank/eval_auc idiom's offset table)
-    "agg_gini" -> "pid-offset",
-    "eval_auc" -> "pid-offset",
-    "curation_shard_balance" -> "pid-offset",
-    "events_rfm" -> "pid-offset (3 rank exchanges)",
-    "ann_rrf_fusion" -> "pid-offset (2 rank exchanges)",
-    "fn_quantile_bucket" -> "pid-offset (sampled-cut rank)",
-    "agg_pareto_share" -> "pid-offset",
     // post-limit / top-k heads (≤ k rows after TakeOrderedAndProject)
+    "agg_pareto_share" -> "50-row post-TakeOrdered head",
     "agg_skyline" -> "post-TakeOrdered head",
     "curation_js_divergence" -> "2-row top-source head",
     "text_bm25" -> "3-row query-term head (rank over top-df terms)",
@@ -73,7 +64,7 @@ class WindowLintSpec extends SparkSpec {
       }
       assert(offenders.isEmpty,
         s"unpartitioned WindowExec outside the allowlist: $offenders — " +
-          "re-plan onto DistRank or justify the bounded frame here")
+          "re-plan onto GlobalRank or justify the bounded frame here")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
