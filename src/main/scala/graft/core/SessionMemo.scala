@@ -17,6 +17,12 @@ import org.apache.spark.sql.SparkSession
   * computes its rows from the parquet inputs. Keys include the session
   * object, and entries of stopped sessions are swept on access, so spec
   * suites that stop/recreate sessions can never see a stale binding.
+  *
+  * Bodies may nest (an artifact builder asks for fingerprints and scans
+  * of other artifacts), so the body runs OUTSIDE the map: get, compute,
+  * then `putIfAbsent`, whose winner every racing caller returns. Two
+  * callers that miss together both compute, which is harmless because
+  * every memoized value is a pure function of immutable inputs.
   */
 object SessionMemo {
 
@@ -24,6 +30,12 @@ object SessionMemo {
 
   def apply[T <: AnyRef](s: SparkSession, key: String)(body: => T): T = {
     m.keySet.removeIf(_._1.sparkContext.isStopped)
-    m.computeIfAbsent((s, key), _ => body).asInstanceOf[T]
+    val k = (s, key)
+    val hit = m.get(k)
+    if (hit != null) hit.asInstanceOf[T]
+    else {
+      val v = body
+      Option(m.putIfAbsent(k, v)).getOrElse(v).asInstanceOf[T]
+    }
   }
 }

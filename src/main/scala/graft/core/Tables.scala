@@ -31,14 +31,13 @@ object Tables {
 
   /** Memoized row count of one logical table — the sizing input the
     * adaptive operators (bits-per-band, simhash block count, tf-idf's N)
-    * and the count-keyed fixture fingerprints read at plan-construction
-    * time. The binding is immutable for the life of a session (the
+    * read at plan-construction time. The binding is immutable for the life of a session (the
     * resolved-scan-memo invariant in [[Catalog.read]]), so the count is
     * SessionMemo'd per (session, path): ONE metadata-cheap count job the
     * first time any sizing rule asks, zero actions afterwards. This is
     * metadata reuse in the nodesWithCount/fingerprint discipline, not
     * result caching — consumers use the number only to pick operator
-    * parameters or fixture keys; every query action still computes its
+    * parameters; every query action still computes its
     * rows from the parquet inputs.
     */
   def rowCount(spark: SparkSession, sfDir: String, name: String): Long =

@@ -4,6 +4,8 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.Artifacts
+
 /** Table maintenance: small-file compaction. Long-lived lakes accumulate
   * tiny files (per-micro-batch appends, over-parallel writers, partition
   * skew); at 100 TB a scan's task count — and the namenode/liststatus
@@ -27,11 +29,6 @@ object Maintenance {
   private def parquetFiles(dir: File): Array[File] =
     Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-
-  private def deleteRecursively(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
 
   /** Rewrite the parquet files under `inPath` as ~`targetBytes` files at
     * `outPath`. Sizing is driver-side METADATA (a file listing — O(#files)
@@ -77,12 +74,12 @@ object Maintenance {
     }
     if (!stage.renameTo(out)) {
       if (old.exists()) old.renameTo(out) // roll back the previous copy
-      deleteRecursively(stage)
+      Artifacts.delete(stage)
       require(requirement = false,
         s"atomic publish to $outPath failed (staged data discarded, " +
           "previous output restored)")
     }
-    deleteRecursively(old)
+    Artifacts.delete(old)
     CompactStats(inFiles.length.toLong, inBytes,
       parquetFiles(out).length.toLong, rows)
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.{Skew, Tables}
+import graft.core.{Artifacts, Skew, Tables}
 import graft.streaming.Streams
 
 /** Source/skew/session operators beyond the core inventory: the DSv2
@@ -18,44 +18,33 @@ object ExtraQueries {
   private val tsFmtSpark = "yyyy-MM-dd HH:mm:ss.SSSSSS"
   private val tsFmtDuck = "%Y-%m-%d %H:%M:%S.%f"
 
-  private def deleteRecursively(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
-
   /** Materialize the events table as daily JSONL "pages" (the simulated
-    * remote paged API) — once per sf dir.
+    * remote paged API) once per corpus, and return the pages directory.
     *
     * The pages are produced by a distributed Spark JSON write partitioned
-    * by day: executors write every byte; the driver only renames the part
+    * by day: executors write every byte; the driver only moves the part
     * files into the `page_<i>_<minDay>_<maxDay>.jsonl` layout RestSource
     * indexes (pure metadata ops, O(#files) regardless of data volume — no
     * `collect()`, so the fixture scales with the cluster, not the driver
     * heap). A day may yield several part files; each becomes its own page,
-    * which is exactly how a real paged API behaves. The staging → rename →
-    * atomic directory move keeps a concurrent reader from ever seeing a
-    * half-built page set.
+    * which is exactly how a real paged API behaves. `Artifacts.materialize`
+    * publishes the finished page set atomically.
     */
-  private def ensurePages(s: org.apache.spark.sql.SparkSession,
+  private[graft] def ensurePages(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val pages = s"/tmp/graft_rest_pages_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
-    val root = new File(pages)
-    if (!root.exists()) {
-      val stage = new File(pages + "_stage")
-      val built = new File(pages + "_build")
-      deleteRecursively(stage)
-      deleteRecursively(built)
-      Tables.read(s, dir, "events")
-        .select(col("event_id"), date_format(col("ts"), tsFmtSpark).as("ts"),
+    val ev = Tables.read(s, dir, "events")
+      .select("event_id", "ts", "event_type", "value")
+    Artifacts.materialize(Artifacts.key("rest_pages", dir, ev)) { stage =>
+      val json = new File(stage, "_json")
+      ev.select(col("event_id"), date_format(col("ts"), tsFmtSpark).as("ts"),
           col("event_type"), col("value"),
           date_format(col("ts"), "yyyyMMdd").as("day"))
         .repartition(col("day"))
         .sortWithinPartitions("day", "event_id")
-        .write.mode("overwrite").partitionBy("day")
-        .json(stage.getAbsolutePath)
-      built.mkdirs()
+        .write.partitionBy("day")
+        .json(json.getPath)
       var i = 0
-      Option(stage.listFiles()).getOrElse(Array.empty)
+      Option(json.listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith("day="))
         .sortBy(_.getName)
         .foreach { dayDir =>
@@ -63,16 +52,13 @@ object ExtraQueries {
           dayDir.listFiles().filter(_.getName.startsWith("part-"))
             .sortBy(_.getName)
             .foreach { part =>
-              require(part.renameTo(
-                new File(built, f"page_${i}%03d_${day}_$day.jsonl")),
-                s"rename failed for $part")
+              java.nio.file.Files.move(part.toPath,
+                new File(stage, f"page_${i}%03d_${day}_$day.jsonl").toPath)
               i += 1
             }
         }
-      require(built.renameTo(root), s"atomic move to $root failed")
-      deleteRecursively(stage)
+      Artifacts.delete(json)
     }
-    pages
   }
 
   val all: Seq[QueryDef] = Seq(
@@ -144,39 +130,26 @@ object ExtraQueries {
     // column that v2 added; a mergeSchema scan unions both layouts with
     // NULL back-fill — the long-lived-lake read path (the reference's
     // CSV loaders evolve headers the same way, SURVEY §2 F8). The
-    // two-generation layout is a once-per-dir fixture (same discipline as
-    // the REST pages: build to a staging dir, atomic rename); the
-    // declared query times the READ, not the write.
+    // two-generation layout is a once-per-corpus artifact
+    // (Artifacts.materialize); the declared query times the READ, not the
+    // write.
     QueryDef("scan_schema_evolution",
       (s, dir) => {
         val o = Tables.read(s, dir, "orders")
           .withColumn("yr", year(col("o_orderdate")))
-        // Key the fixture on a data fingerprint (row count) as well as the
-        // path, so a regenerated dataset at the same dir can never be
-        // served a stale fixture while the oracle reads the live table.
-        // (withColumn is row-preserving, so the table count IS o's count.)
-        val fp = Tables.rowCount(s, dir, "orders")
-        val root = new File(
-          s"/tmp/graft_evo_${dir.replaceAll("[^0-9a-zA-Z]", "_")}_$fp")
-        if (!root.exists()) {
-          // unique stage per attempt: concurrent builders never collide
-          val stage = new File(root.getPath + s"_stage_${System.nanoTime()}")
+        val root = Artifacts.materialize(Artifacts.key("evo", dir,
+            o.select("o_orderkey", "o_custkey", "o_totalprice",
+              "o_orderpriority", "yr"))) { stage =>
           o.filter(col("yr") < 1995)
             .select("o_orderkey", "o_custkey", "o_totalprice")
-            .write.parquet(stage.getPath + "/v1")
+            .write.parquet(s"$stage/v1")
           o.filter(col("yr") >= 1995)
             .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
               col("o_orderpriority")) // the evolved column
-            .write.parquet(stage.getPath + "/v2")
-          if (!stage.renameTo(root)) {
-            deleteRecursively(stage)
-            // losing a rename race to a concurrent builder is fine; any
-            // other rename failure must fail loudly, not read nothing
-            require(root.exists(), s"atomic move to $root failed")
-          }
+            .write.parquet(s"$stage/v2")
         }
         s.read.option("mergeSchema", "true")
-          .parquet(root.getPath + "/v1", root.getPath + "/v2")
+          .parquet(s"$root/v1", s"$root/v2")
           .groupBy(coalesce(col("o_orderpriority"), lit("<pre-schema>"))
             .as("priority"))
           .agg(count(lit(1)).as("n_orders"),
@@ -269,22 +242,13 @@ object ExtraQueries {
     QueryDef("maintenance_compact",
       (s, dir) => {
         val ev = Tables.read(s, dir, "events")
-        val fp = Tables.rowCount(s, dir, "events")
-        val frag = new File(
-          s"/tmp/graft_frag_${dir.replaceAll("[^0-9a-zA-Z]", "_")}_$fp")
-        if (!frag.exists()) {
-          val stage = new File(frag.getPath + s"_stage_${System.nanoTime()}")
-          ev.repartition(64).write.parquet(stage.getPath)
-          if (!stage.renameTo(frag)) {
-            deleteRecursively(stage)
-            require(frag.exists(), s"atomic move to $frag failed")
-          }
+        val frag = Artifacts.materialize(Artifacts.key("frag", dir, ev)) {
+          ev.repartition(64).write.parquet(_)
         }
-        val compacted = new File(frag.getPath + "_compacted")
+        val compacted = new File(frag + "_compacted")
         if (!compacted.exists())
-          graft.ops.Maintenance.compact(s, frag.getPath,
-            compacted.getPath, 8L << 20)
-        graft.core.Fixtures.scan(s, compacted.getPath)
+          graft.ops.Maintenance.compact(s, frag, compacted.getPath, 8L << 20)
+        Artifacts.scan(s, compacted.getPath)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_events"),
             sum(col("value").cast("decimal(18,6)")).cast("double")
@@ -304,10 +268,8 @@ object ExtraQueries {
     QueryDef("scan_time_travel",
       (s, dir) => {
         val o = Tables.read(s, dir, "orders")
-        val fp = Tables.rowCount(s, dir, "orders")
-        // split year in the key: the fixture layout is a function of it
-        val root =
-          s"/tmp/graft_tt_${dir.replaceAll("[^0-9a-zA-Z]", "_")}_${fp}_y1998"
+        // split year in the kind: the fixture layout is a function of it
+        val root = Artifacts.key("tt_y1998", dir, o)
         if (graft.ops.Txn.latestVersion(root) < 1) {
           if (graft.ops.Txn.latestVersion(root) < 0)
             graft.ops.Txn.commit(s, root,
@@ -346,33 +308,19 @@ object ExtraQueries {
       (s, dir) => {
         val o = Tables.read(s, dir, "orders")
           .withColumn("o_orderdate", to_date(col("o_orderdate")))
-        val head = o.agg(
-          count(lit(1)), min(col("o_orderdate")),
-          sum(xxhash64(col("o_orderkey"), col("o_orderdate")))).first()
-        val fp = s"${head.getLong(0)}_${java.lang.Long.toHexString(head.getLong(2))}"
-        val lo = java.sql.Date.valueOf(head.getDate(1).toLocalDate.plusYears(1))
-        val hi = java.sql.Date.valueOf(
-          head.getDate(1).toLocalDate.plusYears(2).minusDays(1))
-        val root = new File(
-          s"/tmp/graft_zonemap_${dir.replaceAll("[^0-9a-zA-Z]", "_")}_$fp")
-        val tablePath = s"${root.getPath}/table"
-        val statsPath = s"${root.getPath}/stats"
-        if (!root.exists()) {
-          val stage = new File(root.getPath + s"_stage_${System.nanoTime()}")
-          o.repartitionByRange(16, col("o_orderdate"))
-            .sortWithinPartitions("o_orderdate")
-            .write.parquet(s"${stage.getPath}/table")
-          graft.io.StatsIndex.build(s, s"${stage.getPath}/table",
-              Seq("o_orderdate"))
-            .coalesce(1).write.parquet(s"${stage.getPath}/stats")
-          if (!stage.renameTo(root)) {
-            deleteRecursively(stage)
-            require(root.exists(), s"atomic move to $root failed")
-          }
+        val d0 = o.agg(min(col("o_orderdate"))).first().getDate(0).toLocalDate
+        val lo = java.sql.Date.valueOf(d0.plusYears(1))
+        val hi = java.sql.Date.valueOf(d0.plusYears(2).minusDays(1))
+        val root = Artifacts.materialize(Artifacts.key("zonemap", dir, o)) {
+          stage =>
+            o.repartitionByRange(16, col("o_orderdate"))
+              .sortWithinPartitions("o_orderdate")
+              .write.parquet(s"$stage/table")
+            graft.io.StatsIndex.build(s, s"$stage/table", Seq("o_orderdate"))
+              .coalesce(1).write.parquet(s"$stage/stats")
         }
-        val stats = graft.core.Fixtures.scan(s, statsPath)
-        graft.io.StatsIndex.prunedScan(s, tablePath, stats, "o_orderdate",
-            lo, hi)
+        graft.io.StatsIndex.prunedScan(s, s"$root/table",
+            Artifacts.scan(s, s"$root/stats"), "o_orderdate", lo, hi)
           .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
           .agg(count(lit(1)).as("n_orders"),
             sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
@@ -405,32 +353,21 @@ object ExtraQueries {
         val o = Tables.read(s, dir, "orders")
           .withColumn("o_dkey", unix_date(to_date(col("o_orderdate"))).cast("long"))
         val head = o.agg(
-          count(lit(1)),
           min(col("o_custkey").cast("long")), max(col("o_custkey").cast("long")),
-          min(col("o_dkey")),
-          sum(xxhash64(col("o_orderkey"), col("o_dkey")))).first()
-        val fp = s"${head.getLong(0)}_${java.lang.Long.toHexString(head.getLong(4))}"
-        val (ck0, ck1, d0) = (head.getLong(1), head.getLong(2), head.getLong(3))
+          min(col("o_dkey"))).first()
+        val (ck0, ck1, d0) = (head.getLong(0), head.getLong(1), head.getLong(2))
         val (ckLo, ckHi) = (ck0, ck0 + (ck1 - ck0) / 8)
         val (dLo, dHi) = (d0 + 365L, d0 + 729L)
-        val root = new File(
-          s"/tmp/graft_zorder_${dir.replaceAll("[^0-9a-zA-Z]", "_")}_$fp")
-        val tablePath = s"${root.getPath}/table"
-        val statsPath = s"${root.getPath}/stats"
-        if (!root.exists()) {
-          val stage = new File(root.getPath + s"_stage_${System.nanoTime()}")
-          graft.io.Layout.writeZOrderedScaled(o, "o_custkey", "o_dkey",
-            s"${stage.getPath}/table")
-          graft.io.StatsIndex.build(s, s"${stage.getPath}/table",
-              Seq("o_custkey", "o_dkey"))
-            .coalesce(1).write.parquet(s"${stage.getPath}/stats")
-          if (!stage.renameTo(root)) {
-            deleteRecursively(stage)
-            require(root.exists(), s"atomic move to $root failed")
-          }
+        val root = Artifacts.materialize(Artifacts.key("zorder", dir, o)) {
+          stage =>
+            graft.io.Layout.writeZOrderedScaled(o, "o_custkey", "o_dkey",
+              s"$stage/table")
+            graft.io.StatsIndex.build(s, s"$stage/table",
+                Seq("o_custkey", "o_dkey"))
+              .coalesce(1).write.parquet(s"$stage/stats")
         }
-        val stats = graft.core.Fixtures.scan(s, statsPath)
-        graft.io.StatsIndex.prunedScanMulti(s, tablePath, stats,
+        graft.io.StatsIndex.prunedScanMulti(s, s"$root/table",
+            Artifacts.scan(s, s"$root/stats"),
             Seq(("o_custkey", ckLo, ckHi), ("o_dkey", dLo, dHi)))
           .agg(count(lit(1)).as("n_orders"),
             countDistinct(col("o_custkey")).as("n_cust"),
@@ -461,29 +398,22 @@ object ExtraQueries {
     QueryDef("scan_badrecords",
       (s, dir) => {
         val ev = Tables.read(s, dir, "events")
-        val fp = Tables.rowCount(s, dir, "events")
-        val fix = new File(
-          s"/tmp/graft_badjson_${dir.replaceAll("[^0-9a-zA-Z]", "_")}_$fp")
-        if (!fix.exists()) {
-          val stage = new File(fix.getPath + s"_stage_${System.nanoTime()}")
+          .select("event_id", "event_type", "value")
+        val fix = Artifacts.materialize(Artifacts.key("badjson", dir, ev)) {
           ev.withColumn("l", to_json(struct(col("event_id"),
               col("event_type"), col("value"))))
             .select(
               when(pmod(col("event_id"), lit(50)) === 0,
                 concat(expr("substring(l, 1, 12)"), lit(" <<truncated")))
                 .otherwise(col("l")).as("value"))
-            .write.text(stage.getPath)
-          if (!stage.renameTo(fix)) {
-            deleteRecursively(stage)
-            require(fix.exists(), s"atomic move to $fix failed")
-          }
+            .write.text(_)
         }
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
           "event_id LONG, event_type STRING, value DOUBLE, _bad STRING")
         s.read.schema(schema)
           .option("mode", "PERMISSIVE")
           .option("columnNameOfCorruptRecord", "_bad")
-          .json(fix.getPath)
+          .json(fix)
           .agg(count(when(col("_bad").isNull, 1)).as("n_good"),
             count(col("_bad")).as("n_quarantined"),
             sum(when(col("_bad").isNull, col("value"))
@@ -511,23 +441,16 @@ object ExtraQueries {
         graft.core.GraftFunctions.ensureRegistered(s)
         val docs = Tables.read(s, dir, "documents")
           .filter(col("doc_id") < 100)
-        val fp = docs.count()
-        val root = new File(
-          s"/tmp/graft_binfiles_${dir.replaceAll("[^0-9a-zA-Z]", "_")}_$fp")
-        if (!root.exists()) {
-          val stage = new File(root.getPath + s"_stage_${System.nanoTime()}")
-          stage.mkdirs()
-          graft.ops.Multimodal.syntheticMedia(docs).collect().foreach { r =>
-            java.nio.file.Files.write(
-              new File(stage, f"doc_${r.getLong(0)}%05d.bin").toPath,
-              r.getAs[Array[Byte]](1))
-          }
-          if (!stage.renameTo(root)) {
-            deleteRecursively(stage)
-            require(root.exists(), s"atomic move to $root failed")
-          }
+        val root = Artifacts.materialize(Artifacts.key("binfiles", dir, docs)) {
+          stage =>
+            new File(stage).mkdirs()
+            graft.ops.Multimodal.syntheticMedia(docs).collect().foreach { r =>
+              java.nio.file.Files.write(
+                new File(stage, f"doc_${r.getLong(0)}%05d.bin").toPath,
+                r.getAs[Array[Byte]](1))
+            }
         }
-        s.read.format("binaryFile").load(root.getPath)
+        s.read.format("binaryFile").load(root)
           .select(
             regexp_extract(col("path"), "doc_(\\d+)\\.bin", 1)
               .cast("long").as("doc_id"),

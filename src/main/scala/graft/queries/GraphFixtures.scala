@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Artifacts, SessionMemo, Tables}
 import graft.ops.Graph
 
 /** Shared, fingerprint-keyed persisted artifacts for the graph family.
@@ -16,16 +16,13 @@ import graft.ops.Graph
   * threshold and becomes a full shuffle join PER QUERY (PLANS.md round-10
   * finding 2) — at a 100 TB corpus the edge build dominates every graph
   * metric that consumes it. Production graph stacks persist the edge list
-  * once and run the metric zoo against the artifact; this helper is that
-  * discipline, reusing the `ann_ivf_trained` fixture idiom:
+  * once and run the metric zoo against the artifact; this object does
+  * that through `graft.core.Artifacts` (content-fingerprinted key, atomic
+  * publish, memoized scan):
   *
-  *  - **content fingerprint**, not path/mtime: one narrow agg per source
-  *    table (`count` + order-independent `sum(hash(keys))`) — no join, no
-  *    shuffle — so a regenerated table at the same path can never serve a
-  *    stale artifact;
-  *  - **atomic install**: build into a nanotime-suffixed staging dir, then
-  *    `rename` — concurrent builders race benignly (loser deletes its
-  *    stage), readers only ever see a complete artifact;
+  *  - **key**: the fingerprint reads only the join/endpoint keys of the
+  *    two source tables (no join, no shuffle), so a regenerated table at
+  *    the same path can never serve a stale artifact;
   *  - **raw-equivalent content**: the edge fixture stores the EXACT join
   *    output (directed, duplicates preserved), so every consumer's
   *    semantics — including multiplicity-sensitive ones — are unchanged;
@@ -38,7 +35,7 @@ import graft.ops.Graph
   * `graph_community_lp` and `graph_modularity` can share ONE propagation
   * instead of each paying the full iterative loop (round-8 verdict item 5:
   * modularity re-ran the LP that community_lp just computed).
-  * GraphFixturesSpec pins persisted ≡ fresh for both artifacts.
+  * ArtifactsSpec pins persisted ≡ fresh for every graph artifact.
   *
   * Reference: the graph family models relationship analytics over the ETL
   * star (orders fact ⋈ dims, etl/fact_loaders/load_311.py joins); the
@@ -46,53 +43,24 @@ import graft.ops.Graph
   */
 object GraphFixtures {
 
-  /** Content fingerprint of the bipartite graph inputs: row count plus an
-    * order-independent hash-sum of the join/endpoint keys, per source
-    * table. Two narrow column scans — parquet reads only the two key
-    * columns each — and zero shuffles (partial sums combine map-side).
+  /** The artifact path of graph artifact `kind`: keyed on the join and
+    * endpoint keys of both source tables (two narrow column scans, zero
+    * shuffles).
     */
-  private def fingerprint(s: SparkSession, dir: String): String =
-    // memoized per session: two aggregate ACTIONS per call, re-paid by
-    // every graph query on every bench pass for inputs that cannot change
-    // within a session (graft.core.SessionMemo)
-    graft.core.SessionMemo(s, s"graphfp_$dir") {
-      val l = Tables.read(s, dir, "lineitem")
-        .agg(count(lit(1)), sum(hash(col("l_orderkey"), col("l_suppkey"))))
-        .head()
-      val o = Tables.read(s, dir, "orders")
-        .agg(count(lit(1)), sum(hash(col("o_orderkey"), col("o_custkey"))))
-        .head()
-      def hx(v: Long) = java.lang.Long.toHexString(v)
-      s"${l.getLong(0)}_${hx(l.getLong(1))}_${o.getLong(0)}_${hx(o.getLong(1))}"
-    }
+  private def path(s: SparkSession, dir: String, kind: String): String =
+    Artifacts.key(s"graph_$kind", dir,
+      Tables.read(s, dir, "lineitem").select("l_orderkey", "l_suppkey"),
+      Tables.read(s, dir, "orders").select("o_orderkey", "o_custkey"))
 
-  /** Get-or-create a parquet artifact at a fingerprint-keyed path: build
-    * into a staging dir, atomically rename into place, tolerate losing the
-    * rename race to a concurrent builder of the same key.
+  /** The parquet artifact at `p` with its row count, memoized per session
+    * (the artifact cannot change within one).
     */
-  private def artifact(s: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = {
-    val f = new java.io.File(s"/tmp/graft_graph_$key")
-    if (!f.exists()) {
-      val stage = new java.io.File(f.getPath + s"_stage_${System.nanoTime()}")
-      build.write.parquet(stage.getPath)
-      if (!stage.renameTo(f)) {
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).foreach(_.foreach(rm)); x.delete()
-        }
-        rm(stage)
-        require(f.exists(), s"atomic move to $f failed")
-      }
-    }
-    // memoized resolved scan (the path embeds the content fingerprint, so
-    // a regenerated corpus resolves a NEW path): re-resolving costs a
-    // listing + schema-inference pass per call (graft.core.Catalog memo
-    // rationale, applied to fixture artifacts)
-    graft.core.SessionMemo(s, s"scan_${f.getPath}")(s.read.parquet(f.getPath))
+  private def counted(s: SparkSession, p: String)(
+      build: => DataFrame): (DataFrame, Long) = {
+    val df = Artifacts.parquet(s, p)(build)
+    (df, SessionMemo(s, s"count_$p")(java.lang.Long.valueOf(df.count()))
+      .longValue)
   }
-
-  private def fixtureKey(dir: String, s: SparkSession): String =
-    s"${dir.replaceAll("[^0-9a-zA-Z]", "_")}_${fingerprint(s, dir)}"
 
   /** The directed bipartite order-graph edge list — the raw
     * lineitem⋈orders output `(src = l_suppkey*2, dst = o_custkey*2+1)`,
@@ -100,7 +68,7 @@ object GraphFixtures {
     * every other graph query scans the parquet.
     */
   def edges(s: SparkSession, dir: String): DataFrame =
-    artifact(s, s"edges_${fixtureKey(dir, s)}") {
+    Artifacts.parquet(s, path(s, dir, "edges")) {
       Tables.read(s, dir, "lineitem")
         .join(Tables.read(s, dir, "orders")
             .select("o_orderkey", "o_custkey"),
@@ -117,40 +85,31 @@ object GraphFixtures {
     * [[edgesSymDistinct]] is for the traversal family.
     */
   def edgesDistinct(s: SparkSession, dir: String): DataFrame =
-    artifact(s, s"edgedist_${fixtureKey(dir, s)}") {
+    Artifacts.parquet(s, path(s, dir, "edgedist")) {
       edges(s, dir).select("src", "dst").distinct()
     }
 
   /** The node set of the order graph (all endpoints, distinct) WITH its
     * memoized count — the broadcast-gate input every iterative loop
     * needs. Derived from [[edgesDistinct]]; the count is one tiny agg,
-    * SessionMemo'd because it cannot change within a session (the same
-    * discipline as the fingerprint memo).
+    * SessionMemo'd because it cannot change within a session.
     */
-  def nodesWithCount(s: SparkSession, dir: String): (DataFrame, Long) = {
-    val key = fixtureKey(dir, s)
-    val df = artifact(s, s"nodes_$key") {
+  def nodesWithCount(s: SparkSession, dir: String): (DataFrame, Long) =
+    counted(s, path(s, dir, "nodes")) {
       val e = edgesDistinct(s, dir)
       e.select(col("src").as("node"))
         .unionByName(e.select(col("dst").as("node"))).distinct()
     }
-    (df, graft.core.SessionMemo(s, s"nodecount_$key")(
-      java.lang.Long.valueOf(df.count())).longValue)
-  }
 
   /** The distinct SOURCE nodes of [[edgesDistinct]] WITH memoized count —
     * HITS's initial hub frame and broadcast-gate input (hub scores exist
     * only for nodes with out-edges). The directed sibling of
     * [[nodesWithCount]], same discipline (r15).
     */
-  def srcNodesWithCount(s: SparkSession, dir: String): (DataFrame, Long) = {
-    val key = fixtureKey(dir, s)
-    val df = artifact(s, s"srcnodes_$key") {
+  def srcNodesWithCount(s: SparkSession, dir: String): (DataFrame, Long) =
+    counted(s, path(s, dir, "srcnodes")) {
       edgesDistinct(s, dir).select(col("src").as("node")).distinct()
     }
-    (df, graft.core.SessionMemo(s, s"srcnodecount_$key")(
-      java.lang.Long.valueOf(df.count())).longValue)
-  }
 
   /** The SYMMETRIZED DISTINCT adjacency over [[edges]] — the artifact the
     * BFS/traversal family actually consumes. Round-13: the sf4 decade
@@ -163,7 +122,7 @@ object GraphFixtures {
     * parquet scan and the per-query distinct disappears.
     */
   def edgesSymDistinct(s: SparkSession, dir: String): DataFrame =
-    artifact(s, s"edgesym_${fixtureKey(dir, s)}") {
+    Artifacts.parquet(s, path(s, dir, "edgesym")) {
       val e = edges(s, dir)
       e.select("src", "dst")
         .unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -175,7 +134,7 @@ object GraphFixtures {
     * (corpus, rounds), shared by the community and modularity queries.
     */
   def lpLabels(s: SparkSession, dir: String, rounds: Int): DataFrame =
-    artifact(s, s"lp${rounds}_${fixtureKey(dir, s)}") {
+    Artifacts.parquet(s, path(s, dir, s"lp$rounds")) {
       Graph.labelPropagation(edges(s, dir), rounds)
     }
 }

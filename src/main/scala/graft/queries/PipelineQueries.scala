@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.{broadcast, col, count, floor, hash, lit, 
 
 import graft.QueryDef
 import graft.QueryDef.Sql
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis, TextOps}
 import graft.streaming.Streams
 
@@ -31,27 +31,14 @@ object PipelineQueries {
   private def annArtifactsRoot(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
     val emb = Tables.read(s, dir, "embeddings")
-    val fp = graft.core.Fixtures.contentFp(emb, col("vec_id"),
-      col("embedding"))
-    val root = new java.io.File(
-      s"/tmp/graft_annrec_${dir.replaceAll("[^0-9a-zA-Z]", "_")}_$fp")
-    if (!root.exists()) {
-      val stage = new java.io.File(
-        root.getPath + s"_stage_${System.nanoTime()}")
+    Artifacts.materialize(Artifacts.key("annrec", dir,
+        emb.select("vec_id", "embedding"))) { stage =>
       Similarity.fitIvfLists(emb, nlists = 16)
-        .write.parquet(s"${stage.getPath}/ivf_lists")
+        .write.parquet(s"$stage/ivf_lists")
       val (cen, codes) = Similarity.fitPq(emb, m = 8, ksub = 4)
-      cen.write.parquet(s"${stage.getPath}/pq_codebooks")
-      codes.write.parquet(s"${stage.getPath}/pq_codes")
-      if (!stage.renameTo(root)) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(stage)
-        require(root.exists(), s"atomic move to $root failed")
-      }
+      cen.write.parquet(s"$stage/pq_codebooks")
+      codes.write.parquet(s"$stage/pq_codes")
     }
-    root.getPath
   }
 
   // ---- shared oracle fragments -------------------------------------------
@@ -851,8 +838,8 @@ object PipelineQueries {
     // IVF with a kmeans-TRAINED coarse quantizer (the production 100 TB
     // shape — balanced inverted lists fit to the data distribution);
     // assignment bit-consistent with the trainer's decimal space. The
-    // quantizer is fit ONCE per corpus and persisted (fingerprint-keyed
-    // fixture, same discipline as the bucketed tables): probe runs load
+    // quantizer is fit ONCE per corpus and persisted (Artifacts.parquet,
+    // fingerprint-keyed): probe runs load
     // the centroid parquet instead of re-running Lloyd — exactly how a
     // production index amortizes training. The oracle recomputes the
     // same deterministic fit in SQL, so cached and fresh runs are
@@ -860,33 +847,15 @@ object PipelineQueries {
     QueryDef("ann_ivf_trained",
       (s, dir) => {
         val emb = Tables.read(s, dir, "embeddings")
-        // Fixture key = (dir, row count, content hash): a regenerated
-        // embeddings table at the same path with the same count must NOT
-        // serve stale centroids, so the fingerprint folds in an
-        // order-independent hash of the ids AND the embedding values
-        // (sum of per-row murmur3 over both columns — advice r13: an
-        // id-only stamp would silently reuse a stale fit when vectors
-        // change under unchanged ids) — the same content-stamp discipline
-        // as the warehouse fixtures hashing their value columns. One tiny
-        // agg job, amortized across probe runs.
-        val fp = graft.core.Fixtures.contentFp(emb, col("vec_id"), col("embedding"))
-        val q = new java.io.File(
-          s"/tmp/graft_ivfq_${dir.replaceAll("[^0-9a-zA-Z]", "_")}_$fp")
-        if (!q.exists()) {
-          val stage = new java.io.File(
-            q.getPath + s"_stage_${System.nanoTime()}")
+        // Fixture key = content fingerprint of the ids AND the embedding
+        // values (advice r13: an id-only stamp would silently reuse a
+        // stale fit when vectors change under unchanged ids).
+        val centroids = Artifacts.parquet(s,
+            Artifacts.key("ivfq", dir, emb.select("vec_id", "embedding"))) {
           Similarity.fitQuantizer(emb, nlists = 8, iters = 1)
-            .write.parquet(stage.getPath)
-          if (!stage.renameTo(q)) {
-            def rm(f: java.io.File): Unit = {
-              Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-            }
-            rm(stage)
-            require(q.exists(), s"atomic move to $q failed")
-          }
         }
         Similarity.ivfTrainedTopK(emb, nQueries = 5, k = 3, nlists = 8,
-          nprobe = 2, iters = 1, centroids = Some(graft.core.Fixtures.scan(s, q.getPath)))
+          nprobe = 2, iters = 1, centroids = Some(centroids))
       },
       Some(ivfTrainedOracle())),
 
@@ -1036,8 +1005,8 @@ object PipelineQueries {
         Similarity.pqTopK(Tables.read(s, dir, "embeddings"),
           nQueries = 5, k = 3,
           trained = Some((
-            graft.core.Fixtures.scan(s, s"$root/pq_codebooks"),
-            graft.core.Fixtures.scan(s, s"$root/pq_codes"))))
+            Artifacts.scan(s, s"$root/pq_codebooks"),
+            Artifacts.scan(s, s"$root/pq_codes"))))
       },
       Some(pqOracle())),
 
@@ -1112,10 +1081,10 @@ object PipelineQueries {
         val root = annArtifactsRoot(s, dir)
         Similarity.annRecall(Tables.read(s, dir, "embeddings"),
           nQueries = 5, k = 3,
-          ivfLists = Some(graft.core.Fixtures.scan(s, s"$root/ivf_lists")),
+          ivfLists = Some(Artifacts.scan(s, s"$root/ivf_lists")),
           pqTrained = Some((
-            graft.core.Fixtures.scan(s, s"$root/pq_codebooks"),
-            graft.core.Fixtures.scan(s, s"$root/pq_codes"))))
+            Artifacts.scan(s, s"$root/pq_codebooks"),
+            Artifacts.scan(s, s"$root/pq_codes"))))
       },
       Some(annRecallOracle)),
 

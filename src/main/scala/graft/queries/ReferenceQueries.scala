@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.QueryDef.Sql
-import graft.core.{GraftFunctions, Guards, KeyMapper, Normalize, Tables, TimeParse}
+import graft.core.{Artifacts, GraftFunctions, Guards, KeyMapper, Normalize, Tables, TimeParse}
 import graft.dims.{Generators, NationDim, PriorityDim}
 import graft.facts.Star
 import graft.io.Sink
@@ -50,15 +50,12 @@ object ReferenceQueries {
     // matching partition directory is listed and read.
     QueryDef("scan_partition_pruned",
       (s, dir) => {
-        val cache = s"/tmp/graft_fy_orders_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
-        val fs = org.apache.hadoop.fs.FileSystem
-          .get(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(new Path(cache))) {
-          t(s, dir, "orders")
-            .withColumn("fy", year(col("o_orderdate")))
-            .write.mode("overwrite").partitionBy("fy").parquet(cache)
+        val o = t(s, dir, "orders")
+        val cache = Artifacts.materialize(Artifacts.key("fy_orders", dir, o)) {
+          o.withColumn("fy", year(col("o_orderdate")))
+            .write.partitionBy("fy").parquet(_)
         }
-        graft.core.Fixtures.scan(s, cache)
+        Artifacts.scan(s, cache)
           .filter(col("fy") === 1995)
           .select(col("o_orderkey"), col("fy").cast("long").as("fy"),
             col("o_totalprice"))
@@ -415,7 +412,7 @@ object ReferenceQueries {
         // keyed by the input dir (as the csv/json round-trips are) so runs
         // at different scale factors never clobber each other mid-read
         val path =
-          s"/tmp/graft_sink_demo_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+          s"/tmp/graft_sink_demo_${Artifacts.dirTag(dir)}"
         val fs = org.apache.hadoop.fs.FileSystem
           .get(s.sparkContext.hadoopConfiguration)
         fs.delete(new Path(path), true)
@@ -434,7 +431,7 @@ object ReferenceQueries {
     QueryDef("sink_warehouse",
       (s, dir) => {
         val path =
-          s"/tmp/graft_sink_wh_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+          s"/tmp/graft_sink_wh_${Artifacts.dirTag(dir)}"
         Sink.overwrite(Generators.dateDim(s, "2024-01-01", "2024-06-30"),
           path, format = "graft-warehouse")
         Sink.append(Generators.dateDim(s, "2024-07-01", "2024-12-31"),
@@ -444,30 +441,17 @@ object ReferenceQueries {
       Some(dateDimOracle)),
 
     // The warehouse READ path under the oracle gate: a range-clustered
-    // orders slice lands in the load-job table once per corpus (content
-    // fingerprint keys the fixture, the ann_ivf_trained discipline;
-    // repartitionByRange gives the staged files disjoint o_orderkey
-    // zones), then the declared query filters + projects through the
-    // DSv2 scan — zone maps prune whole files at planning, the codec
-    // decodes only the two requested columns, and the oracle (a plain
-    // filter over the source parquet) proves the pruning changed
-    // nothing. WarehouseSinkSpec pins the file counts; this row pins the
-    // values at every SF the driver runs.
+    // orders slice lands in the load-job table once per corpus
+    // (rangeClusteredOrders: repartitionByRange gives the staged files
+    // disjoint o_orderkey zones), then the declared query filters +
+    // projects through the DSv2 scan — zone maps prune whole files at
+    // planning, the codec decodes only the two requested columns, and the
+    // oracle (a plain filter over the source parquet) proves the pruning
+    // changed nothing. WarehouseSinkSpec pins the file counts; this row
+    // pins the values at every SF the driver runs.
     QueryDef("scan_warehouse_pruned",
       (s, dir) => {
-        val orders = Tables.read(s, dir, "orders")
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        // Cache key covers EVERY persisted column, not just the key set: a
-        // regenerated corpus with the same keys but different values must
-        // miss the /tmp fixture (GraphFixtures discipline).
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_orders_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-          Sink.overwrite(
-            orders.repartitionByRange(8, col("o_orderkey")),
-            path, format = "graft-warehouse")
-        Sink.read(s, path, "graft-warehouse")
+        rangeClusteredOrders(s, dir)
           .filter(col("o_orderkey") >= 1000L && col("o_orderkey") < 3000L)
           .select("o_orderkey", "o_totalprice")
           .orderBy("o_orderkey")
@@ -492,10 +476,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_orderpriority", "o_totalprice")
-        // Same full-column cache key as scan_warehouse_pruned above.
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordstr_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordstr", dir, orders)
         if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
           Sink.overwrite(
             orders.repartitionByRange(8, col("o_orderpriority"),
@@ -526,22 +507,7 @@ object ReferenceQueries {
     // final aggregate merges the one emitted row.
     QueryDef("scan_warehouse_agg",
       (s, dir) => {
-        val orders = Tables.read(s, dir, "orders")
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        // Full-column cache key (GraphFixtures discipline); a distinct
-        // path from scan_warehouse_pruned so the manifest carries the
-        // round-12 frows metadata even where an older fixture survives.
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        // v2 suffix: the fixture must carry the fnn/fsum manifest lines
-        // (an older fixture would gracefully refuse the SUM/COUNT(col)
-        // serve and fall back to a real scan — correct but unexercised)
-        val path = s"/tmp/graft_wh_ordagg2_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-          Sink.overwrite(
-            orders.repartitionByRange(8, col("o_orderkey")),
-            path, format = "graft-warehouse")
-        Sink.read(s, path, "graft-warehouse")
+        rangeClusteredOrders(s, dir)
           .agg(count(lit(1)).as("n_orders"),
             min(col("o_orderkey")).as("min_key"),
             max(col("o_orderkey")).as("max_key"),
@@ -569,9 +535,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_orderpriority", "o_custkey")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_orderpriority"), col("o_custkey"))
-        val path = s"/tmp/graft_wh_ordgrp_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordgrp", dir, orders)
         if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
           Sink.overwrite(orders.repartition(8, col("o_orderpriority")),
             path, format = "graft-warehouse",
@@ -604,9 +568,7 @@ object ReferenceQueries {
         val orders = Tables.read(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"),
             pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_orddel_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_orddel", dir, orders)
         if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
           Sink.overwrite(orders.repartition(8, col("bucket")), path,
             format = "graft-warehouse",
@@ -634,19 +596,10 @@ object ReferenceQueries {
     // 1-file plan for LIMIT 5 over 100-row files and the filtered-limit
     // refusal). LIMIT without ORDER is row-nondeterministic, so the
     // declared gate checks the deterministic face: the exact row COUNT
-    // through the pushed limit. Shares scan_warehouse_agg's fixture.
+    // through the pushed limit. Reads the range-clustered orders table.
     QueryDef("scan_warehouse_limit",
       (s, dir) => {
-        val orders = Tables.read(s, dir, "orders")
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordagg2_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-          Sink.overwrite(
-            orders.repartitionByRange(8, col("o_orderkey")),
-            path, format = "graft-warehouse")
-        Sink.read(s, path, "graft-warehouse")
+        rangeClusteredOrders(s, dir)
           .limit(777)
           .agg(count(lit(1)).as("n_rows"))
       },
@@ -660,20 +613,11 @@ object ReferenceQueries {
     // exact n (WarehouseStatsSpec pins the 1-file plan and the
     // overlap/null fallbacks). The unique sort key makes the result
     // fully deterministic, so this row value-gates the optimization —
-    // "latest 100 orders" at 100 TB reads one zone file. Shares
-    // scan_warehouse_agg's range-clustered fixture.
+    // "latest 100 orders" at 100 TB reads one zone file. Reads the
+    // range-clustered orders table.
     QueryDef("scan_warehouse_topn",
       (s, dir) => {
-        val orders = Tables.read(s, dir, "orders")
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordagg2_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-          Sink.overwrite(
-            orders.repartitionByRange(8, col("o_orderkey")),
-            path, format = "graft-warehouse")
-        Sink.read(s, path, "graft-warehouse")
+        rangeClusteredOrders(s, dir)
           .orderBy(col("o_orderkey").desc)
           .limit(100)
           .select("o_orderkey", "o_custkey")
@@ -699,9 +643,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordopt_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordopt", dir, orders)
         // fixture = the steady-state streaming-sink shape: 2 big load
         // files + 6 per-trigger micro-batch appends (tiny residue
         // slices; skip-if-empty may drop a sparse residue — harmless,
@@ -757,9 +699,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordvac_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordvac", dir, orders)
         if (graft.sources.WarehouseMeta.readManifest(path).isEmpty) {
           Sink.overwrite(orders.repartition(4), path,
             format = "graft-warehouse")
@@ -813,9 +753,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordcow2_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordcow2", dir, orders)
         val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
         val w = maxK / 8 + 1
         if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
@@ -868,9 +806,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordmrg2_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordmrg2", dir, orders)
         val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
         val w = maxK / 8 + 1
         def banded(df: org.apache.spark.sql.DataFrame) =
@@ -939,9 +875,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordcdc_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordcdc", dir, orders)
         val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
         val w = maxK / 8 + 1
         def banded(df: org.apache.spark.sql.DataFrame) =
@@ -1011,9 +945,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordstream_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordstream", dir, orders)
         val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
         val w = maxK / 8 + 1
         val banded = orders.withColumn("band", expr(s"o_orderkey div $w"))
@@ -1070,9 +1002,8 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordmrg_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val fp = Artifacts.fingerprint(orders)
+        val path = Artifacts.key("wh_ordmrg", dir, orders)
         val cat = s"gmrg_$fp"
         s.conf.set(s"spark.sql.catalog.$cat",
           "graft.sources.GraftCatalog")
@@ -1162,9 +1093,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordmor_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordmor", dir, orders)
         val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
         val w = maxK / 8 + 1
         val thr = maxK - w / 2
@@ -1222,9 +1151,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordumor_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordumor", dir, orders)
         val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
         val w = maxK / 8 + 1
         val banded = orders.withColumn("band", expr(s"o_orderkey div $w"))
@@ -1276,9 +1203,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordcdf_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordcdf", dir, orders)
         val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
         val w = maxK / 8 + 1
         val banded = orders.withColumn("band", expr(s"o_orderkey div $w"))
@@ -1347,9 +1272,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordmeta_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordmeta", dir, orders)
         val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
         val w = maxK / 8 + 1
         if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
@@ -1388,9 +1311,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordhist_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordhist", dir, orders)
         val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
         val w = maxK / 8 + 1
         val banded = orders.withColumn("band", expr(s"o_orderkey div $w"))
@@ -1451,9 +1372,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordbloom_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordbloom", dir, orders)
         if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
           Sink.overwrite(orders.repartition(8), path,
             format = "graft-warehouse",
@@ -1494,9 +1413,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordscdf_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordscdf", dir, orders)
         val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
         val w = maxK / 8 + 1
         val banded = orders.withColumn("band", expr(s"o_orderkey div $w"))
@@ -1572,9 +1489,8 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordcat_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val fp = Artifacts.fingerprint(orders)
+        val path = Artifacts.key("wh_ordcat", dir, orders)
         val cat = s"gcat_$fp"
         s.conf.set(s"spark.sql.catalog.$cat",
           "graft.sources.GraftCatalog")
@@ -1640,11 +1556,8 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val src = s"/tmp/graft_wh_ordsink_src_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
-        val dst = s"/tmp/graft_wh_ordsink_dst_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val src = Artifacts.key("wh_ordsink_src", dir, orders)
+        val dst = Artifacts.key("wh_ordsink_dst", dir, orders)
         val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
         val w = maxK / 8 + 1
         val banded = orders.withColumn("band", expr(s"o_orderkey div $w"))
@@ -1691,9 +1604,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordupd_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordupd", dir, orders)
         val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
         val w = maxK / 8 + 1
         if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
@@ -1744,9 +1655,7 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordevo2_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        val path = Artifacts.key("wh_ordevo2", dir, orders)
         val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
         val (h1, h2) = (maxK / 3, 2 * (maxK / 3))
         if (graft.sources.WarehouseMeta.readManifest(path).isEmpty) {
@@ -1827,20 +1736,16 @@ object ReferenceQueries {
         val cust = Tables.read(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment"),
             pmod(col("c_custkey"), lit(64L)).as("bucket"))
-        def fixture(df: org.apache.spark.sql.DataFrame, tag: String,
-            fpCols: Seq[String]): String = {
-          val fp = graft.core.Fixtures.contentFp(df, fpCols.map(col): _*)
-          val path = s"/tmp/graft_wh_spj${tag}_${dir
-            .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
+        def fixture(df: DataFrame, tag: String): String = {
+          val path = Artifacts.key(s"wh_spj$tag", dir, df)
           if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
             Sink.overwrite(df.repartition(8, col("bucket")), path,
               format = "graft-warehouse",
               options = Map("clusterBy" -> "bucket"))
           path
         }
-        val op = fixture(orders, "o",
-          Seq("o_orderkey", "o_custkey", "o_totalprice"))
-        val cp = fixture(cust, "c", Seq("c_custkey", "c_mktsegment"))
+        val op = fixture(orders, "o")
+        val cp = fixture(cust, "c")
         Sink.read(s, op, "graft-warehouse").as("o")
           .join(Sink.read(s, cp, "graft-warehouse").as("c"),
             col("o.bucket") === col("c.bucket") &&
@@ -1868,19 +1773,10 @@ object ReferenceQueries {
     // the files-planned-shrinks behavior on a hand-built layout).
     QueryDef("scan_warehouse_runtime_pruned",
       (s, dir) => {
-        val orders = Tables.read(s, dir, "orders")
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        val fp = graft.core.Fixtures.contentFp(orders, col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        val path = s"/tmp/graft_wh_ordrt_${dir
-          .replaceAll("[^0-9a-zA-Z]", "_")}_$fp"
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-          Sink.overwrite(
-            orders.repartitionByRange(8, col("o_orderkey")),
-            path, format = "graft-warehouse")
         val dim = Tables.read(s, dir, "lineitem")
           .filter(col("l_quantity") === 50.0)
           .select(col("l_orderkey")).distinct()
-        Sink.read(s, path, "graft-warehouse")
+        rangeClusteredOrders(s, dir)
           .join(broadcast(dim),
             col("o_orderkey") === col("l_orderkey"))
           .agg(count(lit(1)).as("n_orders"),
@@ -1895,6 +1791,21 @@ object ReferenceQueries {
              |WHERE o_orderkey IN (SELECT DISTINCT l_orderkey
              |  FROM lineitem WHERE l_quantity = 50)""".stripMargin))
   )
+
+  /** orders `(o_orderkey, o_custkey, o_totalprice)` in the load-job table,
+    * range-clustered on o_orderkey into 8 files with disjoint key zones:
+    * built once per corpus (content-fingerprinted key), read by
+    * scan_warehouse_pruned, _agg, _limit, _topn and _runtime_pruned.
+    */
+  private def rangeClusteredOrders(s: SparkSession, dir: String): DataFrame = {
+    val orders = Tables.read(s, dir, "orders")
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+    val path = Artifacts.key("wh_ordrange", dir, orders)
+    if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
+      Sink.overwrite(orders.repartitionByRange(8, col("o_orderkey")),
+        path, format = "graft-warehouse")
+    Sink.read(s, path, "graft-warehouse")
+  }
 
   private lazy val dateDimOracle: String =
     """SELECT CAST(strftime(d, '%Y%m%d') AS BIGINT) AS date_key,

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 
 /** TPC-H-shaped flagship analytics (SURVEY §5.5: the driver testdata is
   * TPC-H-ish, so the flagship queries adopt TPC-H shapes). Sums/averages
@@ -27,7 +27,7 @@ object TpchQueries {
     */
   private def ensureBucketed(s: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
-    val sfx = dir.replaceAll("[^0-9a-zA-Z]", "_")
+    val sfx = Artifacts.dirTag(dir)
     def ensure(name: String, key: String,
         build: => org.apache.spark.sql.DataFrame): String = {
       val tbl = s"graft_${name}_$sfx"
@@ -1031,7 +1031,7 @@ object TpchQueries {
         val src = Tables.read(s, dir, "supplier")
           .select(col("s_suppkey"), col("s_name"), col("s_acctbal"))
         val path =
-          s"/tmp/graft_sink_csv_demo_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+          s"/tmp/graft_sink_csv_demo_${Artifacts.dirTag(dir)}"
         src.write.mode("overwrite").option("header", "true").csv(path)
         s.read.schema(src.schema).option("header", "true").csv(path)
           .orderBy("s_suppkey")
@@ -1045,7 +1045,7 @@ object TpchQueries {
         val src = Tables.read(s, dir, "nation")
           .select("n_nationkey", "n_name", "n_regionkey")
         val path =
-          s"/tmp/graft_sink_json_demo_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+          s"/tmp/graft_sink_json_demo_${Artifacts.dirTag(dir)}"
         src.write.mode("overwrite").json(path)
         s.read.schema(src.schema).json(path).orderBy("n_nationkey")
       },
@@ -1060,7 +1060,7 @@ object TpchQueries {
         val src = Tables.read(s, dir, "part")
           .select("p_partkey", "p_name", "p_retailprice")
         val path =
-          s"/tmp/graft_sink_orc_demo_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+          s"/tmp/graft_sink_orc_demo_${Artifacts.dirTag(dir)}"
         src.write.mode("overwrite").orc(path)
         s.read.schema(src.schema).orc(path).orderBy("p_partkey")
       },

@@ -39,7 +39,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("sink writes and reads back through a non-default format") {
-    val out = s"/tmp/graft_catalog_sink_${sf.replaceAll("[^0-9a-zA-Z]", "_")}"
+    val out = s"/tmp/graft_catalog_sink_${graft.core.Artifacts.dirTag(sf)}"
     val src = Tables.read(spark, sf, "region")
     Sink.overwrite(src, out, format = "json")
     val back = Sink.read(spark, out, format = "json")

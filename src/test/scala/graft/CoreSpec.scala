@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => ScTest}
 
-import graft.core.{GraftFunctions, HashKeyOps, KeyMapper, Normalize, TimeParse}
+import graft.core.{GraftFunctions, HashKeyOps, KeyMapper, Normalize, SessionMemo, TimeParse}
 
 /** F1/F2/F7/F9 scalar semantics + J1 join semantics (SURVEY §5.2-5.3). */
 class HashKeySpec extends SparkSpec {
@@ -235,5 +235,25 @@ class KeyMapperSpec extends SparkSpec {
       assert(msg.contains(fn) && msg.contains("arguments"),
         s"$sql raised ${e.getClass.getName}: $msg")
     }
+  }
+}
+
+class SessionMemoSpec extends SparkSpec {
+
+  test("memo bodies may nest: 32 nested distinct-key calls") {
+    // an artifact builder asks for fingerprints and scans of other
+    // artifacts inside its own memoized body; a memo that computes inside
+    // the map (computeIfAbsent) throws 'Recursive update' on such nesting
+    val tag = System.nanoTime()
+    var runs = 0
+    def nest(depth: Int): String =
+      SessionMemo(spark, s"spec_nest_${tag}_$depth") {
+        runs += 1
+        if (depth == 0) "leaf" else nest(depth - 1) + "."
+      }
+    assert(nest(31) == "leaf" + "." * 31)
+    assert(runs == 32)
+    assert(nest(31) == "leaf" + "." * 31)
+    assert(runs == 32, "a memo hit must not re-run the body")
   }
 }

@@ -198,7 +198,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("partitioned upsert rewrites only affected partitions") {
-    val out = s"/tmp/graft_merge_${sf.replaceAll("[^0-9a-zA-Z]", "_")}"
+    val out = s"/tmp/graft_merge_${graft.core.Artifacts.dirTag(sf)}"
     val fs = org.apache.hadoop.fs.FileSystem
       .get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(out), true)
@@ -224,7 +224,7 @@ class MergeSpec extends SparkSpec {
 
   test("txn upsert: readers never see a half-written state; untouched files carried") {
     import graft.ops.Txn
-    val root = s"/tmp/graft_txn_${sf.replaceAll("[^0-9a-zA-Z]", "_")}"
+    val root = s"/tmp/graft_txn_${graft.core.Artifacts.dirTag(sf)}"
     val fs = org.apache.hadoop.fs.FileSystem
       .get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)

@@ -16,7 +16,7 @@ class RestSourceSpec extends SparkSpec {
     assert(viaSource.nonEmpty)
     val prunedPartitions = RestPages.lastPlannedPartitions
     // unfiltered read plans more pages than the filtered one
-    val pages = s"/tmp/graft_rest_pages_${sf.replaceAll("[^0-9a-zA-Z]", "_")}"
+    val pages = graft.queries.ExtraQueries.ensurePages(spark, sf)
     val allRows = spark.read.format("graft.sources.RestSourceProvider")
       .option("path", pages).load().count()
     val allPartitions = RestPages.lastPlannedPartitions
@@ -31,7 +31,7 @@ class RestSourceSpec extends SparkSpec {
   }
 
   test("limit pushdown caps reader output") {
-    val pages = s"/tmp/graft_rest_pages_${sf.replaceAll("[^0-9a-zA-Z]", "_")}"
+    val pages = graft.queries.ExtraQueries.ensurePages(spark, sf)
     val n = spark.read.format("graft.sources.RestSourceProvider")
       .option("path", pages).load().limit(7).count()
     assert(n === 7)
@@ -39,9 +39,7 @@ class RestSourceSpec extends SparkSpec {
 
   test("$offset cursor paging: same rows as single-fetch, short page terminates") {
     import graft.sources.RestFetch
-    // materialize pages via the declared query path first
-    SparkEntry.queries("scan_rest_pushdown")(spark, sf).count()
-    val pages = s"/tmp/graft_rest_pages_${sf.replaceAll("[^0-9a-zA-Z]", "_")}"
+    val pages = graft.queries.ExtraQueries.ensurePages(spark, sf)
     def readAll(opts: Map[String, String]) = {
       var r = spark.read.format("graft.sources.RestSourceProvider")
         .option("path", pages)
@@ -69,8 +67,7 @@ class RestSourceSpec extends SparkSpec {
 
   test("app-token auth: rejected without, accepted with; auth is not retried") {
     import graft.sources.RestFetch
-    SparkEntry.queries("scan_rest_pushdown")(spark, sf).count() // build pages
-    val pages = s"/tmp/graft_rest_pages_${sf.replaceAll("[^0-9a-zA-Z]", "_")}"
+    val pages = graft.queries.ExtraQueries.ensurePages(spark, sf)
     RestFetch.requiredToken = Some("sekrit")
     try {
       val ex = intercept[org.apache.spark.SparkException] {
@@ -99,8 +96,7 @@ class RestSourceSpec extends SparkSpec {
 
   test("transient failures are retried with bounded backoff") {
     import graft.sources.{RestFetch, RestRetry, RestTransientException}
-    SparkEntry.queries("scan_rest_pushdown")(spark, sf).count()
-    val pages = s"/tmp/graft_rest_pages_${sf.replaceAll("[^0-9a-zA-Z]", "_")}"
+    val pages = graft.queries.ExtraQueries.ensurePages(spark, sf)
     // inject 3 transient failures; default policy (3 retries) absorbs them
     RestFetch.failNextFetches.set(3)
     val n = spark.read.format("graft.sources.RestSourceProvider")
@@ -190,10 +186,8 @@ class RestSourceSpec extends SparkSpec {
     finally server.stop(0)
   }
 
-  private def fixturePages(): String = {
-    SparkEntry.queries("scan_rest_pushdown")(spark, sf).count() // build pages
-    s"/tmp/graft_rest_pages_${sf.replaceAll("[^0-9a-zA-Z]", "_")}"
-  }
+  private def fixturePages(): String =
+    graft.queries.ExtraQueries.ensurePages(spark, sf)
 
   test("HTTP transport: loopback scan equals the file-transport scan") {
     val pages = fixturePages()
