@@ -69,10 +69,8 @@ object Sink {
     */
   def upsertDim(spark: SparkSession, dim: DataFrame, path: String,
       naturalKeys: Seq[String], format: String = "parquet"): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
     val fresh =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path))) dim
+      if (!hasData(spark, path, format)) dim
       else {
         val existing = read(spark, path, format)
           .select(naturalKeys.map(org.apache.spark.sql.functions.col): _*)
@@ -80,4 +78,24 @@ object Sink {
       }
     append(fresh, path, format = format)
   }
+
+  /** Whether `path` holds committed rows a reader can load: a manifest for
+    * `graft-warehouse`, a visible file or partition directory for the file
+    * formats. A load that failed before its first commit leaves only
+    * bookkeeping behind (`_jobs/` and `_staging/`, or an empty directory
+    * once `_temporary/` is cleaned up), so the directory existing says
+    * nothing about the table.
+    */
+  private[graft] def hasData(spark: SparkSession, path: String,
+      format: String): Boolean =
+    if (format == "graft-warehouse")
+      graft.sources.WarehouseMeta.readManifest(path).isDefined
+    else {
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.exists(root) && fs.listStatus(root).exists { s =>
+        val name = s.getPath.getName
+        !name.startsWith("_") && !name.startsWith(".")
+      }
+    }
 }

@@ -51,12 +51,10 @@ object Main {
       .appName("graft-etl")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
+    val cfg = Pipeline.Config(a.sf, a.out, a.start, a.end, a.idempotentDims)
     val runs: Seq[Map[String, Long]] =
-      if (a.backfill)
-        Backfill.run(spark, a.sf, a.out, a.start, a.end)
-      else
-        Seq(Pipeline.run(spark,
-          Pipeline.Config(a.sf, a.out, a.start, a.end, a.idempotentDims)))
+      if (a.backfill) Backfill.run(spark, cfg)
+      else Seq(Pipeline.run(spark, cfg))
     runs.zipWithIndex.foreach { case (counts, i) =>
       if (runs.length > 1) println(s"slice ${i + 1}/${runs.length}:")
       counts.toSeq.sortBy(_._1).foreach { case (table, n) =>

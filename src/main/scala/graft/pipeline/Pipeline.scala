@@ -1,10 +1,13 @@
 package graft.pipeline
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Normalize, Tables, TimeParse}
-import graft.dims.{Generators, NationDim, PartDim, PriorityDim, SegmentDim, SupplierDim}
+import graft.core.{KeyMapper, Normalize, Tables, TimeParse}
+import graft.dims.{DimLoader, Generators, NationDim, PartDim, PriorityDim,
+  SegmentDim, SupplierDim}
 import graft.facts.Star
 import graft.io.Sink
 
@@ -18,9 +21,21 @@ import graft.io.Sink
   *   4. fact: clean -> stamp surrogate keys -> project -> append
   *      (main.py:101-146)
   *
-  * Everything is lazy until the sink writes; transformed dims are cached
-  * because they are reused (load + key stamping) — the Spark analog of the
-  * reference holding them in memory across stages (main.py:58-67).
+  * Each source slice is read and joined once per run. Every sink call is
+  * at least one Spark action (the skip-if-empty guard, then the write),
+  * and without a cache each action would re-plan and re-run the whole
+  * upstream join. So the run persists the frames that more than one
+  * action reads — the Spark analog of the reference holding them in
+  * memory across stages (main.py:58-67):
+  *   - `cleaned`, the normalized lineitem slice: read by the three
+  *     lineitem dims and by the stamped fact;
+  *   - the five dims: each is loaded and then broadcast into key stamping;
+  *   - `fact`, stamped and projected: read by `fact_lineitem` and
+  *     `fact_integrated`;
+  *   - `ordersCleaned` and `ordersFact`, the same roles for orders.
+  * They are released in a `finally`, so a throwing sink leaks none of them.
+  * A dim's row count comes off a metrics node below its cache (see
+  * [[cachedRows]]), so no extra action counts it.
   *
   * Scale: the fact is written partitioned by ship date key prefix so
   * downstream incremental reads partition-prune; dims are tiny appends.
@@ -41,6 +56,15 @@ object Pipeline {
       sinkFormat: String = "parquet")
 
   def run(spark: SparkSession, cfg: Config): Map[String, Long] = {
+    val persisted = mutable.ArrayBuffer.empty[DataFrame]
+    def keep(df: DataFrame): DataFrame = { persisted += df; df.cache() }
+    try runSlice(spark, cfg, keep)
+    // dependents first, so no release re-plans a cache built on another
+    finally persisted.reverseIterator.foreach(_.unpersist())
+  }
+
+  private def runSlice(spark: SparkSession, cfg: Config,
+      keep: DataFrame => DataFrame): Map[String, Long] = {
     // 1. static dims — regenerated and appended per run, preserving the
     // reference's append-duplication quirk (§3.3); use Sink.overwrite for
     // the idempotent variant.
@@ -59,32 +83,36 @@ object Pipeline {
     // pre-normalize the natural-key columns (main.py:83-96)
     val naturalCols =
       PartDim.naturalCols ++ SupplierDim.naturalCols ++ NationDim.naturalCols
-    val cleaned = Normalize.normalizeStrings(raw, naturalCols)
+    val cleaned = keep(Normalize.normalizeStrings(raw, naturalCols))
 
     // 3. dim loop: build from the slice, load, retain for key assignment
-    val dims = Seq(
-      ("dim_part", PartDim: graft.dims.DimLoader),
-      ("dim_supplier", SupplierDim),
-      ("dim_nation", NationDim))
-      .map { case (name, loader) =>
-        val dim = loader.build(cleaned).cache()
+    def loadDims(source: DataFrame,
+        loaders: Seq[(String, DimLoader)]): Seq[(String, DimLoader, DataFrame)] =
+      loaders.map { case (name, loader) =>
+        val dim = keep(loader.build(source)
+          .observe(rowsMetric(name), count(lit(1))))
         if (cfg.idempotentDims)
           Sink.upsertDim(spark, dim, s"${cfg.outDir}/$name", loader.naturalCols,
             format = cfg.sinkFormat)
         else Sink.append(dim, s"${cfg.outDir}/$name", format = cfg.sinkFormat)
         (name, loader, dim)
       }
+    def stampKeys(source: DataFrame,
+        dims: Seq[(String, DimLoader, DataFrame)]): DataFrame =
+      dims.foldLeft(source) { case (f, (_, loader, dim)) =>
+        KeyMapper.assignKeys(f, dim, loader.naturalCols, loader.keyName)
+      }
+    val dims = loadDims(cleaned, Seq(
+      "dim_part" -> PartDim, "dim_supplier" -> SupplierDim,
+      "dim_nation" -> NationDim))
 
     // 4. fact: stamp keys from the retained dims, derive date key, project
-    val stamped = dims.foldLeft(cleaned) { case (fact, (_, loader, dim)) =>
-      graft.core.KeyMapper.assignKeys(fact, dim, loader.naturalCols, loader.keyName)
-    }
-    val fact = stamped
+    val fact = keep(stampKeys(cleaned, dims)
       .withColumn("ship_date_key", TimeParse.dateKey(col("l_shipdate")))
       .withColumn("ship_year", (col("ship_date_key") / 10000).cast("int"))
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
         "l_discount", "ship_date_key", "ship_year", "part_key",
-        "supplier_key", "nation_key")
+        "supplier_key", "nation_key"))
     // facts land partitioned by year so incremental reads partition-prune;
     // the row count is observed inside the write job (no DAG re-run)
     // directory partitioning is a parquet-layout concern; a warehouse
@@ -103,26 +131,14 @@ object Pipeline {
         .select("c_custkey", "c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
       .drop("c_custkey")
-    val ordersCleaned = Normalize.normalizeStrings(rawOrders,
-      PriorityDim.naturalCols ++ SegmentDim.naturalCols)
-    val ordersDims = Seq(
-      ("dim_priority", PriorityDim: graft.dims.DimLoader),
-      ("dim_segment", SegmentDim))
-      .map { case (name, loader) =>
-        val dim = loader.build(ordersCleaned).cache()
-        if (cfg.idempotentDims)
-          Sink.upsertDim(spark, dim, s"${cfg.outDir}/$name", loader.naturalCols,
-            format = cfg.sinkFormat)
-        else Sink.append(dim, s"${cfg.outDir}/$name", format = cfg.sinkFormat)
-        (name, loader, dim)
-      }
-    val ordersFact = ordersDims.foldLeft(ordersCleaned) {
-      case (f, (_, loader, dim)) =>
-        graft.core.KeyMapper.assignKeys(f, dim, loader.naturalCols, loader.keyName)
-    }
+    val ordersCleaned = keep(Normalize.normalizeStrings(rawOrders,
+      PriorityDim.naturalCols ++ SegmentDim.naturalCols))
+    val ordersDims = loadDims(ordersCleaned, Seq(
+      "dim_priority" -> PriorityDim, "dim_segment" -> SegmentDim))
+    val ordersFact = keep(stampKeys(ordersCleaned, ordersDims)
       .withColumn("order_date_key", TimeParse.dateKey(col("o_orderdate")))
       .select("o_orderkey", "o_totalprice", "order_date_key", "prio_key",
-        "segment_key")
+        "segment_key"))
     val nOrdersFact = Sink.append(ordersFact, s"${cfg.outDir}/fact_orders",
       format = cfg.sinkFormat)
 
@@ -139,17 +155,34 @@ object Pipeline {
       s"${cfg.outDir}/fact_integrated", format = cfg.sinkFormat)
 
     // observability counts (main.py:60-63): the write-observed row counts —
-    // no sink's DAG runs twice. Dim counts come off the cached dims.
-    val counts = Map(
+    // no sink's DAG runs twice — and each dim's rows, observed while its
+    // cache was built.
+    Map(
       "dim_date" -> nDateDim,
       "dim_time" -> nTimeDim,
       "fact_lineitem" -> nFact,
       "fact_orders" -> nOrdersFact,
       "fact_integrated" -> nIntegrated) ++
-      (dims ++ ordersDims).map { case (name, _, dim) => name -> dim.count() }
-    (dims ++ ordersDims).foreach(_._3.unpersist())
-    counts
+      (dims ++ ordersDims).map { case (name, _, dim) =>
+        name -> cachedRows(dim, name)
+      }
   }
+
+  private def rowsMetric(dim: String): String = s"graft_rows_$dim"
+
+  /** Rows of a dim cached with `observe(rowsMetric(name), count(lit(1)))`
+    * under its `cache()`. The metrics node runs inside the cache build, and
+    * `QueryExecution.observedMetrics` reads it through the cached scan
+    * without running a job. The value is the total once every partition of
+    * the cache is built; each partition is built once. By the time the
+    * run reads it, the dim's load has built all of them: a write scans
+    * every row, and a skip-if-empty guard that finds no row has scanned
+    * every partition. The one-shot `Observation` would not do here: the
+    * first action to report it is that `limit(1)` guard, which may stop
+    * after one partition.
+    */
+  private def cachedRows(dim: DataFrame, name: String): Long =
+    dim.queryExecution.observedMetrics(rowsMetric(name)).getLong(0)
 
   /** Read back a pipeline output table. */
   def table(spark: SparkSession, outDir: String, name: String,
@@ -159,9 +192,9 @@ object Pipeline {
 
 /** Backfill orchestrator (reference `load_history.py:4-17`): replay
   * month-at-a-time slices over a date range. The reference forks a
-  * subprocess per month; here each slice is one lazy job in the same
-  * session — same isolation of state (each slice re-derives its dims),
-  * none of the process overhead.
+  * subprocess per month; here each slice is one `Pipeline.run` in the
+  * same session — same isolation of state (each slice re-derives its
+  * dims and releases what it persisted), none of the process overhead.
   */
 object Backfill {
 
@@ -174,9 +207,11 @@ object Backfill {
       .toSeq
   }
 
-  def run(spark: SparkSession, sfDir: String, outDir: String,
-      start: String, end: String): Seq[Map[String, Long]] =
-    monthSlices(start, end).map { case (s, e) =>
-      Pipeline.run(spark, Pipeline.Config(sfDir, outDir, s, e))
+  /** One `Pipeline.run` per month of `[cfg.start, cfg.end)`; every other
+    * field of `cfg` (dim mode, sink format) applies to each slice.
+    */
+  def run(spark: SparkSession, cfg: Pipeline.Config): Seq[Map[String, Long]] =
+    monthSlices(cfg.start, cfg.end).map { case (s, e) =>
+      Pipeline.run(spark, cfg.copy(start = s, end = e))
     }
 }

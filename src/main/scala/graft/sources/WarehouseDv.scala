@@ -115,8 +115,7 @@ object WarehouseDv {
           .select(fcol("__pos")).as[Long]
           .mapPartitions { it =>
             val words = new Array[Long](wordsLen)
-            val tfs = new Path(dst).getFileSystem(
-              new org.apache.hadoop.conf.Configuration())
+            val tfs = WarehouseMeta.fs(dst)
             oldDv.foreach { p =>
               val ow = read(tfs, p)
               System.arraycopy(ow, 0, words, 0, ow.length)
@@ -254,8 +253,7 @@ object WarehouseDv {
           .select(col("__pos")).as[Long]
           .mapPartitions { it =>
             val words = new Array[Long](wordsLen)
-            val tfs = new Path(dst).getFileSystem(
-              new org.apache.hadoop.conf.Configuration())
+            val tfs = WarehouseMeta.fs(dst)
             oldDv.foreach { p =>
               val ow = read(tfs, p)
               System.arraycopy(ow, 0, words, 0, ow.length)

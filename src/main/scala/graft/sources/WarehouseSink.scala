@@ -2301,8 +2301,13 @@ object WarehouseRewrite {
   * and debuggable with `cat`.
   */
 object WarehouseMeta {
-  def fs(root: String): FileSystem =
-    new Path(root).getFileSystem(new org.apache.hadoop.conf.Configuration())
+  // One Configuration per JVM, shared by every caller, tasks included. A
+  // fresh one parses the Hadoop default resources again on first use, and
+  // buys nothing: FileSystem's cache hands back the same instance per
+  // scheme and authority whatever Configuration asks for it.
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
+  def fs(root: String): FileSystem = new Path(root).getFileSystem(hadoopConf)
 
   private val ManifestRe = "manifest-([0-9]+)".r
 

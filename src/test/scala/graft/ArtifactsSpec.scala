@@ -113,24 +113,7 @@ class ArtifactsSpec extends SparkSpec {
   * matches on.
   */
 class ArtifactLintSpec extends AnyFunSuite {
-
-  private def sources(root: String): Seq[File] = {
-    val dir = new File(root)
-    assert(dir.isDirectory, s"run from the repo root: $root not found")
-    def walk(f: File): Seq[File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    walk(dir)
-  }
-
-  private def hits(files: Seq[File], needle: String): Seq[String] =
-    files.flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().zipWithIndex.collect {
-        case (line, i) if line.contains(needle) => s"${f.getPath}:${i + 1}"
-      }.toList
-      finally src.close()
-    }
+  import SourceLint.{hits, sources}
 
   test("queries publish no artifact by hand") {
     val queries = sources("src/main/scala/graft/queries")

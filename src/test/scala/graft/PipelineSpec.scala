@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.{col, expr, when}
 
+import graft.dims.{NationDim, PartDim, PriorityDim, SegmentDim, SupplierDim}
+import graft.io.Sink
 import graft.pipeline.{Backfill, Pipeline}
 
 /** End-to-end DAG smoke (SURVEY §5.4): full pipeline over sf0.001, fact row
@@ -16,6 +19,15 @@ class PipelineSpec extends SparkSpec {
     fs.delete(new Path(p), true)
     p
   }
+
+  private val facts = Seq("fact_lineitem", "fact_orders", "fact_integrated")
+  private val dimLoaders = Seq("dim_part" -> PartDim,
+    "dim_supplier" -> SupplierDim, "dim_nation" -> NationDim,
+    "dim_priority" -> PriorityDim, "dim_segment" -> SegmentDim)
+
+  /** Ids of the RDDs persisted right now; a run must add none. */
+  private def persisted(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("full pipeline: fact written with 100% FK coverage") {
     val out = freshDir("e2e")
@@ -94,5 +106,106 @@ class PipelineSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       graft.pipeline.Main.parse(Seq("--bogus"))
     }
+  }
+
+  test("CLI --backfill honours --idempotent-dims: a rerun adds no dim rows") {
+    val out = freshDir("cli_backfill")
+    val argv = Array("--sf", sf, "--out", out, "--start", "1995-01-01",
+      "--end", "1995-03-01", "--backfill", "--idempotent-dims")
+    def dimRows(): Map[String, Long] = dimLoaders.map { case (d, _) =>
+      d -> Pipeline.table(spark, out, d).count()
+    }.toMap
+    graft.pipeline.Main.main(argv)
+    val once = dimRows()
+    assert(once.values.forall(_ > 0), once)
+    graft.pipeline.Main.main(argv)
+    assert(dimRows() === once)
+  }
+
+  test("upsertDim after a failed first load lands the whole dim") {
+    import spark.implicits._
+    val dim = Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("k", "v")
+    // the guard's limit(1) prunes `v`; the write evaluates it and throws
+    val poisoned = dim.repartition(2).select(col("k"),
+      when(col("k") === "c", expr("raise_error('poisoned row')"))
+        .otherwise(col("v")).as("v"))
+    Seq("graft-warehouse", "parquet").foreach { format =>
+      val path = freshDir(s"upsert_abort_${format.replace('-', '_')}")
+      intercept[Exception] {
+        Sink.upsertDim(spark, poisoned, path, Seq("k"), format)
+      }
+      assert(new java.io.File(path).isDirectory,
+        s"$format: the failed load left its directory")
+      assert(!Sink.hasData(spark, path, format), format)
+      assert(Sink.upsertDim(spark, dim, path, Seq("k"), format) === 3L, format)
+      assert(Sink.read(spark, path, format).count() === 3L, format)
+      assert(Sink.upsertDim(spark, dim, path, Seq("k"), format) === 0L, format)
+    }
+  }
+
+  test("warehouse sink with idempotent dims over two monthly slices") {
+    // the benchmark's configuration (perfbench etl_backfill)
+    val out = freshDir("wh_slices")
+    val fmt = "graft-warehouse"
+    val read = (t: String) => Pipeline.table(spark, out, t, fmt)
+    val before = persisted()
+    val runs = Backfill.monthSlices("1996-07-01", "1996-09-01").map {
+      case (s, e) =>
+        val counts = Pipeline.run(spark, Pipeline.Config(sf, out, s, e,
+          idempotentDims = true, sinkFormat = fmt))
+        assert(persisted() === before, s"slice $s left RDDs persisted")
+        if (s == "1996-07-01") dimLoaders.foreach { case (d, _) =>
+          // first slice into a fresh table: every dim row is new
+          assert(read(d).count() === counts(d), d)
+        }
+        counts
+    }
+    assert(runs.forall(_("fact_lineitem") > 0), runs)
+    facts.foreach { t =>
+      assert(read(t).count() === runs.map(_(t)).sum, t)
+    }
+    Seq("fact_lineitem" -> Seq("part_key", "supplier_key", "nation_key"),
+      "fact_orders" -> Seq("prio_key", "segment_key")).foreach {
+      case (t, keys) => keys.foreach { k =>
+        assert(read(t).filter(col(k).isNull).count() === 0L, s"$t.$k")
+      }
+    }
+    dimLoaders.foreach { case (d, loader) =>
+      val dim = read(d)
+      assert(dim.count() ===
+        dim.select(loader.naturalCols.map(col): _*).distinct().count(), d)
+    }
+  }
+
+  test("a sink that throws once the dims are cached leaves no RDD persisted") {
+    val out = freshDir("wh_throw")
+    val fmt = "graft-warehouse"
+    // fact_orders already holds another schema: its commit fails on drift
+    Sink.append(spark.range(1).toDF("x"), s"$out/fact_orders", format = fmt)
+    val before = persisted()
+    val e = intercept[Exception] {
+      Pipeline.run(spark, Pipeline.Config(sf, out, "1996-07-01", "1996-08-01",
+        idempotentDims = true, sinkFormat = fmt))
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("schema drift")), msgs)
+    assert(graft.sources.WarehouseMeta.readManifest(s"$out/dim_priority").isDefined,
+      "the dims were loaded before the fact failed")
+    assert(persisted() === before)
+  }
+
+  test("an empty slice writes no fact and leaves no RDD persisted") {
+    val out = freshDir("empty")
+    val before = persisted()
+    val counts = Pipeline.run(spark,
+      Pipeline.Config(sf, out, "1980-01-01", "1980-02-01"))
+    facts.foreach { t =>
+      assert(counts(t) === 0L, t)
+      assert(!new java.io.File(s"$out/$t").exists, s"$t directory created")
+    }
+    dimLoaders.foreach { case (d, _) => assert(counts(d) === 0L, d) }
+    assert(counts("dim_time") === 1440L)
+    assert(persisted() === before)
   }
 }
