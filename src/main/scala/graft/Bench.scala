@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * the MEDIAN across passes and "value" is the sum of medians, so
   * round-over-round comparisons measure the steady state, not whichever
   * pass paid first-run codegen. The per-pass totals are included under
-  * "totals" for dispersion.
+  * "totals" for dispersion. A query that throws in any pass is listed
+  * under "failed" ("n_failed" on the compact line) and counted in no
+  * time, total or matrix.
   *
   * Self-healing (round-12 verdict #1): if pass-to-pass spread exceeds
   * SPARK_GRAFT_BENCH_SPREAD_RETRY_PCT (default 20%), the pass farthest
@@ -58,11 +60,12 @@ object Bench {
     val queries = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
 
-    def onePass(): Map[String, Double] =
-      queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val t = (System.nanoTime() - t0) / 1e9
+    // the queries that threw in any pass, warmup included
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def onePass(): Map[String, Double] = {
+      val (times, thrown) = timePass(
+        queries.toSeq.map { case (name, fn) =>
+          name -> (() => fn(spark, sfDir).count(): Unit) },
         // Drop this query's localCheckpoint blocks before the next query:
         // queries are self-contained (no cross-query cache reuse), but the
         // ContextCleaner reclaims dereferenced blocks asynchronously and
@@ -71,10 +74,14 @@ object Bench {
         // ~199 queries' pinned blocks accumulated in one JVM. Explicit
         // unpersist keeps every query's measurement independent of its
         // position in the pass. (Not charged to the query's time.)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        name -> t
-      }
+        () => spark.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = false)))
+      failed ++= thrown
+      times
+    }
+    // the queries that have not thrown so far, and a pass's total over them
+    def ok: Seq[String] = queries.keys.toSeq.filterNot(failed)
+    def passTotal(p: Map[String, Double]): Double = ok.map(p).sum
 
     onePass() // warmup: codegen + caches, not charged to anyone
 
@@ -87,8 +94,8 @@ object Bench {
     // sum of per-query medians) so the retry trigger and the artifact
     // number can never disagree about whether a window was noisy
     def spreadOf(ps: Seq[Map[String, Double]]): Double = {
-      val ts = ps.map(_.values.sum)
-      val tot = queries.keys.toSeq
+      val ts = ps.map(passTotal)
+      val tot = ok
         .map(n => median(ps.map(_(n)))).sum
       if (ts.size < 2 || tot == 0) 0.0 else (ts.max - ts.min) / tot * 100
     }
@@ -114,15 +121,15 @@ object Bench {
       extra += 1
       val fresh = onePass()
       val all = kept :+ fresh
-      val medTotal = median(all.map(_.values.sum))
-      val worst = all.maxBy(p => math.abs(p.values.sum - medTotal))
+      val medTotal = median(all.map(passTotal))
+      val worst = all.maxBy(p => math.abs(passTotal(p) - medTotal))
       dropped :+= worst
       kept = {
         val i = all.indexOf(worst)
         all.patch(i, Nil, 1)
       }
     }
-    val names = queries.keys.toSeq
+    val names = ok
     // Exhaustion escape hatch (round-13 verdict #3): bounded retries
     // cannot outrun a CONTINUOUSLY degraded host — when healing exhausts
     // with the kept window still above threshold, per-query medians over
@@ -143,7 +150,7 @@ object Bench {
     def ms3(v: Double): String = f"$v%.3f"
     val qs = names.map(n => s"\"$n\":" + ms3(med(n))).mkString("{", ",", "}")
     val total = med.values.sum
-    val passTotals = passes.map(_.values.sum)
+    val passTotals = passes.map(passTotal)
     val totals = passTotals.map(t => f"$t%.3f").mkString("[", ",", "]")
     // noise indicator: pass-to-pass spread relative to the median-of-sums
     // headline. Shared-host jitter shows up here, not in "value" (per-query
@@ -152,7 +159,7 @@ object Bench {
     val spreadPct =
       if (passTotals.size < 2 || total == 0) 0.0
       else (passTotals.max - passTotals.min) / total * 100
-    val droppedTotals = dropped.map(d => f"${d.values.sum}%.3f")
+    val droppedTotals = dropped.map(d => f"${passTotal(d)}%.3f")
       .mkString("[", ",", "]")
     // per-pass per-query sidecar for the 20 heaviest queries (by median):
     // the rows round-over-round noise adjudication actually needs — a
@@ -190,7 +197,8 @@ object Bench {
     def passesJson(ps: Seq[Map[String, Double]]): String =
       ps.map(p => names.map(n => s"\"$n\":" + ms3(p(n)))
         .mkString("{", ",", "}")).mkString("[", ",", "]")
-    val fullLine = f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","iters":$iters,"totals":$totals,"spread_pct":$spreadPct%.1f,"extra_passes":$extra,"dropped_totals":$droppedTotals,"value_kept_passes":${ms3(valueKept)},"value_all_passes":${ms3(valueAll)}$healedField$canaryFields,"per_pass":$perPass,"passes_kept":${passesJson(passes)},"passes_dropped":${passesJson(dropped)}}"""
+    val failedJson = failed.map(n => s"\"$n\"").mkString("[", ",", "]")
+    val fullLine = f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","iters":$iters,"totals":$totals,"spread_pct":$spreadPct%.1f,"extra_passes":$extra,"dropped_totals":$droppedTotals,"value_kept_passes":${ms3(valueKept)},"value_all_passes":${ms3(valueAll)}$healedField$canaryFields,"per_pass":$perPass,"passes_kept":${passesJson(passes)},"passes_dropped":${passesJson(dropped)}}"""
     // The contract line first (full stdout captures get everything) …
     println(fullLine)
     // … then two artifact-capture fixes for the driver's 2000-char
@@ -216,7 +224,7 @@ object Bench {
       System.err.println(s"[bench] sidecar write failed: ${e.getMessage}") }
     val budget = 1700
     val heavy = names.sortBy(-med(_))
-    val head = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","iters":$iters,"n_queries":${names.size},"totals":$totals,"spread_pct":$spreadPct%.1f,"extra_passes":$extra,"dropped_totals":$droppedTotals,"value_kept_passes":${ms3(valueKept)},"value_all_passes":${ms3(valueAll)}$healedField$canaryFields,"full":"$sidecar","top":{"""
+    val head = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","iters":$iters,"n_queries":${names.size},"n_failed":${failed.size},"totals":$totals,"spread_pct":$spreadPct%.1f,"extra_passes":$extra,"dropped_totals":$droppedTotals,"value_kept_passes":${ms3(valueKept)},"value_all_passes":${ms3(valueAll)}$healedField$canaryFields,"full":"$sidecar","top":{"""
     val sb = new StringBuilder(head)
     var first = true
     for (n <- heavy) {
@@ -226,5 +234,23 @@ object Bench {
     sb.append("}}")
     println(sb.toString)
     spark.stop()
+  }
+
+  /** One timed pass: seconds for each query that returned, in order, and
+    * the names of those that threw — a thrown query is a failure, never a
+    * time. `afterEach` runs after every query, outside its time. */
+  private[graft] def timePass(queries: Seq[(String, () => Unit)],
+      afterEach: () => Unit = () => ()): (Map[String, Double], Seq[String]) = {
+    val times = Map.newBuilder[String, Double]
+    val thrown = Seq.newBuilder[String]
+    for ((name, run) <- queries) {
+      val t0 = System.nanoTime()
+      try {
+        run()
+        times += name -> (System.nanoTime() - t0) / 1e9
+      } catch { case _: Throwable => thrown += name }
+      afterEach()
+    }
+    (times.result(), thrown.result())
   }
 }

@@ -18,39 +18,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Sink {
 
-  /** Append `df`; returns the number of rows written, observed DURING the
-    * write job (`Dataset.observe` piggybacks a CollectMetrics node on the
-    * write's own pass) — callers get load observability without re-running
-    * the DataFrame's DAG for a count.
-    */
+  /** Append `df`; returns the number of rows written (see [[write]]). */
   def append(df: DataFrame, path: String, partitionByCols: Seq[String] = Nil,
       format: String = "parquet",
-      options: Map[String, String] = Map.empty): Long = {
+      options: Map[String, String] = Map.empty): Long =
     // skip-if-empty guard (dim_loader.py:26-27) without a full count: limit 1.
     if (df.isEmpty) 0L
-    else {
-      val obs = org.apache.spark.sql.Observation()
-      val observed = df.observe(obs,
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("rows"))
-      val w = observed.write.mode("append").format(format).options(options)
-      (if (partitionByCols.nonEmpty) w.partitionBy(partitionByCols: _*) else w)
-        .save(path)
-      obs.get("rows").asInstanceOf[Long]
-    }
-  }
+    else write(df, "append", path, partitionByCols, format, options)
 
-  /** Overwrite `df` at `path`; returns rows written (observed in-flight,
-    * as in [[append]]).
-    */
+  /** Overwrite `df` at `path`; returns rows written (see [[write]]). */
   def overwrite(df: DataFrame, path: String, partitionByCols: Seq[String] = Nil,
       format: String = "parquet",
-      options: Map[String, String] = Map.empty): Long = {
+      options: Map[String, String] = Map.empty): Long =
+    write(df, "overwrite", path, partitionByCols, format, options)
+
+  /** Save `df` under `mode`; returns the number of rows written, observed
+    * DURING the write job (`Dataset.observe` piggybacks a CollectMetrics
+    * node on the write's own pass) — callers get load observability
+    * without re-running the DataFrame's DAG for a count.
+    */
+  private def write(df: DataFrame, mode: String, path: String,
+      partitionByCols: Seq[String], format: String,
+      options: Map[String, String]): Long = {
     val obs = org.apache.spark.sql.Observation()
     val observed = df.observe(obs,
       org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("rows"))
-    val w = observed.write.mode("overwrite").format(format).options(options)
+    val w = observed.write.mode(mode).format(format).options(options)
     (if (partitionByCols.nonEmpty) w.partitionBy(partitionByCols: _*) else w)
       .save(path)
     obs.get("rows").asInstanceOf[Long]

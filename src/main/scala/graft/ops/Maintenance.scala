@@ -108,9 +108,7 @@ object Maintenance {
   def compactWarehouse(spark: SparkSession, root: String,
       targetFiles: Int = 1): (Int, Int) = {
     require(targetFiles > 0, "targetFiles must be positive")
-    val before = graft.sources.WarehouseMeta.readManifest(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-warehouse table at $root has no committed manifest"))
+    val before = graft.sources.WarehouseMeta.current(root)
     val df = graft.io.Sink.read(spark, root, "graft-warehouse")
     // Clustered layout: repartition BY the cluster column, with the task
     // count sized from the manifest's distinct part values (advice r13:
@@ -128,12 +126,7 @@ object Maintenance {
       case None => df.repartition(targetFiles)
     }
     graft.io.Sink.overwrite(repart, root,
-      format = "graft-warehouse",
-      options = before.clusterBy.map("clusterBy" -> _).toMap ++
-        before.bloomConf.map { case (cols, bits) =>
-          Map("bloomFilters" -> cols.mkString(","),
-            "bloomBits" -> bits.toString)
-        }.getOrElse(Map.empty))
+      format = "graft-warehouse", options = before.layoutOptions)
     val after = graft.sources.WarehouseMeta.readManifest(root).get
     (before.files.size, after.files.size)
   }
@@ -169,9 +162,7 @@ object Maintenance {
       targetBytes: Long = 128L << 20): OptimizeStats = {
     require(smallBytes > 0 && targetBytes > 0,
       "smallBytes and targetBytes must be positive")
-    val m = graft.sources.WarehouseMeta.readManifest(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-warehouse table at $root has no committed manifest"))
+    val m = graft.sources.WarehouseMeta.current(root)
     val fs = graft.sources.WarehouseMeta.fs(root)
     val size = m.files.map { f =>
       f -> fs.getFileStatus(new org.apache.hadoop.fs.Path(root, f)).getLen
@@ -230,10 +221,9 @@ object Maintenance {
   def vacuumWarehouse(root: String,
       keepGenerations: Int = 2): VacuumStats = {
     require(keepGenerations >= 1, "keepGenerations must be >= 1")
+    graft.sources.WarehouseMeta.current(root): Unit // refuse a non-table
     val fs = graft.sources.WarehouseMeta.fs(root)
     val gens = graft.sources.WarehouseMeta.generations(root)
-    require(gens.nonEmpty,
-      s"graft-warehouse table at $root has no committed manifest")
     val (drop, keep) =
       gens.splitAt(math.max(gens.size - keepGenerations, 0))
     val referenced = keep.flatMap { g =>
@@ -241,9 +231,8 @@ object Maintenance {
       gm.files ++ gm.dvs.values.map(_._1)
     }.toSet
     val jobId = s"vacuum-${java.util.UUID.randomUUID()}"
-    graft.sources.WarehouseMeta.logJobState(fs, root, jobId,
-      s"PENDING keep=$keepGenerations")
-    try {
+    graft.sources.WarehouseMeta.job(root, jobId,
+        s"PENDING keep=$keepGenerations") { _ =>
       drop.foreach { g =>
         fs.delete(new org.apache.hadoop.fs.Path(root,
           s"_manifest/manifest-$g"), false): Unit
@@ -270,13 +259,7 @@ object Maintenance {
             fs.delete(job.getPath, false): Unit
         }
       }
-      graft.sources.WarehouseMeta.logJobState(fs, root, jobId, "DONE")
       VacuumStats(keep.size, drop.size, deleted, bytes)
-    } catch {
-      case e: Throwable =>
-        graft.sources.WarehouseMeta.logJobState(fs, root, jobId,
-          s"ERROR ${e.getMessage}")
-        throw e
     }
   }
 }

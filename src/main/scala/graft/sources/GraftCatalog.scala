@@ -161,10 +161,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
           .getOrElse(WarehouseBloom.DefaultBits))
     }
     val jobId = s"create-${java.util.UUID.randomUUID().toString.take(8)}"
-    WarehouseMeta.logJobState(fs, p, jobId, "PENDING create")
-    WarehouseMeta.writeManifest(fs, p, Manifest(0L, schema, Nil, jobId,
-      "CREATE", clusterBy = clusterBy, bloomConf = bloomConf))
-    WarehouseMeta.logJobState(fs, p, jobId, "DONE")
+    WarehouseMeta.job(p, jobId, "PENDING create") { publish =>
+      publish(Manifest(0L, schema, Nil, jobId, "CREATE",
+        clusterBy = clusterBy, bloomConf = bloomConf))
+    }
     new WarehouseTable(p, schema)
   }
 

@@ -3,7 +3,7 @@ package graft.sources
 import java.io.{DataInputStream, DataOutputStream}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.Filter
 
@@ -64,6 +64,72 @@ object WarehouseDv {
     } finally in.close()
   }
 
+  /** Marks, per file of `files` (each in `m`), the ordinals of the rows
+    * `cond` holds for in a deletion vector at `data/<jobId>/dv-<i>.dv`.
+    * One small job per file RAW-reads it (existing vectors ignored —
+    * ordinals must index the file, and re-marking an already-deleted
+    * ordinal is idempotent under the union), marks matching ordinals IN
+    * THE TASK, unions them with the file's current vector, and publishes
+    * the bitmap from the executor — no ordinal ever passes through the
+    * driver, so a billion-row delete costs the driver one manifest edit.
+    * Returns file -> (vector path, marked count) and the number of
+    * newly marked ordinals. */
+  private def markOrdinals(spark: SparkSession, root: String, m: Manifest,
+      files: Seq[String], cond: Column,
+      jobId: String): (Map[String, (String, Long)], Long) = {
+    import spark.implicits._
+    val fs = WarehouseMeta.fs(root)
+    if (files.nonEmpty) fs.mkdirs(new Path(root, s"data/$jobId"))
+    var newlyMarked = 0L
+    val dvs = files.zipWithIndex.map { case (f, i) =>
+      val nRows = m.rows.getOrElse(f,
+        throw new IllegalStateException(s"file $f lacks frows"))
+      val wordsLen = ((nRows + 63) >>> 6).toInt
+      val oldDv = m.dvs.get(f).map(d => s"$root/${d._1}")
+      val rel = s"data/$jobId/dv-$i.dv"
+      val dst = s"$root/$rel"
+      // single file -> single partition -> monotonic ids are the
+      // 0-based file ordinals
+      val out = spark.read.format("graft-warehouse")
+        .option("path", root).option("files", f)
+        .option("generation", m.generation.toString)
+        .option("ignoreDeleteVectors", "true").load()
+        .withColumn("__pos", monotonically_increasing_id())
+        .filter(cond)
+        .select(col("__pos")).as[Long]
+        .mapPartitions { it =>
+          val words = new Array[Long](wordsLen)
+          val tfs = WarehouseMeta.fs(dst)
+          oldDv.foreach { p =>
+            val ow = read(tfs, p)
+            System.arraycopy(ow, 0, words, 0, ow.length)
+          }
+          val before = popCount(words)
+          it.foreach { ord =>
+            require(ord >= 0 && ord < nRows,
+              s"ordinal $ord out of range")
+            words((ord >>> 6).toInt) |= 1L << (ord & 63)
+          }
+          val after = popCount(words)
+          // task-attempt-unique stage + driver rename = speculative
+          // twins can never corrupt the published bitmap
+          val attempt = org.apache.spark.TaskContext.get()
+            .taskAttemptId()
+          val tmp = s"$dst.tmp-$attempt"
+          write(tfs, tmp, words)
+          Iterator.single((tmp, after, after - before))
+        }.collect()
+      require(out.length == 1,
+        s"expected one bitmap task for $f, got ${out.length}")
+      val (tmp, unionCount, delta) = out(0)
+      require(fs.rename(new Path(tmp), new Path(dst)),
+        s"cannot publish deletion vector $rel")
+      newlyMarked += delta
+      f -> (rel, unionCount)
+    }.toMap
+    (dvs, newlyMarked)
+  }
+
   /** MERGE-ON-READ UPDATE: rows matching `pred` are VECTORED OUT of
     * their files and re-appended with the SET expressions applied — one
     * atomic `UPDATE_MOR` generation whose write cost is the updated
@@ -76,11 +142,8 @@ object WarehouseDv {
     */
   def updateWhereMor(spark: SparkSession, root: String, pred: Filter,
       set: Map[String, String]): Long = {
-    import org.apache.spark.sql.functions.{col => fcol, expr => fexpr, when => fwhen}
     val predCol = WarehouseCow.filterToColumn(pred)
-    val m = WarehouseMeta.readManifest(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-warehouse table at $root has no committed manifest"))
+    val m = WarehouseMeta.current(root)
     val cols = m.schema.fieldNames.toSet
     val badCols = set.keys.filterNot(cols)
     require(badCols.isEmpty,
@@ -88,112 +151,29 @@ object WarehouseDv {
     val affected = m.files.filter(f =>
       WarehouseZoneMap.mightMatch(pred, m.stats.getOrElse(f, Map.empty)))
     if (affected.isEmpty) return 0L
-    val fs = WarehouseMeta.fs(root)
     val jobId = s"update_mor_${java.util.UUID.randomUUID().toString.take(8)}"
-    WarehouseMeta.logJobState(fs, root, jobId, "RUNNING")
-    try {
-      val dataDir = new Path(root, s"data/$jobId")
-      fs.mkdirs(dataDir)
+    WarehouseMeta.job(root, jobId, "RUNNING") { publish =>
       val cond = coalesce(predCol, lit(false))
       // leg 1: vector out the matching ordinals of each affected file
-      // (executor-built bitmaps, same discipline as deleteWhereDv)
-      import spark.implicits._
-      var updatedCount = 0L
-      val newDvs = affected.zipWithIndex.map { case (f, i) =>
-        val nRows = m.rows.getOrElse(f,
-          throw new IllegalStateException(s"file $f lacks frows"))
-        val wordsLen = ((nRows + 63) >>> 6).toInt
-        val oldDv = m.dvs.get(f).map(d => s"$root/${d._1}")
-        val rel = s"data/$jobId/dv-$i.dv"
-        val dst = s"$root/$rel"
-        val out = spark.read.format("graft-warehouse")
-          .option("path", root).option("files", f)
-          .option("generation", m.generation.toString)
-          .option("ignoreDeleteVectors", "true").load()
-          .withColumn("__pos", monotonically_increasing_id())
-          .filter(cond)
-          .select(fcol("__pos")).as[Long]
-          .mapPartitions { it =>
-            val words = new Array[Long](wordsLen)
-            val tfs = WarehouseMeta.fs(dst)
-            oldDv.foreach { p =>
-              val ow = read(tfs, p)
-              System.arraycopy(ow, 0, words, 0, ow.length)
-            }
-            val before = popCount(words)
-            it.foreach { ord =>
-              words((ord >>> 6).toInt) |= 1L << (ord & 63)
-            }
-            val after = popCount(words)
-            val attempt = org.apache.spark.TaskContext.get()
-              .taskAttemptId()
-            val tmp = s"$dst.tmp-$attempt"
-            write(tfs, tmp, words)
-            Iterator.single((tmp, after, after - before))
-          }.collect()
-        require(out.length == 1,
-          s"expected one bitmap task for $f, got ${out.length}")
-        val (tmp, unionCount, delta) = out(0)
-        require(fs.rename(new Path(tmp), new Path(dst)),
-          s"cannot publish deletion vector $rel")
-        updatedCount += delta
-        f -> (rel, unionCount)
-      }.toMap
+      val (newDvs, updated) =
+        markOrdinals(spark, root, m, affected, cond, jobId)
       // leg 2: the updated rows re-append (LIVE rows only — the current
-      // vectors apply to this read) as fresh staged files with full
+      // vectors apply to this read) as fresh files with full
       // stats/layout/blooms, exactly like any load
       val updatedRows = WarehouseCow.readSubset(spark, root, affected)
         .filter(cond)
         .select(m.schema.fields.map { fld =>
           set.get(fld.name) match {
-            case Some(e) =>
-              fexpr(e).cast(fld.dataType).as(fld.name)
-            case None => fcol(fld.name)
+            case Some(e) => expr(e).cast(fld.dataType).as(fld.name)
+            case None => col(fld.name)
           }
         }.toIndexedSeq: _*)
-      val tmpRoot = s"$root/_mor_tmp_${java.util.UUID.randomUUID()}"
-      val moved =
-        try {
-          graft.io.Sink.overwrite(updatedRows, tmpRoot,
-            format = "graft-warehouse",
-            options = m.clusterBy.map("clusterBy" -> _).toMap ++
-              m.bloomConf.map { case (cs, b) =>
-                Map("bloomFilters" -> cs.mkString(","),
-                  "bloomBits" -> b.toString)
-              }.getOrElse(Map.empty))
-          val tm = WarehouseMeta.readManifest(tmpRoot).get
-          require(tm.schema.simpleString == m.schema.simpleString,
-            s"update rewrite schema drift: ${tm.schema.simpleString}")
-          tm.files.filter(f => tm.rows.getOrElse(f, 1L) > 0L).map { f =>
-            val name = new Path(f).getName
-            require(fs.rename(new Path(tmpRoot, f),
-              new Path(dataDir, name)),
-              s"update_mor $jobId: cannot move $f")
-            if (tm.blooms.get(f).exists(_.nonEmpty))
-              require(fs.rename(new Path(tmpRoot, s"$f.bloom"),
-                new Path(dataDir, s"$name.bloom")),
-                s"update_mor $jobId: cannot move bloom sidecar of $f")
-            (f, s"data/$jobId/$name", tm)
-          }
-        } finally WarehouseRewrite.rmTree(fs,
-          new Path(tmpRoot))
-      def rekey[V](get: Manifest => Map[String, V]): Map[String, V] =
-        get(m) ++ moved.flatMap { case (o, n, tm) => get(tm).get(o).map(n -> _) }
-      WarehouseMeta.writeManifest(fs, root, m.copy(
-        generation = m.generation + 1, jobId = jobId,
-        disposition = "UPDATE_MOR",
-        files = m.files ++ moved.map(_._2),
-        stats = rekey(_.stats), rows = rekey(_.rows),
-        parts = rekey(_.parts), nonNull = rekey(_.nonNull),
-        sums = rekey(_.sums), arity = rekey(_.arity),
-        blooms = rekey(_.blooms),
-        dvs = m.dvs ++ newDvs))
-      WarehouseMeta.logJobState(fs, root, jobId, "DONE")
-      updatedCount
-    } catch {
-      case e: Throwable =>
-        WarehouseMeta.logJobState(fs, root, jobId, s"ERROR ${e.getMessage}")
-        throw e
+      val (tm, moved) =
+        WarehouseRewrite.viaScratch(spark, root, m, updatedRows, jobId)
+      val withNew = m.addFrom(tm, moved)
+      publish(withNew.copy(generation = m.generation + 1, jobId = jobId,
+        disposition = "UPDATE_MOR", dvs = withNew.dvs ++ newDvs))
+      updated
     }
   }
 
@@ -207,10 +187,7 @@ object WarehouseDv {
   def deleteWhereDv(spark: SparkSession, root: String,
       pred: Filter): Long = {
     val predCol = WarehouseCow.filterToColumn(pred) // refuse shapes first
-    val m = WarehouseMeta.readManifest(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-warehouse table at $root has no committed manifest"))
-    val fs = WarehouseMeta.fs(root)
+    val m = WarehouseMeta.current(root)
     val (fullDrop, rest) = m.files.partition { f =>
       WarehouseZoneMap.mustMatch(pred, m.stats.getOrElse(f, Map.empty),
         m.rows.get(f), m.nonNull.getOrElse(f, Map.empty))
@@ -221,82 +198,14 @@ object WarehouseDv {
       "dropped files lack exact row counts — the deleted-count " +
         "contract would be a guess")
     val jobId = s"delete_dv_${java.util.UUID.randomUUID().toString.take(8)}"
-    WarehouseMeta.logJobState(fs, root, jobId, "RUNNING")
-    try {
-      val dataDir = new Path(root, s"data/$jobId")
-      if (partial.nonEmpty) fs.mkdirs(dataDir)
-      // one small job per partial file: RAW-read it (existing vectors
-      // ignored — ordinals must index the file, and re-marking an
-      // already-deleted ordinal is idempotent under the union), mark
-      // matching ordinals IN THE TASK, union with the current vector,
-      // and publish the bitmap from the executor — no ordinal ever
-      // passes through the driver, so a billion-row delete costs the
-      // driver one manifest edit
-      val cond = coalesce(predCol, lit(false))
-      import spark.implicits._
-      var deltaDeleted = 0L
-      val newDvs = partial.zipWithIndex.map { case (f, i) =>
-        val nRows = m.rows.getOrElse(f,
-          throw new IllegalStateException(s"file $f lacks frows"))
-        val wordsLen = ((nRows + 63) >>> 6).toInt
-        val oldDv = m.dvs.get(f).map(d => s"$root/${d._1}")
-        val rel = s"data/$jobId/dv-$i.dv"
-        val dst = s"$root/$rel"
-        // single file -> single partition -> monotonic ids are the
-        // 0-based file ordinals
-        val out = spark.read.format("graft-warehouse")
-          .option("path", root).option("files", f)
-          .option("generation", m.generation.toString)
-          .option("ignoreDeleteVectors", "true").load()
-          .withColumn("__pos", monotonically_increasing_id())
-          .filter(cond)
-          .select(col("__pos")).as[Long]
-          .mapPartitions { it =>
-            val words = new Array[Long](wordsLen)
-            val tfs = WarehouseMeta.fs(dst)
-            oldDv.foreach { p =>
-              val ow = read(tfs, p)
-              System.arraycopy(ow, 0, words, 0, ow.length)
-            }
-            val before = popCount(words)
-            it.foreach { ord =>
-              require(ord >= 0 && ord < nRows,
-                s"ordinal $ord out of range")
-              words((ord >>> 6).toInt) |= 1L << (ord & 63)
-            }
-            val after = popCount(words)
-            // task-attempt-unique stage + driver rename = speculative
-            // twins can never corrupt the published bitmap
-            val attempt = org.apache.spark.TaskContext.get()
-              .taskAttemptId()
-            val tmp = s"$dst.tmp-$attempt"
-            write(tfs, tmp, words)
-            Iterator.single((tmp, after, after - before))
-          }.collect()
-        require(out.length == 1,
-          s"expected one bitmap task for $f, got ${out.length}")
-        val (tmp, unionCount, delta) = out(0)
-        require(fs.rename(new Path(tmp), new Path(dst)),
-          s"cannot publish deletion vector $rel")
-        deltaDeleted += delta
-        f -> (rel, unionCount)
-      }.toMap
-      val droppedLive = fullDrop.map(f => m.liveRows(f).get).sum
-      WarehouseMeta.writeManifest(fs, root, m.copy(
-        generation = m.generation + 1, jobId = jobId,
-        disposition = "DELETE_DV",
-        files = m.files.filterNot(fullDrop.toSet),
-        stats = m.stats -- fullDrop, rows = m.rows -- fullDrop,
-        parts = m.parts -- fullDrop, nonNull = m.nonNull -- fullDrop,
-        sums = m.sums -- fullDrop, arity = m.arity -- fullDrop,
-        blooms = m.blooms -- fullDrop,
-        dvs = (m.dvs -- fullDrop) ++ newDvs))
-      WarehouseMeta.logJobState(fs, root, jobId, "DONE")
-      droppedLive + deltaDeleted
-    } catch {
-      case e: Throwable =>
-        WarehouseMeta.logJobState(fs, root, jobId, s"ERROR ${e.getMessage}")
-        throw e
+    WarehouseMeta.job(root, jobId, "RUNNING") { publish =>
+      val (newDvs, deltaDeleted) = markOrdinals(spark, root, m, partial,
+        coalesce(predCol, lit(false)), jobId)
+      val drop = fullDrop.toSet
+      val kept = m.retain(!drop(_))
+      publish(kept.copy(generation = m.generation + 1, jobId = jobId,
+        disposition = "DELETE_DV", dvs = kept.dvs ++ newDvs))
+      fullDrop.map(f => m.liveRows(f).get).sum + deltaDeleted
     }
   }
 }

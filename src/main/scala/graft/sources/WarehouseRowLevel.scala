@@ -78,12 +78,8 @@ class WarehouseReplaceGroupsWrite(root: String, info: LogicalWriteInfo,
       messages, scanned())
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = WarehouseMeta.fs(root)
-    fs.delete(new org.apache.hadoop.fs.Path(root, s"_staging/$jobId"),
-      true)
-    WarehouseMeta.logJobState(fs, root, jobId, "ABORTED")
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    WarehouseMeta.abort(root, jobId)
 }
 
 /** ReplaceData rows arrive PREFIXED with Spark's `__row_operation`

@@ -44,6 +44,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * milliseconds regardless of volume, exactly the property that makes
   * load-job sinks viable at 100 TB.
   *
+  * One bracket publishes every generation: [[WarehouseMeta.job]] logs a
+  * job's opening state, hands its body the only way to write a manifest,
+  * and ends the log in `DONE` or `ERROR <msg>`. Load jobs, row-level
+  * rewrites, deletes, deletion vectors, schema evolution, VACUUM and the
+  * catalog's CREATE TABLE all commit through it; [[Manifest.retain]] and
+  * [[Manifest.addFrom]] carry the per-file metadata across each commit.
+  *
   * `graft.io.Sink.append/overwrite(format = "graft-warehouse")` route here
   * by short name (ServiceLoader registration); disposition can also be set
   * explicitly via `.option("writeDisposition", ...)`.
@@ -68,19 +75,15 @@ class WarehouseSource extends TableProvider with DataSourceRegister {
     p
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    WarehouseMeta.readManifest(root(options),
-        Option(options.get("generation")).map(_.toLong)) match {
-      case Some(m) =>
-        // change-feed reads surface the two CDC meta columns after the
-        // data columns (the Delta readChangeFeed shape)
-        if (Option(options.get("readChangeFeed")).exists(_.toBoolean))
-          StructType(m.schema.fields ++ WarehouseCdc.MetaFields)
-        else m.schema
-      case None => throw new IllegalArgumentException(
-        s"graft-warehouse table at ${root(options)} has no committed " +
-          "manifest; write to it first or supply a schema")
-    }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val m = WarehouseMeta.current(root(options),
+      Option(options.get("generation")).map(_.toLong))
+    // change-feed reads surface the two CDC meta columns after the data
+    // columns (the Delta readChangeFeed shape)
+    if (Option(options.get("readChangeFeed")).exists(_.toBoolean))
+      StructType(m.schema.fields ++ WarehouseCdc.MetaFields)
+    else m.schema
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
@@ -331,11 +334,8 @@ class WarehouseBatchWrite(root: String, schema: StructType, queryId: String,
     WarehouseLoadJob.commit(root, schema, jobId, disposition, clusterBy,
       bloomConf, messages)
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = WarehouseMeta.fs(root)
-    fs.delete(new Path(root, s"_staging/$jobId"), true)
-    WarehouseMeta.logJobState(fs, root, jobId, "ABORTED")
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    WarehouseMeta.abort(root, jobId)
 }
 
 /** The shared load-job commit: one atomic manifest generation from a set
@@ -343,13 +343,25 @@ class WarehouseBatchWrite(root: String, schema: StructType, queryId: String,
   * and the streaming write (one EPOCH = one commit). */
 object WarehouseLoadJob {
 
+  private def stagedFiles(messages: Array[WriterCommitMessage]): Seq[StagedFile] =
+    messages.toSeq.flatMap {
+      case s: StagedFile => Seq(s)
+      case StagedFiles(fsx) => fsx
+      case _ => Nil
+    }
+
+  /** Moves `staged` under `data/<jobId>/`; returns (staged path, committed
+    * path) pairs for [[Manifest.addFrom]]. */
+  private def moveStaged(root: String, jobId: String,
+      staged: Seq[StagedFile]): Seq[(String, String)] =
+    staged.map(_.path).zip(WarehouseMeta.moveUnder(root, jobId,
+      staged.map(s => (s.path, s.bloom.nonEmpty))))
+
   def commit(root: String, schema: StructType, jobId: String,
       disposition: String, clusterBy: Option[String],
       bloomConf: Option[(Seq[String], Int)],
-      messages: Array[WriterCommitMessage]): Unit = {
-    val fs = WarehouseMeta.fs(root)
-    WarehouseMeta.logJobState(fs, root, jobId, "RUNNING")
-    try {
+      messages: Array[WriterCommitMessage]): Unit =
+    WarehouseMeta.job(root, jobId, "RUNNING") { publish =>
       val prev = WarehouseMeta.readManifest(root)
       prev.foreach { m =>
         // nullability-insensitive type equality (sameType is private):
@@ -360,79 +372,36 @@ object WarehouseLoadJob {
         if (disposition == "WRITE_EMPTY")
           require(m.files.isEmpty,
             s"load job $jobId: WRITE_EMPTY but table holds data")
-      }
-      // clusterBy consistency is part of the schema-drift contract: a
-      // partitioned table only accepts loads declaring the SAME layout
-      prev.foreach { m =>
+        // clusterBy consistency is part of the schema-drift contract: a
+        // partitioned table only accepts loads declaring the SAME layout
         require(m.clusterBy == clusterBy || m.files.isEmpty ||
             disposition == "WRITE_TRUNCATE",
           s"load job $jobId: clusterBy drift — table is " +
             s"${m.clusterBy.getOrElse("unclustered")}, load is " +
             s"${clusterBy.getOrElse("unclustered")}")
       }
-      val staged = messages.flatMap {
-        case s: StagedFile => Seq(s)
-        case StagedFiles(fsx) => fsx
-        case _ => Nil
+      // a load job commits EVERY staged file, zero-row ones included
+      val staged = stagedFiles(messages)
+      val moved = moveStaged(root, jobId, staged)
+      val base = prev match {
+        // the committed TABLE schema keeps the table's declared
+        // nullability (field-wise OR with the load's): an append of
+        // non-null data must never flip an evolved/nullable column to
+        // non-nullable — committed files may hold NULLs there, and a
+        // non-nullable declaration lets Spark constant-fold IsNotNull and
+        // read garbage instead of null
+        case Some(m) if disposition != "WRITE_TRUNCATE" =>
+          m.copy(schema = StructType(m.schema.fields.zip(schema.fields).map {
+            case (a, b) => a.copy(nullable = a.nullable || b.nullable) }))
+        // first load or truncate: no file, entry or default carries over
+        case _ => Manifest(-1L, schema, Nil, jobId, disposition)
       }
-      val dataDir = new Path(root, s"data/$jobId")
-      fs.mkdirs(dataDir)
-      val moved = staged.map { s =>
-        val src = new Path(s.path)
-        val dst = new Path(dataDir, src.getName)
-        require(fs.rename(src, dst),
-          s"load job $jobId: cannot move staged ${s.path}")
-        // the bloom sidecar rides along with its data file
-        if (s.bloom.nonEmpty)
-          require(fs.rename(
-            new Path(WarehouseBloom.sidecarPath(s.path)),
-            new Path(dataDir, s"${src.getName}.bloom")),
-            s"load job $jobId: cannot move bloom sidecar of ${s.path}")
-        (s"data/$jobId/${src.getName}", s)
-      }
-      val truncate = disposition == "WRITE_TRUNCATE"
-      val kept = if (truncate) Nil else prev.map(_.files).getOrElse(Nil)
-      def keep[V](get: Manifest => Map[String, V]): Map[String, V] =
-        if (truncate) Map.empty else prev.map(get).getOrElse(Map.empty)
-      val gen = prev.map(_.generation + 1).getOrElse(0L)
-      // the committed TABLE schema keeps the table's declared nullability
-      // (field-wise OR with the load's): an append of non-null data must
-      // never flip an evolved/nullable column to non-nullable — committed
-      // files may hold NULLs there, and a non-nullable declaration lets
-      // Spark constant-fold IsNotNull and read garbage instead of null
-      val tableSchema = prev match {
-        case Some(m) if !truncate =>
-          StructType(m.schema.fields.zip(schema.fields).map {
-            case (a, b) => a.copy(nullable = a.nullable || b.nullable) })
-        case _ => schema
-      }
-      WarehouseMeta.writeManifest(fs, root,
-        Manifest(gen, tableSchema, kept ++ moved.map(_._1).toList, jobId,
-          disposition,
-          keep(_.stats) ++ moved.map(m => m._1 -> m._2.stats).toMap,
-          keep(_.rows) ++ moved.map(m => m._1 -> m._2.rows).toMap,
-          clusterBy,
-          keep(_.parts) ++ moved.collect {
-            case (f, s) if s.part.isDefined => f -> s.part.get
-          }.toMap,
-          keep(_.nonNull) ++ moved.map(m => m._1 -> m._2.nonNull).toMap,
-          keep(_.sums) ++ moved.map(m => m._1 -> m._2.sums).toMap,
-          keep(_.arity), // new files encode the full current schema
-          if (truncate) Map.empty
-          else prev.map(_.defaults).getOrElse(Map.empty),
-          keep(_.blooms) ++ moved.collect {
-            case (f, s) if s.bloom.nonEmpty => f -> s.bloom
-          }.toMap,
-          bloomConf,
-          keep(_.dvs)))
-      fs.delete(new Path(root, s"_staging/$jobId"), true)
-      WarehouseMeta.logJobState(fs, root, jobId, "DONE")
-    } catch {
-      case e: Throwable =>
-        WarehouseMeta.logJobState(fs, root, jobId, s"ERROR ${e.getMessage}")
-        throw e
+      publish(base.addFrom(Manifest.staged(staged), moved).copy(
+        generation = prev.map(_.generation + 1).getOrElse(0L),
+        jobId = jobId, disposition = disposition, clusterBy = clusterBy,
+        bloomConf = bloomConf))
+      WarehouseMeta.dropStaging(root, jobId)
     }
-  }
 
   /** Replace-groups commit (SQL UPDATE / MERGE INTO / row-level DELETE):
     * the staged files REPLACE `replaced` (the files the operation's scan
@@ -441,67 +410,25 @@ object WarehouseLoadJob {
     * reference with all its metadata. Same atomicity as a load job. */
   def commitReplace(root: String, schema: StructType, jobId: String,
       disposition: String, messages: Array[WriterCommitMessage],
-      replaced: Seq[String]): Unit = {
-    val fs = WarehouseMeta.fs(root)
-    WarehouseMeta.logJobState(fs, root, jobId, "RUNNING")
-    try {
-      val m = WarehouseMeta.readManifest(root).getOrElse(
-        throw new IllegalStateException(
-          s"row-level $jobId: table at $root has no committed manifest"))
+      replaced: Seq[String]): Unit =
+    WarehouseMeta.job(root, jobId, "RUNNING") { publish =>
+      val m = WarehouseMeta.current(root)
       require(m.schema.simpleString == schema.simpleString,
         s"row-level $jobId: schema drift — table has " +
           s"${m.schema.simpleString}, write has ${schema.simpleString}")
       val bad = replaced.filterNot(m.files.toSet)
       require(bad.isEmpty, s"row-level $jobId: replaced files not in " +
         s"generation ${m.generation}: ${bad.take(3).mkString(",")}")
-      val staged = messages.flatMap {
-        case s: StagedFile => Seq(s)
-        case StagedFiles(fsx) => fsx
-        case _ => Nil
-      }.filter(_.rows > 0L)
-      val dataDir = new Path(root, s"data/$jobId")
-      fs.mkdirs(dataDir)
-      val moved = staged.map { s =>
-        val src = new Path(s.path)
-        val dst = new Path(dataDir, src.getName)
-        require(fs.rename(src, dst),
-          s"row-level $jobId: cannot move staged ${s.path}")
-        if (s.bloom.nonEmpty)
-          require(fs.rename(
-            new Path(WarehouseBloom.sidecarPath(s.path)),
-            new Path(dataDir, s"${src.getName}.bloom")),
-            s"row-level $jobId: cannot move bloom sidecar of ${s.path}")
-        (s"data/$jobId/${src.getName}", s)
-      }
+      // a replacement commits only files holding rows, and keeps the
+      // manifest's schema
+      val staged = stagedFiles(messages).filter(_.rows > 0L)
+      val moved = moveStaged(root, jobId, staged)
       val rep = replaced.toSet
-      val carry = m.files.filterNot(rep)
-      def keep[V](get: Manifest => Map[String, V]): Map[String, V] =
-        get(m).filter { case (k, _) => !rep(k) }
-      WarehouseMeta.writeManifest(fs, root,
-        Manifest(m.generation + 1, m.schema,
-          carry ++ moved.map(_._1).toList, jobId, disposition,
-          keep(_.stats) ++ moved.map(x => x._1 -> x._2.stats).toMap,
-          keep(_.rows) ++ moved.map(x => x._1 -> x._2.rows).toMap,
-          m.clusterBy,
-          keep(_.parts) ++ moved.collect {
-            case (f, s) if s.part.isDefined => f -> s.part.get
-          }.toMap,
-          keep(_.nonNull) ++ moved.map(x => x._1 -> x._2.nonNull).toMap,
-          keep(_.sums) ++ moved.map(x => x._1 -> x._2.sums).toMap,
-          keep(_.arity), // replacements encode the full current schema
-          m.defaults,
-          keep(_.blooms) ++ moved.collect {
-            case (f, s) if s.bloom.nonEmpty => f -> s.bloom
-          }.toMap,
-          m.bloomConf, keep(_.dvs)))
-      fs.delete(new Path(root, s"_staging/$jobId"), true)
-      WarehouseMeta.logJobState(fs, root, jobId, "DONE")
-    } catch {
-      case e: Throwable =>
-        WarehouseMeta.logJobState(fs, root, jobId, s"ERROR ${e.getMessage}")
-        throw e
+      publish(m.retain(!rep(_)).addFrom(Manifest.staged(staged), moved)
+        .copy(generation = m.generation + 1, jobId = jobId,
+          disposition = disposition))
+      WarehouseMeta.dropStaging(root, jobId)
     }
-  }
 
   /** Resolve the table-sticky layout/index config an incoming write
     * inherits when its options name none (appends keep the manifest's
@@ -804,9 +731,7 @@ class WarehouseScanBuilder(root: String, generation: Option[Long] = None,
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit
     with org.apache.spark.sql.connector.read.SupportsPushDownTopN {
   private val manifest = {
-    val m0 = WarehouseMeta.readManifest(root, generation).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-warehouse table at $root has no committed manifest"))
+    val m0 = WarehouseMeta.current(root, generation)
     // `files` read option (round-14): pin the scan to an explicit subset
     // of this generation's committed files — the maintenance primitive
     // (bin-packing OPTIMIZE, copy-on-write DELETE/MERGE read exactly the
@@ -1698,6 +1623,50 @@ case class Manifest(generation: Long, schema: StructType,
     * (addColumn materializes an entry for every pre-evolution file, so
     * the default stays correct across repeated evolutions). */
   def fileArity(f: String): Int = arity.getOrElse(f, schema.length)
+
+  /** This manifest with only the files `keep` accepts: `files` and every
+    * per-file map shrink together, so no entry outlives its file. */
+  def retain(keep: String => Boolean): Manifest = {
+    def sub[V](mm: Map[String, V]) = mm.filter(e => keep(e._1))
+    copy(files = files.filter(keep), stats = sub(stats), rows = sub(rows),
+      parts = sub(parts), nonNull = sub(nonNull), sums = sub(sums),
+      arity = sub(arity), blooms = sub(blooms), dvs = sub(dvs))
+  }
+
+  /** This manifest plus `moves`' files: each `(from, to)` adds `src`'s
+    * file `from` under the path `to`, with every per-file entry `src`
+    * holds for it. */
+  def addFrom(src: Manifest, moves: Seq[(String, String)]): Manifest = {
+    def add[V](mine: Map[String, V], theirs: Map[String, V]) =
+      mine ++ moves.flatMap { case (o, n) => theirs.get(o).map(n -> _) }
+    copy(files = files ++ moves.map(_._2), stats = add(stats, src.stats),
+      rows = add(rows, src.rows), parts = add(parts, src.parts),
+      nonNull = add(nonNull, src.nonNull), sums = add(sums, src.sums),
+      arity = add(arity, src.arity), blooms = add(blooms, src.blooms),
+      dvs = add(dvs, src.dvs))
+  }
+
+  /** Write options that make a rewrite keep this table's cluster layout
+    * and bloom index (fresh sidecars under the inherited config). */
+  def layoutOptions: Map[String, String] =
+    clusterBy.map("clusterBy" -> _).toMap ++
+      bloomConf.map { case (cols, bits) =>
+        Map("bloomFilters" -> cols.mkString(","), "bloomBits" -> bits.toString)
+      }.getOrElse(Map.empty)
+}
+
+object Manifest {
+  /** Staged task files as manifest entries keyed by their staged paths,
+    * ready for [[Manifest.addFrom]]. */
+  def staged(files: Seq[StagedFile]): Manifest =
+    Manifest(-1L, new StructType(), files.map(_.path).toList, "", "",
+      stats = files.map(s => s.path -> s.stats).toMap,
+      rows = files.map(s => s.path -> s.rows).toMap,
+      parts = files.flatMap(s => s.part.map(s.path -> _)).toMap,
+      nonNull = files.map(s => s.path -> s.nonNull).toMap,
+      sums = files.map(s => s.path -> s.sums).toMap,
+      blooms = files.collect { case s if s.bloom.nonEmpty => s.path -> s.bloom }
+        .toMap)
 }
 
 /** Cluster-value codec for manifest `fpart` lines and HasPartitionKey
@@ -1755,11 +1724,8 @@ object WarehouseDelete {
     * the predicate or lacks the stats to prove a side.
     */
   def deleteWhere(root: String, pred: Filter): Long = {
-    val fs = WarehouseMeta.fs(root)
-    val m = WarehouseMeta.readManifest(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-warehouse table at $root has no committed manifest"))
-    val (dropped, kept) = m.files.partition { f =>
+    val m = WarehouseMeta.current(root)
+    val dropped = m.files.filter { f =>
       val st = m.stats.getOrElse(f, Map.empty)
       if (WarehouseZoneMap.mustMatch(pred, st, m.rows.get(f),
           m.nonNull.getOrElse(f, Map.empty))) true
@@ -1775,20 +1741,10 @@ object WarehouseDelete {
         "dropped files lack exact row counts (pre-upgrade manifest) — " +
           "refusing: the deleted-count contract would be a guess")
     val jobId = s"delete-${java.util.UUID.randomUUID()}"
-    WarehouseMeta.logJobState(fs, root, jobId, "PENDING delete")
-    try {
-      WarehouseMeta.writeManifest(fs, root, m.copy(
-        generation = m.generation + 1, files = kept, jobId = jobId,
-        disposition = "DELETE",
-        stats = m.stats -- dropped, rows = m.rows -- dropped,
-        parts = m.parts -- dropped, nonNull = m.nonNull -- dropped,
-        sums = m.sums -- dropped, arity = m.arity -- dropped,
-        blooms = m.blooms -- dropped, dvs = m.dvs -- dropped))
-      WarehouseMeta.logJobState(fs, root, jobId, "DONE")
-    } catch {
-      case e: Throwable =>
-        WarehouseMeta.logJobState(fs, root, jobId, s"ERROR ${e.getMessage}")
-        throw e
+    val drop = dropped.toSet
+    WarehouseMeta.job(root, jobId, "PENDING delete") { publish =>
+      publish(m.retain(!drop(_)).copy(generation = m.generation + 1,
+        jobId = jobId, disposition = "DELETE"))
     }
     dropped.map(f => m.liveRows(f).get).sum
   }
@@ -1846,10 +1802,7 @@ object WarehouseEvolve {
     */
   def addColumn(root: String, name: String, dataType: DataType,
       default: Option[String] = None): Long = {
-    val fs = WarehouseMeta.fs(root)
-    val m = WarehouseMeta.readManifest(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-warehouse table at $root has no committed manifest"))
+    val m = WarehouseMeta.current(root)
     require(!m.schema.fieldNames.contains(name),
       s"column '$name' already exists " +
         s"(table schema ${m.schema.simpleString})")
@@ -1900,22 +1853,15 @@ object WarehouseEvolve {
           acc.getOrElse(f, Map.empty).updated(name, s)))
       }
     val jobId = s"evolve-${java.util.UUID.randomUUID()}"
-    WarehouseMeta.logJobState(fs, root, jobId, s"PENDING add $name")
-    try {
-      val newM = m.copy(generation = m.generation + 1,
+    WarehouseMeta.job(root, jobId, s"PENDING add $name") { publish =>
+      publish(m.copy(generation = m.generation + 1,
         schema = m.schema.add(StructField(name, dataType, nullable = true)),
         jobId = jobId, disposition = "ADD_COLUMN", arity = materialized,
         nonNull = newNonNull, stats = newStats, sums = newSums,
         defaults =
-          if (live) m.defaults.updated(name, default.get) else m.defaults)
-      WarehouseMeta.writeManifest(fs, root, newM)
-      WarehouseMeta.logJobState(fs, root, jobId, "DONE")
-      newM.generation
-    } catch {
-      case e: Throwable =>
-        WarehouseMeta.logJobState(fs, root, jobId, s"ERROR ${e.getMessage}")
-        throw e
+          if (live) m.defaults.updated(name, default.get) else m.defaults))
     }
+    m.generation + 1
   }
 
   /** Rename column `from` to `to` — a pure metadata rekey (the codec is
@@ -1926,10 +1872,7 @@ object WarehouseEvolve {
     * generation's own schema). Returns the new generation.
     */
   def renameColumn(root: String, from: String, to: String): Long = {
-    val fs = WarehouseMeta.fs(root)
-    val m = WarehouseMeta.readManifest(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-warehouse table at $root has no committed manifest"))
+    val m = WarehouseMeta.current(root)
     require(m.schema.fieldNames.contains(from),
       s"no column '$from' (table schema ${m.schema.simpleString})")
     require(!m.schema.fieldNames.contains(to),
@@ -1940,9 +1883,8 @@ object WarehouseEvolve {
       mm.map { case (f, cols) =>
         f -> cols.map { case (c, v) => (if (c == from) to else c) -> v } }
     val jobId = s"evolve-${java.util.UUID.randomUUID()}"
-    WarehouseMeta.logJobState(fs, root, jobId, s"PENDING rename $from $to")
-    try {
-      val newM = m.copy(generation = m.generation + 1,
+    WarehouseMeta.job(root, jobId, s"PENDING rename $from $to") { publish =>
+      publish(m.copy(generation = m.generation + 1,
         schema = StructType(m.schema.fields.map(f =>
           if (f.name == from) f.copy(name = to) else f)),
         jobId = jobId, disposition = "RENAME_COLUMN",
@@ -1960,15 +1902,9 @@ object WarehouseEvolve {
           f -> cs.filterNot(_ == from) }.filter(_._2.nonEmpty),
         bloomConf = m.bloomConf
           .map { case (cs, b) => (cs.filterNot(_ == from), b) }
-          .filter(_._1.nonEmpty))
-      WarehouseMeta.writeManifest(fs, root, newM)
-      WarehouseMeta.logJobState(fs, root, jobId, "DONE")
-      newM.generation
-    } catch {
-      case e: Throwable =>
-        WarehouseMeta.logJobState(fs, root, jobId, s"ERROR ${e.getMessage}")
-        throw e
+          .filter(_._1.nonEmpty)))
     }
+    m.generation + 1
   }
 }
 
@@ -2033,9 +1969,7 @@ object WarehouseCow {
   def updateWhereCow(spark: SparkSession, root: String, pred: Filter,
       set: Map[String, String]): Long = {
     val predCol = filterToColumn(pred) // refuse unsupported shapes first
-    val m = WarehouseMeta.readManifest(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-warehouse table at $root has no committed manifest"))
+    val m = WarehouseMeta.current(root)
     val cols = m.schema.fieldNames.toSet
     val badCols = set.keys.filterNot(cols)
     require(badCols.isEmpty,
@@ -2071,9 +2005,7 @@ object WarehouseCow {
   def deleteWhereCow(spark: SparkSession, root: String,
       pred: Filter): Long = {
     val predCol = filterToColumn(pred) // refuse unsupported shapes first
-    val m = WarehouseMeta.readManifest(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-warehouse table at $root has no committed manifest"))
+    val m = WarehouseMeta.current(root)
     val grouped = m.files.groupBy { f =>
       val st = m.stats.getOrElse(f, Map.empty)
       if (WarehouseZoneMap.mustMatch(pred, st, m.rows.get(f),
@@ -2130,9 +2062,7 @@ object WarehouseMerge {
   def applyChangelogCow(spark: SparkSession, root: String, log: DataFrame,
       key: String, seqCol: String, opCol: String,
       maxKeysCollect: Int = 1 << 20): MergeStats = {
-    val m = WarehouseMeta.readManifest(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-warehouse table at $root has no committed manifest"))
+    val m = WarehouseMeta.current(root)
     val tableCols = m.schema.fieldNames.toSeq
     val logCols = log.columns.filterNot(c => c == seqCol || c == opCol)
     require(tableCols.sorted.sameElements(logCols.sorted.toSeq),
@@ -2216,81 +2146,53 @@ object WarehouseMerge {
   * retired from visibility, never deleted.
   */
 object WarehouseRewrite {
-
-  private[graft] def rmTree(fs: FileSystem, p: Path): Unit =
-    if (fs.exists(p)) fs.delete(p, true)
+  import org.apache.spark.sql.{DataFrame, SparkSession}
 
   /** Returns the new manifest. `carry` must be a subset of `m.files`;
     * `replacement`'s columns must match the table schema (names + types,
     * in order). Zero-row replacement files are dropped, not committed.
     */
-  def commitRewrite(spark: org.apache.spark.sql.SparkSession, root: String,
-      m: Manifest, carry: List[String],
-      replacement: org.apache.spark.sql.DataFrame,
+  def commitRewrite(spark: SparkSession, root: String, m: Manifest,
+      carry: List[String], replacement: DataFrame,
       disposition: String): Manifest = {
-    val fs = WarehouseMeta.fs(root)
     val bad = carry.filterNot(m.files.toSet)
     require(bad.isEmpty, s"carry names files not in generation " +
       s"${m.generation}: ${bad.take(3).mkString(",")}")
+    val jobId =
+      s"${disposition.toLowerCase}_${java.util.UUID.randomUUID().toString.take(8)}"
+    WarehouseMeta.job(root, jobId, s"PENDING $disposition") { publish =>
+      val (tm, moved) = viaScratch(spark, root, m, replacement, jobId)
+      // carried files keep their evolution arity and vectors; rewritten
+      // files were just written at the full current schema
+      val newM = m.retain(carry.toSet).addFrom(tm, moved).copy(
+        generation = m.generation + 1, jobId = jobId,
+        disposition = disposition)
+      publish(newM)
+      newM
+    }
+  }
+
+  /** The scratch-table leg of a rewrite: writes `rows` to a scratch
+    * warehouse table with `m`'s cluster layout and bloom index, checks
+    * its schema against `m`'s, and moves its files that hold rows under
+    * `root`'s `data/<jobId>/`. Returns the scratch manifest and the
+    * (scratch path, committed path) moves for [[Manifest.addFrom]]; the
+    * scratch table is gone either way. */
+  private[sources] def viaScratch(spark: SparkSession, root: String,
+      m: Manifest, rows: DataFrame,
+      jobId: String): (Manifest, Seq[(String, String)]) = {
     val tmpRoot = s"$root/_rewrite_tmp_${java.util.UUID.randomUUID()}"
     try {
-      graft.io.Sink.overwrite(replacement, tmpRoot,
-        format = "graft-warehouse",
-        options = m.clusterBy.map("clusterBy" -> _).toMap ++
-          // rewrites keep the table's bloom index alive: scratch files
-          // build fresh sidecars under the inherited config
-          m.bloomConf.map { case (cols, bits) =>
-            Map("bloomFilters" -> cols.mkString(","),
-              "bloomBits" -> bits.toString)
-          }.getOrElse(Map.empty))
-      val tm = WarehouseMeta.readManifest(tmpRoot).getOrElse(
-        throw new IllegalStateException(
-          s"scratch rewrite table at $tmpRoot has no manifest"))
+      graft.io.Sink.overwrite(rows, tmpRoot, format = "graft-warehouse",
+        options = m.layoutOptions)
+      val tm = WarehouseMeta.current(tmpRoot)
       require(tm.schema.simpleString == m.schema.simpleString,
         s"rewrite schema drift — table has ${m.schema.simpleString}, " +
           s"replacement wrote ${tm.schema.simpleString}")
-      val jobId =
-        s"${disposition.toLowerCase}_${java.util.UUID.randomUUID().toString.take(8)}"
-      WarehouseMeta.logJobState(fs, root, jobId, s"PENDING $disposition")
-      try {
-        val dataDir = new Path(root, s"data/$jobId")
-        fs.mkdirs(dataDir)
-        // move each non-empty scratch file under the real table; rekey
-        // its metadata to the new relative path
-        val moved = tm.files.filter(f => tm.rows.getOrElse(f, 1L) > 0L)
-          .map { f =>
-            val name = new Path(f).getName
-            val src = new Path(tmpRoot, f)
-            val dst = new Path(dataDir, name)
-            require(fs.rename(src, dst),
-              s"rewrite $jobId: cannot move scratch $f")
-            if (tm.blooms.get(f).exists(_.nonEmpty))
-              require(fs.rename(new Path(tmpRoot, s"$f.bloom"),
-                new Path(dataDir, s"$name.bloom")),
-                s"rewrite $jobId: cannot move bloom sidecar of $f")
-            f -> s"data/$jobId/$name"
-          }
-        def rekey[V](get: Manifest => Map[String, V]): Map[String, V] = {
-          val keep = get(m).filter { case (k, _) => carry.contains(k) }
-          keep ++ moved.flatMap { case (o, n) => get(tm).get(o).map(n -> _) }
-        }
-        val newM = Manifest(m.generation + 1, m.schema,
-          carry ++ moved.map(_._2), jobId, disposition,
-          rekey(_.stats), rekey(_.rows), m.clusterBy, rekey(_.parts),
-          rekey(_.nonNull), rekey(_.sums),
-          // carried files keep their evolution arity; rewritten files
-          // were just written at the full current schema (no entry)
-          rekey(_.arity), m.defaults, rekey(_.blooms), m.bloomConf,
-          rekey(_.dvs))
-        WarehouseMeta.writeManifest(fs, root, newM)
-        WarehouseMeta.logJobState(fs, root, jobId, "DONE")
-        newM
-      } catch {
-        case e: Throwable =>
-          WarehouseMeta.logJobState(fs, root, jobId, s"ERROR ${e.getMessage}")
-          throw e
-      }
-    } finally rmTree(fs, new Path(tmpRoot))
+      val kept = tm.files.filter(f => tm.rows.getOrElse(f, 1L) > 0L)
+      (tm, kept.zip(WarehouseMeta.moveUnder(root, jobId, kept.map(f =>
+        (s"$tmpRoot/$f", tm.blooms.get(f).exists(_.nonEmpty))))))
+    } finally WarehouseMeta.fs(root).delete(new Path(tmpRoot), true): Unit
   }
 }
 
@@ -2476,7 +2378,69 @@ object WarehouseMeta {
     Some(m)
   }
 
-  def writeManifest(f: FileSystem, root: String, m: Manifest): Unit = {
+  /** The latest committed manifest (or `generation`'s); a table with none
+    * is the standard missing-manifest error. */
+  def current(root: String, generation: Option[Long] = None): Manifest =
+    readManifest(root, generation).getOrElse(throw new IllegalArgumentException(
+      s"graft-warehouse table at $root has no committed manifest"))
+
+  /** THE commit path: every manifest generation and every job-state
+    * transition of the table goes through here. Logs `opening` to
+    * `_jobs/<jobId>`, runs `body` with a `publish` that swaps in one new
+    * generation, then logs `DONE` — or `ERROR <msg>` and rethrows, leaving
+    * whatever `body` did not publish invisible. */
+  private[graft] def job[T](root: String, jobId: String, opening: String)(
+      body: (Manifest => Unit) => T): T = {
+    val f = fs(root)
+    logJobState(f, root, jobId, opening)
+    try {
+      var published = false
+      val out = body { m =>
+        require(!published, s"job $jobId publishes one generation only")
+        writeManifest(f, root, m)
+        published = true
+      }
+      logJobState(f, root, jobId, "DONE")
+      out
+    } catch {
+      case e: Throwable =>
+        logJobState(f, root, jobId, s"ERROR ${e.getMessage}")
+        throw e
+    }
+  }
+
+  /** Drops a load job's `_staging/<jobId>` upload directory. */
+  private[sources] def dropStaging(root: String, jobId: String): Unit =
+    fs(root).delete(new Path(root, s"_staging/$jobId"), true): Unit
+
+  /** A load job that will not commit: its staged files go, and its log
+    * ends `ABORTED`. */
+  private[sources] def abort(root: String, jobId: String): Unit = {
+    dropStaging(root, jobId)
+    logJobState(fs(root), root, jobId, "ABORTED")
+  }
+
+  /** Moves each absolute `(file, hasBloom)` — with its `.bloom` sidecar
+    * when it has one — under `data/<jobId>/`; returns the table-relative
+    * paths in order. */
+  private[sources] def moveUnder(root: String, jobId: String,
+      srcs: Seq[(String, Boolean)]): Seq[String] = {
+    val f = fs(root)
+    val dataDir = new Path(root, s"data/$jobId")
+    f.mkdirs(dataDir)
+    srcs.map { case (src, bloom) =>
+      val name = new Path(src).getName
+      require(f.rename(new Path(src), new Path(dataDir, name)),
+        s"job $jobId: cannot move $src")
+      if (bloom)
+        require(f.rename(new Path(WarehouseBloom.sidecarPath(src)),
+          new Path(dataDir, s"$name.bloom")),
+          s"job $jobId: cannot move bloom sidecar of $src")
+      s"data/$jobId/$name"
+    }
+  }
+
+  private def writeManifest(f: FileSystem, root: String, m: Manifest): Unit = {
     val dir = new Path(root, "_manifest")
     f.mkdirs(dir)
     val tmp = new Path(dir, s".manifest-${m.generation}.tmp")
@@ -2535,7 +2499,7 @@ object WarehouseMeta {
 
   /** Job observability (`job.result()`'s state surface): one log file per
     * job under `_jobs/`, appended a state line per transition. */
-  def logJobState(f: FileSystem, root: String, jobId: String,
+  private def logJobState(f: FileSystem, root: String, jobId: String,
       state: String): Unit = {
     val p = new Path(root, s"_jobs/$jobId")
     val prior =

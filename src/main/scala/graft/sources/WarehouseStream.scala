@@ -289,8 +289,7 @@ class WarehouseStreamingWrite(root: String, schema: StructType,
     if (alreadyCommitted) {
       // checkpoint replay of a committed epoch: exactly-once means this
       // commit is a no-op (staged twins, if any, are dropped)
-      WarehouseMeta.fs(root).delete(
-        new org.apache.hadoop.fs.Path(root, s"_staging/$jobId"), true)
+      WarehouseMeta.dropStaging(root, jobId)
       return
     }
     WarehouseLoadJob.commit(root, schema, jobId, disposition, clusterBy,
@@ -298,12 +297,8 @@ class WarehouseStreamingWrite(root: String, schema: StructType,
   }
 
   override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val fs = WarehouseMeta.fs(root)
-    val jobId = epochJobId(epochId)
-    fs.delete(new org.apache.hadoop.fs.Path(root, s"_staging/$jobId"), true)
-    WarehouseMeta.logJobState(fs, root, jobId, "ABORTED")
-  }
+      messages: Array[WriterCommitMessage]): Unit =
+    WarehouseMeta.abort(root, epochJobId(epochId))
 }
 
 class WarehouseStreamingWriterFactory(root: String, q: String,
