@@ -142,10 +142,15 @@ object Classifier {
         val s2 = sB.multiply(sB)
         val nB = BigInteger.valueOf(n)
         def gi(i: Int) = g.getDecimal(i).toBigInteger
-        w(0) += lr.multiply(gi(0).multiply(sB).divide(nB)).divide(s2)
-          .longValueExact()
+        def step(j: Int, delta: BigInteger): Unit = {
+          val next = delta.add(BigInteger.valueOf(w(j)))
+          require(next.bitLength < 64, s"classifier weight w$j overflows a " +
+            s"long: ${w(j)} + step $delta (lrPpm=$lrPpm, n=$n)")
+          w(j) = next.longValueExact()
+        }
+        step(0, lr.multiply(gi(0).multiply(sB).divide(nB)).divide(s2))
         for (j <- 1 to 4)
-          w(j) += lr.multiply(gi(j).divide(nB)).divide(s2).longValueExact()
+          step(j, lr.multiply(gi(j).divide(nB)).divide(s2))
       }
     }
 

@@ -1,6 +1,10 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, Executors}
+
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,34 +15,30 @@ import graft.dims.{DimLoader, Generators, NationDim, PartDim, PriorityDim,
 import graft.facts.Star
 import graft.io.Sink
 
-/** The full ETL DAG (reference §3.1 `main.py:26-191`), retargeted to the
-  * testdata star and parquet sinks:
+/** The full ETL DAG (reference §3.1 `main.py:26-191`) over the testdata
+  * star: static date and time dims (main.py:33-43), the incremental
+  * [start, end) slice, a dim loop that builds each dim from the slice and
+  * keeps it for key assignment (main.py:46-68), and facts stamped with
+  * surrogate keys (main.py:101-181).
   *
-  *   1. static dims: date + time generators (main.py:33-43)
-  *   2. extract: incremental [start, end) fact slice (stage 3)
-  *   3. dim build loop: extract -> transform -> load, dims kept for
-  *      key assignment (main.py:46-68)
-  *   4. fact: clean -> stamp surrogate keys -> project -> append
-  *      (main.py:101-146)
+  * Every frame is built lazily first, on the calling thread, which also
+  * does all function registration. Frames that more than one action reads
+  * are cached, as the reference holds them across stages (main.py:58-67):
+  * the normalized slices, the five dims and the two stamped facts. `run`
+  * releases them in a `finally`. A dim's row count comes off a metrics
+  * node below its cache ([[cachedRows]]), so no action counts it.
   *
-  * Each source slice is read and joined once per run. Every sink call is
-  * at least one Spark action (the skip-if-empty guard, then the write),
-  * and without a cache each action would re-plan and re-run the whole
-  * upstream join. So the run persists the frames that more than one
-  * action reads — the Spark analog of the reference holding them in
-  * memory across stages (main.py:58-67):
-  *   - `cleaned`, the normalized lineitem slice: read by the three
-  *     lineitem dims and by the stamped fact;
-  *   - the five dims: each is loaded and then broadcast into key stamping;
-  *   - `fact`, stamped and projected: read by `fact_lineitem` and
-  *     `fact_integrated`;
-  *   - `ordersCleaned` and `ordersFact`, the same roles for orders.
-  * They are released in a `finally`, so a throwing sink leaks none of them.
-  * A dim's row count comes off a metrics node below its cache (see
-  * [[cachedRows]]), so no extra action counts it.
-  *
-  * Scale: the fact is written partitioned by ship date key prefix so
-  * downstream incremental reads partition-prune; dims are tiny appends.
+  * The ten loads then run in three waves, in the star schema's order: W1
+  * `dim_date`, `dim_time` and the five dims; W2 `fact_lineitem` and
+  * `fact_orders`; W3 `fact_integrated`. The reference loads one table at a
+  * time (`job.result()` in a serial loop); here each load of a wave, an
+  * independent action over cached frames, runs on its own fresh thread,
+  * made by the calling thread so its jobs inherit the caller's job group,
+  * scheduler pool and description. A wave starts only once every load
+  * before it succeeded: no fact lands unless every dim landed, and
+  * `fact_integrated` only after both domain facts. A failed wave runs all
+  * its loads to their end before it throws, so no cache is released under
+  * a running write. Slices stay sequential ([[Backfill]]).
   */
 object Pipeline {
 
@@ -65,15 +65,14 @@ object Pipeline {
 
   private def runSlice(spark: SparkSession, cfg: Config,
       keep: DataFrame => DataFrame): Map[String, Long] = {
+    def append(df: DataFrame, table: String, partitionBy: Seq[String] = Nil) =
+      table -> (() => Sink.append(df, s"${cfg.outDir}/$table", partitionBy,
+        format = cfg.sinkFormat))
+
     // 1. static dims — regenerated and appended per run, preserving the
-    // reference's append-duplication quirk (§3.3); use Sink.overwrite for
-    // the idempotent variant.
+    // reference's append-duplication quirk (§3.3)
     val dateDim = Generators.dateDim(spark, "2020-01-01", "2026-12-31")
     val timeDim = Generators.timeDim(spark)
-    val nDateDim = Sink.append(dateDim, s"${cfg.outDir}/dim_date",
-      format = cfg.sinkFormat)
-    val nTimeDim = Sink.append(timeDim, s"${cfg.outDir}/dim_time",
-      format = cfg.sinkFormat)
 
     // 2. extract: the incremental slice (P2 pushed to the scan)
     val raw = Star.rawFact(spark, cfg.sfDir)
@@ -85,24 +84,19 @@ object Pipeline {
       PartDim.naturalCols ++ SupplierDim.naturalCols ++ NationDim.naturalCols
     val cleaned = keep(Normalize.normalizeStrings(raw, naturalCols))
 
-    // 3. dim loop: build from the slice, load, retain for key assignment
-    def loadDims(source: DataFrame,
+    // 3. dim loop: build from the slice, retain for key assignment
+    def buildDims(source: DataFrame,
         loaders: Seq[(String, DimLoader)]): Seq[(String, DimLoader, DataFrame)] =
       loaders.map { case (name, loader) =>
-        val dim = keep(loader.build(source)
-          .observe(rowsMetric(name), count(lit(1))))
-        if (cfg.idempotentDims)
-          Sink.upsertDim(spark, dim, s"${cfg.outDir}/$name", loader.naturalCols,
-            format = cfg.sinkFormat)
-        else Sink.append(dim, s"${cfg.outDir}/$name", format = cfg.sinkFormat)
-        (name, loader, dim)
+        (name, loader, keep(loader.build(source)
+          .observe(rowsMetric(name), count(lit(1)))))
       }
     def stampKeys(source: DataFrame,
         dims: Seq[(String, DimLoader, DataFrame)]): DataFrame =
       dims.foldLeft(source) { case (f, (_, loader, dim)) =>
         KeyMapper.assignKeys(f, dim, loader.naturalCols, loader.keyName)
       }
-    val dims = loadDims(cleaned, Seq(
+    val dims = buildDims(cleaned, Seq(
       "dim_part" -> PartDim, "dim_supplier" -> SupplierDim,
       "dim_nation" -> NationDim))
 
@@ -113,14 +107,6 @@ object Pipeline {
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
         "l_discount", "ship_date_key", "ship_year", "part_key",
         "supplier_key", "nation_key"))
-    // facts land partitioned by year so incremental reads partition-prune;
-    // the row count is observed inside the write job (no DAG re-run)
-    // directory partitioning is a parquet-layout concern; a warehouse
-    // table's partitioning is internal table config (as in the reference's
-    // BigQuery sink), so the load-job path takes the rows unpartitioned
-    val nFact = Sink.append(fact, s"${cfg.outDir}/fact_lineitem",
-      if (cfg.sinkFormat == "parquet") Seq("ship_year") else Nil,
-      format = cfg.sinkFormat)
 
     // 5. second fact domain (reference's parking fact, main.py:148-181):
     // orders enriched with customer attributes, two dims stamped
@@ -133,14 +119,12 @@ object Pipeline {
       .drop("c_custkey")
     val ordersCleaned = keep(Normalize.normalizeStrings(rawOrders,
       PriorityDim.naturalCols ++ SegmentDim.naturalCols))
-    val ordersDims = loadDims(ordersCleaned, Seq(
+    val ordersDims = buildDims(ordersCleaned, Seq(
       "dim_priority" -> PriorityDim, "dim_segment" -> SegmentDim))
     val ordersFact = keep(stampKeys(ordersCleaned, ordersDims)
       .withColumn("order_date_key", TimeParse.dateKey(col("o_orderdate")))
       .select("o_orderkey", "o_totalprice", "order_date_key", "prio_key",
         "segment_key"))
-    val nOrdersFact = Sink.append(ordersFact, s"${cfg.outDir}/fact_orders",
-      format = cfg.sinkFormat)
 
     // 6. integrated fact (load_integrated_fact.py:6-24): both domains
     // union-by-name'd onto the shared (domain, date_key, amount) shape
@@ -151,36 +135,50 @@ object Pipeline {
       .unionByName(ordersFact.select(lit("orders").as("domain"),
         col("order_date_key").as("date_key"),
         col("o_totalprice").as("amount")))
-    val nIntegrated = Sink.append(integrated,
-      s"${cfg.outDir}/fact_integrated", format = cfg.sinkFormat)
 
-    // observability counts (main.py:60-63): the write-observed row counts —
-    // no sink's DAG runs twice — and each dim's rows, observed while its
-    // cache was built.
-    Map(
-      "dim_date" -> nDateDim,
-      "dim_time" -> nTimeDim,
-      "fact_lineitem" -> nFact,
-      "fact_orders" -> nOrdersFact,
-      "fact_integrated" -> nIntegrated) ++
-      (dims ++ ordersDims).map { case (name, _, dim) =>
-        name -> cachedRows(dim, name)
-      }
+    // 7. load in waves. Parquet facts land partitioned by year so reads
+    // prune; a warehouse table's layout is table config (as in BigQuery).
+    val allDims = dims ++ ordersDims
+    val loaded = Seq(
+      Seq(append(dateDim, "dim_date"), append(timeDim, "dim_time")) ++
+        allDims.map { case (name, loader, dim) =>
+          if (!cfg.idempotentDims) append(dim, name)
+          else name -> (() => Sink.upsertDim(spark, dim, s"${cfg.outDir}/$name",
+            loader.naturalCols, format = cfg.sinkFormat))
+        },
+      Seq(append(fact, "fact_lineitem",
+          if (cfg.sinkFormat == "parquet") Seq("ship_year") else Nil),
+        append(ordersFact, "fact_orders")),
+      Seq(append(integrated, "fact_integrated"))
+    ).foldLeft(Map.empty[String, Long])(_ ++ wave(_))
+
+    // observability counts (main.py:60-63): rows observed by each write,
+    // and each dim's rows, observed while its cache was built
+    loaded ++ allDims.map { case (n, _, dim) => n -> cachedRows(dim, n) }
+  }
+
+  /** Runs `loads` at once, one fresh daemon thread each. All run to their
+    * end; the first failure in load order is rethrown, others suppressed. */
+  private def wave(loads: Seq[(String, () => Long)]): Map[String, Long] = {
+    val pool = Executors.newFixedThreadPool(loads.size, { r: Runnable =>
+      val t = new Thread(r, "graft-pipeline-load"); t.setDaemon(true); t })
+    val tasks = loads.map(l => (() => l._2()): Callable[Long]).asJava
+    val done = try pool.invokeAll(tasks).asScala.toSeq finally pool.shutdown()
+    // every load is done, so get() throws only a wrapped load failure
+    val failures =
+      done.flatMap(f => Try(f.get()).failed.toOption.map(_.getCause))
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed); throw first }
+    loads.map(_._1).zip(done.map(_.get())).toMap
   }
 
   private def rowsMetric(dim: String): String = s"graft_rows_$dim"
 
-  /** Rows of a dim cached with `observe(rowsMetric(name), count(lit(1)))`
-    * under its `cache()`. The metrics node runs inside the cache build, and
-    * `QueryExecution.observedMetrics` reads it through the cached scan
-    * without running a job. The value is the total once every partition of
-    * the cache is built; each partition is built once. By the time the
-    * run reads it, the dim's load has built all of them: a write scans
-    * every row, and a skip-if-empty guard that finds no row has scanned
-    * every partition. The one-shot `Observation` would not do here: the
-    * first action to report it is that `limit(1)` guard, which may stop
-    * after one partition.
-    */
+  /** Rows of a dim cached under `observe(rowsMetric(name), count(lit(1)))`,
+    * read through the cached scan without a job. It is the total once the
+    * dim's load has built every partition: a write scans every row, and a
+    * skip-if-empty guard that finds none scans every partition. A one-shot
+    * `Observation` would take that guard's `limit(1)`, maybe one partition. */
   private def cachedRows(dim: DataFrame, name: String): Long =
     dim.queryExecution.observedMetrics(rowsMetric(name)).getLong(0)
 
@@ -191,10 +189,11 @@ object Pipeline {
 }
 
 /** Backfill orchestrator (reference `load_history.py:4-17`): replay
-  * month-at-a-time slices over a date range. The reference forks a
-  * subprocess per month; here each slice is one `Pipeline.run` in the
-  * same session — same isolation of state (each slice re-derives its
-  * dims and releases what it persisted), none of the process overhead.
+  * month-at-a-time slices over a date range, one `Pipeline.run` per month
+  * in the same session, where the reference forks a subprocess. Each slice
+  * re-derives its dims and releases what it persisted. Slices run one
+  * after another (only a slice's own loads overlap): a slice's dim
+  * upserts anti-join against what the slices before it landed.
   */
 object Backfill {
 

@@ -2252,7 +2252,8 @@ object WarehouseMeta {
           e: java.util.Map.Entry[(String, Long), CachedManifest]): Boolean =
         size > ManifestCacheMax
     }
-  @volatile var manifestCacheHits: Long = 0L
+  // bumped by concurrent readers (a slice's loads run at once)
+  val manifestCacheHits = new java.util.concurrent.atomic.AtomicLong
 
   def readManifest(root: String,
       generation: Option[Long] = None): Option[Manifest] = {
@@ -2281,7 +2282,7 @@ object WarehouseMeta {
     // the new manifest-<gen> cannot match the old parse's stamp
     if (hit != null && hit.len == status.getLen &&
         hit.mtime == status.getModificationTime) {
-      manifestCacheHits += 1
+      manifestCacheHits.incrementAndGet()
       return Some(hit.manifest)
     }
     val lines = {
@@ -2572,14 +2573,6 @@ object WarehouseCodec {
     }
   }
 
-  /** Returns null at clean EOF (the writer never splits a row across a
-    * flush, so EOF can only fall on a row boundary). */
-  def readRow(in: DataInputStream, schema: StructType): InternalRow = {
-    val slot = Array.tabulate(schema.length)(identity)
-    readRowProjected(in, schema, schema, slot, schema.length,
-      new Array[Any](schema.length))
-  }
-
   /** Projected read: decode only the fields whose full-schema ordinal maps
     * to a slot (≥ 0) in the pruned output row; everything else is
     * BYTE-SKIPPED — fixed widths skip in O(1), var-width fields skip by
@@ -2592,6 +2585,9 @@ object WarehouseCodec {
     * in catalyst representation, or null when none (a fresh
     * GenericInternalRow's slots already hold null, so the null-fill is
     * just the loop bound; only live defaults cost a write).
+    *
+    * Returns null at clean EOF (the writer never splits a row across a
+    * flush, so EOF can only fall on a row boundary).
     */
   def readRowProjected(in: DataInputStream, fullSchema: StructType,
       required: StructType, slot: Array[Int], arity: Int,

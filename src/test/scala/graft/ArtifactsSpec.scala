@@ -16,9 +16,10 @@ import graft.queries.GraphFixtures
   */
 class ArtifactsSpec extends SparkSpec {
 
-  /** A key of a kind no other suite or query uses, so every run is cold. */
+  /** A key of a kind no other suite or query uses, so every run is cold
+    * (the scratch root's name is unique to the suite run). */
   private def freshKey(kind: String, input: DataFrame): String =
-    Artifacts.key(s"spec_${kind}_${System.nanoTime()}", sf, input)
+    Artifacts.key(s"spec_${kind}_${scratchRoot.getName}", sf, input)
 
   /** The multiset of rows of `df`, in a stable order. */
   private def rows(df: DataFrame) =

@@ -24,6 +24,13 @@ class ClassifierSpec extends SparkSpec {
     out.unpersist()
   }
 
+  test("a weight that overflows a long is refused by name") {
+    val e = intercept[IllegalArgumentException] {
+      Classifier.trainAndScore(docs, iters = 40, lrPpm = Long.MaxValue)
+    }
+    assert(e.getMessage.contains("overflows a long"), e.getMessage)
+  }
+
   test("training is bit-stable under repartitioning") {
     // exact DECIMAL gradient sums + integer updates: the fitted scores
     // must be identical whatever the input partitioning

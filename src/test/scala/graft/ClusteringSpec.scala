@@ -64,7 +64,7 @@ class ClusteringSpec extends SparkSpec {
     val fresh = graft.ops.Similarity
       .ivfTrainedTopK(emb, nQueries = 3, k = 3, nlists = 4, nprobe = 2)
       .collect().map(_.toSeq).toSeq
-    val dir = s"/tmp/graft_quantizer_spec_${System.nanoTime()}"
+    val dir = scratch("quantizer_spec")
     graft.ops.Similarity.fitQuantizer(emb, nlists = 4).write.parquet(dir)
     val cached = graft.ops.Similarity
       .ivfTrainedTopK(emb, nQueries = 3, k = 3, nlists = 4, nprobe = 2,

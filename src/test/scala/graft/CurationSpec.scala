@@ -274,7 +274,7 @@ class MergeSpec extends SparkSpec {
 
   test("txn vacuum: expired versions unreadable, shared files survive, latest intact") {
     import graft.ops.Txn
-    val root = s"/tmp/graft_txn_vac_${System.nanoTime()}"
+    val root = scratch("txn_vac")
     val base = Seq((1L, "2024-01-01", 10.0), (3L, "2024-01-02", 30.0))
       .toDF("k", "day", "v")
     assert(Txn.commit(spark, root, base, "day") === 0)

@@ -451,7 +451,7 @@ class CdcStreamSpec extends SparkSpec {
   test("streaming CDC materialization equals the batch operator on an out-of-order log") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = s"/tmp/graft_cdc_stream_${System.nanoTime()}"
+    val dir = scratch("cdc_stream")
     // wave 1: base inserts for keys 1..20, then updates for even keys
     val wave1 = ((1L to 20L).map(k => (k, 1L, "I", k * 1.0)) ++
       (1L to 20L).filter(_ % 2 == 0).map(k => (k, 2L, "U", k * 1.1)))
@@ -508,7 +508,7 @@ class LshIngestSpec extends SparkSpec {
     val docs = graft.core.Tables.read(spark, sf, "documents")
       .select("doc_id", "text")
     val cut = 300L // docs below are the corpus store; the rest stream in
-    val dir = s"/tmp/graft_lsh_ingest_${System.nanoTime()}"
+    val dir = scratch("lsh_ingest")
     val out = s"$dir/flags"
     val fs = org.apache.hadoop.fs.FileSystem
       .get(spark.sparkContext.hadoopConfiguration)
@@ -546,7 +546,7 @@ class WatermarkSpec extends SparkSpec {
   test("late arrivals are dropped by the checkpoint-restored watermark, and counted") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val root = s"/tmp/graft_wm_${System.nanoTime()}"
+    val root = scratch("wm")
     val in = s"$root/in"; val ckpt = s"$root/ckpt"
     new java.io.File(in).mkdirs()
     val base = java.sql.Timestamp.valueOf("2024-06-01 12:00:00").getTime

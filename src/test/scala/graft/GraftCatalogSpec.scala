@@ -12,7 +12,7 @@ import graft.sources.WarehouseMeta
 class GraftCatalogSpec extends SparkSpec {
 
   private lazy val wh: String = {
-    val w = s"/tmp/graft_catalog_${System.nanoTime()}"
+    val w = scratch("catalog")
     spark.conf.set("spark.sql.catalog.graft",
       "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft.warehouse", w)

@@ -1,24 +1,22 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import java.io.File
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, expr, when}
 
 import graft.dims.{NationDim, PartDim, PriorityDim, SegmentDim, SupplierDim}
 import graft.io.Sink
 import graft.pipeline.{Backfill, Pipeline}
+import graft.sources.WarehouseMeta
 
 /** End-to-end DAG smoke (SURVEY §5.4): full pipeline over sf0.001, fact row
   * counts and surrogate-FK coverage.
   */
 class PipelineSpec extends SparkSpec {
-
-  private def freshDir(tag: String): String = {
-    val p = s"/tmp/graft_pipe_$tag"
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(p), true)
-    p
-  }
 
   private val facts = Seq("fact_lineitem", "fact_orders", "fact_integrated")
   private val dimLoaders = Seq("dim_part" -> PartDim,
@@ -29,8 +27,13 @@ class PipelineSpec extends SparkSpec {
   private def persisted(): Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** The messages of `e` and of its causes. */
+  private def messages(e: Throwable): Seq[String] =
+    Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+
   test("full pipeline: fact written with 100% FK coverage") {
-    val out = freshDir("e2e")
+    val out = scratch("e2e")
     val counts = Pipeline.run(spark,
       Pipeline.Config(sf, out, "1992-01-01", "1999-01-01"))
     assert(counts("fact_lineitem") > 0)
@@ -55,7 +58,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("append-duplication quirk: dims accumulate across runs (§2.8)") {
-    val out = freshDir("quirk")
+    val out = scratch("quirk")
     Pipeline.run(spark, Pipeline.Config(sf, out, "1995-01-01", "1996-01-01"))
     val once = Pipeline.table(spark, out, "dim_nation").count()
     Pipeline.run(spark, Pipeline.Config(sf, out, "1995-01-01", "1996-01-01"))
@@ -64,7 +67,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("idempotent dim upsert: re-running a slice adds no dim rows") {
-    val out = freshDir("idem")
+    val out = scratch("idem")
     val cfg = Pipeline.Config(sf, out, "1995-01-01", "1996-01-01",
       idempotentDims = true)
     Pipeline.run(spark, cfg)
@@ -75,7 +78,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("fact lands partitioned by ship_year") {
-    val out = freshDir("part")
+    val out = scratch("part")
     Pipeline.run(spark, Pipeline.Config(sf, out, "1995-01-01", "1997-01-01"))
     val dirs = new java.io.File(s"$out/fact_lineitem").listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("ship_year="))
@@ -91,7 +94,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("CLI main runs a slice end-to-end from argv") {
-    val out = freshDir("cli")
+    val out = scratch("cli")
     graft.pipeline.Main.main(Array(
       "--sf", sf, "--out", out,
       "--start", "1995-01-01", "--end", "1996-01-01"))
@@ -109,7 +112,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("CLI --backfill honours --idempotent-dims: a rerun adds no dim rows") {
-    val out = freshDir("cli_backfill")
+    val out = scratch("cli_backfill")
     val argv = Array("--sf", sf, "--out", out, "--start", "1995-01-01",
       "--end", "1995-03-01", "--backfill", "--idempotent-dims")
     def dimRows(): Map[String, Long] = dimLoaders.map { case (d, _) =>
@@ -130,7 +133,7 @@ class PipelineSpec extends SparkSpec {
       when(col("k") === "c", expr("raise_error('poisoned row')"))
         .otherwise(col("v")).as("v"))
     Seq("graft-warehouse", "parquet").foreach { format =>
-      val path = freshDir(s"upsert_abort_${format.replace('-', '_')}")
+      val path = scratch(s"upsert_abort_${format.replace('-', '_')}")
       intercept[Exception] {
         Sink.upsertDim(spark, poisoned, path, Seq("k"), format)
       }
@@ -145,7 +148,7 @@ class PipelineSpec extends SparkSpec {
 
   test("warehouse sink with idempotent dims over two monthly slices") {
     // the benchmark's configuration (perfbench etl_backfill)
-    val out = freshDir("wh_slices")
+    val out = scratch("wh_slices")
     val fmt = "graft-warehouse"
     val read = (t: String) => Pipeline.table(spark, out, t, fmt)
     val before = persisted()
@@ -178,7 +181,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("a sink that throws once the dims are cached leaves no RDD persisted") {
-    val out = freshDir("wh_throw")
+    val out = scratch("wh_throw")
     val fmt = "graft-warehouse"
     // fact_orders already holds another schema: its commit fails on drift
     Sink.append(spark.range(1).toDF("x"), s"$out/fact_orders", format = fmt)
@@ -187,16 +190,68 @@ class PipelineSpec extends SparkSpec {
       Pipeline.run(spark, Pipeline.Config(sf, out, "1996-07-01", "1996-08-01",
         idempotentDims = true, sinkFormat = fmt))
     }
-    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
-      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
-    assert(msgs.exists(_.contains("schema drift")), msgs)
-    assert(graft.sources.WarehouseMeta.readManifest(s"$out/dim_priority").isDefined,
+    assert(messages(e).exists(_.contains("schema drift")), messages(e))
+    assert(WarehouseMeta.readManifest(s"$out/dim_priority").isDefined,
       "the dims were loaded before the fact failed")
     assert(persisted() === before)
   }
 
+  test("a dim load that throws lands no fact and leaves no load running") {
+    val out = scratch("wh_barrier")
+    val fmt = "graft-warehouse"
+    // dim_supplier already holds another schema: its append fails on drift
+    Sink.append(spark.range(1).toDF("x"), s"$out/dim_supplier", format = fmt)
+    val before = persisted()
+    val e = intercept[Exception] {
+      Pipeline.run(spark, Pipeline.Config(sf, out, "1996-07-01", "1996-08-01",
+        sinkFormat = fmt))
+    }
+    assert(messages(e).exists(_.contains("schema drift")), messages(e))
+    facts.foreach { t =>
+      assert(WarehouseMeta.readManifest(s"$out/$t").isEmpty, s"$t manifest")
+      assert(!new File(s"$out/$t").exists, s"$t directory created")
+    }
+    // the run threw only once every load it started had ended
+    val logs = for {
+      table <- new File(out).listFiles().toSeq
+      log <- Option(new File(table, "_jobs").list()).toSeq.flatten
+      if !log.startsWith(".")
+    } yield (table.getName, WarehouseMeta.jobStates(table.getPath, log))
+    assert(logs.map(_._1).toSet ===
+      (Set("dim_date", "dim_time") ++ dimLoaders.map(_._1)), logs)
+    logs.foreach { case (t, states) =>
+      assert(!states.lastOption.contains("RUNNING"), s"$t: $states")
+    }
+    assert(persisted() === before)
+  }
+
+  test("the caller's job group reaches every job of a run, both sink formats") {
+    val sc = spark.sparkContext
+    Seq("parquet", "graft-warehouse").foreach { fmt =>
+      val group = s"pipeline_spec_${fmt.replace('-', '_')}"
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = groups.add(
+          String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      }
+      SpecBus.drain(sc)
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "PipelineSpec")
+      try Pipeline.run(spark, Pipeline.Config(sf, scratch(s"group_$fmt"),
+        "1996-07-01", "1996-08-01", idempotentDims = true, sinkFormat = fmt))
+      finally {
+        sc.clearJobGroup()
+        SpecBus.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+      val seen = groups.asScala.toSeq
+      assert(seen.size >= 10, s"$fmt: $seen")
+      assert(seen.forall(_ == group), s"$fmt: $seen")
+    }
+  }
+
   test("an empty slice writes no fact and leaves no RDD persisted") {
-    val out = freshDir("empty")
+    val out = scratch("empty")
     val before = persisted()
     val counts = Pipeline.run(spark,
       Pipeline.Config(sf, out, "1980-01-01", "1980-02-01"))

@@ -12,9 +12,6 @@ import graft.sources.WarehouseScanStats
   */
 class WarehouseAggSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_agg_${tag}_${System.nanoTime()}"
-
   private def table(path: String) = {
     import spark.implicits._
     val df = Seq(
@@ -30,7 +27,7 @@ class WarehouseAggSpec extends SparkSpec {
 
   test("global min/max/count(*) serve from the manifest: zero files " +
     "planned, values exact") {
-    val path = fresh("serve")
+    val path = scratch("serve")
     val t = table(path)
     val row = t.agg(min("k").as("mn"), max("k").as("mx"),
       count(lit(1)).as("n"), min("v").as("vmn"), max("v").as("vmx"))
@@ -45,7 +42,7 @@ class WarehouseAggSpec extends SparkSpec {
 
   test("a residual filter refuses the pushdown and still gets the right " +
     "answer from a real scan") {
-    val path = fresh("filter")
+    val path = scratch("filter")
     val t = table(path)
     val row = t.filter(col("k") >= 4L)
       .agg(min("k").as("mn"), count(lit(1)).as("n")).collect().head
@@ -56,7 +53,7 @@ class WarehouseAggSpec extends SparkSpec {
 
   test("group-by, string min, and sum(distinct) refuse; values match a " +
     "parquet-side recompute") {
-    val path = fresh("refuse")
+    val path = scratch("refuse")
     val t = table(path)
     val g = t.groupBy("v").agg(count(lit(1))).collect()
     assert(!WarehouseScanStats.lastAggServed && g.length === 4)
@@ -68,7 +65,7 @@ class WarehouseAggSpec extends SparkSpec {
 
   test("count(col) and sum(col) serve from per-file non-null counts and " +
     "overflow-guarded sums") {
-    val path = fresh("sums")
+    val path = scratch("sums")
     val t = table(path)
     val row = t.agg(count(col("opt")).as("c"), sum("opt").as("so"),
       sum("v").as("sv"), sum("k").as("sk")).collect().head
@@ -83,7 +80,7 @@ class WarehouseAggSpec extends SparkSpec {
   test("sum over an all-null column is NULL from metadata, like the real " +
     "aggregate") {
     import spark.implicits._
-    val path = fresh("sumnull")
+    val path = scratch("sumnull")
     val df = Seq((1L, None: Option[Long]), (2L, None)).toDF("k", "empty")
     Sink.overwrite(df, path, format = "graft-warehouse")
     val row = Sink.read(spark, path, "graft-warehouse")
@@ -96,7 +93,7 @@ class WarehouseAggSpec extends SparkSpec {
   test("a per-file sum overflow refuses the pushdown and still answers " +
     "from data") {
     import spark.implicits._
-    val path = fresh("overflow")
+    val path = scratch("overflow")
     val df = Seq((1L, Long.MaxValue), (2L, Long.MaxValue), (3L, -5L))
       .toDF("k", "big")
     // one partition => one file accumulates MaxValue twice -> overflow
@@ -114,7 +111,7 @@ class WarehouseAggSpec extends SparkSpec {
   test("all-null integral column: min/max are null from metadata, like " +
     "the real aggregate") {
     import spark.implicits._
-    val path = fresh("nulls")
+    val path = scratch("nulls")
     val df = Seq((1L, None: Option[Long]), (2L, None))
       .toDF("k", "empty")
     Sink.overwrite(df, path, format = "graft-warehouse")
@@ -128,7 +125,7 @@ class WarehouseAggSpec extends SparkSpec {
   test("GROUP BY exactly the cluster key serves per-group partials from " +
     "the manifest: zero files planned, grouped values exact") {
     import spark.implicits._
-    val path = fresh("grouped")
+    val path = scratch("grouped")
     val df = Seq(
       ("a", 5L, Some(2L)), ("a", 1L, None), ("b", 7L, Some(3L)),
       ("b", 9L, Some(4L)), ("c", -2L, None))
@@ -156,7 +153,7 @@ class WarehouseAggSpec extends SparkSpec {
   test("append accumulates row counts across generations; count serves " +
     "the union") {
     import spark.implicits._
-    val path = fresh("append")
+    val path = scratch("append")
     val df = Seq((1L, 5L), (2L, 6L)).toDF("k", "v")
     Sink.append(df, path, format = "graft-warehouse")
     Sink.append(df.select(col("k") + 10, col("v")).toDF("k", "v"), path,

@@ -13,9 +13,6 @@ import graft.sources.{WarehouseCow, WarehouseMeta, WarehouseScanStats}
   */
 class WarehouseBloomSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_bloom_${tag}_${System.nanoTime()}"
-
   /** 8 range-partitioned files over id, with a SCRAMBLED lookup column
     * `v` whose per-file [min,max] spans nearly the whole domain — the
     * exact shape where zone maps keep every file and only a bloom can
@@ -28,7 +25,7 @@ class WarehouseBloomSpec extends SparkSpec {
 
   test("= and IN on a scrambled column prune to the owning files; a " +
     "missing value prunes to ZERO files") {
-    val path = fresh("eq")
+    val path = scratch("eq")
     Sink.overwrite(scrambled(8000).repartitionByRange(8, col("k")), path,
       format = "graft-warehouse",
       options = Map("bloomFilters" -> "v,name", "bloomBits" -> "65536"))
@@ -69,7 +66,7 @@ class WarehouseBloomSpec extends SparkSpec {
 
   test("runtime DPP key sets probe blooms: a broadcast join plans only " +
     "the build side's files even when every zone overlaps") {
-    val path = fresh("dpp")
+    val path = scratch("dpp")
     Sink.overwrite(scrambled(8000).repartitionByRange(8, col("k")), path,
       format = "graft-warehouse",
       options = Map("bloomFilters" -> "v", "bloomBits" -> "65536"))
@@ -92,7 +89,7 @@ class WarehouseBloomSpec extends SparkSpec {
 
   test("the index is table-sticky: appends, CoW rewrites, and OPTIMIZE " +
     "inherit it without re-declaring") {
-    val path = fresh("sticky")
+    val path = scratch("sticky")
     Sink.overwrite(scrambled(2000).repartitionByRange(2, col("k")), path,
       format = "graft-warehouse",
       options = Map("bloomFilters" -> "v", "bloomBits" -> "65536"))
@@ -127,7 +124,7 @@ class WarehouseBloomSpec extends SparkSpec {
 
   test("VACUUM keeps live sidecars, collects orphaned ones; RENAME " +
     "drops only the renamed column's coverage") {
-    val path = fresh("vac")
+    val path = scratch("vac")
     Sink.overwrite(scrambled(1000).coalesce(1), path,
       format = "graft-warehouse",
       options = Map("bloomFilters" -> "v,name", "bloomBits" -> "65536"))

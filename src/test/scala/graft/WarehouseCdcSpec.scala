@@ -14,9 +14,6 @@ import graft.sources.{WarehouseCdc, WarehouseCow, WarehouseDelete, WarehouseEvol
   */
 class WarehouseCdcSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_cdc_${tag}_${System.nanoTime()}"
-
   private def changes(path: String, since: Long, to: Long,
       keys: Seq[String] = Nil) =
     WarehouseCdc.tableChanges(spark, path, since, to, keys)
@@ -28,7 +25,7 @@ class WarehouseCdcSpec extends SparkSpec {
 
   test("append / CoW update / metadata delete produce the exact typed " +
     "change rows; OPTIMIZE produces none") {
-    val path = fresh("crud")
+    val path = scratch("crud")
     def df(r: Range, v: Double) = spark.range(r.start, r.end)
       .select(col("id").as("k"), lit(v).as("v"),
         (col("id") / 10).cast("long").as("band"))
@@ -63,7 +60,7 @@ class WarehouseCdcSpec extends SparkSpec {
 
   test("history lists retained generations with live counts and real " +
     "commit metadata; VACUUM shortens it") {
-    val path = fresh("hist")
+    val path = scratch("hist")
     Sink.overwrite(spark.range(10).select(col("id").as("k")).coalesce(1),
       path, format = "graft-warehouse")
     Sink.append(spark.range(10, 15).select(col("id").as("k")).coalesce(1),
@@ -83,7 +80,7 @@ class WarehouseCdcSpec extends SparkSpec {
 
   test("MERGE commits refuse without keyCols and classify exactly with " +
     "them") {
-    val path = fresh("merge")
+    val path = scratch("merge")
     def df(ks: Seq[Int], v: Double) = spark
       .createDataFrame(ks.map(k => (k.toLong, v, k.toLong / 10)))
       .toDF("k", "v", "band")
@@ -110,7 +107,7 @@ class WarehouseCdcSpec extends SparkSpec {
 
   test("pre-rename generations align by position to the renamed schema; " +
     "ALTER commits themselves emit nothing") {
-    val path = fresh("rename")
+    val path = scratch("rename")
     Sink.overwrite(spark.range(5)
       .select(col("id").as("k"), (col("id") * 2.0).as("v")).coalesce(1),
       path, format = "graft-warehouse")

@@ -17,7 +17,7 @@ import graft.sources.{WarehouseCow, WarehouseDelete, WarehouseDv, WarehouseEvolv
 class WarehouseCommitSpec extends SparkSpec {
 
   private lazy val wh: String = {
-    val w = s"/tmp/graft_commit_${System.nanoTime()}"
+    val w = scratch("commit")
     spark.conf.set("spark.sql.catalog.gcommit", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gcommit.warehouse", w)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gcommit.db")

@@ -12,12 +12,9 @@ import graft.sources.{WarehouseDelete, WarehouseMeta}
   */
 class WarehouseDeleteSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_del_${tag}_${System.nanoTime()}"
-
   test("a cluster-key equality delete drops whole files exactly") {
     import spark.implicits._
-    val path = fresh("eq")
+    val path = scratch("eq")
     val df = (0L until 100L).map(i => (i, i % 4)).toDF("k", "bucket")
     Sink.overwrite(df.repartition(4, col("bucket")), path,
       format = "graft-warehouse", options = Map("clusterBy" -> "bucket"))
@@ -37,7 +34,7 @@ class WarehouseDeleteSpec extends SparkSpec {
   test("a range delete over range-clustered files drops the provable " +
     "prefix; a partial range refuses and leaves the table untouched") {
     import spark.implicits._
-    val path = fresh("range")
+    val path = scratch("range")
     // 4 range files over k = 0..399: [0,99] [100,199] [200,299] [300,399]
     val df = (0L until 400L).map(i => (i, i * 2)).toDF("k", "v")
     Sink.overwrite(df.repartitionByRange(4, col("k")), path,
@@ -56,7 +53,7 @@ class WarehouseDeleteSpec extends SparkSpec {
 
   test("a delete matching nothing is a provable no-op generation") {
     import spark.implicits._
-    val path = fresh("noop")
+    val path = scratch("noop")
     val df = (0L until 50L).map(i => (i, i % 2)).toDF("k", "b")
     Sink.overwrite(df, path, format = "graft-warehouse")
     assert(WarehouseDelete.deleteWhere(path, EqualTo("k", 999L)) === 0L)
@@ -68,7 +65,7 @@ class WarehouseDeleteSpec extends SparkSpec {
     "deleted count is exact, and time travel keeps the old rows") {
     import spark.implicits._
     import graft.sources.WarehouseCow
-    val path = fresh("cow")
+    val path = scratch("cow")
     // exactly 8 files over k = 0..399 — [0,49] [50,99] [100,149] … — via
     // the cluster writer (one file per p value; repartitionByRange's
     // sampled boundaries would make the partial-file index nondeterministic)
@@ -115,7 +112,7 @@ class WarehouseDeleteSpec extends SparkSpec {
   test("copy-on-write delete keeps NULL-predicate rows (SQL semantics)") {
     import spark.implicits._
     import graft.sources.WarehouseCow
-    val path = fresh("cownull")
+    val path = scratch("cownull")
     val df = Seq((1L, Some(1L)), (2L, Some(2L)), (3L, None), (4L, Some(1L)))
       .toDF("k", "v")
     Sink.overwrite(df.coalesce(1), path, format = "graft-warehouse")

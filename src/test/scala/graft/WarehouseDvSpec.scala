@@ -15,12 +15,9 @@ import graft.sources.{WarehouseCdc, WarehouseDv, WarehouseMeta, WarehouseScanSta
   */
 class WarehouseDvSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_dv_${tag}_${System.nanoTime()}"
-
   test("a partial delete commits a bitmap, not a rewrite: file set " +
     "unchanged, counts exact, repeated deletes union idempotently") {
-    val path = fresh("bitmap")
+    val path = scratch("bitmap")
     Sink.overwrite(spark.range(100)
       .select(col("id").as("k"), (col("id") % 10).as("m")).coalesce(2),
       path, format = "graft-warehouse")
@@ -51,7 +48,7 @@ class WarehouseDvSpec extends SparkSpec {
 
   test("the delete ladder combines: zone-provable files drop as " +
     "metadata, partial files get vectors, in ONE commit") {
-    val path = fresh("ladder")
+    val path = scratch("ladder")
     Sink.overwrite(spark.range(100)
       .select(col("id").as("k"), expr("id div 50").as("band")).coalesce(1),
       path, format = "graft-warehouse",
@@ -73,7 +70,7 @@ class WarehouseDvSpec extends SparkSpec {
 
   test("COUNT(*) serves metadata-exact over vectored files; MIN/MAX " +
     "refuse the serve and scan correctly") {
-    val path = fresh("serves")
+    val path = scratch("serves")
     Sink.overwrite(spark.range(60).select(col("id").as("k")).coalesce(1),
       path, format = "graft-warehouse")
     WarehouseDv.deleteWhereDv(spark, path, LessThan("k", 10L))
@@ -91,7 +88,7 @@ class WarehouseDvSpec extends SparkSpec {
 
   test("OPTIMIZE materializes vectors away; the change feed emits " +
     "vectored rows as deletes; vacuum keeps referenced bitmaps") {
-    val path = fresh("optimize")
+    val path = scratch("optimize")
     Sink.overwrite(spark.range(40)
       .select(col("id").as("k"), lit(1.0).as("v")).coalesce(1),
       path, format = "graft-warehouse")
@@ -116,7 +113,7 @@ class WarehouseDvSpec extends SparkSpec {
 
   test("merge-on-read UPDATE vectors pre-images and appends post-images " +
     "in one commit; compound updates chain; the feed classifies both") {
-    val path = fresh("mor_upd")
+    val path = scratch("mor_upd")
     Sink.overwrite(spark.range(40)
       .select(col("id").as("k"), lit(1.0).as("v")).coalesce(1),
       path, format = "graft-warehouse")
@@ -151,7 +148,7 @@ class WarehouseDvSpec extends SparkSpec {
 
   test("a copy-on-write delete AFTER a vector delete counts only live " +
     "rows and carries the vector math through the rewrite") {
-    val path = fresh("cowafter")
+    val path = scratch("cowafter")
     Sink.overwrite(spark.range(50).select(col("id").as("k")).coalesce(1),
       path, format = "graft-warehouse")
     // vector out k < 10 (10 live rows gone)
@@ -168,7 +165,7 @@ class WarehouseDvSpec extends SparkSpec {
 
   test("_file/_pos metadata columns give stable row coordinates: _pos " +
     "survives a deletion vector with gaps, not renumbering") {
-    val path = fresh("metacols")
+    val path = scratch("metacols")
     Sink.overwrite(spark.range(20).select(col("id").as("k")).coalesce(1),
       path, format = "graft-warehouse")
     val before = Sink.read(spark, path, "graft-warehouse")
@@ -190,7 +187,7 @@ class WarehouseDvSpec extends SparkSpec {
 
   test("the streaming source refuses a DV commit by default, skips " +
     "under ignoreDeletes; streaming CDC points at the batch API") {
-    val path = fresh("stream")
+    val path = scratch("stream")
     Sink.overwrite(spark.range(30).select(col("id").as("k")).coalesce(1),
       path, format = "graft-warehouse")
     WarehouseDv.deleteWhereDv(spark, path, LessThan("k", 3L))
@@ -199,7 +196,7 @@ class WarehouseDvSpec extends SparkSpec {
         .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       val q = spark.readStream.format("graft-warehouse").load(path)
-        .writeStream.option("checkpointLocation", fresh("ck1"))
+        .writeStream.option("checkpointLocation", scratch("ck1"))
         .foreachBatch((_: org.apache.spark.sql.Dataset[
           org.apache.spark.sql.Row], _: Long) => ())
         .start()
@@ -209,7 +206,7 @@ class WarehouseDvSpec extends SparkSpec {
     val n = new java.util.concurrent.atomic.AtomicLong()
     val q2 = spark.readStream.format("graft-warehouse")
       .option("ignoreDeletes", "true").load(path)
-      .writeStream.option("checkpointLocation", fresh("ck2"))
+      .writeStream.option("checkpointLocation", scratch("ck2"))
       .foreachBatch((b: org.apache.spark.sql.Dataset[
         org.apache.spark.sql.Row], _: Long) => { n.addAndGet(b.count()); () })
       .start()
@@ -219,7 +216,7 @@ class WarehouseDvSpec extends SparkSpec {
     val ex2 = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       val q = spark.readStream.format("graft-warehouse")
         .option("readChangeFeed", "true").load(path)
-        .writeStream.option("checkpointLocation", fresh("ck3"))
+        .writeStream.option("checkpointLocation", scratch("ck3"))
         .foreachBatch((_: org.apache.spark.sql.Dataset[
           org.apache.spark.sql.Row], _: Long) => ())
         .start()

@@ -14,13 +14,10 @@ import graft.sources.{WarehouseCow, WarehouseEvolve, WarehouseMeta,
   */
 class WarehouseEvolveSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_evo_${tag}_${System.nanoTime()}"
-
   test("ADD COLUMN is zero-IO (files carry by path), old rows read NULL, " +
     "appends carry values, and time travel keeps the old schema") {
     import spark.implicits._
-    val path = fresh("basic")
+    val path = scratch("basic")
     val a = (0L until 100L).map(i => (i, i * 2)).toDF("k", "v")
     Sink.overwrite(a.repartition(2), path, format = "graft-warehouse")
     val m0 = WarehouseMeta.readManifest(path).get
@@ -57,7 +54,7 @@ class WarehouseEvolveSpec extends SparkSpec {
   test("repeated evolution: files written between two ALTERs keep their " +
     "own arity (materialize-on-evolve)") {
     import spark.implicits._
-    val path = fresh("twice")
+    val path = scratch("twice")
     Sink.overwrite(Seq((1L, 10L)).toDF("k", "v").coalesce(1), path,
       format = "graft-warehouse")
     WarehouseEvolve.addColumn(path, "c3", LongType)
@@ -80,7 +77,7 @@ class WarehouseEvolveSpec extends SparkSpec {
     "evolved column servable from the manifest (the all-NULL vintage " +
     "provably contributes nothing) — exact on both vintages") {
     import spark.implicits._
-    val path = fresh("serve")
+    val path = scratch("serve")
     val a = (0L until 100L).map(i => (i, i * 2)).toDF("k", "v")
     Sink.overwrite(a.repartition(2), path, format = "graft-warehouse")
     WarehouseEvolve.addColumn(path, "w", LongType)
@@ -110,7 +107,7 @@ class WarehouseEvolveSpec extends SparkSpec {
     "zero IO; backfilled zone/fnn/fsum metadata serves aggregates and " +
     "prunes exactly across both vintages") {
     import spark.implicits._
-    val path = fresh("dflt")
+    val path = scratch("dflt")
     val a = (0L until 100L).map(i => (i, i * 2)).toDF("k", "v")
     Sink.overwrite(a.repartition(2), path, format = "graft-warehouse")
     val m0 = WarehouseMeta.readManifest(path).get
@@ -157,7 +154,7 @@ class WarehouseEvolveSpec extends SparkSpec {
   test("ADD COLUMN DEFAULT with a STRING default reaches executors " +
     "(UTF8String tail value) and CoW rewrites materialize it") {
     import spark.implicits._
-    val path = fresh("sdflt")
+    val path = scratch("sdflt")
     Sink.overwrite((0L until 50L).map(i => (i, i)).toDF("k", "v")
       .coalesce(1), path, format = "graft-warehouse")
     WarehouseEvolve.addColumn(path, "src", StringType, Some("'legacy'"))
@@ -180,7 +177,7 @@ class WarehouseEvolveSpec extends SparkSpec {
     "stats/fnn/fsum/cluster/default follow the name, serves keep " +
     "working, time travel keeps the old name") {
     import spark.implicits._
-    val path = fresh("ren")
+    val path = scratch("ren")
     val df = (0L until 100L).map(i => (i, i % 4, i * 2)).toDF("k", "b", "v")
     Sink.overwrite(df.repartition(1), path,
       format = "graft-warehouse", options = Map("clusterBy" -> "b"))
@@ -217,7 +214,7 @@ class WarehouseEvolveSpec extends SparkSpec {
   test("copy-on-write UPDATE across vintages decodes null-filled rows and " +
     "rewrites them at the full current schema") {
     import spark.implicits._
-    val path = fresh("cow")
+    val path = scratch("cow")
     Sink.overwrite((0L until 40L).map(i => (i, i)).toDF("k", "v")
       .coalesce(1), path, format = "graft-warehouse")
     WarehouseEvolve.addColumn(path, "w", LongType)
@@ -241,7 +238,7 @@ class WarehouseEvolveSpec extends SparkSpec {
     "before anything mutates; post-evolution appends at the OLD schema " +
     "refuse (drift check protects the evolved shape)") {
     import spark.implicits._
-    val path = fresh("refuse")
+    val path = scratch("refuse")
     Sink.overwrite(Seq((1L, 2L)).toDF("k", "v"), path,
       format = "graft-warehouse")
     val gen0 = WarehouseMeta.readManifest(path).get.generation

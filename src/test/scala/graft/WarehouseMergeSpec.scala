@@ -13,9 +13,6 @@ import graft.sources.{WarehouseMerge, WarehouseMeta}
   */
 class WarehouseMergeSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_mrg_${tag}_${System.nanoTime()}"
-
   private def fixture(path: String): Unit = {
     // exactly 8 files over k = 0..399 via the cluster writer (one file
     // per p value — deterministic zone boundaries [0,49] [50,99] …)
@@ -48,7 +45,7 @@ class WarehouseMergeSpec extends SparkSpec {
 
   test("changelog merge rewrites only zone-hit files; carries the rest " +
     "by reference; final state matches the changelog semantics") {
-    val path = fresh("cdc")
+    val path = scratch("cdc")
     fixture(path)
     val m0 = WarehouseMeta.readManifest(path).get
     assert(m0.files.size === 8)
@@ -79,7 +76,7 @@ class WarehouseMergeSpec extends SparkSpec {
 
   test("interval fallback (changeset too big to collect) is conservative " +
     "but identical in result") {
-    val path = fresh("cdcwide")
+    val path = scratch("cdcwide")
     fixture(path)
     val st = WarehouseMerge.applyChangelogCow(spark, path, changelog,
       key = "k", seqCol = "seq", opCol = "op", maxKeysCollect = 0)
@@ -93,7 +90,7 @@ class WarehouseMergeSpec extends SparkSpec {
   test("a changeset disjoint from every zone is a pure insert: all files " +
     "carry, one new file holds the inserts") {
     import spark.implicits._
-    val path = fresh("insonly")
+    val path = scratch("insonly")
     fixture(path)
     val m0 = WarehouseMeta.readManifest(path).get
     val ins = Seq((5000L, 1L, 100L, "I", 1L), (5001L, 2L, 100L, "I", 1L))
@@ -108,7 +105,7 @@ class WarehouseMergeSpec extends SparkSpec {
 
   test("payload-schema drift refuses before anything mutates") {
     import spark.implicits._
-    val path = fresh("drift")
+    val path = scratch("drift")
     fixture(path)
     val gen0 = WarehouseMeta.readManifest(path).get.generation
     val bad = Seq((1L, "x", "U", 1L)).toDF("k", "extra", "op", "seq")

@@ -14,9 +14,6 @@ import graft.streaming.Streams
   */
 class WarehouseMergeStreamSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_mrgstr_${tag}_${System.nanoTime()}"
-
   private def base(path: String): Unit = {
     val df = spark.range(400).select(col("id").as("k"),
       (col("id") * 10).as("v"), expr("id div 50").as("p"))
@@ -35,7 +32,7 @@ class WarehouseMergeStreamSpec extends SparkSpec {
   test("three changelog waves apply as three atomic MERGE generations; " +
     "cross-wave sequencing holds (update, then delete, then resurrect); " +
     "untouched files carry by reference per trigger") {
-    val path = fresh("waves")
+    val path = scratch("waves")
     val logDir = s"$path/_cdc_log"
     base(path)
     val m0 = WarehouseMeta.readManifest(path).get
@@ -72,7 +69,7 @@ class WarehouseMergeStreamSpec extends SparkSpec {
 
   test("checkpoint replay: re-running the stream over the same log " +
     "applies nothing; a NEW wave applies exactly once") {
-    val path = fresh("replay")
+    val path = scratch("replay")
     val logDir = s"$path/_cdc_log"
     base(path)
     wave(logDir, Seq((7L, 700L, 0L, "U", 1L)), first = true)

@@ -12,12 +12,9 @@ import graft.sources.WarehouseScanStats
   */
 class WarehouseRuntimeFilterSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_rtf_${tag}_${System.nanoTime()}"
-
   test("a broadcast join's key set prunes warehouse files at runtime") {
     import spark.implicits._
-    val path = fresh("fact")
+    val path = scratch("fact")
     // 8 range-clustered files over k = 0..799: file i holds [i*100, i*100+99]
     val fact = spark.range(800).select(col("id").as("k"),
       (col("id") * 2).as("v"))
@@ -46,9 +43,9 @@ class WarehouseRuntimeFilterSpec extends SparkSpec {
   test("streaming enrich prunes files on EVERY trigger and reuses the " +
     "parsed manifest across triggers") {
     import spark.implicits._
-    val table = fresh("stream_table")
-    val src = fresh("stream_src")
-    val out = fresh("stream_out")
+    val table = scratch("stream_table")
+    val src = scratch("stream_src")
+    val out = scratch("stream_out")
     // 8 range-clustered files over k = 0..799
     val fact = spark.range(800).select(col("id").as("k"),
       (col("id") * 3).as("v"))
@@ -71,7 +68,7 @@ class WarehouseRuntimeFilterSpec extends SparkSpec {
       i += 1
     }
     WarehouseScanStats.plannedLog.clear()
-    val hits0 = graft.sources.WarehouseMeta.manifestCacheHits
+    val hits0 = graft.sources.WarehouseMeta.manifestCacheHits.get
     val q = graft.streaming.Streams.warehouseEnrichStream(spark, src,
       table, batchKey = "k", tableKey = "k", outPath = out)
     q.awaitTermination()
@@ -93,14 +90,14 @@ class WarehouseRuntimeFilterSpec extends SparkSpec {
     assert(planned.forall(p => p >= 1 && p < 8),
       s"every trigger must prune zone files: $planned")
     // the second trigger re-planned from the cached manifest parse
-    assert(graft.sources.WarehouseMeta.manifestCacheHits > hits0,
+    assert(graft.sources.WarehouseMeta.manifestCacheHits.get > hits0,
       "a steady generation must not re-parse the manifest per trigger")
   }
 
   test("runtime pruning never changes results: full-domain build side " +
     "keeps every file") {
     import spark.implicits._
-    val path = fresh("full")
+    val path = scratch("full")
     val fact = spark.range(200).select(col("id").as("k"),
       (col("id") % 7).as("v"))
     Sink.overwrite(fact.repartitionByRange(4, col("k")), path,

@@ -13,15 +13,12 @@ import graft.sources.WarehouseMeta
   */
 class WarehouseSinkSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_warehouse_spec_${tag}_${System.nanoTime()}"
-
   private def readBack(path: String) =
     Sink.read(spark, path, "graft-warehouse")
 
   test("append load jobs accumulate generations; types round-trip") {
     import spark.implicits._
-    val path = fresh("append")
+    val path = scratch("append")
     val df = Seq(
       (1L, "alpha", 2.5, true),
       (2L, null.asInstanceOf[String], -0.0, false),
@@ -50,7 +47,7 @@ class WarehouseSinkSpec extends SparkSpec {
 
   test("WRITE_TRUNCATE (mode overwrite) atomically replaces the table") {
     import spark.implicits._
-    val path = fresh("truncate")
+    val path = scratch("truncate")
     Sink.append(Seq((1L, "old")).toDF("id", "v"), path,
       format = "graft-warehouse")
     val oldFiles = WarehouseMeta.readManifest(path).get.files.toSet
@@ -67,7 +64,7 @@ class WarehouseSinkSpec extends SparkSpec {
 
   test("WRITE_EMPTY fails on a non-empty table and provably changes nothing") {
     import spark.implicits._
-    val path = fresh("empty")
+    val path = scratch("empty")
     val df = Seq((1L, "keep")).toDF("id", "v")
     Sink.append(df, path, format = "graft-warehouse")
     val before = WarehouseMeta.readManifest(path).get
@@ -93,7 +90,7 @@ class WarehouseSinkSpec extends SparkSpec {
     assert(WarehouseMeta.jobs(path).exists(j =>
       WarehouseMeta.jobStates(path, j).exists(_.startsWith("ERROR"))))
     // WRITE_EMPTY on a genuinely empty table succeeds
-    val path2 = fresh("empty2")
+    val path2 = scratch("empty2")
     Seq((5L, "first")).toDF("id", "v")
       .write.mode("append").format("graft-warehouse")
       .option("writeDisposition", "WRITE_EMPTY").save(path2)
@@ -102,7 +99,7 @@ class WarehouseSinkSpec extends SparkSpec {
 
   test("a task failure mid-load aborts the job and leaves the table intact") {
     import spark.implicits._
-    val path = fresh("abort")
+    val path = scratch("abort")
     Sink.append(Seq((1L, "base")).toDF("id", "v"), path,
       format = "graft-warehouse")
     val before = WarehouseMeta.readManifest(path).get
@@ -125,7 +122,7 @@ class WarehouseSinkSpec extends SparkSpec {
 
   test("schema drift fails the load job, not the table") {
     import spark.implicits._
-    val path = fresh("drift")
+    val path = scratch("drift")
     Sink.append(Seq((1L, "a")).toDF("id", "v"), path,
       format = "graft-warehouse")
     intercept[Exception] {
@@ -139,7 +136,7 @@ class WarehouseSinkSpec extends SparkSpec {
     import spark.implicits._
     // two source files => maxFilesPerTrigger(1) yields two micro-batches
     // => two committed manifest generations, every job DONE, total exact
-    val src = fresh("stream_src")
+    val src = scratch("stream_src")
     Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .repartition(1).write.parquet(s"$src/f1")
     Seq((3L, "c")).toDF("id", "v")
@@ -154,7 +151,7 @@ class WarehouseSinkSpec extends SparkSpec {
       fs.rename(st.getPath,
         new org.apache.hadoop.fs.Path(s"$src/part$i.parquet"))
     }
-    val table = fresh("stream_table")
+    val table = scratch("stream_table")
     val q = graft.streaming.Streams.warehouseStreamingLoad(
       spark, src, "part*.parquet", table)
     q.awaitTermination(60000)
@@ -168,7 +165,7 @@ class WarehouseSinkSpec extends SparkSpec {
 
   test("generation option time-travels; compaction preserves rows atomically") {
     import spark.implicits._
-    val path = fresh("timetravel")
+    val path = scratch("timetravel")
     // gen 0: two rows; gen 1: append one; gen 2: compaction (TRUNCATE
     // rewrite of the current rows into one load job)
     Sink.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v").repartition(2),
@@ -206,7 +203,7 @@ class WarehouseSinkSpec extends SparkSpec {
     import spark.implicits._
     // three load jobs with disjoint id ranges => three files with
     // disjoint manifest stats
-    val path = fresh("zonemap")
+    val path = scratch("zonemap")
     for (r <- Seq(0L until 10L, 10L until 20L, 20L until 30L))
       Sink.append(r.map(i => (i, s"v$i", i * 0.5))
           .toDF("id", "v", "score").coalesce(1),
@@ -242,7 +239,7 @@ class WarehouseSinkSpec extends SparkSpec {
   test("string zone maps: truncation bounds, prefix filters, multibyte") {
     import spark.implicits._
     import graft.sources.ColStat
-    val path = fresh("strzone")
+    val path = scratch("strzone")
     // three files with disjoint STRING key zones, including values past
     // the 32-byte truncation bound and a multibyte (3-byte UTF-8) block
     val pad = "x" * 40 // forces lo/hi truncation in file 1
@@ -287,7 +284,7 @@ class WarehouseSinkSpec extends SparkSpec {
 
   test("column pruning reaches the scan: only requested fields decode") {
     import spark.implicits._
-    val path = fresh("prune")
+    val path = scratch("prune")
     Sink.append(
       (0L until 50L).map(i => (i, s"name$i", i * 2.5, i % 2 == 0))
         .toDF("id", "name", "score", "flag"),
@@ -325,7 +322,7 @@ class WarehouseSinkSpec extends SparkSpec {
     // (main.py:59-67 + dim_loader.py:23-30); prove ours runs through the
     // warehouse boundary with identical observed counts and readable,
     // FK-stamped outputs.
-    val out = fresh("pipeline")
+    val out = scratch("pipeline")
     val counts = graft.pipeline.Pipeline.run(spark,
       graft.pipeline.Pipeline.Config(sf, out,
         "1996-01-01", "1996-04-01", sinkFormat = "graft-warehouse"))

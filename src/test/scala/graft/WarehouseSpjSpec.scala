@@ -15,9 +15,6 @@ import graft.sources.WarehouseMeta
   */
 class WarehouseSpjSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_spj_${tag}_${System.nanoTime()}"
-
   private def shuffles(df: DataFrame): Int =
     df.queryExecution.executedPlan.collect {
       case s: ShuffleExchangeExec => s
@@ -46,8 +43,8 @@ class WarehouseSpjSpec extends SparkSpec {
 
   test("co-clustered tables equi-join with ZERO shuffles; values match " +
     "the shuffled plan") {
-    val a = fresh("a")
-    val b = fresh("b")
+    val a = scratch("a")
+    val b = scratch("b")
     writeClustered(a, Seq(("x", 1L), ("x", 2L), ("y", 3L), ("z", 4L)),
       "k", "va")
     writeClustered(b, Seq(("x", 10L), ("y", 20L), ("z", 30L), ("z", 40L)),
@@ -74,7 +71,7 @@ class WarehouseSpjSpec extends SparkSpec {
   test("single-side clustering still answers correctly (exchange on the " +
     "unclustered side only)") {
     import spark.implicits._
-    val a = fresh("one")
+    val a = scratch("one")
     writeClustered(a, Seq(("x", 1L), ("y", 2L)), "k", "va")
     withSpj {
       val plain = Seq(("x", 5L), ("y", 6L)).toDF("k", "vb")
@@ -87,7 +84,7 @@ class WarehouseSpjSpec extends SparkSpec {
   test("layout invariant: one cluster value per committed file; nulls get " +
     "their own group") {
     import spark.implicits._
-    val p = fresh("layout")
+    val p = scratch("layout")
     val df = Seq(("x", 1L), ("y", 2L), (null.asInstanceOf[String], 3L),
       ("x", 4L)).toDF("k", "v")
     Sink.overwrite(df.repartition(2), p, format = "graft-warehouse",
@@ -104,7 +101,7 @@ class WarehouseSpjSpec extends SparkSpec {
   test("appends inherit the cluster layout option-free (the SQL INSERT " +
     "path); a CONFLICTING layout refuses; truncate re-layouts") {
     import spark.implicits._
-    val p = fresh("drift")
+    val p = scratch("drift")
     writeClustered(p, Seq(("x", 1L)), "k", "v")
     val plain = Seq(("y", 2L)).toDF("k", "v")
     // option-free append INHERITS the table's layout (round-14: the SQL
@@ -148,7 +145,7 @@ class WarehouseSpjSpec extends SparkSpec {
   test("streaming load jobs preserve the cluster layout: every appended " +
     "generation stays one-value-per-file") {
     import spark.implicits._
-    val src = fresh("stream_src")
+    val src = scratch("stream_src")
     Seq((1L, "x"), (2L, "y")).toDF("id", "seg")
       .repartition(1).write.parquet(s"$src/f1")
     Seq((3L, "x"), (4L, "z")).toDF("id", "seg")
@@ -162,7 +159,7 @@ class WarehouseSpjSpec extends SparkSpec {
       fs.rename(st.getPath,
         new org.apache.hadoop.fs.Path(s"$src/part$i.parquet"))
     }
-    val table = fresh("stream_table")
+    val table = scratch("stream_table")
     graft.streaming.Streams.warehouseStreamingLoad(
       spark, src, "part*.parquet", table, clusterBy = Some("seg"))
       .awaitTermination(60000)
@@ -178,8 +175,8 @@ class WarehouseSpjSpec extends SparkSpec {
 
   test("integral cluster keys group and join shuffle-free too") {
     import spark.implicits._
-    val a = fresh("inta")
-    val b = fresh("intb")
+    val a = scratch("inta")
+    val b = scratch("intb")
     Sink.overwrite(Seq((1L, "a"), (2L, "b"), (2L, "c")).toDF("id", "s")
         .repartition(2), a,
       format = "graft-warehouse", options = Map("clusterBy" -> "id"))

@@ -13,7 +13,7 @@ import graft.sources.{WarehouseCdc, WarehouseMeta}
 class WarehouseSqlDmlSpec extends SparkSpec {
 
   private lazy val wh: String = {
-    val w = s"/tmp/graft_sqldml_${System.nanoTime()}"
+    val w = scratch("sqldml")
     spark.conf.set("spark.sql.catalog.gdml",
       "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gdml.warehouse", w)

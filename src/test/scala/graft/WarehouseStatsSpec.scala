@@ -14,12 +14,9 @@ import graft.sources.{WarehouseMeta, WarehouseScan, WarehouseScanStats}
   */
 class WarehouseStatsSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_stats_${tag}_${System.nanoTime()}"
-
   test("manifest statistics reach the optimizer: a small warehouse dim " +
     "broadcast-joins with NO hint") {
-    val dimPath = fresh("dim")
+    val dimPath = scratch("dim")
     val dim = spark.range(50).select(col("id").as("k"),
       (col("id") % 7).as("grp"))
     Sink.overwrite(dim.repartition(2), dimPath, format = "graft-warehouse")
@@ -41,7 +38,7 @@ class WarehouseStatsSpec extends SparkSpec {
 
   test("statistics are pruning-aware: a zone filter shrinks numRows " +
     "exactly to the surviving files' counts") {
-    val path = fresh("pruned")
+    val path = scratch("pruned")
     // 8 range files over k = 0..799, 100 rows each
     val t = spark.range(800).select(col("id").as("k"))
     Sink.overwrite(t.repartitionByRange(8, col("k")), path,
@@ -61,7 +58,7 @@ class WarehouseStatsSpec extends SparkSpec {
     "pushdown): disjoint zones prove the plan; overlap and nulls stay " +
     "correct") {
     import spark.implicits._
-    val path = fresh("topn")
+    val path = scratch("topn")
     val t = spark.range(800).select(col("id").as("k"),
       (col("id") * 7).as("v"))
     Sink.overwrite(t.repartitionByRange(8, col("k")), path,
@@ -78,14 +75,14 @@ class WarehouseStatsSpec extends SparkSpec {
     assert(WarehouseScanStats.lastPlannedFiles === 1)
     // overlapping zones: every file spans the domain, the overlap
     // extension pulls them all — full plan, same answer
-    val path2 = fresh("topn_overlap")
+    val path2 = scratch("topn_overlap")
     Sink.overwrite(t.repartition(4), path2, format = "graft-warehouse")
     val o = Sink.read(spark, path2, "graft-warehouse")
       .orderBy(col("k")).limit(3).collect().map(_.getLong(0))
     assert(o.toSeq === Seq(0L, 1L, 2L))
     assert(WarehouseScanStats.lastPlannedFiles === 4)
     // null-bearing files always join the plan; NULLS FIRST answers hold
-    val path3 = fresh("topn_nulls")
+    val path3 = scratch("topn_nulls")
     val withNulls = spark.range(200).select(
       when(col("id") < 3, lit(null).cast("long")).otherwise(col("id"))
         .as("k"))
@@ -100,7 +97,7 @@ class WarehouseStatsSpec extends SparkSpec {
   test("COMPOSITE top-N plans on the first key alone (round-14): " +
     "ORDER BY zone_key, x LIMIT n keeps the 1-file zone plan, boundary " +
     "ties stay exact under the secondary tie-break") {
-    val path = fresh("topn_multi")
+    val path = scratch("topn_multi")
     // tie-heavy first key: band = id div 10 => 100-row files hold bands
     // [0,9] [10,19] … with ~10 rows per band; v deliberately REVERSES
     // inside each band so the composite tie-break matters
@@ -134,7 +131,7 @@ class WarehouseStatsSpec extends SparkSpec {
 
   test("LIMIT plans a file prefix and stops decoding early; a filtered " +
     "limit refuses the prefix but stays correct") {
-    val path = fresh("limit")
+    val path = scratch("limit")
     val t = spark.range(800).select(col("id").as("k"),
       (col("id") * 3).as("v"))
     Sink.overwrite(t.repartitionByRange(8, col("k")), path,

@@ -14,9 +14,6 @@ import graft.sources.{WarehouseCow, WarehouseDelete}
   */
 class WarehouseStreamCdcSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_streamcdc_${tag}_${System.nanoTime()}"
-
   private def cdc(path: String): DataFrame =
     spark.readStream.format("graft-warehouse")
       .option("readChangeFeed", "true").load(path)
@@ -27,7 +24,7 @@ class WarehouseStreamCdcSpec extends SparkSpec {
 
   test("appends stream as insert rows, a metadata delete streams its " +
     "rows as delete, OPTIMIZE emits nothing") {
-    val path = fresh("tour")
+    val path = scratch("tour")
     def slice(r: Range) = spark.range(r.start, r.end)
       .select(col("id").as("k"), (col("id") / 10).cast("long").as("band"))
     Sink.overwrite(slice(0 until 20).repartition(1), path,
@@ -39,7 +36,7 @@ class WarehouseStreamCdcSpec extends SparkSpec {
     Maintenance.optimizeWarehouse(spark, path)
     val got = new scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
     val q = cdc(path).writeStream
-      .option("checkpointLocation", fresh("tour_ckpt"))
+      .option("checkpointLocation", scratch("tour_ckpt"))
       .foreachBatch { (b: Dataset[Row], _: Long) =>
         val rows = b.select("_change_type", "_commit_generation", "k")
           .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -58,7 +55,7 @@ class WarehouseStreamCdcSpec extends SparkSpec {
 
   test("a CoW rewrite refuses toward the batch tableChanges API; " +
     "pruning away the meta columns still reads") {
-    val path = fresh("cow")
+    val path = scratch("cow")
     Sink.overwrite(spark.range(20)
       .select(col("id").as("k"), lit(1.0).as("v"),
         (col("id") / 10).cast("long").as("band")).repartition(1),
@@ -67,7 +64,7 @@ class WarehouseStreamCdcSpec extends SparkSpec {
       org.apache.spark.sql.sources.EqualTo("band", 0L), Map("v" -> "9.0d"))
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       val q = cdc(path).writeStream
-        .option("checkpointLocation", fresh("cow_ckpt"))
+        .option("checkpointLocation", scratch("cow_ckpt"))
         .foreachBatch { (_: Dataset[Row], _: Long) => () }
         .start()
       try q.processAllAvailable() finally q.stop()
@@ -75,13 +72,13 @@ class WarehouseStreamCdcSpec extends SparkSpec {
     assert(chainMessages(ex).contains("tableChanges"),
       s"refusal must point at the batch API: ${chainMessages(ex)}")
     // data-column-only projection over the insert-only prefix window
-    val path2 = fresh("prune")
+    val path2 = scratch("prune")
     Sink.overwrite(spark.range(5).select(col("id").as("k")).coalesce(1),
       path2, format = "graft-warehouse")
     val ks = new scala.collection.mutable.ArrayBuffer[Long]()
     val types = new scala.collection.mutable.ArrayBuffer[String]()
     val q2 = cdc(path2).select("k").writeStream
-      .option("checkpointLocation", fresh("prune_ckpt"))
+      .option("checkpointLocation", scratch("prune_ckpt"))
       .foreachBatch { (b: Dataset[Row], _: Long) =>
         ks.synchronized { ks ++= b.collect().map(_.getLong(0)) }
         ()
@@ -91,7 +88,7 @@ class WarehouseStreamCdcSpec extends SparkSpec {
     assert(ks.sorted.toSeq === (0L until 5L))
     // meta-column-only projection
     val q3 = cdc(path2).select("_change_type").writeStream
-      .option("checkpointLocation", fresh("prune_ckpt2"))
+      .option("checkpointLocation", scratch("prune_ckpt2"))
       .foreachBatch { (b: Dataset[Row], _: Long) =>
         types.synchronized { types ++= b.collect().map(_.getString(0)) }
         ()

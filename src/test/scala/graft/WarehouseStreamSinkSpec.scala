@@ -13,14 +13,11 @@ import graft.sources.{WarehouseMeta, WarehouseStreamingWrite}
   */
 class WarehouseStreamSinkSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_streamsink_${tag}_${System.nanoTime()}"
-
   test("warehouse-to-warehouse: each source commit becomes one sink " +
     "generation; checkpoint restart appends only new epochs") {
-    val src = fresh("e2e_src")
-    val dst = fresh("e2e_dst")
-    val ckpt = fresh("e2e_ckpt")
+    val src = scratch("e2e_src")
+    val dst = scratch("e2e_dst")
+    val ckpt = scratch("e2e_ckpt")
     Sink.overwrite(spark.range(10).select(col("id").as("k")).coalesce(1),
       src, format = "graft-warehouse")
     Sink.append(spark.range(10, 25).select(col("id").as("k")).coalesce(1),
@@ -57,7 +54,7 @@ class WarehouseStreamSinkSpec extends SparkSpec {
   }
 
   test("a replayed epoch commit is an idempotent no-op") {
-    val dst = fresh("replay")
+    val dst = scratch("replay")
     Sink.overwrite(spark.range(5).select(col("id").as("k")).coalesce(1),
       dst, format = "graft-warehouse")
     val committedJob = WarehouseMeta.readManifest(dst).get.jobId
@@ -78,8 +75,8 @@ class WarehouseStreamSinkSpec extends SparkSpec {
   }
 
   test("streamed epochs inherit the cluster layout and bloom index") {
-    val dst = fresh("layout")
-    val src = fresh("layout_src")
+    val dst = scratch("layout")
+    val src = scratch("layout_src")
     // target created clustered + bloom-indexed (one seed row per shape)
     Sink.overwrite(spark.range(4)
       .select(col("id").as("k"), (col("id") % 2).as("band")).coalesce(1),
@@ -91,7 +88,7 @@ class WarehouseStreamSinkSpec extends SparkSpec {
       src, format = "graft-warehouse")
     val q = spark.readStream.format("graft-warehouse").load(src)
       .writeStream.format("graft-warehouse")
-      .option("checkpointLocation", fresh("layout_ckpt"))
+      .option("checkpointLocation", scratch("layout_ckpt"))
       .option("path", dst)
       .trigger(Trigger.AvailableNow())
       .start()
@@ -105,8 +102,8 @@ class WarehouseStreamSinkSpec extends SparkSpec {
   }
 
   test("complete mode commits each epoch as a WRITE_TRUNCATE snapshot") {
-    val src = fresh("complete_src")
-    val dst = fresh("complete_dst")
+    val src = scratch("complete_src")
+    val dst = scratch("complete_dst")
     Sink.overwrite(spark.range(10)
       .select(col("id").as("k"), (col("id") % 2).as("g")).coalesce(1),
       src, format = "graft-warehouse")
@@ -114,7 +111,7 @@ class WarehouseStreamSinkSpec extends SparkSpec {
       .groupBy("g").agg(count(lit(1)).as("n"))
       .writeStream.format("graft-warehouse")
       .outputMode("complete")
-      .option("checkpointLocation", fresh("complete_ckpt"))
+      .option("checkpointLocation", scratch("complete_ckpt"))
       .option("path", dst)
       .trigger(Trigger.AvailableNow())
       .start()

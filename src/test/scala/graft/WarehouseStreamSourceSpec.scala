@@ -15,9 +15,6 @@ import graft.sources.{WarehouseDelete, WarehouseEvolve, WarehouseMeta}
   */
 class WarehouseStreamSourceSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_streamsrc_${tag}_${System.nanoTime()}"
-
   private def load(path: String, opts: (String, String)*): DataFrame = {
     var r = spark.readStream.format("graft-warehouse")
     opts.foreach { case (k, v) => r = r.option(k, v) }
@@ -45,8 +42,8 @@ class WarehouseStreamSourceSpec extends SparkSpec {
 
   test("tails the generation log: each append is one incremental batch, " +
     "checkpoint replay survives a restart with no duplicates") {
-    val path = fresh("tail")
-    val ckpt = fresh("tail_ckpt")
+    val path = scratch("tail")
+    val ckpt = scratch("tail_ckpt")
     Sink.overwrite(spark.range(100).select(col("id").as("k")).coalesce(2),
       path, format = "graft-warehouse")
     val (q, batches) = drive(load(path), ckpt)
@@ -72,7 +69,7 @@ class WarehouseStreamSourceSpec extends SparkSpec {
   }
 
   test("maxGenerationsPerTrigger splits the backlog into bounded batches") {
-    val path = fresh("maxgen")
+    val path = scratch("maxgen")
     Sink.overwrite(spark.range(10).select(col("id").as("k")).coalesce(1),
       path, format = "graft-warehouse")
     Sink.append(spark.range(10, 30).select(col("id").as("k")).coalesce(1),
@@ -80,7 +77,7 @@ class WarehouseStreamSourceSpec extends SparkSpec {
     Sink.append(spark.range(30, 70).select(col("id").as("k")).coalesce(1),
       path, format = "graft-warehouse")
     val (q, batches) = drive(
-      load(path, "maxGenerationsPerTrigger" -> "1"), fresh("maxgen_ckpt"))
+      load(path, "maxGenerationsPerTrigger" -> "1"), scratch("maxgen_ckpt"))
     try {
       q.processAllAvailable()
       assert(batches.toList === List(10L, 20L, 40L),
@@ -90,7 +87,7 @@ class WarehouseStreamSourceSpec extends SparkSpec {
 
   test("delete commits refuse by default and skip under ignoreDeletes; " +
     "OPTIMIZE emits nothing") {
-    val path = fresh("del")
+    val path = scratch("del")
     // two one-file generations with disjoint k zones
     Sink.overwrite(spark.range(100).select(col("id").as("k")).coalesce(1),
       path, format = "graft-warehouse")
@@ -101,7 +98,7 @@ class WarehouseStreamSourceSpec extends SparkSpec {
       org.apache.spark.sql.sources.LessThan("k", 100L))
     assert(deleted === 100L)
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      val (q, _) = drive(load(path), fresh("del_ckpt1"))
+      val (q, _) = drive(load(path), scratch("del_ckpt1"))
       try q.processAllAvailable() finally q.stop()
     }
     assert(chainMessages(ex).contains("ignoreDeletes"),
@@ -109,7 +106,7 @@ class WarehouseStreamSourceSpec extends SparkSpec {
     // with ignoreDeletes: gen 0+1 files that survived stream, the delete
     // emits nothing, and a post-delete append still arrives
     val (q2, batches2) = drive(
-      load(path, "ignoreDeletes" -> "true"), fresh("del_ckpt2"))
+      load(path, "ignoreDeletes" -> "true"), scratch("del_ckpt2"))
     try {
       q2.processAllAvailable()
       assert(batches2.toList === List(200L),
@@ -126,10 +123,10 @@ class WarehouseStreamSourceSpec extends SparkSpec {
 
   test("schema evolution mid-stream refuses with 'restart'; a fresh " +
     "stream replays pre-evolution files with the DEFAULT tail") {
-    val path = fresh("evolve")
+    val path = scratch("evolve")
     Sink.overwrite(spark.range(50).select(col("id").as("k")).coalesce(1),
       path, format = "graft-warehouse")
-    val (q, batches) = drive(load(path), fresh("evolve_ckpt"))
+    val (q, batches) = drive(load(path), scratch("evolve_ckpt"))
     try {
       q.processAllAvailable()
       assert(batches.toList === List(50L))
@@ -150,7 +147,7 @@ class WarehouseStreamSourceSpec extends SparkSpec {
     // the DEFAULT-filled tail, post-evolution files with their written tag
     val got = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
     val q2 = load(path).writeStream
-      .option("checkpointLocation", fresh("evolve_ckpt2"))
+      .option("checkpointLocation", scratch("evolve_ckpt2"))
       .foreachBatch { (b: Dataset[Row], _: Long) =>
         val rows = b.select("k", "tag").collect()
           .map(r => (r.getLong(0), r.getLong(1)))
@@ -166,11 +163,11 @@ class WarehouseStreamSourceSpec extends SparkSpec {
 
   test("startingGeneration=latest skips history; a trigger plans ONLY " +
     "the files its commit added") {
-    val path = fresh("latest")
+    val path = scratch("latest")
     Sink.overwrite(spark.range(1000).select(col("id").as("k"))
       .repartitionByRange(4, col("k")), path, format = "graft-warehouse")
     val (q, batches) = drive(
-      load(path, "startingGeneration" -> "latest"), fresh("latest_ckpt"))
+      load(path, "startingGeneration" -> "latest"), scratch("latest_ckpt"))
     try {
       q.processAllAvailable()
       assert(batches.isEmpty, "latest start must skip existing history")
@@ -190,7 +187,7 @@ class WarehouseStreamSourceSpec extends SparkSpec {
     // exercised the day it does)
     val nRows = new java.util.concurrent.atomic.AtomicLong()
     val q2 = load(path).filter(col("k") >= 1900L).writeStream
-      .option("checkpointLocation", fresh("latest_ckpt2"))
+      .option("checkpointLocation", scratch("latest_ckpt2"))
       .foreachBatch { (b: Dataset[Row], _: Long) =>
         nRows.addAndGet(b.count())
         ()
@@ -201,14 +198,14 @@ class WarehouseStreamSourceSpec extends SparkSpec {
   }
 
   test("Trigger.AvailableNow drains the backlog and terminates") {
-    val path = fresh("avnow")
+    val path = scratch("avnow")
     Sink.overwrite(spark.range(25).select(col("id").as("k")).coalesce(1),
       path, format = "graft-warehouse")
     Sink.append(spark.range(25, 60).select(col("id").as("k")).coalesce(1),
       path, format = "graft-warehouse")
     val batches = new scala.collection.mutable.ArrayBuffer[Long]()
     val q = load(path, "maxGenerationsPerTrigger" -> "1").writeStream
-      .option("checkpointLocation", fresh("avnow_ckpt"))
+      .option("checkpointLocation", scratch("avnow_ckpt"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (b: Dataset[Row], _: Long) =>
         val n = b.count()

@@ -13,13 +13,10 @@ import graft.sources.{WarehouseCow, WarehouseMeta}
   */
 class WarehouseUpdateSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_upd_${tag}_${System.nanoTime()}"
-
   test("update rewrites ONLY might-match files; no-match files carry by " +
     "reference; the count is exact; time travel keeps the old values") {
     import spark.implicits._
-    val path = fresh("cow")
+    val path = scratch("cow")
     // exactly 8 files over k = 0..399 via the cluster writer, one band
     // per file with exact zone boundaries [0,49] [50,99] …
     val df = (0L until 400L).map(i => (i, i * 2, i / 50))
@@ -55,7 +52,7 @@ class WarehouseUpdateSpec extends SparkSpec {
   test("NULL-predicate rows are untouched (SQL semantics) and the SET " +
     "cast preserves the declared column type") {
     import spark.implicits._
-    val path = fresh("null")
+    val path = scratch("null")
     val df = Seq((1L, Some(1L)), (2L, Some(2L)), (3L, None), (4L, Some(1L)))
       .toDF("k", "v")
     Sink.overwrite(df.coalesce(1), path, format = "graft-warehouse")
@@ -74,7 +71,7 @@ class WarehouseUpdateSpec extends SparkSpec {
   test("a provable no-match update commits nothing; an unknown SET " +
     "column refuses before anything mutates") {
     import spark.implicits._
-    val path = fresh("noop")
+    val path = scratch("noop")
     val df = (0L until 100L).map(i => (i, i)).toDF("k", "v")
     Sink.overwrite(df.coalesce(1), path, format = "graft-warehouse")
     val gen0 = WarehouseMeta.readManifest(path).get.generation
@@ -91,7 +88,7 @@ class WarehouseUpdateSpec extends SparkSpec {
   test("updating the CLUSTER column re-splits per new value, keeping the " +
     "one-value-per-file invariant") {
     import spark.implicits._
-    val path = fresh("clus")
+    val path = scratch("clus")
     val df = (0L until 100L).map(i => (i, i % 4)).toDF("k", "b")
     Sink.overwrite(df.repartition(1), path,
       format = "graft-warehouse", options = Map("clusterBy" -> "b"))

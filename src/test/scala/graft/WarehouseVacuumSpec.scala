@@ -15,9 +15,6 @@ import graft.sources.WarehouseMeta
   */
 class WarehouseVacuumSpec extends SparkSpec {
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_wh_vac_${tag}_${System.nanoTime()}"
-
   private def diskDataFiles(root: String): Seq[String] = {
     val d = new File(root, "data")
     Option(d.listFiles()).getOrElse(Array.empty).flatMap { job =>
@@ -31,7 +28,7 @@ class WarehouseVacuumSpec extends SparkSpec {
     "files, refuses time travel to dropped generations, and leaves the " +
     "live table bit-exact") {
     import spark.implicits._
-    val path = fresh("keep1")
+    val path = scratch("keep1")
     val df = (0L until 200L).map(i => (i, i * 3)).toDF("k", "v")
     Sink.overwrite(df.repartition(4), path, format = "graft-warehouse")
     val g0 = WarehouseMeta.readManifest(path).get.generation
@@ -63,7 +60,7 @@ class WarehouseVacuumSpec extends SparkSpec {
   test("vacuum is a no-op when history fits the retention; sweeps " +
     "crash orphans; refuses keep=0") {
     import spark.implicits._
-    val path = fresh("noop")
+    val path = scratch("noop")
     Sink.overwrite((0L until 50L).map(i => (i, i)).toDF("k", "v"), path,
       format = "graft-warehouse")
     val st0 = Maintenance.vacuumWarehouse(path, keepGenerations = 2)
