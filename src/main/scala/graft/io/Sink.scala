@@ -3,7 +3,11 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Append-mode sink layer (reference S5/S6, `etl/core/dim_loader.py:23-30`,
-  * `load_311.py:113-126`): skip-if-empty, append disposition. The format
+  * `load_311.py:113-126`): skip-if-empty, append disposition. For
+  * `"graft-warehouse"` the skip is a property of the write itself: a load
+  * job that stages no row commits nothing, so a load is one action. The
+  * file formats would land a schema-only part file for an empty frame, so
+  * they keep a `limit 1` guard before the write. The format
   * string is a real `DataFrameWriter.format` plug point — parquet by
   * default, csv/json/orc for local breadth, and `"graft-warehouse"` for
   * the in-repo LOAD-JOB writer ([[graft.sources.WarehouseSource]]):
@@ -22,8 +26,9 @@ object Sink {
   def append(df: DataFrame, path: String, partitionByCols: Seq[String] = Nil,
       format: String = "parquet",
       options: Map[String, String] = Map.empty): Long =
-    // skip-if-empty guard (dim_loader.py:26-27) without a full count: limit 1.
-    if (df.isEmpty) 0L
+    // skip-if-empty (dim_loader.py:26-27): a graft-warehouse load that
+    // stages no row commits nothing; a file format needs the limit-1 guard
+    if (format != "graft-warehouse" && df.isEmpty) 0L
     else write(df, "append", path, partitionByCols, format, options)
 
   /** Overwrite `df` at `path`; returns rows written (see [[write]]). */

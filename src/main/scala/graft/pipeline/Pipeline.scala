@@ -1,10 +1,10 @@
 package graft.pipeline
 
-import java.util.concurrent.{Callable, Executors}
+import java.util.concurrent.{Callable, ExecutionException, Executors,
+  TimeUnit}
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
-import scala.util.Try
+import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,24 +21,28 @@ import graft.io.Sink
   * keeps it for key assignment (main.py:46-68), and facts stamped with
   * surrogate keys (main.py:101-181).
   *
-  * Every frame is built lazily first, on the calling thread, which also
-  * does all function registration. Frames that more than one action reads
-  * are cached, as the reference holds them across stages (main.py:58-67):
-  * the normalized slices, the five dims and the two stamped facts. `run`
-  * releases them in a `finally`. A dim's row count comes off a metrics
-  * node below its cache ([[cachedRows]]), so no action counts it.
-  *
-  * The ten loads then run in three waves, in the star schema's order: W1
+  * The ten loads run in three waves, in the star schema's order: W1
   * `dim_date`, `dim_time` and the five dims; W2 `fact_lineitem` and
-  * `fact_orders`; W3 `fact_integrated`. The reference loads one table at a
-  * time (`job.result()` in a serial loop); here each load of a wave, an
-  * independent action over cached frames, runs on its own fresh thread,
-  * made by the calling thread so its jobs inherit the caller's job group,
-  * scheduler pool and description. A wave starts only once every load
+  * `fact_orders`; W3 `fact_integrated`. Frames are built lazily, wave by
+  * wave, on the calling thread, which also does all function registration:
+  * W1's frames first, then each later wave's frames while the wave before
+  * it runs. Frames that more than one action reads are cached, as the
+  * reference holds them across stages (main.py:58-67): the normalized
+  * slices, the five dims and the two stamped facts. `run` releases them in
+  * a `finally`. A dim's row count comes off a metrics node below its cache
+  * ([[cachedRows]]), so no action counts it.
+  *
+  * The reference loads one table at a time (`job.result()` in a serial
+  * loop); here each load of a wave, an independent action over cached
+  * frames, runs on its own fresh thread, made by the calling thread so its
+  * jobs inherit the caller's job group, scheduler pool and description.
+  * Each load is one SQL action: an empty `graft-warehouse` append commits
+  * nothing by itself ([[Sink.append]]). A wave starts only once every load
   * before it succeeded: no fact lands unless every dim landed, and
-  * `fact_integrated` only after both domain facts. A failed wave runs all
-  * its loads to their end before it throws, so no cache is released under
-  * a running write. Slices stay sequential ([[Backfill]]).
+  * `fact_integrated` only after both domain facts. A wave runs all its
+  * loads to their end before it throws, also when building the next
+  * wave's frames threw, so no cache is released under a running write.
+  * Slices stay sequential ([[Backfill]]).
   */
 object Pipeline {
 
@@ -100,15 +104,7 @@ object Pipeline {
       "dim_part" -> PartDim, "dim_supplier" -> SupplierDim,
       "dim_nation" -> NationDim))
 
-    // 4. fact: stamp keys from the retained dims, derive date key, project
-    val fact = keep(stampKeys(cleaned, dims)
-      .withColumn("ship_date_key", TimeParse.dateKey(col("l_shipdate")))
-      .withColumn("ship_year", (col("ship_date_key") / 10000).cast("int"))
-      .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
-        "l_discount", "ship_date_key", "ship_year", "part_key",
-        "supplier_key", "nation_key"))
-
-    // 5. second fact domain (reference's parking fact, main.py:148-181):
+    // second fact domain (reference's parking fact, main.py:148-181):
     // orders enriched with customer attributes, two dims stamped
     val rawOrders = Tables.read(spark, cfg.sfDir, "orders")
       .filter(col("o_orderdate") >= lit(cfg.start).cast("timestamp") &&
@@ -121,64 +117,90 @@ object Pipeline {
       PriorityDim.naturalCols ++ SegmentDim.naturalCols))
     val ordersDims = buildDims(ordersCleaned, Seq(
       "dim_priority" -> PriorityDim, "dim_segment" -> SegmentDim))
-    val ordersFact = keep(stampKeys(ordersCleaned, ordersDims)
-      .withColumn("order_date_key", TimeParse.dateKey(col("o_orderdate")))
-      .select("o_orderkey", "o_totalprice", "order_date_key", "prio_key",
-        "segment_key"))
-
-    // 6. integrated fact (load_integrated_fact.py:6-24): both domains
-    // union-by-name'd onto the shared (domain, date_key, amount) shape
-    val integrated = fact
-      .select(lit("lineitem").as("domain"),
-        col("ship_date_key").as("date_key"),
-        col("l_extendedprice").as("amount"))
-      .unionByName(ordersFact.select(lit("orders").as("domain"),
-        col("order_date_key").as("date_key"),
-        col("o_totalprice").as("amount")))
-
-    // 7. load in waves. Parquet facts land partitioned by year so reads
-    // prune; a warehouse table's layout is table config (as in BigQuery).
     val allDims = dims ++ ordersDims
-    val loaded = Seq(
+
+    // 4. W1 loads the dims; meanwhile both facts are stamped with keys
+    // from the retained dims. Parquet facts land partitioned by year so
+    // reads prune; a warehouse table's layout is table config (as in
+    // BigQuery).
+    val (w1, (fact, ordersFact)) = wave(
       Seq(append(dateDim, "dim_date"), append(timeDim, "dim_time")) ++
         allDims.map { case (name, loader, dim) =>
           if (!cfg.idempotentDims) append(dim, name)
           else name -> (() => Sink.upsertDim(spark, dim, s"${cfg.outDir}/$name",
             loader.naturalCols, format = cfg.sinkFormat))
-        },
-      Seq(append(fact, "fact_lineitem",
-          if (cfg.sinkFormat == "parquet") Seq("ship_year") else Nil),
-        append(ordersFact, "fact_orders")),
-      Seq(append(integrated, "fact_integrated"))
-    ).foldLeft(Map.empty[String, Long])(_ ++ wave(_))
+        }) {
+      val fact = keep(stampKeys(cleaned, dims)
+        .withColumn("ship_date_key", TimeParse.dateKey(col("l_shipdate")))
+        .withColumn("ship_year", (col("ship_date_key") / 10000).cast("int"))
+        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
+          "l_discount", "ship_date_key", "ship_year", "part_key",
+          "supplier_key", "nation_key"))
+      val ordersFact = keep(stampKeys(ordersCleaned, ordersDims)
+        .withColumn("order_date_key", TimeParse.dateKey(col("o_orderdate")))
+        .select("o_orderkey", "o_totalprice", "order_date_key", "prio_key",
+          "segment_key"))
+      (fact, ordersFact)
+    }
 
-    // observability counts (main.py:60-63): rows observed by each write,
-    // and each dim's rows, observed while its cache was built
-    loaded ++ allDims.map { case (n, _, dim) => n -> cachedRows(dim, n) }
+    // 5. W2 loads the facts; meanwhile the integrated fact
+    // (load_integrated_fact.py:6-24) union-by-names both domains onto the
+    // shared (domain, date_key, amount) shape
+    val (w2, integrated) = wave(Seq(
+        append(fact, "fact_lineitem",
+          if (cfg.sinkFormat == "parquet") Seq("ship_year") else Nil),
+        append(ordersFact, "fact_orders"))) {
+      fact
+        .select(lit("lineitem").as("domain"),
+          col("ship_date_key").as("date_key"),
+          col("l_extendedprice").as("amount"))
+        .unionByName(ordersFact.select(lit("orders").as("domain"),
+          col("order_date_key").as("date_key"),
+          col("o_totalprice").as("amount")))
+    }
+
+    // 6. W3, then observability counts (main.py:60-63): rows observed by
+    // each write, and each dim's rows, observed while its cache was built
+    val (w3, _) = wave(Seq(append(integrated, "fact_integrated")))(())
+    w1 ++ w2 ++ w3 ++ allDims.map { case (n, _, dim) => n -> cachedRows(dim, n) }
   }
 
-  /** Runs `loads` at once, one fresh daemon thread each. All run to their
-    * end; the first failure in load order is rethrown, others suppressed. */
-  private def wave(loads: Seq[(String, () => Long)]): Map[String, Long] = {
+  /** Starts `loads` at once, one fresh daemon thread each, and runs `next`
+    * on the calling thread while they run. Every started load runs to its
+    * end, also when `next` throws. The first failure in load order is
+    * rethrown, with the other failures (and `next`'s) suppressed. */
+  private def wave[T](loads: Seq[(String, () => Long)])(
+      next: => T): (Map[String, Long], T) = {
     val pool = Executors.newFixedThreadPool(loads.size, { r: Runnable =>
       val t = new Thread(r, "graft-pipeline-load"); t.setDaemon(true); t })
-    val tasks = loads.map(l => (() => l._2()): Callable[Long]).asJava
-    val done = try pool.invokeAll(tasks).asScala.toSeq finally pool.shutdown()
-    // every load is done, so get() throws only a wrapped load failure
-    val failures =
-      done.flatMap(f => Try(f.get()).failed.toOption.map(_.getCause))
-    failures.headOption.foreach { first =>
-      failures.tail.foreach(first.addSuppressed); throw first }
-    loads.map(_._1).zip(done.map(_.get())).toMap
+    try {
+      val started = loads.map { case (_, load) =>
+        pool.submit((() => load()): Callable[Long]) }
+      val built = Try(next)
+      val done = started.map { f =>
+        try Success(f.get())
+        catch { case e: ExecutionException => Failure(e.getCause) } }
+      val failures = (done :+ built).flatMap(_.failed.toOption)
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed); throw first }
+      (loads.map(_._1).zip(done.map(_.get)).toMap, built.get)
+    } finally {
+      // waits only if a submit or `next` threw fatally: every started load
+      // has ended otherwise
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS): Unit
+    }
   }
 
   private def rowsMetric(dim: String): String = s"graft_rows_$dim"
 
   /** Rows of a dim cached under `observe(rowsMetric(name), count(lit(1)))`,
     * read through the cached scan without a job. It is the total once the
-    * dim's load has built every partition: a write scans every row, and a
-    * skip-if-empty guard that finds none scans every partition. A one-shot
-    * `Observation` would take that guard's `limit(1)`, maybe one partition. */
+    * dim's load has built every partition of its cache: an append or an
+    * upsert's anti-join scans every row, also of an empty dim. The metric
+    * lives on the cached plan, so it sums every job that built a part of
+    * the cache; a one-shot `Observation` would hold only the first such
+    * job's rows (a file format's `limit 1` guard may build one partition). */
   private def cachedRows(dim: DataFrame, name: String): Long =
     dim.queryExecution.observedMetrics(rowsMetric(name)).getLong(0)
 

@@ -319,6 +319,10 @@ class WarehouseBatchWrite(root: String, schema: StructType, queryId: String,
       "manifest line separator")
   }
   private val jobId = s"job_${queryId}_${java.util.UUID.randomUUID().toString.take(8)}"
+  // tasks stage under the table root, so a load that lands nothing must
+  // know whether it made that root (a failed earlier load can leave
+  // `_jobs/` behind with no manifest, and that directory stays)
+  private val rootExisted = WarehouseMeta.fs(root).exists(new Path(root))
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
@@ -329,10 +333,17 @@ class WarehouseBatchWrite(root: String, schema: StructType, queryId: String,
     * when this returns, the data is visible; when it throws, nothing
     * changed). All checks precede the first mutation of anything outside
     * `_staging`, and visibility flips only at the final atomic rename.
+    * A `WRITE_APPEND` that staged no row adds nothing (BigQuery's zero-row
+    * append, the reference's skip-if-empty): it publishes no generation,
+    * ends `ABORTED`, and removes the table root if it made it.
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    WarehouseLoadJob.commit(root, schema, jobId, disposition, clusterBy,
-      bloomConf, messages)
+    if (disposition == "WRITE_APPEND" &&
+        WarehouseLoadJob.stagedFiles(messages).forall(_.rows == 0L)) {
+      WarehouseMeta.abort(root, jobId)
+      if (!rootExisted) WarehouseMeta.fs(root).delete(new Path(root), true): Unit
+    } else WarehouseLoadJob.commit(root, schema, jobId, disposition,
+      clusterBy, bloomConf, messages)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     WarehouseMeta.abort(root, jobId)
@@ -343,7 +354,8 @@ class WarehouseBatchWrite(root: String, schema: StructType, queryId: String,
   * and the streaming write (one EPOCH = one commit). */
 object WarehouseLoadJob {
 
-  private def stagedFiles(messages: Array[WriterCommitMessage]): Seq[StagedFile] =
+  private[sources] def stagedFiles(
+      messages: Array[WriterCommitMessage]): Seq[StagedFile] =
     messages.toSeq.flatMap {
       case s: StagedFile => Seq(s)
       case StagedFiles(fsx) => fsx
@@ -380,7 +392,9 @@ object WarehouseLoadJob {
             s"${m.clusterBy.getOrElse("unclustered")}, load is " +
             s"${clusterBy.getOrElse("unclustered")}")
       }
-      // a load job commits EVERY staged file, zero-row ones included
+      // a load job commits every staged file, zero-row ones included, so
+      // a truncate, a WRITE_EMPTY or a streaming epoch of no rows still
+      // opens a generation (a batch skips only a zero-row WRITE_APPEND)
       val staged = stagedFiles(messages)
       val moved = moveStaged(root, jobId, staged)
       val base = prev match {

@@ -128,7 +128,8 @@ class PipelineSpec extends SparkSpec {
   test("upsertDim after a failed first load lands the whole dim") {
     import spark.implicits._
     val dim = Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("k", "v")
-    // the guard's limit(1) prunes `v`; the write evaluates it and throws
+    // the write evaluates `v` and throws; parquet's limit-1 skip-if-empty
+    // guard prunes `v` and passes
     val poisoned = dim.repartition(2).select(col("k"),
       when(col("k") === "c", expr("raise_error('poisoned row')"))
         .otherwise(col("v")).as("v"))
@@ -177,6 +178,27 @@ class PipelineSpec extends SparkSpec {
       val dim = read(d)
       assert(dim.count() ===
         dim.select(loader.naturalCols.map(col): _*).distinct().count(), d)
+    }
+  }
+
+  test("a rerun slice over the warehouse sink opens no dim generation") {
+    val out = scratch("wh_rerun")
+    val cfg = Pipeline.Config(sf, out, "1996-07-01", "1996-08-01",
+      idempotentDims = true, sinkFormat = "graft-warehouse")
+    val first = Pipeline.run(spark, cfg)
+    def generations(): Map[String, Long] = dimLoaders.map { case (d, _) =>
+      d -> WarehouseMeta.readManifest(s"$out/$d").get.generation
+    }.toMap
+    val before = generations()
+    val second = Pipeline.run(spark, cfg)
+    assert(generations() === before)
+    dimLoaders.foreach { case (d, _) =>
+      // a dim's count is the rows its slice holds, not the rows it landed
+      assert(second(d) === first(d), d)
+      assert(Pipeline.table(spark, out, d, "graft-warehouse").count() ===
+        first(d), d)
+      val staging = new File(s"$out/$d/_staging")
+      assert(!staging.exists || staging.list().isEmpty, s"$d staging")
     }
   }
 
@@ -261,6 +283,19 @@ class PipelineSpec extends SparkSpec {
     }
     dimLoaders.foreach { case (d, _) => assert(counts(d) === 0L, d) }
     assert(counts("dim_time") === 1440L)
+    assert(persisted() === before)
+  }
+
+  test("an empty slice over the warehouse sink creates no table") {
+    val out = scratch("empty_wh")
+    val before = persisted()
+    val counts = Pipeline.run(spark, Pipeline.Config(sf, out,
+      "1980-01-01", "1980-02-01", idempotentDims = true,
+      sinkFormat = "graft-warehouse"))
+    (facts ++ dimLoaders.map(_._1)).foreach { t =>
+      assert(counts(t) === 0L, t)
+      assert(!new File(s"$out/$t").exists, s"$t directory created")
+    }
     assert(persisted() === before)
   }
 }

@@ -120,6 +120,55 @@ class WarehouseSinkSpec extends SparkSpec {
     assert(!fs.exists(staging) || fs.listStatus(staging).isEmpty)
   }
 
+  test("a zero-row append publishes nothing and ends its job ABORTED") {
+    import spark.implicits._
+    val path = scratch("zero_append")
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    Sink.append(df, path, format = "graft-warehouse")
+    val manifest = new java.io.File(s"$path/_manifest/manifest-0").toPath
+    val bytes = java.nio.file.Files.readAllBytes(manifest)
+    val jobsBefore = WarehouseMeta.jobs(path).toSet
+    // two empty tasks, each staging a zero-row file
+    val none = df.filter(col("id") < 0L).repartition(2)
+    assert(Sink.append(none, path, format = "graft-warehouse") === 0L)
+    assert(WarehouseMeta.generations(path) === Seq(0L))
+    assert(java.nio.file.Files.readAllBytes(manifest).sameElements(bytes))
+    val job = (WarehouseMeta.jobs(path).toSet -- jobsBefore).toSeq
+    assert(job.size === 1, job)
+    assert(WarehouseMeta.jobStates(path, job.head).last === "ABORTED")
+    assert(!new java.io.File(s"$path/_staging/${job.head}").exists)
+    assert(readBack(path).count() === 2L)
+
+    // the same append to a path that did not exist leaves no directory
+    val fresh = scratch("zero_append_fresh")
+    assert(Sink.append(none, fresh, format = "graft-warehouse") === 0L)
+    assert(!new java.io.File(fresh).exists)
+
+    // a failed first load leaves its `_jobs/` log and no manifest; the
+    // directory was there before the zero-row append, so it stays
+    val failed = scratch("zero_append_failed")
+    intercept[Exception] {
+      Sink.append(df.repartition(2).select(col("id"),
+        expr("raise_error('poisoned row')").cast("string").as("v")),
+        failed, format = "graft-warehouse")
+    }
+    assert(Sink.append(none, failed, format = "graft-warehouse") === 0L)
+    assert(WarehouseMeta.readManifest(failed).isEmpty)
+    assert(WarehouseMeta.jobs(failed).size === 2)
+  }
+
+  test("a zero-row overwrite still commits an empty generation") {
+    import spark.implicits._
+    val path = scratch("zero_truncate")
+    val df = Seq((1L, "a")).toDF("id", "v")
+    Sink.append(df, path, format = "graft-warehouse")
+    assert(Sink.overwrite(df.filter(col("id") < 0L), path,
+      format = "graft-warehouse") === 0L)
+    val m = WarehouseMeta.readManifest(path).get
+    assert(m.generation === 1L && m.disposition === "WRITE_TRUNCATE")
+    assert(readBack(path).count() === 0L)
+  }
+
   test("schema drift fails the load job, not the table") {
     import spark.implicits._
     val path = scratch("drift")
