@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr, timestamp_micros, unix_micros}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** One logical table's physical binding: where it lives, what format, and
@@ -16,9 +16,8 @@ final case class TableSpec(
 /** Logical-name → physical-binding catalog — the engine's analog of the
   * reference's config indirection (`config/settings.toml:1-16` maps dataset
   * ids to table names; `config/env.py:5-7` overlays environment secrets).
-  * Queries name tables logically; the catalog decides path + format, so
-  * re-pointing the engine at a different lake layout is a config change,
-  * not a code change.
+  * Queries name tables logically; the catalog decides path + format
+  * ([[Catalog.forDir]] binds the driver testdata layout).
   *
   * The reserved option `tsNanosCol` names a column stored as parquet
   * TIMESTAMP(NANOS) (which Spark 4 reads as long via
@@ -84,15 +83,6 @@ object Catalog {
       case _ => df
     }
 
-  /** The same adaptation for consumers that want the raw epoch-µs long
-    * (typed streaming state). */
-  def tsMicrosLong(df: DataFrame, c: String): org.apache.spark.sql.Column =
-    df.schema(c).dataType match {
-      case LongType => expr(s"`$c` div 1000").cast("long")
-      case TimestampNTZType => unix_micros(col(c).cast(TimestampType))
-      case _ => unix_micros(col(c))
-    }
-
   /** Driver testdata layout: every table at `$sfDir/<name>.parquet`. */
   def forDir(sfDir: String): Catalog = Catalog(
     Tables.All.map { n =>
@@ -101,41 +91,4 @@ object Catalog {
         else Map.empty[String, String]
       n -> TableSpec(n, s"$sfDir/$n.parquet", "parquet", opts)
     }.toMap)
-
-  /** Parse a properties-style catalog (JDK parser, no extra dependency):
-    *
-    * {{{
-    * table.lineitem.path   = /lake/tpch/lineitem
-    * table.lineitem.format = parquet
-    * table.events.path     = /lake/events
-    * table.events.option.tsNanosCol = ts
-    * }}}
-    *
-    * `overrides` layers key→value replacements on top of the parsed text —
-    * the analog of the reference's env-secret overlay (`config/env.py:5-7`),
-    * e.g. `Map("table.lineitem.path" -> sys.env("LINEITEM_PATH"))`.
-    */
-  def fromProperties(text: String,
-      overrides: Map[String, String] = Map.empty): Catalog = {
-    val props = new java.util.Properties()
-    props.load(new java.io.StringReader(text))
-    val kv = {
-      import scala.jdk.CollectionConverters._
-      props.asScala.toMap ++ overrides
-    }
-    val names = kv.keys
-      .filter(_.startsWith("table."))
-      .map(_.split('.')(1))
-      .toSet
-    Catalog(names.map { n =>
-      val path = kv.getOrElse(s"table.$n.path",
-        throw new IllegalArgumentException(s"table.$n.path missing"))
-      val fmt = kv.getOrElse(s"table.$n.format", "parquet")
-      val optPrefix = s"table.$n.option."
-      val opts = kv.collect {
-        case (k, v) if k.startsWith(optPrefix) => k.stripPrefix(optPrefix) -> v
-      }
-      n -> TableSpec(n, path, fmt, opts)
-    }.toMap)
-  }
 }

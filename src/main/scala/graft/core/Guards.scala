@@ -1,11 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.DataFrame
 
-/** Structural guards (reference §2.2 P1/P4): schema-flexible projection and
-  * missing-column short-circuits. These are driver-side schema checks
-  * (`df.columns`), not row-level work — zero runtime cost at scale.
+/** Structural guards (reference §2.2 P1): schema-flexible projection. A
+  * driver-side schema check (`df.columns`), not row-level work — zero
+  * runtime cost at scale.
   */
 object Guards {
 
@@ -18,16 +17,4 @@ object Guards {
     val present = cols.filter(df.columns.contains)
     df.select(present.map(df.col): _*)
   }
-
-  /** P4: if any required column is absent, emit an empty frame with the
-    * declared output schema instead of failing (reference
-    * `vehicle_loader.py:12-15`, `key_mapper.py:11-19`).
-    */
-  def requireColsOrEmpty(df: DataFrame, required: Seq[String],
-      emptySchema: StructType): DataFrame =
-    if (required.forall(df.columns.contains)) df
-    else emptyWithSchema(df.sparkSession, emptySchema)
-
-  def emptyWithSchema(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 }

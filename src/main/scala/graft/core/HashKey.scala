@@ -3,8 +3,12 @@ package graft.core
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -101,28 +105,68 @@ case class Md5Hi64(child: Expression) extends UnaryExpression {
   override def prettyName: String = "md5_hi64"
 }
 
-/** Session-scoped registration of graft's native expressions, exposed through
-  * the public `call_function` API (no private Spark internals needed at call
-  * sites).
+/** Graft's one registration table — every SQL function, optimizer rule
+  * and planner strategy it adds to a session — and the in-process path that
+  * installs it. [[graft.GraftExtensions]] installs the same table at session
+  * build time; functions are exposed through the public `call_function` API
+  * (no private Spark internals needed at call sites).
   */
 object GraftFunctions {
   private val registeredSessions =
     java.util.Collections.newSetFromMap(
       new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
 
-  /** Arity gate for the registrations below: a wrong-arity call surfaces
-    * as a clean analysis-time error naming the expected signature (the way
-    * built-in registrations do) instead of an IndexOutOfBoundsException
-    * from a bare `exprs(i)`.
+  /** One SQL function: its name, the argument list its arity error names,
+    * its arity, and the expression builder.
     */
-  private def arity(name: String, sig: String, n: Int)(
-      build: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    exprs => {
-      if (exprs.length != n) throw new IllegalArgumentException(
-        s"Invalid number of arguments for function $name: expected $n " +
-          s"($name($sig)), found ${exprs.length}")
-      build(exprs)
-    }
+  final case class Fn(name: String, sig: String, arity: Int,
+      build: Seq[Expression] => Expression) {
+    /** The registration both paths install. The builder is arity-gated: a
+      * wrong-arity call surfaces as a clean analysis-time error naming the
+      * expected signature (the way built-in registrations do) instead of an
+      * IndexOutOfBoundsException from a bare `exprs(i)`.
+      */
+    def description: (FunctionIdentifier, ExpressionInfo,
+        Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo(classOf[Fn].getName, name),
+        exprs => {
+          if (exprs.length != arity) throw new IllegalArgumentException(
+            s"Invalid number of arguments for function $name: expected " +
+              s"$arity ($name($sig)), found ${exprs.length}")
+          build(exprs)
+        })
+  }
+
+  val functions: Seq[Fn] = Seq(
+    Fn("graft_md5_mod_1e9", "str", 1, e => Md5Mod1e9(e.head)),
+    Fn("graft_md5_hi64", "str", 1, e => Md5Hi64(e.head)),
+    Fn("graft_top_k_by", "value, key, k", 3, e =>
+      TopKBy.withCasts(e(0), e(1), e(2))),
+    Fn("graft_dot", "vecA, vecB", 2, e => DotFold(e(0), e(1))),
+    Fn("graft_sumsq", "vec", 1, e => SumSqFold(e.head)),
+    Fn("graft_dot_mixed", "vecA, vecB", 2, e => DotMixed(e(0), e(1))),
+    Fn("graft_bloom_contains", "filter, value", 2, e =>
+      BloomMightContain(e(0), e(1))),
+    Fn("graft_image_dims", "bytes", 1, e => graft.ops.ImageDims(e.head)),
+    Fn("graft_audio_meta", "bytes", 1, e => graft.ops.AudioMeta(e.head)),
+    Fn("graft_jaro_winkler", "strA, strB", 2, e =>
+      JaroWinklerSim(e(0), e(1))),
+    Fn("graft_blocklist_mask", "text, phrases", 2, e =>
+      graft.ops.BlocklistMask.fromExprs(e(0), e(1))))
+
+  /** Optimizer rules: the HOF dot product folded into the `graft_dot`
+    * kernel, and pure range joins bin-bucketed into equi joins when
+    * `spark.graft.rangeJoin.binSize` is set (inert otherwise).
+    */
+  val optimizerRules: Seq[Rule[LogicalPlan]] =
+    Seq(graft.plans.FoldVectorHofs, graft.plans.RangeBinJoin)
+
+  /** Planner strategies for the native operators that explicit calls
+    * build: the as-of join and the global rank family.
+    */
+  val strategies: Seq[SparkSession => SparkStrategy] = Seq(
+    _ => new graft.plans.AsOfJoinStrategy,
+    _ => new graft.plans.GlobalRankStrategy)
 
   def ensureRegistered(spark: SparkSession): Unit =
     if (registeredSessions.add(spark)) {
@@ -134,75 +178,27 @@ object GraftFunctions {
       // Tables.read.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val reg = spark.sessionState.functionRegistry
-      reg.createOrReplaceTempFunction(
-        "graft_md5_mod_1e9",
-        arity("graft_md5_mod_1e9", "str", 1)(e => Md5Mod1e9(e.head)),
-        "built-in")
-      reg.createOrReplaceTempFunction(
-        "graft_md5_hi64",
-        arity("graft_md5_hi64", "str", 1)(e => Md5Hi64(e.head)),
-        "built-in")
-      reg.createOrReplaceTempFunction(
-        "graft_top_k_by",
-        arity("graft_top_k_by", "value, key, k", 3)(e =>
-          TopKBy.withCasts(e(0), e(1), e(2))),
-        "built-in")
-      reg.createOrReplaceTempFunction(
-        "graft_dot",
-        arity("graft_dot", "vecA, vecB", 2)(e => DotFold(e(0), e(1))),
-        "built-in")
-      reg.createOrReplaceTempFunction(
-        "graft_sumsq",
-        arity("graft_sumsq", "vec", 1)(e => SumSqFold(e.head)),
-        "built-in")
-      reg.createOrReplaceTempFunction(
-        "graft_dot_mixed",
-        arity("graft_dot_mixed", "vecA, vecB", 2)(e => DotMixed(e(0), e(1))),
-        "built-in")
-      reg.createOrReplaceTempFunction(
-        "graft_bloom_contains",
-        arity("graft_bloom_contains", "filter, value", 2)(e =>
-          BloomMightContain(e(0), e(1))),
-        "built-in")
-      reg.createOrReplaceTempFunction(
-        "graft_image_dims",
-        arity("graft_image_dims", "bytes", 1)(e => graft.ops.ImageDims(e.head)),
-        "built-in")
-      reg.createOrReplaceTempFunction(
-        "graft_audio_meta",
-        arity("graft_audio_meta", "bytes", 1)(e => graft.ops.AudioMeta(e.head)),
-        "built-in")
-      reg.createOrReplaceTempFunction(
-        "graft_jaro_winkler",
-        arity("graft_jaro_winkler", "strA, strB", 2)(e =>
-          JaroWinklerSim(e(0), e(1))),
-        "built-in")
-      reg.createOrReplaceTempFunction(
-        "graft_blocklist_mask",
-        arity("graft_blocklist_mask", "text, phrases", 2)(e =>
-          graft.ops.BlocklistMask.fromExprs(e(0), e(1))),
-        "built-in")
-      // sessions built without GraftExtensions still get the HOF→kernel
-      // optimizer rewrite through the experimental hook
-      if (!spark.experimental.extraOptimizations
-            .contains(graft.plans.FoldVectorHofs)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.FoldVectorHofs
+      for (f <- functions) {
+        val (id, info, builder) = f.description
+        reg.registerFunction(id, info, builder)
       }
-      if (!spark.experimental.extraOptimizations
-            .contains(graft.plans.RangeBinJoin)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.RangeBinJoin
-      }
-      if (!spark.experimental.extraOptimizations
-            .contains(graft.plans.GlobalRankRewrite)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+
-            graft.plans.GlobalRankRewrite
-      }
-      // the rewrite's target needs its strategy in the same session
-      graft.plans.GlobalRank.ensureStrategy(spark)
+      // a session built without GraftExtensions gets the rules and
+      // strategies through the experimental hooks
+      val ex = spark.experimental
+      ex.extraOptimizations ++=
+        optimizerRules.filterNot(ex.extraOptimizations.contains)
+      ensureStrategies(spark)
     }
+
+  /** Adds the table's strategies that `spark`'s experimental hook lacks
+    * (idempotent), so an explicit native-operator call plans in a session
+    * neither registration path reached.
+    */
+  def ensureStrategies(spark: SparkSession): Unit = {
+    val ex = spark.experimental
+    ex.extraStrategies ++= strategies.map(_(spark)).filterNot(s =>
+      ex.extraStrategies.exists(_.getClass == s.getClass))
+  }
 
   /** `hash_key(cols)`: surrogate key over already-normalized natural-key
     * columns — pipe-join then 128-bit-MD5 mod 1e9

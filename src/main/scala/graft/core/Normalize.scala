@@ -37,10 +37,4 @@ object Normalize {
     */
   def yesNo(c: Column): Column =
     when(c === "Yes", lit(true)).when(c === "No", lit(false))
-
-  /** F10 constant/default fill: add the column as "" when absent
-    * (reference `main.py:114-118`, `violation_loader.py:12-13`).
-    */
-  def ensureColumn(df: DataFrame, name: String, default: Column = lit("")): DataFrame =
-    if (df.columns.contains(name)) df else df.withColumn(name, default)
 }

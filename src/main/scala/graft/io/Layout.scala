@@ -70,21 +70,11 @@ object Layout {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** Write `df` parquet at `path`, z-ordered on the low `bits` bits of the
-    * two dimension columns, into `numFiles` deterministic Morton-tile
-    * partitions.
-    */
-  def writeZOrdered(df: DataFrame, dimX: String, dimY: String, path: String,
-      bits: Int = 10, numFiles: Int = 16): Unit = {
-    val bound = lit(1L << bits)
-    val zkey = mortonInterleave(pmod(col(dimX), bound), pmod(col(dimY), bound),
-      bits)
-    writeTiled(df, zkey, bits, numFiles, path)
-  }
-
-  /** [[writeZOrdered]] with both dimensions first min/max-scaled to the
-    * full `bits`-wide integer range. Raw interleaving lets the wider
-    * dimension's high bits dominate the Morton key (a 12-bit day domain
+  /** Write `df` parquet at `path`, z-ordered on both dimension columns
+    * after each is min/max-scaled to the full `bits`-wide integer range,
+    * into `numFiles` deterministic Morton-tile partitions. Raw
+    * interleaving lets the wider dimension's high bits dominate the
+    * Morton key (a 12-bit day domain
     * against an 8-bit key domain degenerates to a day sort); scaling
     * balances the interleave so BOTH columns cluster. The transform is
     * monotone per dimension, so file-level min/max stats on the ORIGINAL

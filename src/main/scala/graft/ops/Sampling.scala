@@ -106,16 +106,6 @@ object Sampling {
             " * 10000) div __wmax"))
       .drop("__wmax")
 
-  /** Apply [[temperatureThresholds]] as a salted-hash filter: one tiny
-    * agg broadcast back onto the scan, then a per-row filter — no second
-    * shuffle, re-run-identical.
-    */
-  def temperatureSample(df: DataFrame, strataCol: String, id: Column,
-      salt: String = "temp"): DataFrame =
-    df.join(broadcast(temperatureThresholds(df, strataCol)), strataCol)
-      .filter(hashBucket(id, salt) < col("thr"))
-      .drop("n", "thr")
-
   /** Deterministic train/val/test split by hash range:
     * [0, train) / [train, train+val) / rest, in basis points.
     * A document's split NEVER changes as the corpus grows — the property

@@ -25,12 +25,8 @@ import org.apache.spark.sql.functions._
   *
   * The per-bucket scan result (ds = Σd, maxpref = max prefix sum, nb =
   * row count) is a MONOID element — combine((s₁,m₁),(s₂,m₂)) =
-  * (s₁+s₂, max(m₁, s₁+m₂)) — which is what makes the sweep
-  * INCREMENTALIZABLE: the streaming face
-  * ([[graft.streaming.Streams.concurrencyStreaming]]) emits exactly these
-  * per-bucket elements from `flatMapGroupsWithState` as watermark closes
-  * each bucket, and [[finalizeConcurrency]] assembles identical hourly
-  * peaks from either path (batch ≡ stream, gated by ConcStreamSpec).
+  * (s₁+s₂, max(m₁, s₁+m₂)) — so phase 2 needs only the |buckets|-row
+  * frame, never the boundary rows.
   */
 object Sweep {
 
@@ -43,7 +39,7 @@ object Sweep {
     * (t − pmod(t, H)) is an exact multiple of H, where truncation ≡ floor
     * for any sign.
     */
-  def boundaries(events: DataFrame): DataFrame = {
+  private def boundaries(events: DataFrame): DataFrame = {
     val ev = events
       .select(unix_micros(col("ts")).as("st"),
         (unix_micros(col("ts")) +
@@ -60,7 +56,7 @@ object Sweep {
     * maxpref = max over the (t, d)-ordered prefix sums, nb = boundary
     * count). The within-bucket window is PARTITIONED BY bucket (parallel).
     */
-  def perBucketScan(bounds: DataFrame): DataFrame = {
+  private def perBucketScan(bounds: DataFrame): DataFrame = {
     val wRun = Window.partitionBy("bucket").orderBy("t", "d")
     bounds
       .withColumn("runl", sum(col("d")).over(wRun))
@@ -70,11 +66,9 @@ object Sweep {
   }
 
   /** Phase-2 assembly over the |buckets|-row monoid frame: carry-in per
-    * bucket (prefix sums of ds), hour peak = carry + max(0, maxpref) —
-    * identical algebra whether the monoid rows came from the batch window
-    * scan or the streaming state operator.
+    * bucket (prefix sums of ds), hour peak = carry + max(0, maxpref).
     */
-  def finalizeConcurrency(perBucket: DataFrame): DataFrame = {
+  private def finalizeConcurrency(perBucket: DataFrame): DataFrame = {
     val wOff = Window.orderBy("bucket")
       .rowsBetween(Window.unboundedPreceding, -1)
     perBucket

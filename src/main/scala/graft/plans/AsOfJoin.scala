@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftInternal, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftInternal}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -10,8 +10,9 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.functions.col
 
 /** Native as-of join — the engine's whole-operator Catalyst extension
-  * (custom LogicalPlan → Strategy → SparkPlan, registered via
-  * `GraftExtensions` / `spark.experimental.extraStrategies`).
+  * (custom LogicalPlan → Strategy → SparkPlan; the strategy is listed in
+  * `GraftFunctions.strategies`, which `GraftExtensions` and
+  * `GraftFunctions.ensureRegistered` install).
   *
   * Semantics: for every left row, attach the payload of the LAST right row
   * with the same key whose time is <= the left row's time (ASOF LEFT JOIN;
@@ -157,15 +158,6 @@ case class AsOfJoinExec(
 /** DataFrame-level API over the custom operator. */
 object AsOf {
 
-  /** Registers the strategy on an existing session (idempotent); the
-    * build-time path is `GraftExtensions.injectPlannerStrategy`.
-    */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val es = spark.experimental.extraStrategies
-    if (!es.exists(_.isInstanceOf[AsOfJoinStrategy]))
-      spark.experimental.extraStrategies = es :+ new AsOfJoinStrategy
-  }
-
   /** ASOF LEFT JOIN: every left row gets `payload` columns (suffixed
     * `__r`) from the last right row with equal `key` and `rightTime` <=
     * `leftTime`. Time columns must be long microseconds or timestamps
@@ -176,7 +168,7 @@ object AsOf {
   def asofJoin(left: DataFrame, right: DataFrame, key: String,
       leftTime: String, rightTime: String, payload: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    ensureStrategy(spark)
+    graft.core.GraftFunctions.ensureStrategies(spark)
     val rAliased = right.select(
       right.columns.toSeq.map(c => col(c).as(c + "__r")): _*)
     val lPlan = left.queryExecution.analyzed

@@ -23,9 +23,8 @@ import graft.core.DotFold
   * literal 0.0d, merge = acc + element (either order; both ops are
   * IEEE-commutative), identity finish.
   *
-  * Installed by [[graft.GraftExtensions]] (injectOptimizerRule) and by
-  * `GraftFunctions.ensureRegistered` via `experimental.extraOptimizations`
-  * for sessions built without extensions.
+  * Listed in `GraftFunctions.optimizerRules`, which both
+  * [[graft.GraftExtensions]] and `GraftFunctions.ensureRegistered` install.
   */
 object FoldVectorHofs extends Rule[LogicalPlan] {
 

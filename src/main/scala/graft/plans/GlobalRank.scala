@@ -1,15 +1,14 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftInternal, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftInternal}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, AttributeSet, BoundReference, CumeDist, DenseRank, Descending, Expression, GenericInternalRow, JoinedRow, Lag, Lead, Literal, NamedExpression, PercentRank, Rank, RowNumber, SortOrder, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BoundReference, Descending, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Which global ranking function the native operator computes. All three
   * share the same physical shape (one range exchange + one shuffle-read
@@ -95,19 +94,9 @@ object RankMode {
   * every row. The summary pass is the price of exactness without a second
   * shuffle; it reads shuffle files, it never re-runs the child's lineage.
   *
-  * Two faces:
-  *   - explicit: [[GlobalRank.withRowNumber]] / [[GlobalRank.withRank]] /
-  *     [[GlobalRank.withDenseRank]] build the plan directly (the
-  *     `window_exact_quantiles` query path);
-  *   - transparent: [[GlobalRankRewrite]] (opt-in,
-  *     `spark.graft.distRank.enabled=true`) rewrites a logical Window
-  *     whose expressions are ALL bare `row_number()`/`rank()`/
-  *     `dense_rank()` over an empty partition spec into this node —
-  *     result-identical (GlobalRankSpec gates rule-on ≡ rule-off,
-  *     including tie-heavy fixtures), type-identical (the rewritten
-  *     attribute keeps the window function's IntegerType and exprId),
-  *     and inert by default so existing deliberately-bounded global
-  *     windows keep their plans.
+  * One face: [[GlobalRank.withRowNumber]] / [[GlobalRank.withRank]] /
+  * [[GlobalRank.withDenseRank]] and the other `GlobalRank.with*` calls
+  * build the plan directly; no optimizer rule rewrites a `Window` into it.
   */
 case class GlobalRankPlan(child: LogicalPlan, order: Seq[SortOrder],
     rankAttr: Attribute, mode: RankMode = RankMode.RowNumber)
@@ -500,7 +489,6 @@ case class GlobalRankExec(order: Seq[SortOrder], rankAttr: Attribute,
       out
     }
     val out = output
-    val isInt = rankAttr.dataType == IntegerType
     val execMode = mode
     // Pass 2: stream each partition once, appending the global rank.
     childRDD.mapPartitionsWithIndex({ (pid, iter) =>
@@ -508,9 +496,7 @@ case class GlobalRankExec(order: Seq[SortOrder], rankAttr: Attribute,
       val rankRow = new GenericInternalRow(1)
       val joined = new JoinedRow
       def emit(r: InternalRow, rk: Long): InternalRow = {
-        // IntegerType face (the window rewrite): same 2^31 row bound as
-        // Spark's own rank functions — overflow behavior is at parity.
-        if (isInt) rankRow.update(0, rk.toInt) else rankRow.update(0, rk)
+        rankRow.update(0, rk)
         proj(joined(r, rankRow))
       }
       // DOUBLE face for the distribution modes (percent_rank/cume_dist —
@@ -655,111 +641,8 @@ case class GlobalRankExec(order: Seq[SortOrder], rankAttr: Attribute,
       newChild: SparkPlan): GlobalRankExec = copy(child = newChild)
 }
 
-/** Opt-in optimizer rule (`spark.graft.distRank.enabled=true`): rewrite
-  * `Window` nodes whose window expressions are ALL bare `row_number()`,
-  * `rank()`, `dense_rank()`, `ntile(<positive literal>)`,
-  * `percent_rank()`, or `cume_dist()` with an EMPTY partition spec into
-  * [[GlobalRankPlan]] nodes (one per expression, modes mixed freely) —
-  * with these two the rule covers EVERY bare global ranking/distribution
-  * window function Spark defines. Matches nothing else — aggregate
-  * windows, lag/lead, and mixed expression lists keep their WindowExec,
-  * and partitioned windows are already parallel. Defensive-parse
-  * discipline (the RangeBinJoin lesson): any value other than "true" is
-  * OFF, never a throw inside the optimizer.
-  */
-object GlobalRankRewrite extends Rule[LogicalPlan] {
-  val Key = "spark.graft.distRank.enabled"
-
-  private def modeOf(e: NamedExpression): Option[(Alias, RankMode)] =
-    e match {
-      case a @ Alias(WindowExpression(RowNumber(),
-          WindowSpecDefinition(Nil, _, _)), _) =>
-        Some((a, RankMode.RowNumber))
-      case a @ Alias(WindowExpression(_: Rank,
-          WindowSpecDefinition(Nil, _, _)), _) =>
-        Some((a, RankMode.Rank))
-      case a @ Alias(WindowExpression(_: DenseRank,
-          WindowSpecDefinition(Nil, _, _)), _) =>
-        Some((a, RankMode.DenseRank))
-      case a @ Alias(WindowExpression(
-          org.apache.spark.sql.catalyst.expressions.NTile(
-            org.apache.spark.sql.catalyst.expressions.Literal(k: Int,
-              IntegerType)),
-          WindowSpecDefinition(Nil, _, _)), _) if k > 0 =>
-        Some((a, RankMode.NTile(k)))
-      case a @ Alias(WindowExpression(_: PercentRank,
-          WindowSpecDefinition(Nil, _, _)), _) =>
-        Some((a, RankMode.PercentRank))
-      case a @ Alias(WindowExpression(_: CumeDist,
-          WindowSpecDefinition(Nil, _, _)), _) =>
-        Some((a, RankMode.CumeDist))
-      case _ => None
-    }
-
-  /** The window function's own output type, preserved by the rewrite:
-    * IntegerType for the counting modes (Spark's rank functions),
-    * DoubleType for the distribution fractions. */
-  private def dtOf(mode: RankMode): DataType = mode match {
-    case RankMode.PercentRank | RankMode.CumeDist => DoubleType
-    case _ => IntegerType
-  }
-
-  /** Bare global `lag(e, k)` / `lead(e, k)` with the NULL default and
-    * ignoreNulls=false — the offset class, rewritten to
-    * [[GlobalShiftPlan]]. Non-literal offsets, non-null defaults, and
-    * ignoreNulls keep their WindowExec. */
-  private def shiftOf(e: NamedExpression)
-      : Option[(Alias, Expression, Int, Boolean)] = e match {
-    case a @ Alias(WindowExpression(Lag(in,
-        Literal(off: Int, IntegerType), Literal(null, _), false),
-        WindowSpecDefinition(Nil, _, _)), _) if off > 0 =>
-      Some((a, in, off, true))
-    case a @ Alias(WindowExpression(Lead(in,
-        Literal(off: Int, IntegerType), Literal(null, _), false),
-        WindowSpecDefinition(Nil, _, _)), _) if off > 0 =>
-      Some((a, in, off, false))
-    case _ => None
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(Key, "false").trim.equalsIgnoreCase("true"))
-      return plan
-    plan transform {
-      case Window(exprs, Nil, order, child, _)
-          if order.nonEmpty && exprs.nonEmpty &&
-            exprs.forall(e =>
-              modeOf(e).isDefined || shiftOf(e).isDefined) =>
-        // chain one node per ranking/offset alias (they share the same
-        // orderSpec by Window's construction), preserving each alias's
-        // exprId and output type so parent operators resolve unchanged
-        exprs.foldLeft(child) { (c, e) =>
-          modeOf(e) match {
-            case Some((a, mode)) =>
-              GlobalRankPlan(c, order,
-                AttributeReference(a.name, dtOf(mode),
-                  nullable = false)(a.exprId, a.qualifier), mode)
-            case None =>
-              val (a, in, off, isLag) = shiftOf(e).get
-              GlobalShiftPlan(c, order, in, off, isLag,
-                AttributeReference(a.name, in.dataType,
-                  nullable = true)(a.exprId, a.qualifier))
-          }
-        }
-    }
-  }
-}
-
 /** DataFrame-level API over the native operator. */
 object GlobalRank {
-
-  /** Registers the strategy on an existing session (idempotent); the
-    * build-time path is `GraftExtensions.injectPlannerStrategy`.
-    */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val es = spark.experimental.extraStrategies
-    if (!es.exists(_.isInstanceOf[GlobalRankStrategy]))
-      spark.experimental.extraStrategies = es :+ new GlobalRankStrategy
-  }
 
   /** Resolves `df`'s analyzed plan, its columns by name and the sort
     * order of `keys`, and wraps the node `mk` builds from them. */
@@ -767,7 +650,7 @@ object GlobalRank {
       mk: (LogicalPlan, String => Attribute, Seq[SortOrder]) => LogicalPlan)
       : DataFrame = {
     val spark = df.sparkSession
-    ensureStrategy(spark)
+    graft.core.GraftFunctions.ensureStrategies(spark)
     val plan = df.queryExecution.analyzed
     def attr(n: String): Attribute =
       plan.output.find(_.name == n).getOrElse(

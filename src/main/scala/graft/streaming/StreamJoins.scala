@@ -2,14 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.core.{Catalog, Tables}
+import graft.core.Tables
 
-/** Stream-stream joins (Structured Streaming's stateful two-input
-  * operator). The batch twin ([[clickPurchaseBatch]]) is the semantics
-  * oracle: an AvailableNow pass over the same files must emit exactly the
-  * batch join's rows.
+/** Watermarked click→purchase interval join, written in the shape of a
+  * stream-stream join (Structured Streaming's stateful two-input operator)
+  * and declared through its batch face [[clickPurchaseBatch]].
   */
 object StreamJoins {
 
@@ -23,34 +21,12 @@ object StreamJoins {
       // never the whole stream.
       .withWatermark(s"${a}_ts", "20 minutes")
 
-  private def joined(clicks: DataFrame, purchases: DataFrame): DataFrame =
-    clicks.join(purchases,
+  /** Purchases within 10 minutes after a click by the same user. */
+  def clickPurchaseBatch(spark: SparkSession, dir: String): DataFrame = {
+    val raw = Tables.read(spark, dir, "events")
+    side(raw, "click", "c").join(side(raw, "purchase", "p"),
       expr("""c_user = p_user AND
              |p_ts >= c_ts AND p_ts <= c_ts + interval 10 minutes""".stripMargin))
       .select(col("c_user").as("user_id"), col("c_id"), col("p_id"))
-
-  /** Purchases within 10 minutes after a click by the same user, streaming.
-    * Both inputs derive from one file source; Spark plans two stateful
-    * scan legs with independent watermarks.
-    */
-  def clickPurchaseStreaming(spark: SparkSession, dir: String, glob: String,
-      queryName: String): StreamingQuery = {
-    graft.core.GraftFunctions.ensureRegistered(spark)
-    val rawSchema = spark.read.parquet(Tables.path(dir, "events")).schema
-    val raw = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", glob)
-      .format("parquet")
-      .load(dir)
-      .transform(Catalog.rebuildTs(_, "ts"))
-    joined(side(raw, "click", "c"), side(raw, "purchase", "p"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName(queryName).start()
-  }
-
-  /** The batch twin over the same table — same predicate, no state. */
-  def clickPurchaseBatch(spark: SparkSession, dir: String): DataFrame = {
-    val raw = Tables.read(spark, dir, "events")
-    joined(side(raw, "click", "c"), side(raw, "purchase", "p"))
   }
 }

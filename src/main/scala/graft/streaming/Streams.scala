@@ -4,12 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.core.{Catalog, Tables}
+import graft.core.Tables
 
 /** Streaming layer. The reference has no streaming engine but its operating
   * model is incremental micro-batch (SURVEY §2.8): daily slices, append
-  * sinks. Structured Streaming expresses that directly: the same transform
-  * runs in batch (oracle-checked) and as a stream over the same files.
+  * sinks. The event transforms here are plain DataFrame functions with
+  * declared, oracle-checked batch faces; the streaming path graft runs is
+  * the warehouse MERGE stream below plus the `graft-warehouse` source and
+  * sink (`sources/WarehouseStream.scala`).
   */
 object Streams {
 
@@ -66,8 +68,7 @@ object Streams {
     * injected duplicates stand in for a replaying feed); `dropDuplicates`
     * on the event id restores exactly-once, and the aggregate equals the
     * clean table's — which is precisely what the oracle checks. Scale:
-    * dedup-by-key is one hash exchange on the id; the streaming face
-    * below bounds its state by the watermark instead of keeping all ids.
+    * dedup-by-key is one hash exchange on the id.
     */
   def dedupBatch(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.read(spark, dir, "events")
@@ -78,34 +79,6 @@ object Streams {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
       .orderBy("event_type")
-  }
-
-  /** Streaming face: `dropDuplicatesWithinWatermark` on the event id —
-    * duplicate arrivals inside the watermark window are suppressed while
-    * state stays bounded (ids older than the watermark are evicted; a
-    * replay later than the watermark would need an idempotent sink
-    * instead). Append-mode memory sink; StreamDedupSpec drives duplicate
-    * waves through `dir` and checks the output against the distinct set.
-    */
-  def dedupStreaming(spark: SparkSession, dir: String, glob: String,
-      queryName: String, schemaFrom: String): StreamingQuery = {
-    graft.core.GraftFunctions.ensureRegistered(spark)
-    val rawSchema = spark.read.parquet(schemaFrom).schema
-    val events = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", glob)
-      .format("parquet")
-      .load(dir)
-      .transform(Catalog.rebuildTs(_, "ts"))
-    events
-      .withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("event_id")
-      .select(col("event_id"), col("event_type"), col("value"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
   }
 
   /** Sessionization, batch form (gaps-and-islands): a new session starts
@@ -164,433 +137,6 @@ object Streams {
     sessionWindowAgg(Tables.read(spark, dir, "events"))
       .orderBy("user_id", "session_start")
 
-  /** Streaming face of the session-window aggregate: file source →
-    * watermark → session_window → append-mode memory sink. Sessions emit
-    * once the watermark passes their end (used by SessionStreamSpec, which
-    * drives multiple event waves through `dir`/`glob` and checks emitted
-    * sessions equal the batch transform's).
-    */
-  def sessionWindowStreaming(spark: SparkSession, dir: String, glob: String,
-      queryName: String, gapMinutes: Int = 30): StreamingQuery = {
-    graft.core.GraftFunctions.ensureRegistered(spark)
-    val rawSchema = spark.read.parquet(Tables.path(dir, "events")).schema
-    val events = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", glob)
-      .format("parquet")
-      .load(dir)
-      .transform(Catalog.rebuildTs(_, "ts"))
-    sessionWindowAgg(events.withWatermark("ts", "10 minutes"), gapMinutes)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-  }
-
-  /** One closed session, as emitted by [[sessionizeClosedStreaming]]. */
-  final case class ClosedSession(user_id: Long, session_idx: Long,
-      n_events: Long, session_start: String, total_value: Double)
-
-  /** Open-session state carried across micro-batches per user: next
-    * session ordinal, first/last event micros, running count, and the
-    * value sum as a scale-6 fixed-point long (order-independent, exactly
-    * the DECIMAL(18,6) the batch form sums through).
-    */
-  final case class OpenSession(idx: Long, startUs: Long, lastUs: Long,
-      n: Long, sumScaled: Long)
-
-  /** Per-bucket sweep buffer: boundary (t, d) rows awaiting bucket close
-    * (parallel arrays — product encoders handle Seq[Long] natively).
-    */
-  final case class BucketBuf(ts: Seq[Long], ds: Seq[Long])
-
-  /** One emitted sweep-monoid element per closed hour bucket. */
-  final case class BucketMonoid(bucket: Long, ds: Long, maxpref: Long,
-      nb: Long)
-
-  /** Streaming face of the peak-concurrency sweep line
-    * ([[graft.ops.Sweep]]): interval boundaries flow in event time, each
-    * hour bucket's rows buffer in state until the WATERMARK passes the
-    * bucket end (event-time timeout), then exactly one monoid row
-    * (Σd, max prefix sum, count) emits — and
-    * [[graft.ops.Sweep.finalizeConcurrency]] assembles hourly peaks from
-    * those rows identical to the batch path (gated by ConcStreamSpec).
-    * The per-row prefix maximum differs from the batch RANGE-collapsed
-    * maximum only among NEGATIVE prefixes (a bucket opening on −1
-    * boundaries), which the finalize algebra clamps with max(0, ·) — the
-    * assembled peaks are equal in every case.
-    *
-    * Scale: state ∝ one bucket's boundary mass per key, evicted at close;
-    * shrink the bucket (minute grain) for hotter feeds. Emission is one
-    * row per bucket per key — the downstream carry assembly stays a
-    * |buckets|-row batch job at any corpus size.
-    */
-  def concurrencyStreaming(spark: SparkSession, dir: String, glob: String,
-      queryName: String): StreamingQuery = {
-    import org.apache.spark.sql.{Encoder, Encoders}
-    graft.core.GraftFunctions.ensureRegistered(spark)
-    implicit val stateEnc: Encoder[BucketBuf] = Encoders.product[BucketBuf]
-    implicit val outEnc: Encoder[BucketMonoid] = Encoders.product[BucketMonoid]
-    implicit val rowEnc: Encoder[(Long, Long, Long, java.sql.Timestamp)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.TIMESTAMP)
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    val rawSchema = spark.read.parquet(Tables.path(dir, "events")).schema
-    val raw = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", glob)
-      .format("parquet")
-      .load(dir)
-    val bounds = graft.ops.Sweep.boundaries(
-        raw.transform(Catalog.rebuildTs(_, "ts")).select("ts", "value"))
-      .withColumn("tts", timestamp_micros(col("t")))
-      .withWatermark("tts", "10 minutes")
-      .select(col("bucket"), col("t"), col("d"), col("tts"))
-      .as[(Long, Long, Long, java.sql.Timestamp)](rowEnc)
-    val monoids = bounds.groupByKey(_._1)
-      .flatMapGroupsWithState[BucketBuf, BucketMonoid](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout) {
-        (bucket: Long, rows: Iterator[(Long, Long, Long, java.sql.Timestamp)],
-            state: org.apache.spark.sql.streaming.GroupState[BucketBuf]) =>
-          if (state.hasTimedOut) {
-            val buf = state.getOption.getOrElse(BucketBuf(Nil, Nil))
-            val arr = buf.ts.zip(buf.ds).sortBy(identity)
-            var run = 0L
-            var maxp = Long.MinValue
-            arr.foreach { case (_, d) =>
-              run += d; if (run > maxp) maxp = run
-            }
-            state.remove()
-            if (arr.isEmpty) Iterator.empty
-            else Iterator.single(
-              BucketMonoid(bucket, run, maxp, arr.length.toLong))
-          } else {
-            val newRows = rows.toArray
-            val buf = state.getOption.getOrElse(BucketBuf(Nil, Nil))
-            state.update(BucketBuf(buf.ts ++ newRows.map(_._2),
-              buf.ds ++ newRows.map(_._3)))
-            // close when the watermark passes the bucket's end
-            state.setTimeoutTimestamp((bucket + 1) * 3600000L)
-            Iterator.empty
-          }
-      }
-    monoids.toDF()
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-  }
-
-  /** Custom-state sessionization (`flatMapGroupsWithState`): emits each
-    * session the moment a later event closes it (> gap of quiet), keeping
-    * only the single open session per user in state — the
-    * arbitrary-state face of what [[sessionWindowAgg]] does declaratively.
-    * Matches `sessionizeBatch` row-for-row on closed sessions (same gap
-    * rule `diff > gap`, same (ts, event_id) ordering, same fixed-point
-    * value sum).
-    *
-    * Scale notes: state is O(1) per user (one open session, never the
-    * event list); a group's per-batch events are sorted in memory, which
-    * is bounded by events-per-user-per-micro-batch, not corpus size.
-    * In-order arrival across batches is assumed (file slices arrive in
-    * time order, the reference's operating model); a production feed with
-    * stragglers would add an event-time timeout + lateness tolerance.
-    */
-  def sessionizeClosedStreaming(spark: SparkSession, dir: String,
-      glob: String, queryName: String, gapMinutes: Int = 30): StreamingQuery = {
-    import org.apache.spark.sql.{Encoder, Encoders}
-    graft.core.GraftFunctions.ensureRegistered(spark)
-    implicit val stateEnc: Encoder[OpenSession] = Encoders.product[OpenSession]
-    implicit val outEnc: Encoder[ClosedSession] = Encoders.product[ClosedSession]
-    implicit val rowEnc: Encoder[(Long, Long, Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong)
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    val gapUs = gapMinutes * 60L * 1000000L
-    val rawSchema = spark.read.parquet(Tables.path(dir, "events")).schema
-    val raw = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", glob)
-      .format("parquet")
-      .load(dir)
-    val events = raw
-      .select(col("user_id").cast("long"), col("event_id").cast("long"),
-        Catalog.tsMicrosLong(raw, "ts"),
-        (col("value").cast("decimal(18,6)") * 1000000L).cast("long"))
-      .as[(Long, Long, Long, Long)](rowEnc)
-
-    val sessions = events.groupByKey(_._1)
-      .flatMapGroupsWithState[OpenSession, ClosedSession](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, Long, Long, Long)],
-            state: org.apache.spark.sql.streaming.GroupState[OpenSession]) =>
-          // formatter built per invocation: DateTimeFormatter is not
-          // serializable, so it must not be captured by this closure
-          val fmt = java.time.format.DateTimeFormatter
-            .ofPattern("yyyy-MM-dd HH:mm:ss")
-            .withZone(java.time.ZoneOffset.UTC)
-          def emit(u: Long, s: OpenSession): ClosedSession =
-            ClosedSession(u, s.idx, s.n,
-              fmt.format(java.time.Instant.ofEpochSecond(
-                Math.floorDiv(s.startUs, 1000000L))),
-              java.math.BigDecimal.valueOf(s.sumScaled, 6).doubleValue())
-          val sorted = rows.toArray.sortBy(r => (r._3, r._2))
-          val closed = scala.collection.mutable.ArrayBuffer[ClosedSession]()
-          var open = state.getOption
-          sorted.foreach { case (_, _, us, vScaled) =>
-            open match {
-              case Some(s) if us - s.lastUs <= gapUs =>
-                open = Some(s.copy(lastUs = us, n = s.n + 1,
-                  sumScaled = s.sumScaled + vScaled))
-              case Some(s) =>
-                closed += emit(user, s)
-                open = Some(OpenSession(s.idx + 1, us, us, 1L, vScaled))
-              case None =>
-                open = Some(OpenSession(1L, us, us, 1L, vScaled))
-            }
-          }
-          open.foreach(state.update)
-          closed.iterator
-      }
-
-    sessions.toDF()
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-  }
-
-  /** Stateful streaming aggregation (`mapGroupsWithState`): a per-user
-    * running event count maintained in GroupState across micro-batches —
-    * the custom-state face of the streaming layer (used by StreamingSpec).
-    */
-  def runningCountsStreaming(spark: SparkSession, dir: String,
-      queryName: String): StreamingQuery = {
-    import spark.implicits._
-    graft.core.GraftFunctions.ensureRegistered(spark)
-    val rawSchema = spark.read.parquet(Tables.path(dir, "events")).schema
-    val events = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .format("parquet")
-      .load(dir)
-      .select(col("user_id").as[Long], col("event_id").as[Long])
-      .as[(Long, Long)]
-    val counted = events.groupByKey(_._1).mapGroupsWithState(
-      org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-      (user: Long, rows: Iterator[(Long, Long)],
-          state: org.apache.spark.sql.streaming.GroupState[Long]) =>
-        val total = state.getOption.getOrElse(0L) + rows.size
-        state.update(total)
-        (user, total)
-    }.toDF("user_id", "n_events")
-    counted.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Spark 4 state-API-v2 face of the running count: a typed
-    * `StatefulProcessor` with a named `ValueState` var — the successor to
-    * `mapGroupsWithState` (typed state vars, TTL, timers, state
-    * repartition-ability). Requires the RocksDB state store provider;
-    * the spec sets it for the run.
-    */
-  class RunningCountProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long), (Long, Long)] {
-    @transient private var count:
-        org.apache.spark.sql.streaming.ValueState[Long] = _
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      count = getHandle.getValueState[Long]("count",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(user: Long,
-        rows: Iterator[(Long, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(Long, Long)] = {
-      val total = (if (count.exists()) count.get() else 0L) + rows.size
-      count.update(total)
-      Iterator.single((user, total))
-    }
-  }
-
-  /** [[runningCountsStreaming]] re-expressed on `transformWithState`
-    * (state API v2). Same semantics, newer engine surface — both faces are
-    * spec-gated against the same batch ground truth.
-    */
-  def runningCountsTws(spark: SparkSession, dir: String,
-      queryName: String): StreamingQuery = {
-    import spark.implicits._
-    graft.core.GraftFunctions.ensureRegistered(spark)
-    val rawSchema = spark.read.parquet(Tables.path(dir, "events")).schema
-    val events = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .format("parquet")
-      .load(dir)
-      .select(col("user_id").as[Long], col("event_id").as[Long])
-      .as[(Long, Long)]
-    val counted = events.groupByKey(_._1)
-      .transformWithState(new RunningCountProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-      .toDF("user_id", "n_events")
-    counted.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Keyed latest-wins CDC state: on every input the highest-seq event
-    * wins (stale/out-of-order rows can never regress the state), and the
-    * current materialized row is emitted. Emissions are therefore
-    * monotone in seq per key, so "row with max seq per key" over an
-    * update-mode sink IS the materialized table. State: one (seq, op,
-    * payload) triple per live key — the minimum any CDC materializer
-    * holds; deletes stay as tombstones so a late pre-delete update can't
-    * resurrect (readers drop op = D).
-    */
-  private class CdcProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long, String, Double), (Long, Long, String, Double)] {
-    @transient private var last: org.apache.spark.sql.streaming
-      .ValueState[(Long, String, Double)] = _
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      last = getHandle.getValueState[(Long, String, Double)]("last",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.STRING,
-          org.apache.spark.sql.Encoders.scalaDouble),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: Long,
-        rows: Iterator[(Long, Long, String, Double)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(Long, Long, String, Double)] = {
-      var cur = if (last.exists()) last.get() else null
-      rows.foreach { r =>
-        if (cur == null || r._2 > cur._1) cur = (r._2, r._3, r._4)
-      }
-      last.update(cur)
-      Iterator.single((key, cur._1, cur._2, cur._3))
-    }
-  }
-
-  /** Streaming face of [[graft.ops.Merge.applyChangelog]]: a file-source
-    * changelog (key, seq, op, price) materialized by [[CdcProcessor]]
-    * under `transformWithState`, update-mode memory sink. CdcStreamSpec
-    * drives multi-wave, out-of-order changelogs through it and checks the
-    * final state against the batch operator on the same log.
-    */
-  def cdcStreaming(spark: SparkSession, logDir: String,
-      queryName: String): StreamingQuery = {
-    import spark.implicits._
-    graft.core.GraftFunctions.ensureRegistered(spark)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("o_orderkey",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("seq",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("op",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("price",
-        org.apache.spark.sql.types.DoubleType)))
-    val log = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1) // one wave per micro-batch
-      .format("parquet")
-      .load(logDir)
-      .select(col("o_orderkey").as[Long], col("seq").as[Long],
-        col("op").as[String],
-        coalesce(col("price"), lit(0.0)).as[Double])
-      .as[(Long, Long, String, Double)]
-    log.groupByKey(_._1)
-      .transformWithState(new CdcProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-      .toDF("o_orderkey", "seq", "op", "price")
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** S7's streaming analog: the incremental append pipeline as
-    * `foreachBatch` — every micro-batch is one reference "slice", cleaned
-    * (date/time keys derived) and appended to the sink, exactly the
-    * daily-slice + append model of `load_history.py` but driven by the
-    * stream engine's offset tracking instead of a subprocess loop.
-    */
-  def incrementalAppend(spark: SparkSession, dir: String,
-      outPath: String): StreamingQuery = {
-    graft.core.GraftFunctions.ensureRegistered(spark)
-    val rawSchema = spark.read.parquet(Tables.path(dir, "events")).schema
-    val events = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .format("parquet")
-      .load(dir)
-      .transform(Catalog.rebuildTs(_, "ts"))
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val cleaned = batch
-          .withColumn("date_key", graft.core.TimeParse.dateKey(col("ts")))
-          .withColumn("time_key", graft.core.TimeParse.timeKey(col("ts")))
-        graft.io.Sink.append(cleaned, outPath): Unit
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$outPath/_checkpoint")
-      .start()
-  }
-
-  /** Streaming face of the warehouse LOAD-JOB sink: each micro-batch is
-    * one blocking, atomic load job against the `graft-warehouse` table —
-    * the production streaming→warehouse pattern (micro-batch commits are
-    * all-or-nothing manifest generations, so a reader never observes a
-    * torn batch, and a failed batch leaves the table at the last
-    * committed generation while the stream's checkpoint replays it).
-    * `foreachBatch` is the right surface: the DSv2 writer is a batch
-    * writer, and the stream engine's offset tracking supplies exactly
-    * the reference's incremental-slice semantics (`load_history.py`)
-    * with the terminal boundary of `dim_loader.py:23-30`.
-    */
-  def warehouseStreamingLoad(spark: SparkSession, srcDir: String,
-      glob: String, tablePath: String,
-      clusterBy: Option[String] = None): StreamingQuery = {
-    graft.core.GraftFunctions.ensureRegistered(spark)
-    val schema = spark.read.parquet(srcDir).schema
-    val writeOpts = clusterBy.map("clusterBy" -> _).toMap
-    spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", glob)
-      .option("maxFilesPerTrigger", 1) // one load job per source file
-      .format("parquet")
-      .load(srcDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.io.Sink.append(batch, tablePath,
-          format = "graft-warehouse", options = writeOpts): Unit
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$tablePath/_checkpoint")
-      .start()
-  }
-
   /** Streaming face of the warehouse MERGE (round-14): a file-source CDC
     * changelog applied per-trigger through
     * [[graft.sources.WarehouseMerge.applyChangelogCow]] — every
@@ -626,120 +172,6 @@ object Streams {
       }
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .start()
-  }
-
-  /** Streaming face of the warehouse RUNTIME-pruned read (round-13; the
-    * r12 verdict's stretch item): each micro-batch ENRICHES against a
-    * `graft-warehouse` table, and the batch's bounded key set becomes a
-    * STATIC `In` predicate on the warehouse scan — the same zone maps
-    * the batch DPP path consults drop whole files at planning time,
-    * per trigger. `foreachBatch` is the right surface: DPP's runtime
-    * filter needs an exchange-reused build side that a streaming plan
-    * can't give it, while the collected key set reaches the scan builder
-    * as an ordinary pushed filter. The per-generation manifest parse is
-    * cached (`WarehouseMeta.readManifest`), so a steady table costs each
-    * trigger ONE directory listing, never a stats re-parse. Transparent
-    * like every pruning path: the `In` re-applies above the scan and the
-    * join re-applies the exact condition — pruning can only skip IO.
-    * `maxKeys` bounds the collected set; a wider batch falls back to the
-    * unpruned scan (correct, just unpruned — the same refusal discipline
-    * as the aggregate pushdown).
-    */
-  def warehouseEnrichStream(spark: SparkSession, srcDir: String,
-      tablePath: String, batchKey: String, tableKey: String,
-      outPath: String, maxKeys: Int = 10000): StreamingQuery = {
-    graft.core.GraftFunctions.ensureRegistered(spark)
-    val schema = spark.read.parquet(srcDir).schema
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .format("parquet")
-      .load(srcDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val keys = batch.select(batchKey).distinct().limit(maxKeys + 1)
-          .collect().map(_.get(0))
-        val wh = graft.io.Sink.read(spark, tablePath, "graft-warehouse")
-        val pruned =
-          if (keys.length > maxKeys || keys.isEmpty) wh
-          else wh.filter(col(tableKey).isin(keys.toSeq: _*))
-        batch.join(pruned, batch(batchKey) === pruned(tableKey))
-          .drop(pruned(tableKey)) // batch keeps its key; no dup columns
-          .write.mode("append").parquet(outPath): Unit
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$outPath/_checkpoint")
-      .start()
-  }
-
-  /** Ingest-time LSH dedup as a stream: each micro-batch of new documents
-    * computes its banded minhash signatures and semi-joins the corpus's
-    * persisted (band, bh) store — the streaming face of
-    * [[graft.ops.Dedup.incrementalFlags]]. `foreachBatch` is the right
-    * engine surface here (not a stream-static join): the signature build
-    * aggregates per doc, and streaming forbids joins after aggregations,
-    * while foreachBatch runs the full batch planner per micro-batch —
-    * exactly how production ingest dedup ships. The store is materialized
-    * ONCE (localCheckpoint) so micro-batches don't re-derive it; flags
-    * append to `outPath` parquet.
-    */
-  def lshDedupIngest(spark: SparkSession, storeDocs: DataFrame,
-      newDocsDir: String, outPath: String): StreamingQuery = {
-    graft.core.GraftFunctions.ensureRegistered(spark)
-    val store = graft.ops.Dedup.bandedSignatures(storeDocs)
-      .select("band", "bh").distinct()
-      .localCheckpoint()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    spark.readStream
-      .schema(schema)
-      .format("parquet")
-      .load(newDocsDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val hits = graft.ops.Dedup.bandedSignatures(batch)
-          .join(store, Seq("band", "bh"), "left_semi")
-          .select("doc_id").distinct()
-          .withColumn("hit", lit(true))
-        val flags = batch.select("doc_id")
-          .join(hits, Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("hit"), lit(false)).as("is_dup"))
-        flags.write.mode("append").parquet(outPath): Unit
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$outPath/_checkpoint")
-      .start()
-  }
-
-  /** True streaming run over the same parquet: file source -> watermark ->
-    * windowed agg -> memory sink, driven synchronously (used by
-    * StreamingSpec; the reference's daily-batch loop is the degenerate
-    * trigger-once case).
-    */
-  def runStreaming(spark: SparkSession, dir: String,
-      queryName: String): StreamingQuery = {
-    graft.core.GraftFunctions.ensureRegistered(spark)
-    // schema of the raw file (ts arrives as nanos-long under
-    // nanosAsLong; rebuilt below exactly like Tables.read does for batch)
-    val rawSchema = spark.read.parquet(Tables.path(dir, "events")).schema
-    // file stream sources require a directory: point at the sf dir and
-    // glob-filter to the events table only
-    val events = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .format("parquet")
-      .load(dir)
-      .transform(Catalog.rebuildTs(_, "ts"))
-    windowedAgg(events.withWatermark("ts", "10 minutes"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
       .start()
   }
 }

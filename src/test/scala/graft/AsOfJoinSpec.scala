@@ -109,10 +109,7 @@ class IntervalOverlapSpec extends SparkSpec {
     // drive the declared query's exact shape on the fixture via a temp
     // parquet dir so the (SparkSession, dir) contract stays the code
     // under test
-    val dir = "/tmp/graft_ivjoin_fixture"
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+    val dir = scratch("ivjoin_fixture")
     ev.select("user_id", "event_id", "event_type", "ts", "value")
       .write.parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("join_interval_overlap")(spark, dir)

@@ -12,6 +12,8 @@ class CatalogSpec extends SparkSpec {
     assert(cat.tables.keySet === Tables.All.toSet)
     val n = cat.read(spark, "nation").count()
     assert(n === spark.read.parquet(s"$sf/nation.parquet").count())
+    val err = intercept[IllegalArgumentException](cat.spec("missing"))
+    assert(err.getMessage.contains(Tables.All.sorted.mkString(", ")))
   }
 
   test("events binding rebuilds the nanos timestamp column") {
@@ -20,26 +22,8 @@ class CatalogSpec extends SparkSpec {
     assert(ts === org.apache.spark.sql.types.TimestampType)
   }
 
-  test("properties text parses paths, formats, options; overrides win") {
-    val cat = Catalog.fromProperties(
-      s"""table.nation.path   = $sf/nation.parquet
-         |table.nation.format = parquet
-         |table.docs.path     = /nonexistent
-         |table.docs.format   = json
-         |table.docs.option.multiLine = true
-         |""".stripMargin,
-      overrides = Map("table.docs.path" -> s"$sf/documents.parquet",
-        "table.docs.format" -> "parquet"))
-    assert(cat.spec("nation").format === "parquet")
-    assert(cat.spec("docs").path === s"$sf/documents.parquet")
-    assert(cat.spec("docs").options === Map("multiLine" -> "true"))
-    assert(cat.read(spark, "docs").count() > 0)
-    val err = intercept[IllegalArgumentException](cat.spec("missing"))
-    assert(err.getMessage.contains("docs, nation"))
-  }
-
   test("sink writes and reads back through a non-default format") {
-    val out = s"/tmp/graft_catalog_sink_${graft.core.Artifacts.dirTag(sf)}"
+    val out = scratch("catalog_sink")
     val src = Tables.read(spark, sf, "region")
     Sink.overwrite(src, out, format = "json")
     val back = Sink.read(spark, out, format = "json")

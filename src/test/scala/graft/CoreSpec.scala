@@ -119,29 +119,6 @@ class TimeParseSpec extends SparkSpec {
   }
 }
 
-class GuardsSpec extends SparkSpec {
-  import org.apache.spark.sql.types._
-  import spark.implicits._
-
-  test("requireColsOrEmpty: present passes through, absent yields typed empty") {
-    val df = Seq((1L, "a")).toDF("id", "name")
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("name", StringType), StructField("extra", StringType)))
-    assert(graft.core.Guards.requireColsOrEmpty(df, Seq("id", "name"), schema)
-      .count() === 1)
-    val empty = graft.core.Guards.requireColsOrEmpty(df, Seq("missing"), schema)
-    assert(empty.count() === 0 && empty.schema === schema)
-  }
-
-  test("ensureColumn adds only when absent (F10 default fill)") {
-    val df = Seq((1L, "a")).toDF("id", "name")
-    val withDefault = graft.core.Normalize.ensureColumn(df, "city")
-    assert(withDefault.columns.contains("city"))
-    assert(withDefault.select("city").collect().head.getString(0) === "")
-    assert(graft.core.Normalize.ensureColumn(df, "name").columns.length === 2)
-  }
-}
-
 class TopKBySpec extends SparkSpec {
   import spark.implicits._
 

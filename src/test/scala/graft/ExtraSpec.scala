@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Skew
 import graft.sources.RestPages
-import graft.streaming.Streams
 
 class RestSourceSpec extends SparkSpec {
 
@@ -397,6 +396,35 @@ class ExtensionsSpec extends SparkSpec {
       SparkSession.setDefaultSession(base)
     }
   }
+
+  test("an extension-only session resolves every declared function and " +
+    "gates its arity") {
+    val base = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      // a fresh context: extensions apply only to a session built with them
+      val ext = SparkSession.builder()
+        .master("local[2]")
+        .withExtensions(new GraftExtensions)
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+      val reg = ext.sessionState.functionRegistry
+      val missing = graft.core.GraftFunctions.functions.map(_.name).filterNot(n =>
+        reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+      assert(missing.isEmpty, s"not registered by GraftExtensions: $missing")
+      val e = intercept[Exception] {
+        ext.sql("SELECT graft_dot(array(1.0))").collect()
+      }
+      val msg = Option(e.getMessage).getOrElse("") +
+        Option(e.getCause).flatMap(c => Option(c.getMessage)).getOrElse("")
+      assert(msg.contains("Invalid number of arguments for function graft_dot"),
+        s"${e.getClass.getName}: $msg")
+    } finally {
+      SparkSession.setActiveSession(base)
+      SparkSession.setDefaultSession(base)
+    }
+  }
 }
 
 class SlicesSpec extends SparkSpec {
@@ -408,137 +436,6 @@ class SlicesSpec extends SparkSpec {
     assert(graft.io.Slices.year(2023) === ("2023-01-01", "2024-01-01"))
     assert(graft.io.Slices.month(LocalDate.parse("2024-02-15")) ===
       ("2024-02-01", "2024-03-01"))
-  }
-}
-
-class StatefulStreamingSpec extends SparkSpec {
-
-  test("mapGroupsWithState running counts equal the batch group count") {
-    val q = Streams.runningCountsStreaming(spark, sf, "running_counts_out")
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.sql(
-      "SELECT user_id, max(n_events) AS n FROM running_counts_out GROUP BY user_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val batch = graft.core.Tables.read(spark, sf, "events")
-      .groupBy("user_id").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(streamed === batch)
-  }
-
-  test("transformWithState (state API v2) running counts equal the batch group count") {
-    // the v2 state API requires the RocksDB state store provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = Streams.runningCountsTws(spark, sf, "running_counts_tws_out")
-      q.processAllAvailable()
-      q.stop()
-      val streamed = spark.sql(
-        "SELECT user_id, max(n_events) AS n FROM running_counts_tws_out GROUP BY user_id")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val batch = graft.core.Tables.read(spark, sf, "events")
-        .groupBy("user_id").count()
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(streamed === batch)
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-}
-
-class CdcStreamSpec extends SparkSpec {
-  test("streaming CDC materialization equals the batch operator on an out-of-order log") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val dir = scratch("cdc_stream")
-    // wave 1: base inserts for keys 1..20, then updates for even keys
-    val wave1 = ((1L to 20L).map(k => (k, 1L, "I", k * 1.0)) ++
-      (1L to 20L).filter(_ % 2 == 0).map(k => (k, 2L, "U", k * 1.1)))
-      .toDF("o_orderkey", "seq", "op", "price")
-    // wave 2: deletes for k%4==0, STALE seq-1 replays for keys 3/4/8
-    // (must not regress state), resurrection at seq 4 for k%8==0
-    val wave2 = ((1L to 20L).filter(_ % 4 == 0).map(k => (k, 3L, "D", 0.0)) ++
-      Seq((3L, 1L, "I", 3.0), (4L, 1L, "I", 4.0), (8L, 2L, "U", 8.8)) ++
-      (1L to 20L).filter(_ % 8 == 0).map(k => (k, 4L, "I", k + 0.5)))
-      .toDF("o_orderkey", "seq", "op", "price")
-    wave1.coalesce(1).write.parquet(s"$dir/w1")
-    // file source reads a flat dir; write waves as sibling files
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    def promote(sub: String, name: String): Unit = {
-      val f = new java.io.File(s"$dir/$sub").listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      fs.rename(new org.apache.hadoop.fs.Path(f.getPath),
-        new org.apache.hadoop.fs.Path(s"$dir/$name"))
-    }
-    promote("w1", "wave1.parquet")
-    wave2.coalesce(1).write.parquet(s"$dir/w2")
-    promote("w2", "wave2.parquet")
-
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = Streams.cdcStreaming(spark, dir, "cdc_stream_out")
-      q.processAllAvailable()
-      q.stop()
-      // emissions are monotone in seq per key → max-seq row per key is
-      // the materialized state; drop tombstones like any CDC reader
-      val streamed = spark.sql(
-        """SELECT o_orderkey, max_by(struct(op, price), seq) AS s
-          |FROM cdc_stream_out GROUP BY o_orderkey""".stripMargin)
-        .select(col("o_orderkey"), col("s.op"), col("s.price"))
-        .collect().filter(_.getString(1) != "D")
-        .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-      val batch = graft.ops.Merge.applyChangelog(
-        wave1.unionByName(wave2), Seq("o_orderkey"), "seq", "op")
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(streamed === batch)
-      // the waves actually exercised delete + resurrect + stale replay
-      assert(!batch.contains(4L) && batch(8L) === 8.5 && batch(3L) === 3.0)
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-}
-
-class LshIngestSpec extends SparkSpec {
-  test("streaming ingest dedup flags equal the batch incremental operator") {
-    import org.apache.spark.sql.functions._
-    val docs = graft.core.Tables.read(spark, sf, "documents")
-      .select("doc_id", "text")
-    val cut = 300L // docs below are the corpus store; the rest stream in
-    val dir = scratch("lsh_ingest")
-    val out = s"$dir/flags"
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    def promote(sub: String, name: String): Unit = {
-      val f = new java.io.File(s"$dir/$sub").listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      fs.rename(new org.apache.hadoop.fs.Path(f.getPath),
-        new org.apache.hadoop.fs.Path(s"$dir/in/$name"))
-    }
-    new java.io.File(s"$dir/in").mkdirs()
-    docs.filter(col("doc_id") >= cut && col("doc_id") % 2 === 0)
-      .coalesce(1).write.parquet(s"$dir/w1")
-    promote("w1", "wave1.parquet")
-    docs.filter(col("doc_id") >= cut && col("doc_id") % 2 === 1)
-      .coalesce(1).write.parquet(s"$dir/w2")
-    promote("w2", "wave2.parquet")
-
-    val q = Streams.lshDedupIngest(spark,
-      docs.filter(col("doc_id") < cut), s"$dir/in", out)
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.read.parquet(out)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val batch = graft.ops.Dedup.incrementalFlags(docs, col("doc_id") >= cut)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(streamed === batch)
-    // the fixture must actually contain both outcomes
-    assert(streamed.values.exists(identity) &&
-      streamed.values.exists(!_), "fixture has no dup/unique mix")
   }
 }
 

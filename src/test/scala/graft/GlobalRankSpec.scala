@@ -5,12 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.plans.{GlobalRank, GlobalRankRewrite, GlobalRankExec, GlobalShiftExec}
+import graft.plans.{GlobalRank, GlobalRankExec}
 
-/** The native exact global row_number operator: result-identical to the
+/** The native exact global ranking family: result-identical to the
   * single-partition window form on a total order, planned WITHOUT any
-  * WindowExec or single-partition sort, and (under the opt-in conf) the
-  * optimizer rewrite swaps Window-form plans transparently.
+  * WindowExec or single-partition sort.
   */
 class GlobalRankSpec extends SparkSpec {
 
@@ -64,59 +63,6 @@ class GlobalRankSpec extends SparkSpec {
     assert(viol === 0L)
   }
 
-  test("opt-in rewrite: row_number window becomes the native operator") {
-    def windowForm = events.withColumn("rk",
-      row_number().over(Window.orderBy(col("value").desc, col("event_id"))))
-    val off = windowForm.queryExecution.executedPlan
-    assert(off.collectFirst { case e: GlobalRankExec => e }.isEmpty,
-      "rule must be inert without the conf")
-    spark.conf.set(GlobalRankRewrite.Key, "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val qe = windowForm.queryExecution
-      assert(qe.executedPlan.collectFirst {
-        case e: GlobalRankExec => e }.nonEmpty,
-        qe.executedPlan.toString)
-      assert(qe.executedPlan.collectFirst { case w: WindowExec => w }.isEmpty)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      // result-transparent: identical rows to the rule-off plan,
-      // identical schema (row_number's IntegerType survives the rewrite)
-      val on = windowForm.orderBy("event_id").collect().toSeq
-      spark.conf.unset(GlobalRankRewrite.Key)
-      val base = windowForm.orderBy("event_id").collect().toSeq
-      assert(on === base)
-    } finally {
-      spark.conf.unset(GlobalRankRewrite.Key)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-    }
-  }
-
-  test("rewrite leaves partitioned, aggregate, and mixed windows alone") {
-    spark.conf.set(GlobalRankRewrite.Key, "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val partitioned = events.withColumn("rk", row_number().over(
-        Window.partitionBy("user_id").orderBy("event_id")))
-      assert(partitioned.queryExecution.executedPlan.collectFirst {
-        case e: GlobalRankExec => e }.isEmpty)
-      val agg = events.withColumn("s",
-        sum(col("value")).over(Window.orderBy(col("event_id"))))
-      assert(agg.queryExecution.executedPlan.collectFirst {
-        case e: GlobalRankExec => e }.isEmpty,
-        "aggregate windows keep their WindowExec")
-      // malformed conf value: off, never a throw inside the optimizer
-      spark.conf.set(GlobalRankRewrite.Key, "banana")
-      val q = events.withColumn("rk", row_number().over(
-        Window.orderBy(col("event_id"))))
-      assert(q.queryExecution.executedPlan.collectFirst {
-        case e: GlobalRankExec => e }.isEmpty)
-      assert(q.count() > 0)
-    } finally {
-      spark.conf.unset(GlobalRankRewrite.Key)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-    }
-  }
-
   test("tie-aware modes: rank/dense_rank match the window form on " +
     "tie-heavy keys, including across partition boundaries") {
     // value rounded to 1 dp => massive tie groups; user_id (24 values at
@@ -167,7 +113,7 @@ class GlobalRankSpec extends SparkSpec {
   }
 
   test("ntile mode matches Spark's window ntile, including the uneven " +
-    "remainder and n<k edges, and the rewrite covers bare ntile") {
+    "remainder and n<k edges") {
     val o = events.select("event_id", "value")
     for (k <- Seq(7, 10, 32)) { // 10007-ish rows: remainder buckets real
       val want = o.withColumn("b", ntile(k).over(
@@ -183,27 +129,6 @@ class GlobalRankSpec extends SparkSpec {
     assert(GlobalRank.withNTile(tiny, "b", 10, ("event_id", true))
       .select("b").collect().map(_.getLong(0)).sorted.toSeq ===
       Seq(1L, 2L, 3L))
-    // opt-in rewrite covers bare ntile windows
-    spark.conf.set(GlobalRankRewrite.Key, "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val q = o.withColumn("b",
-        ntile(5).over(Window.orderBy(col("event_id"))))
-      assert(q.queryExecution.executedPlan.collectFirst {
-        case e: GlobalRankExec => e }.nonEmpty)
-      assert(q.queryExecution.executedPlan.collectFirst {
-        case w: WindowExec => w }.isEmpty)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      val on = q.orderBy("event_id").collect().toSeq
-      spark.conf.unset(GlobalRankRewrite.Key)
-      val base = o.withColumn("b",
-          ntile(5).over(Window.orderBy(col("event_id"))))
-        .orderBy("event_id").collect().toSeq
-      assert(on === base)
-    } finally {
-      spark.conf.unset(GlobalRankRewrite.Key)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-    }
   }
 
   test("running sum equals the ROWS-frame window form on a total order") {
@@ -295,89 +220,5 @@ class GlobalRankSpec extends SparkSpec {
         ("event_id", true))
       .orderBy("event_id").select("event_id", "lg").collect().toSeq
     assert(gotN === wantN)
-  }
-
-  test("opt-in rewrite covers bare global lag/lead: rule-on ≡ rule-off, " +
-    "native plan, and non-null defaults keep their WindowExec") {
-    def windowForm = events.withColumn("lg",
-        lag(col("value"), 2).over(Window.orderBy(col("event_id"))))
-      .withColumn("ld",
-        lead(col("user_id"), 1).over(Window.orderBy(col("event_id"))))
-    spark.conf.unset(GlobalRankRewrite.Key)
-    val base = windowForm.orderBy("event_id").collect().toSeq
-    spark.conf.set(GlobalRankRewrite.Key, "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val qe = windowForm.queryExecution
-      assert(qe.executedPlan.collect {
-        case e: GlobalShiftExec => e }.size === 2,
-        qe.executedPlan.toString)
-      assert(qe.executedPlan.collectFirst { case w: WindowExec => w }.isEmpty)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      val on = windowForm.orderBy("event_id").collect().toSeq
-      assert(on === base)
-      // a non-null default is NOT bare lag — stays a WindowExec
-      val withDefault = events.withColumn("lg",
-        lag(col("value"), 2, 0.0).over(Window.orderBy(col("event_id"))))
-      assert(withDefault.queryExecution.executedPlan.collectFirst {
-        case e: GlobalShiftExec => e }.isEmpty)
-    } finally {
-      spark.conf.unset(GlobalRankRewrite.Key)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-    }
-  }
-
-  test("opt-in rewrite covers percent_rank/cume_dist: rule-on ≡ rule-off " +
-    "over tie-heavy fixtures, and the plan is native") {
-    def windowForm = {
-      val spec = Window.orderBy(round(col("value"), 1).asc,
-        col("user_id").desc)
-      events.withColumn("pr", percent_rank().over(spec))
-        .withColumn("cd", cume_dist().over(spec))
-    }
-    spark.conf.unset(GlobalRankRewrite.Key)
-    val base = windowForm.orderBy("event_id").collect().toSeq
-    spark.conf.set(GlobalRankRewrite.Key, "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val qe = windowForm.queryExecution
-      val execs = qe.executedPlan.collect { case e: GlobalRankExec => e }
-      assert(execs.size === 2, qe.executedPlan.toString)
-      assert(qe.executedPlan.collectFirst { case w: WindowExec => w }.isEmpty)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      val on = windowForm.orderBy("event_id").collect().toSeq
-      assert(on === base)
-    } finally {
-      spark.conf.unset(GlobalRankRewrite.Key)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-    }
-  }
-
-  test("opt-in rewrite covers rank/dense_rank: rule-on ≡ rule-off over " +
-    "tie-heavy fixtures, and the plan is native") {
-    def windowForm = {
-      val spec = Window.orderBy(round(col("value"), 1).asc,
-        col("user_id").desc)
-      events.withColumn("rk", rank().over(spec))
-        .withColumn("dk", dense_rank().over(spec))
-        .withColumn("rn", row_number().over(
-          Window.orderBy(col("value").desc, col("event_id"))))
-    }
-    spark.conf.unset(GlobalRankRewrite.Key)
-    val base = windowForm.orderBy("event_id").collect().toSeq
-    spark.conf.set(GlobalRankRewrite.Key, "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val qe = windowForm.queryExecution
-      val execs = qe.executedPlan.collect { case e: GlobalRankExec => e }
-      assert(execs.size === 3, qe.executedPlan.toString)
-      assert(qe.executedPlan.collectFirst { case w: WindowExec => w }.isEmpty)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      val on = windowForm.orderBy("event_id").collect().toSeq
-      assert(on === base)
-    } finally {
-      spark.conf.unset(GlobalRankRewrite.Key)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-    }
   }
 }

@@ -20,9 +20,11 @@ class LayoutSpec extends SparkSpec {
       (col("id") / 256).cast("long").as("zy"))
 
   test("z-ordered files prune on the dimension a linear sort ignores") {
-    val zPath = "/tmp/graft_layout_z"
-    val xPath = "/tmp/graft_layout_x"
-    Layout.writeZOrdered(grid, "zx", "zy", zPath, bits, files)
+    val zPath = scratch("layout_z")
+    val xPath = scratch("layout_x")
+    // both grid dims span 0..255, so at 8 bits the scaled key is the raw
+    // Morton interleave
+    Layout.writeZOrderedScaled(grid, "zx", "zy", zPath, bits, files)
     Layout.writeLinearSorted(grid, "zx", xPath, files)
 
     val probes = Seq(17L, 99L, 180L, 240L)
@@ -43,8 +45,8 @@ class LayoutSpec extends SparkSpec {
 
   test("scaled z-order on real unbalanced domains prunes on both dims; linear only on one") {
     import graft.io.StatsIndex
-    val zPath = "/tmp/graft_layout_zs/t"
-    val lPath = "/tmp/graft_layout_ls/t"
+    val zPath = scratch("layout_zs")
+    val lPath = scratch("layout_ls")
     val o = graft.core.Tables.read(spark, sf, "orders")
       .withColumn("o_dkey", unix_date(to_date(col("o_orderdate"))).cast("long"))
       .select(col("o_custkey").cast("long").as("o_custkey"), col("o_dkey"),

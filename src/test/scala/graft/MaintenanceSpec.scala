@@ -6,19 +6,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.Maintenance
-import graft.streaming.Streams
 
-/** Compaction + streaming-dedup invariants (round 4). */
+/** Compaction invariants (round 4). */
 class MaintenanceSpec extends SparkSpec {
-
-  private def cleanDir(name: String): String = {
-    val d = new File(s"/tmp/graft_maint_$name")
-    def rm(f: File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-    }
-    rm(d)
-    d.getPath
-  }
 
   test("compactWarehouse: a fragmented table compacts to an atomic new " +
     "generation — rows identical, metadata serves intact, time travel " +
@@ -26,7 +16,7 @@ class MaintenanceSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.io.Sink
     import graft.sources.{WarehouseMeta, WarehouseScanStats}
-    val path = cleanDir("wh_compact")
+    val path = scratch("wh_compact")
     val t = spark.range(400).select(col("id").as("k"),
       (col("id") % 5).as("v"))
     Sink.overwrite(t.repartition(16, col("k")), path,
@@ -49,7 +39,7 @@ class MaintenanceSpec extends SparkSpec {
       .filter(col("k") >= 0L).count() === 400L)
     assert(WarehouseScanStats.lastPlannedFiles === 16)
     // clustered table: layout invariant survives compaction
-    val cp = cleanDir("wh_compact_cl")
+    val cp = scratch("wh_compact_cl")
     Sink.overwrite(t.repartition(8, col("v")), cp,
       format = "graft-warehouse", options = Map("clusterBy" -> "v"))
     Maintenance.compactWarehouse(spark, cp, targetFiles = 1)
@@ -65,7 +55,7 @@ class MaintenanceSpec extends SparkSpec {
     "time travel keeps the fragmented layout, re-OPTIMIZE is a no-op") {
     import graft.io.Sink
     import graft.sources.{WarehouseMeta, WarehouseScanStats}
-    val path = cleanDir("wh_opt")
+    val path = scratch("wh_opt")
     // 2 big files (10k rows each, ~>100 KB) + 6 micro-batch appends
     // (50 rows each, ~1 KB) — the steady-state streaming-sink shape
     val big = spark.range(20000).select(col("id").as("k"),
@@ -117,7 +107,7 @@ class MaintenanceSpec extends SparkSpec {
     "value per file) and the writer cardinality cap cannot trip") {
     import graft.io.Sink
     import graft.sources.WarehouseMeta
-    val path = cleanDir("wh_opt_cl")
+    val path = scratch("wh_opt_cl")
     val t = spark.range(2000).select(col("id").as("k"),
       (col("id") % 5).as("b"))
     Sink.overwrite(t.repartition(1), path, format = "graft-warehouse",
@@ -141,8 +131,8 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compact: 64 fragments become few files with identical data") {
-    val frag = cleanDir("frag")
-    val out = cleanDir("out")
+    val frag = scratch("frag")
+    val out = scratch("out")
     val ev = Tables.read(spark, sf, "events")
     ev.repartition(64).write.parquet(frag)
     assert(new File(frag).listFiles().count(_.getName.endsWith(".parquet")) == 64)
@@ -157,8 +147,8 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compact: republish over an existing output leaves no debris") {
-    val frag = cleanDir("frag3")
-    val out = cleanDir("out3")
+    val frag = scratch("frag3")
+    val out = scratch("out3")
     val ev = Tables.read(spark, sf, "events")
     ev.repartition(8).write.parquet(frag)
     Maintenance.compact(spark, frag, out, 1L << 30)
@@ -176,8 +166,8 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compact: target bytes controls the output file count") {
-    val frag = cleanDir("frag2")
-    val out = cleanDir("out2")
+    val frag = scratch("frag2")
+    val out = scratch("out2")
     Tables.read(spark, sf, "events").repartition(16).write.parquet(frag)
     val inBytes = new File(frag).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
@@ -185,46 +175,5 @@ class MaintenanceSpec extends SparkSpec {
     val stats = Maintenance.compact(spark, frag, out, target)
     // ceil(inBytes / target) = 4 (±0 — the sizing is driver metadata math)
     assert(stats.outFiles == (inBytes + target - 1) / target)
-  }
-
-  test("streaming dedup suppresses replayed events within the watermark") {
-    import spark.implicits._
-    val dir = cleanDir("stream")
-    new File(dir).mkdirs()
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    val raw = spark.read.parquet(Tables.path(sf, "events"))
-    def wave(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = s"$dir-tmp-$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      new File(tmp).listFiles().filter(_.getName.endsWith(".parquet"))
-        .zipWithIndex.foreach { case (f, i) =>
-          fs.rename(new org.apache.hadoop.fs.Path(f.getPath),
-            new org.apache.hadoop.fs.Path(s"$dir/$name-$i.parquet"))
-        }
-    }
-    // wave 1: the time-wise first half; wave 2: the WHOLE table — i.e.
-    // every wave-1 event replayed (at-least-once delivery) plus the
-    // fresh second half. Splitting on event TIME keeps the fresh rows
-    // ahead of the watermark (an id-based split could land fresh rows
-    // behind it and they'd be dropped as late, not as duplicates).
-    // Replayed rows are suppressed by dedup state (recent) or the
-    // watermark (old) — either way each id is emitted exactly once.
-    // generic over the ts physical type (nanos long vs µs timestamp)
-    val midTs = raw.orderBy("ts").select("ts")
-      .collect()(raw.count().toInt / 2).get(0)
-    wave(raw.filter(col("ts") < lit(midTs)), "w1")
-    val q = Streams.dedupStreaming(spark, dir, "*.parquet", "dedup_out",
-      Tables.path(sf, "events"))
-    try {
-      q.processAllAvailable()
-      wave(raw, "w2")
-      q.processAllAvailable()
-    } finally q.stop()
-    val emitted = spark.sql("SELECT event_id FROM dedup_out")
-      .as[Long].collect()
-    assert(emitted.length == emitted.distinct.length, "duplicate emitted")
-    assert(emitted.toSet ==
-      raw.select("event_id").as[Long].collect().toSet, "missing or extra ids")
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.io.File
-
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -13,11 +11,6 @@ import graft.io.StatsIndex
   * conservatively.
   */
 class StatsIndexSpec extends SparkSpec {
-
-  private def deleteRecursively(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
 
   private def clusteredOrders(path: String): Unit = {
     val o = Tables.read(spark, sf, "orders")
@@ -34,7 +27,7 @@ class StatsIndexSpec extends SparkSpec {
       .first().getDate(0).toLocalDate
 
   test("pruning reads a strict subset of a clustered table's files") {
-    val path = "/tmp/graft_statsidx_clustered"
+    val path = scratch("statsidx_clustered")
     clusteredOrders(path)
     val stats = StatsIndex.build(spark, path, Seq("o_orderdate"))
     val total = stats.count()
@@ -49,11 +42,10 @@ class StatsIndexSpec extends SparkSpec {
     val pruned = StatsIndex.prunedScan(spark, path, stats, "o_orderdate",
       lo, hi)
     assert(pruned.inputFiles.length == picked.size)
-    deleteRecursively(new File(path))
   }
 
   test("pruned scan result equals the unpruned filter exactly") {
-    val path = "/tmp/graft_statsidx_equal"
+    val path = scratch("statsidx_equal")
     clusteredOrders(path)
     val stats = StatsIndex.build(spark, path, Seq("o_orderdate"))
     val d0 = minDate(path)
@@ -65,13 +57,11 @@ class StatsIndexSpec extends SparkSpec {
       .filter(col("o_orderdate") >= lit(lo) && col("o_orderdate") <= lit(hi))
     assert(pruned.count() === full.count())
     assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
-    deleteRecursively(new File(path))
   }
 
   test("incremental append indexes only the new files and equals a full rebuild") {
-    val path = "/tmp/graft_statsidx_incr"
+    val path = scratch("statsidx_incr")
     import spark.implicits._
-    deleteRecursively(new File(path))
     Seq(1L, 5L, 9L).toDF("k").coalesce(1).write.parquet(path)
     val base = StatsIndex.build(spark, path, Seq("k")).localCheckpoint()
     // appending nothing returns the index unchanged (same reference)
@@ -84,11 +74,10 @@ class StatsIndexSpec extends SparkSpec {
     assert(incr.exceptAll(full).isEmpty && full.exceptAll(incr).isEmpty)
     // and the appended index prunes correctly
     assert(StatsIndex.candidateFiles(incr, "k", 25L, 40L).size === 1)
-    deleteRecursively(new File(path))
   }
 
   test("files with null-only stats are kept conservatively; empty prune → empty frame") {
-    val path = "/tmp/graft_statsidx_nulls"
+    val path = scratch("statsidx_nulls")
     import spark.implicits._
     // one file of real values, one file of nulls only
     Seq(Some(10L), Some(20L)).toDF("k").coalesce(1)
@@ -107,13 +96,11 @@ class StatsIndexSpec extends SparkSpec {
     val none = StatsIndex.prunedScan(spark, path, stats, "k", 100L, 200L)
     assert(none.count() === 0)
     assert(none.schema.fieldNames.toSeq === Seq("k"))
-    deleteRecursively(new File(path))
   }
 
   test("partitioned layout: colliding basenames stay distinct and reconstruct") {
-    val path = "/tmp/graft_statsidx_nested"
+    val path = scratch("statsidx_nested")
     import spark.implicits._
-    deleteRecursively(new File(path))
     // one task writing two partition dirs emits the SAME part-00000-<uuid>
     // basename in each — the collision a basename-keyed index can't hold
     (1L to 8L).toDF("k").withColumn("p", col("k") % 2)
@@ -138,13 +125,11 @@ class StatsIndexSpec extends SparkSpec {
     val incr = StatsIndex.append(spark, path, Seq("k"), stats)
     val rebuilt = StatsIndex.build(spark, path, Seq("k"))
     assert(incr.exceptAll(rebuilt).isEmpty && rebuilt.exceptAll(incr).isEmpty)
-    deleteRecursively(new File(path))
   }
 
   test("append diffs a many-file table without collecting the index") {
-    val path = "/tmp/graft_statsidx_many"
+    val path = scratch("statsidx_many")
     import spark.implicits._
-    deleteRecursively(new File(path))
     spark.range(400).toDF("k").repartition(40).write.parquet(path)
     val base = StatsIndex.build(spark, path, Seq("k")).localCheckpoint()
     assert(base.count() === 40)
@@ -157,6 +142,5 @@ class StatsIndexSpec extends SparkSpec {
     // only the 20 fresh files were newly scanned/stat'd; the base rows
     // ride through untouched (same reference via unionByName legs)
     assert(StatsIndex.candidateFiles(incr, "k", 1000L, 1199L).size === 20)
-    deleteRecursively(new File(path))
   }
 }

@@ -1,28 +1,5 @@
 package graft
 
-import graft.streaming.Streams
-
-/** Structured Streaming parity: the same windowedAgg transform must produce
-  * identical aggregates whether driven as a batch or as a file-source stream
-  * (SURVEY §2.8 — the reference's daily-batch model as the degenerate
-  * streaming case).
-  */
-class StreamingSpec extends SparkSpec {
-
-  test("streaming windowed agg equals the batch transform") {
-    val q = Streams.runStreaming(spark, sf, "stream_spec_out")
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.sql(
-      "SELECT window_start, event_type, n_events, sum_value FROM stream_spec_out")
-      .collect().map(_.toSeq).toSet
-    val batch = Streams.windowedAggBatch(spark, sf)
-      .collect().map(_.toSeq).toSet
-    assert(streamed === batch)
-    assert(batch.nonEmpty)
-  }
-}
-
 class StreamingDedupSpec extends SparkSpec {
 
   test("streaming dropDuplicates dedups users across the stream (§2.8 quirk fixed in-stream)") {
@@ -50,26 +27,6 @@ class StreamingDedupSpec extends SparkSpec {
     val distinctUsers = graft.core.Tables.read(spark, sf, "events")
       .select("user_id").distinct().count()
     assert(streamed === distinctUsers)
-  }
-}
-
-class IncrementalAppendSpec extends SparkSpec {
-
-  test("foreachBatch incremental append lands every event with derived keys") {
-    val out = "/tmp/graft_incr_append"
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(out), true)
-    val q = Streams.incrementalAppend(spark, sf, out)
-    q.processAllAvailable()
-    q.stop()
-    val written = spark.read.parquet(out)
-    val src = graft.core.Tables.read(spark, sf, "events")
-    assert(written.count() === src.count())
-    assert(written.columns.contains("date_key") &&
-      written.columns.contains("time_key"))
-    assert(written.filter(org.apache.spark.sql.functions.col("date_key").isNull)
-      .count() === 0)
   }
 }
 

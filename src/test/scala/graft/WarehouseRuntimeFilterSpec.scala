@@ -40,58 +40,37 @@ class WarehouseRuntimeFilterSpec extends SparkSpec {
         s"(planned ${WarehouseScanStats.lastPlannedFiles} of 8)")
   }
 
-  test("streaming enrich prunes files on EVERY trigger and reuses the " +
-    "parsed manifest across triggers") {
-    import spark.implicits._
-    val table = scratch("stream_table")
-    val src = scratch("stream_src")
-    val out = scratch("stream_out")
+  test("two batch scans of one unchanged generation each prune files " +
+    "and the second reuses the parsed manifest") {
+    val table = scratch("table")
     // 8 range-clustered files over k = 0..799
     val fact = spark.range(800).select(col("id").as("k"),
       (col("id") * 3).as("v"))
     Sink.overwrite(fact.repartitionByRange(8, col("k")), table,
       format = "graft-warehouse")
-    // two source files with narrow, disjoint key ranges — each trigger's
-    // key set can only touch 1-2 of the 8 zone files. The part files move
-    // to the source ROOT (flat layout, one file per trigger).
-    val fs = graft.sources.WarehouseMeta.fs(src)
-    var i = 0
-    for ((ks, tag) <- Seq((Seq(10L, 15L, 110L), "a"),
-        (Seq(705L, 790L), "b"))) {
-      ks.toDF("k").withColumn("tag", lit(tag))
-        .repartition(1).write.parquet(s"$src/_stage$i")
-      for (st <- fs.listStatus(new org.apache.hadoop.fs.Path(s"$src/_stage$i"))
-           if st.getPath.getName.endsWith(".parquet"))
-        fs.rename(st.getPath,
-          new org.apache.hadoop.fs.Path(s"$src/s$i.parquet"))
-      fs.delete(new org.apache.hadoop.fs.Path(s"$src/_stage$i"), true)
-      i += 1
-    }
+    // two narrow, disjoint key sets — each scan can touch only 1-2 of the
+    // 8 zone files
+    def scan(keys: Seq[Long]): Seq[(Long, Long)] =
+      Sink.read(spark, table, "graft-warehouse")
+        .filter(col("k").isin(keys: _*)).orderBy("k")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     WarehouseScanStats.plannedLog.clear()
-    val hits0 = graft.sources.WarehouseMeta.manifestCacheHits.get
-    val q = graft.streaming.Streams.warehouseEnrichStream(spark, src,
-      table, batchKey = "k", tableKey = "k", outPath = out)
-    q.awaitTermination()
-    // results identical to the batch join
-    val got = spark.read.parquet(out)
-      .select(col("tag"), col("k"), col("v")).orderBy("k")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    assert(got.toSeq === Seq(("a", 10L, 30L), ("a", 15L, 45L),
-      ("a", 110L, 330L), ("b", 705L, 2115L), ("b", 790L, 2370L)))
-    // EVERY trigger's warehouse scan planned fewer than the 8 files
-    // (and something: the join matched rows), proven from the rolling log
+    assert(scan(Seq(10L, 15L, 110L)) ===
+      Seq((10L, 30L), (15L, 45L), (110L, 330L)))
+    val hits = graft.sources.WarehouseMeta.manifestCacheHits.get
+    assert(scan(Seq(705L, 790L)) === Seq((705L, 2115L), (790L, 2370L)))
     val planned = {
       val it = WarehouseScanStats.plannedLog.iterator()
       val buf = scala.collection.mutable.ArrayBuffer[Int]()
       while (it.hasNext) buf += it.next()
       buf.toSeq
     }
-    assert(planned.size >= 2, s"expected >=2 trigger scans, saw $planned")
+    assert(planned.size >= 2, s"expected >=2 scans, saw $planned")
     assert(planned.forall(p => p >= 1 && p < 8),
-      s"every trigger must prune zone files: $planned")
-    // the second trigger re-planned from the cached manifest parse
-    assert(graft.sources.WarehouseMeta.manifestCacheHits.get > hits0,
-      "a steady generation must not re-parse the manifest per trigger")
+      s"every scan must prune zone files: $planned")
+    // the second scan planned from the cached manifest parse
+    assert(graft.sources.WarehouseMeta.manifestCacheHits.get > hits,
+      "an unchanged generation must not re-parse the manifest per scan")
   }
 
   test("runtime pruning never changes results: full-domain build side " +

@@ -201,9 +201,17 @@ class WarehouseSinkSpec extends SparkSpec {
         new org.apache.hadoop.fs.Path(s"$src/part$i.parquet"))
     }
     val table = scratch("stream_table")
-    val q = graft.streaming.Streams.warehouseStreamingLoad(
-      spark, src, "part*.parquet", table)
-    q.awaitTermination(60000)
+    val q = spark.readStream
+      .schema(spark.read.parquet(s"$src/part1.parquet").schema)
+      .option("pathGlobFilter", "part*.parquet")
+      .option("maxFilesPerTrigger", 1) // one load job per source file
+      .parquet(src)
+      .writeStream.format("graft-warehouse")
+      .option("path", table)
+      .option("checkpointLocation", s"${table}_ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    assert(q.awaitTermination(60000))
     val got = readBack(table).orderBy("id").as[(Long, String)].collect()
     assert(got.toSeq === Seq((1L, "a"), (2L, "b"), (3L, "c")))
     val m = WarehouseMeta.readManifest(table).get

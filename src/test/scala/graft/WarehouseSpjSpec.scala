@@ -160,14 +160,25 @@ class WarehouseSpjSpec extends SparkSpec {
         new org.apache.hadoop.fs.Path(s"$src/part$i.parquet"))
     }
     val table = scratch("stream_table")
-    graft.streaming.Streams.warehouseStreamingLoad(
-      spark, src, "part*.parquet", table, clusterBy = Some("seg"))
-      .awaitTermination(60000)
+    val q = spark.readStream
+      .schema(spark.read.parquet(s"$src/part1.parquet").schema)
+      .option("pathGlobFilter", "part*.parquet")
+      .option("maxFilesPerTrigger", 1) // one load job per source file
+      .parquet(src)
+      .writeStream.format("graft-warehouse")
+      .option("path", table)
+      .option("clusterBy", "seg")
+      .option("checkpointLocation", s"${table}_ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    assert(q.awaitTermination(60000))
     val m = WarehouseMeta.readManifest(table).get
     assert(m.clusterBy === Some("seg"))
     assert(m.files.forall(m.parts.contains),
       "every micro-batch file carries its cluster value")
-    assert(m.generation >= 1L, "one load job per source file")
+    assert(m.generation === 1L, "one load job per source file")
+    for (job <- WarehouseMeta.jobs(table))
+      assert(WarehouseMeta.jobStates(table, job).last === "DONE")
     val got = Sink.read(spark, table, "graft-warehouse")
       .orderBy("id").as[(Long, String)].collect()
     assert(got.toSeq === Seq((1L, "x"), (2L, "y"), (3L, "x"), (4L, "z")))
