@@ -94,9 +94,9 @@ object RankMode {
   * every row. The summary pass is the price of exactness without a second
   * shuffle; it reads shuffle files, it never re-runs the child's lineage.
   *
-  * One face: [[GlobalRank.withRowNumber]] / [[GlobalRank.withRank]] /
-  * [[GlobalRank.withDenseRank]] and the other `GlobalRank.with*` calls
-  * build the plan directly; no optimizer rule rewrites a `Window` into it.
+  * Callers build the plan directly through [[GlobalRank.withRowNumber]],
+  * [[GlobalRank.withRank]], [[GlobalRank.withDenseRank]] and the other
+  * `GlobalRank.with*` calls.
   */
 case class GlobalRankPlan(child: LogicalPlan, order: Seq[SortOrder],
     rankAttr: Attribute, mode: RankMode = RankMode.RowNumber)
