@@ -7,8 +7,10 @@ import org.apache.spark.sql.functions.{coalesce, col, count, hash, lit, sum}
 
 /** The one owner of persisted-artifact decisions: every create-once
   * artifact under `/tmp` (parquet fixtures, blob directories, warehouse
-  * tables) takes its key here, and every artifact graft publishes itself
-  * goes through [[materialize]].
+  * tables) takes its key here and is published by [[materialize]]. A
+  * warehouse table's build runs its whole write sequence (loads, DML,
+  * compaction, the write-side streams) against the stage, so a query
+  * never decides from a table's own manifest whether to build it.
   *
   * Key: `/tmp/graft_<kind>_<dirTag>_<fp>`.
   *  - `dirTag` ([[dirTag]]) is the data dir with every non-alphanumeric
@@ -21,7 +23,7 @@ import org.apache.spark.sql.functions.{coalesce, col, count, hash, lit, sum}
   *    the same row count) therefore resolves a new key.
   *  - `kind` names the artifact AND carries its version. The key sees the
   *    inputs, never the builder code, so a change to what a builder
-  *    writes must rename its kind (`wh_ordcow2` is the second layout of
+  *    writes must rename its kind (`wh_ordcow3` is the third build of
   *    the `wh_ordcow` table); an unchanged kind promises unchanged output.
   */
 object Artifacts {
@@ -54,8 +56,11 @@ object Artifacts {
   /** Get-or-create the artifact at `path`: `build` writes into a fresh
     * `<path>_stage_<nanos>` directory, which is then renamed into place,
     * so readers only ever see a complete artifact. A builder that throws
-    * leaves nothing behind; a builder that loses the rename race to a
-    * concurrent one drops its stage and uses the winner's.
+    * leaves nothing behind, whatever it had committed into the stage; a
+    * builder that loses the rename race to a concurrent one drops its
+    * stage and uses the winner's. A builder must leave no absolute stage
+    * path that a reader needs (warehouse manifests list their files
+    * relative to the table root).
     */
   def materialize(path: String)(build: String => Unit): String = {
     val target = new File(path)

@@ -43,28 +43,19 @@ final case class Catalog(tables: Map[String, TableSpec]) {
     // not) and reuses only METADATA — the DataFrame is a lazy plan, so
     // every action still computes from the parquet files. Bindings whose
     // physical files can change mid-session (warehouse generations, REST
-    // page fixtures) do not resolve through this catalog path.
-    Catalog.scanCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    Catalog.scanCache.computeIfAbsent((spark, t), { _ =>
+    // page fixtures) do not resolve through this catalog path. The memo
+    // key is the full binding, so a rebound name resolves afresh.
+    SessionMemo(spark, s"table_$t") {
       val df = spark.read.format(t.format)
         .options(t.options - Catalog.TsNanosCol)
         .load(t.path)
       t.options.get(Catalog.TsNanosCol).fold(df)(Catalog.rebuildTs(df, _))
-    })
+    }
   }
 }
 
 object Catalog {
   val TsNanosCol = "tsNanosCol"
-
-  /** Resolved-scan memo, keyed by (session, full physical binding).
-    * Sessions come and go in specs — key on the session object so a
-    * stopped session's entries can never serve a live one; the map stays
-    * tiny (≤ sessions × tables) and holds only lazy plans.
-    */
-  private val scanCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, TableSpec),
-      DataFrame]()
 
   /** Adaptive µs-timestamp rebuild for a column whose physical type has
     * varied across testdata generations: parquet TIMESTAMP(NANOS) arrives

@@ -28,7 +28,7 @@ object StatsIndex {
 
   /** One-pass per-file stats for `cols`: row count plus min/max/null-count
     * per column. The output is the index — persist it next to the table
-    * and rebuild on append (or union the new files' stats incrementally).
+    * and rebuild it when the table changes.
     * `file` is the path RELATIVE to the table root — including any
     * partition subdirectories, so a nested/partitioned layout can't
     * collide two `part-00000.parquet` basenames and [[prunedScanMulti]]'s
@@ -67,41 +67,6 @@ object StatsIndex {
       "^" + java.util.regex.Pattern.quote(rootPath + "/"), "")
     df.groupBy(rel.as("file"))
       .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Incremental maintenance for an append-only table: stats for ONLY the
-    * files `existing` hasn't indexed yet, unioned onto it. The diff runs
-    * as a DataFrame ANTI-JOIN of the directory listing against the
-    * index's own `file` column — the index is never collected to the
-    * driver, so a tens-of-millions-of-files index diffs distributedly;
-    * only the FRESH list (bounded by the append size) comes back, and the
-    * scan touches just those files. An append of N files costs one pass
-    * over those N files, never a table rebuild. The recursive directory
-    * listing itself is driver-side — the same metadata-scale planning
-    * every parquet scan and lakehouse commit does. Returns `existing`
-    * unchanged when nothing is new.
-    */
-  def append(spark: SparkSession, path: String, cols: Seq[String],
-      existing: DataFrame): DataFrame = {
-    import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rootPath = fs.makeQualified(root).toUri.getPath
-    val it = fs.listFiles(root, true)
-    val listed = Iterator.continually(it)
-      .takeWhile(_.hasNext).map(_.next().getPath)
-      .filter(_.getName.endsWith(".parquet"))
-      .map(_.toUri.getPath.stripPrefix(rootPath + "/"))
-      .toSeq
-    val fresh =
-      if (listed.isEmpty) Array.empty[String]
-      else listed.toDF("file")
-        .join(existing.select("file"), Seq("file"), "left_anti")
-        .collect().map(_.getString(0))
-    if (fresh.isEmpty) existing
-    else existing.unionByName(statsOf(
-      spark.read.parquet(fresh.map(f => s"$path/$f").toIndexedSeq: _*),
-      cols, rootPath))
   }
 
   /** The files whose [min,max] range intersects EVERY predicate's

@@ -41,9 +41,10 @@ object Maintenance {
     * output stages to a fresh temp dir and publishes by delete + rename:
     * a reader never sees a HALF-compacted mix, but there is a brief
     * no-directory window between the two metadata ops — a table serving
-    * concurrent readers should publish through [[Txn]]'s versioned
-    * manifest instead (immutable files + one atomic manifest swap), which
-    * is why compaction output here is a fresh path, not an in-place swap.
+    * concurrent readers should be a `graft-warehouse` table instead
+    * (immutable files + one atomic manifest swap,
+    * [[optimizeWarehouse]]), which is why compaction output here is a
+    * fresh path, not an in-place swap.
     *
     * Output file count uses the INPUT's compressed bytes as the estimate
     * of the output's (same codec, same data — the error is a few percent

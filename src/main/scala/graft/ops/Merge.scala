@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** MERGE (upsert) semantics over immutable file storage — the engine's
@@ -45,36 +45,5 @@ object Merge {
         .as("__last"))
       .filter(col(s"__last.$opCol") =!= "D")
       .select(keys.map(col) ++ payload.map(c => col(s"__last.$c").as(c)): _*)
-  }
-
-  /** File-backed merge that rewrites ONLY the partitions the changeset
-    * touches (`spark.sql.sources.partitionOverwriteMode=dynamic`): at
-    * 100 TB a daily MERGE rewrites a handful of date partitions, not the
-    * table. The read-back of affected target partitions prunes on
-    * `partCol` (the changeset's distinct partition values are a
-    * broadcast-able semi-join).
-    *
-    * ATOMICITY: dynamic overwrite defers deletion to job commit, but the
-    * commit swaps partition directories one at a time — a failure in that
-    * window can leave SOME affected partitions updated and others not
-    * (each individual partition stays intact; the cross-partition set is
-    * what can tear), and the read-your-own-write on `targetPath` relies on
-    * that deferred deletion. Readers that need a consistent cross-partition
-    * snapshot under concurrent merges should use [[Txn.upsertPartitioned]],
-    * which publishes every merge as one atomic manifest swap.
-    */
-  def upsertPartitioned(spark: SparkSession, targetPath: String,
-      source: DataFrame, keys: Seq[String], partCol: String): Unit = {
-    val affected = source.select(partCol).distinct()
-    val current = spark.read.parquet(targetPath)
-      .join(affected, Seq(partCol), "left_semi")
-    val merged = upsert(current, source, keys)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      merged.write.mode("overwrite").partitionBy(partCol).parquet(targetPath)
-    finally
-      prev.fold(spark.conf.unset("spark.sql.sources.partitionOverwriteMode"))(
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
   }
 }

@@ -544,9 +544,8 @@ object Similarity {
 
   /** Incremental IVF index maintenance: append a new vector batch to a
     * PERSISTED index — assign the batch to the EXISTING centroids and
-    * extend the inverted lists; no refit. The `StatsIndex.append`
-    * discipline applied to ANN: the expensive artifact (the trained
-    * quantizer) is immutable, appends touch only the delta, and
+    * extend the inverted lists; no refit. The expensive artifact (the
+    * trained quantizer) is immutable, appends touch only the delta, and
     * append ≡ full-rebuild-assignment on the same centroids (the
     * correctness gate `ann_ivf_append` hashes exactly that equivalence).
     *

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.core.{Artifacts, Skew, Tables}
+import graft.io.Sink
 import graft.streaming.Streams
 
 /** Source/skew/session operators beyond the core inventory: the DSv2
@@ -259,28 +260,35 @@ object ExtraQueries {
              |CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
              |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-    // Time travel over the versioned-manifest table (ops/Txn): v0 commits
-    // the pre-1995 orders, v1 the full table; the query reads BOTH
-    // versions by manifest — same cost as a latest-read (resolve one
-    // manifest, scan its files; versions are immutable, no log replay).
-    // Fixture is fingerprint-keyed; Txn's atomic manifest publish makes
-    // a half-built fixture invisible and double-builders fail loudly.
+    // Time travel over the warehouse table format: generation 0 loads the
+    // pre-1998 orders, generation 1 appends the rest; the query reads BOTH
+    // generations through the `generation` read option — same cost as a
+    // latest-read (resolve one manifest, scan its files; generations are
+    // immutable, no log replay). The fixture is published whole by
+    // Artifacts.materialize, so a half-built table is never read.
     QueryDef("scan_time_travel",
       (s, dir) => {
         val o = Tables.read(s, dir, "orders")
+          .select("o_orderdate", "o_totalprice")
+        val pre = coalesce(year(col("o_orderdate")) < 1998, lit(false))
         // split year in the kind: the fixture layout is a function of it
-        val root = Artifacts.key("tt_y1998", dir, o)
-        if (graft.ops.Txn.latestVersion(root) < 1) {
-          if (graft.ops.Txn.latestVersion(root) < 0)
-            graft.ops.Txn.commit(s, root,
-              o.filter(year(col("o_orderdate")) < 1998), "o_orderpriority")
-          graft.ops.Txn.commit(s, root, o, "o_orderpriority")
-        }
-        def snap(v: Int) = graft.ops.Txn.readVersion(s, root, v)
+        val root =
+          Artifacts.materialize(Artifacts.key("wh_ordtt1998", dir, o)) {
+            stage =>
+              Sink.overwrite(o.filter(pre).select("o_totalprice"), stage,
+                format = "graft-warehouse")
+              // a zero-row append commits no generation to read back
+              require(Sink.append(o.filter(!pre).select("o_totalprice"),
+                stage, format = "graft-warehouse") > 0,
+                "scan_time_travel needs orders from 1998 on: generation 1 " +
+                  "appends them")
+          }
+        def snap(g: Long) = Sink.read(s, root, "graft-warehouse",
+            Map("generation" -> g.toString))
           .agg(count(lit(1)).as("n_orders"),
             sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
               .as("total"))
-          .select(lit(v.toLong).as("version"), col("n_orders"), col("total"))
+          .select(lit(g).as("version"), col("n_orders"), col("total"))
         snap(0).unionByName(snap(1)).orderBy("version")
       },
       Some("""SELECT CAST(0 AS BIGINT) AS version, count(*) AS n_orders,

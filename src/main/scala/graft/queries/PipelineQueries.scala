@@ -862,8 +862,8 @@ object PipelineQueries {
     // Incremental IVF index maintenance (round-7): a 10% batch
     // (vec_id % 10 = 9) appends onto an index built from the other 90% —
     // quantizer fit ONCE on the base corpus, batch assigned to the
-    // FROZEN centroids, lists extended, no refit (Similarity.ivfAppend;
-    // the StatsIndex.append discipline applied to ANN). The oracle
+    // FROZEN centroids, lists extended, no refit (Similarity.ivfAppend:
+    // appends touch only the delta). The oracle
     // assigns EVERY vector against the base-trained centroids in one
     // pass, so the hash gate proves append ≡ full-rebuild-assignment on
     // the same quantizer — the invariant that makes no-refit appends

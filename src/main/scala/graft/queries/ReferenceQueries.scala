@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -405,7 +405,8 @@ object ReferenceQueries {
              |WHERE rank <= 3 ORDER BY n_name, rank""".stripMargin)),
 
     // S5/S6: append-mode sink (dim_loader.py:23-30) — write the date dim to a
-    // scratch path, read it back. The oracle is the generator's oracle: the
+    // scratch path (truncate-install the first half-year, append the
+    // second), read it back. The oracle is the generator's oracle: the
     // sink must round-trip exactly.
     QueryDef("sink_append",
       (s, dir) => {
@@ -413,10 +414,8 @@ object ReferenceQueries {
         // at different scale factors never clobber each other mid-read
         val path =
           s"/tmp/graft_sink_demo_${Artifacts.dirTag(dir)}"
-        val fs = org.apache.hadoop.fs.FileSystem
-          .get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(path), true)
-        Sink.append(Generators.dateDim(s, "2024-01-01", "2024-12-31"), path)
+        Sink.overwrite(Generators.dateDim(s, "2024-01-01", "2024-06-30"), path)
+        Sink.append(Generators.dateDim(s, "2024-07-01", "2024-12-31"), path)
         Sink.read(s, path).orderBy("date_key")
       },
       Some(dateDimOracle)),
@@ -476,12 +475,13 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_orderpriority", "o_totalprice")
-        val path = Artifacts.key("wh_ordstr", dir, orders)
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-          Sink.overwrite(
-            orders.repartitionByRange(8, col("o_orderpriority"),
-              col("o_orderkey")),
-            path, format = "graft-warehouse")
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_ordstr2", dir, orders)) {
+            Sink.overwrite(
+              orders.repartitionByRange(8, col("o_orderpriority"),
+                col("o_orderkey")),
+              _, format = "graft-warehouse")
+          }
         Sink.read(s, path, "graft-warehouse")
           .filter(col("o_orderpriority") === "1-URGENT")
           .agg(count(lit(1)).as("n_orders"),
@@ -535,11 +535,12 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_orderpriority", "o_custkey")
-        val path = Artifacts.key("wh_ordgrp", dir, orders)
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-          Sink.overwrite(orders.repartition(8, col("o_orderpriority")),
-            path, format = "graft-warehouse",
-            options = Map("clusterBy" -> "o_orderpriority"))
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_ordgrp2", dir, orders)) {
+            Sink.overwrite(orders.repartition(8, col("o_orderpriority")),
+              _, format = "graft-warehouse",
+              options = Map("clusterBy" -> "o_orderpriority"))
+          }
         Sink.read(s, path, "graft-warehouse")
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n_orders"),
@@ -568,15 +569,15 @@ object ReferenceQueries {
         val orders = Tables.read(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"),
             pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        val path = Artifacts.key("wh_orddel", dir, orders)
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-          Sink.overwrite(orders.repartition(8, col("bucket")), path,
-            format = "graft-warehouse",
-            options = Map("clusterBy" -> "bucket"))
-        if (graft.sources.WarehouseMeta.readManifest(path)
-            .exists(_.disposition != "DELETE"))
-          graft.sources.WarehouseDelete.deleteWhere(path,
-            org.apache.spark.sql.sources.EqualTo("bucket", 3L))
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_orddel2", dir, orders)) {
+            stage =>
+              Sink.overwrite(orders.repartition(8, col("bucket")), stage,
+                format = "graft-warehouse",
+                options = Map("clusterBy" -> "bucket"))
+              graft.sources.WarehouseDelete.deleteWhere(stage,
+                org.apache.spark.sql.sources.EqualTo("bucket", 3L))
+          }
         Sink.read(s, path, "graft-warehouse")
           .agg(count(lit(1)).as("n_orders"),
             min(col("o_orderkey")).as("min_key"),
@@ -643,31 +644,30 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordopt", dir, orders)
-        // fixture = the steady-state streaming-sink shape: 2 big load
-        // files + 6 per-trigger micro-batch appends (tiny residue
-        // slices; skip-if-empty may drop a sparse residue — harmless,
-        // the table always holds EXACTLY the orders rows)
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty) {
-          Sink.overwrite(orders.filter(col("o_orderkey") % 1000 >= 6)
-            .repartition(2), path, format = "graft-warehouse")
-          for (i <- 0 until 6)
-            Sink.append(orders.filter(col("o_orderkey") % 1000 === i)
-              .coalesce(1), path, format = "graft-warehouse")
-        }
-        // bin-packing OPTIMIZE (round-14): the threshold sits at half the
-        // biggest file, so the 2 load files provably carry BY REFERENCE
-        // and only the micro-batch tail rewrites — n_files = 3 proves it
-        // (a whole-table rewrite could never leave the 2 originals)
-        if (graft.sources.WarehouseMeta.readManifest(path)
-            .exists(_.disposition != "OPTIMIZE")) {
-          val m = graft.sources.WarehouseMeta.readManifest(path).get
-          val fsys = graft.sources.WarehouseMeta.fs(path)
-          val maxLen = m.files.map(f => fsys.getFileStatus(
-            new org.apache.hadoop.fs.Path(path, f)).getLen).max
-          graft.ops.Maintenance.optimizeWarehouse(s, path,
-            smallBytes = maxLen / 2, targetBytes = 128L << 20)
-        }
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_ordopt2", dir, orders)) {
+            stage =>
+              // the steady-state streaming-sink shape: 2 big load files +
+              // 6 per-trigger micro-batch appends (tiny residue slices; a
+              // zero-row append commits nothing — harmless, the table
+              // always holds EXACTLY the orders rows)
+              Sink.overwrite(orders.filter(col("o_orderkey") % 1000 >= 6)
+                .repartition(2), stage, format = "graft-warehouse")
+              for (i <- 0 until 6)
+                Sink.append(orders.filter(col("o_orderkey") % 1000 === i)
+                  .coalesce(1), stage, format = "graft-warehouse")
+              // bin-packing OPTIMIZE (round-14): the threshold sits at half
+              // the biggest file, so the 2 load files provably carry BY
+              // REFERENCE and only the micro-batch tail rewrites —
+              // n_files = 3 proves it (a whole-table rewrite could never
+              // leave the 2 originals)
+              val m = graft.sources.WarehouseMeta.readManifest(stage).get
+              val fsys = graft.sources.WarehouseMeta.fs(stage)
+              val maxLen = m.files.map(f => fsys.getFileStatus(
+                new Path(stage, f)).getLen).max
+              graft.ops.Maintenance.optimizeWarehouse(s, stage,
+                smallBytes = maxLen / 2, targetBytes = 128L << 20)
+          }
         val nFiles =
           graft.sources.WarehouseMeta.readManifest(path).get.files.size
         Sink.read(s, path, "graft-warehouse")
@@ -699,20 +699,22 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordvac", dir, orders)
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty) {
-          Sink.overwrite(orders.repartition(4), path,
-            format = "graft-warehouse")
-          Sink.append(orders.filter(col("o_orderkey") % 1009 === 0)
-            .coalesce(1), path, format = "graft-warehouse")
-          graft.ops.Maintenance.compactWarehouse(s, path, targetFiles = 2)
-        }
-        if (graft.sources.WarehouseMeta.generations(path).size > 1)
-          graft.ops.Maintenance.vacuumWarehouse(path, keepGenerations = 1)
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_ordvac2", dir, orders)) {
+            stage =>
+              Sink.overwrite(orders.repartition(4), stage,
+                format = "graft-warehouse")
+              Sink.append(orders.filter(col("o_orderkey") % 1009 === 0)
+                .coalesce(1), stage, format = "graft-warehouse")
+              graft.ops.Maintenance.compactWarehouse(s, stage,
+                targetFiles = 2)
+              graft.ops.Maintenance.vacuumWarehouse(stage,
+                keepGenerations = 1)
+          }
         val m = graft.sources.WarehouseMeta.readManifest(path).get
         val fsys = graft.sources.WarehouseMeta.fs(path)
         val nDisk = fsys.listStatus(
-          new org.apache.hadoop.fs.Path(path, "data")).toSeq
+          new Path(path, "data")).toSeq
           .filter(_.isDirectory)
           .map(d => fsys.listStatus(d.getPath).count(_.isFile)).sum
         Sink.read(s, path, "graft-warehouse")
@@ -753,23 +755,18 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordcow2", dir, orders)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val w = maxK / 8 + 1
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-          Sink.overwrite(
-            orders.withColumn("band", expr(s"o_orderkey div $w"))
-              .repartition(1),
-            path, format = "graft-warehouse",
-            options = Map("clusterBy" -> "band"))
-        val b1 = orders.filter(expr(s"o_orderkey div $w") === 1)
-          .agg(min(col("o_orderkey")), max(col("o_orderkey"))).head()
-        val cut = (b1.getLong(0) + b1.getLong(1)) / 2
-        if (graft.sources.WarehouseMeta.readManifest(path)
-            .exists(!_.disposition.startsWith("DELETE")))
-          graft.sources.WarehouseCow.deleteWhereCow(s, path,
-            org.apache.spark.sql.sources.LessThanOrEqual(
-              "o_orderkey", cut))
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_ordcow3", dir, orders)) {
+            stage =>
+              val (_, w) = keyBands(orders)
+              loadBands(banded(orders, w), stage)
+              val Seq(lo, hi) = keyBounds(
+                orders.filter(expr(s"o_orderkey div $w") === 1),
+                min(col("o_orderkey")), max(col("o_orderkey")))
+              graft.sources.WarehouseCow.deleteWhereCow(s, stage,
+                org.apache.spark.sql.sources.LessThanOrEqual(
+                  "o_orderkey", (lo + hi) / 2))
+          }
         Sink.read(s, path, "graft-warehouse")
           .agg(count(lit(1)).as("n_orders"),
             min(col("o_orderkey")).as("min_key"),
@@ -806,32 +803,26 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordmrg2", dir, orders)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val w = maxK / 8 + 1
-        def banded(df: org.apache.spark.sql.DataFrame) =
-          df.withColumn("band", expr(s"o_orderkey div $w"))
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-          Sink.overwrite(banded(orders).repartition(1), path,
-            format = "graft-warehouse",
-            options = Map("clusterBy" -> "band"))
-        if (graft.sources.WarehouseMeta.readManifest(path)
-            .exists(_.disposition != "MERGE")) {
-          val upd = banded(orders.filter(col("o_orderkey") % 97 === 0 &&
-            expr(s"o_orderkey div $w") <= 2)
-            .withColumn("o_totalprice", col("o_totalprice") + 1000.0))
-            .withColumn("op", lit("U")).withColumn("seq", lit(1L))
-          val del = banded(orders.filter(col("o_orderkey") % 131 === 0 &&
-            expr(s"o_orderkey div $w") <= 2))
-            .withColumn("op", lit("D")).withColumn("seq", lit(2L))
-          val ins = banded(orders.filter(col("o_orderkey") % 201 === 0)
-            .withColumn("o_orderkey", col("o_orderkey") + maxK + 1L)
-            .withColumn("o_totalprice", lit(1.0)))
-            .withColumn("op", lit("I")).withColumn("seq", lit(1L))
-          graft.sources.WarehouseMerge.applyChangelogCow(s, path,
-            upd.unionByName(del).unionByName(ins),
-            key = "o_orderkey", seqCol = "seq", opCol = "op")
-        }
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_ordmrg3", dir, orders)) {
+            stage =>
+              val (maxK, w) = keyBands(orders)
+              loadBands(banded(orders, w), stage)
+              val upd = banded(orders.filter(col("o_orderkey") % 97 === 0 &&
+                expr(s"o_orderkey div $w") <= 2)
+                .withColumn("o_totalprice", col("o_totalprice") + 1000.0), w)
+                .withColumn("op", lit("U")).withColumn("seq", lit(1L))
+              val del = banded(orders.filter(col("o_orderkey") % 131 === 0 &&
+                expr(s"o_orderkey div $w") <= 2), w)
+                .withColumn("op", lit("D")).withColumn("seq", lit(2L))
+              val ins = banded(orders.filter(col("o_orderkey") % 201 === 0)
+                .withColumn("o_orderkey", col("o_orderkey") + maxK + 1L)
+                .withColumn("o_totalprice", lit(1.0)), w)
+                .withColumn("op", lit("I")).withColumn("seq", lit(1L))
+              graft.sources.WarehouseMerge.applyChangelogCow(s, stage,
+                upd.unionByName(del).unionByName(ins),
+                key = "o_orderkey", seqCol = "seq", opCol = "op")
+          }
         Sink.read(s, path, "graft-warehouse")
           .agg(count(lit(1)).as("n_rows"),
             min(col("o_orderkey")).as("min_key"),
@@ -875,38 +866,29 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordcdc", dir, orders)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val w = maxK / 8 + 1
-        def banded(df: org.apache.spark.sql.DataFrame) =
-          df.withColumn("band", expr(s"o_orderkey div $w"))
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-          Sink.overwrite(banded(orders).repartition(1), path,
-            format = "graft-warehouse",
-            options = Map("clusterBy" -> "band"))
-        val logDir = s"$path/_cdc_log"
-        if (!graft.sources.WarehouseMeta.fs(path)
-            .exists(new org.apache.hadoop.fs.Path(logDir))) {
-          def wv(df: org.apache.spark.sql.DataFrame, op: String, seq: Long,
-              mode: String): Unit =
-            df.withColumn("op", lit(op)).withColumn("seq", lit(seq))
-              .coalesce(1).write.mode(mode).parquet(logDir)
-          wv(banded(orders.filter(col("o_orderkey") % 89 === 0)
-            .withColumn("o_totalprice", col("o_totalprice") + 2000.0)),
-            "U", 1L, "overwrite")
-          wv(banded(orders.filter(col("o_orderkey") % 127 === 0)),
-            "D", 2L, "append")
-          wv(banded(orders.filter(col("o_orderkey") % 211 === 0)
-            .withColumn("o_orderkey", col("o_orderkey") + maxK + 1L)
-            .withColumn("o_totalprice", lit(2.0))),
-            "I", 3L, "append")
-        }
-        // always drive the stream: with no unseen changelog files this is
-        // a zero-trigger no-op (replay-safe), and after a partial crash
-        // it completes the remaining waves from the checkpoint
-        graft.streaming.Streams.warehouseMergeStream(s, logDir, path,
-          key = "o_orderkey", seqCol = "seq", opCol = "op",
-          checkpoint = s"$path/_cdc_checkpoint").awaitTermination()
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_ordcdc2", dir, orders)) {
+            stage =>
+              val (maxK, w) = keyBands(orders)
+              loadBands(banded(orders, w), stage)
+              val logDir = s"$stage/_cdc_log"
+              def wv(df: DataFrame, op: String, seq: Long,
+                  mode: String): Unit =
+                df.withColumn("op", lit(op)).withColumn("seq", lit(seq))
+                  .coalesce(1).write.mode(mode).parquet(logDir)
+              wv(banded(orders.filter(col("o_orderkey") % 89 === 0)
+                .withColumn("o_totalprice", col("o_totalprice") + 2000.0), w),
+                "U", 1L, "overwrite")
+              wv(banded(orders.filter(col("o_orderkey") % 127 === 0), w),
+                "D", 2L, "append")
+              wv(banded(orders.filter(col("o_orderkey") % 211 === 0)
+                .withColumn("o_orderkey", col("o_orderkey") + maxK + 1L)
+                .withColumn("o_totalprice", lit(2.0)), w),
+                "I", 3L, "append")
+              graft.streaming.Streams.warehouseMergeStream(s, logDir, stage,
+                key = "o_orderkey", seqCol = "seq", opCol = "op",
+                checkpoint = s"$stage/_cdc_checkpoint").awaitTermination()
+          }
         Sink.read(s, path, "graft-warehouse")
           .agg(count(lit(1)).as("n_rows"),
             min(col("o_orderkey")).as("min_key"),
@@ -945,18 +927,9 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordstream", dir, orders)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val w = maxK / 8 + 1
-        val banded = orders.withColumn("band", expr(s"o_orderkey div $w"))
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty) {
-          Sink.overwrite(banded.filter(col("band") <= 2).repartition(2),
-            path, format = "graft-warehouse")
-          Sink.append(banded.filter(col("band").between(3, 5))
-            .repartition(2), path, format = "graft-warehouse")
-          Sink.append(banded.filter(col("band") >= 6).repartition(2),
-            path, format = "graft-warehouse")
-        }
+        val path = Artifacts.materialize(
+            Artifacts.key("wh_ordstream2", dir, orders))(
+          threeGenerations(orders, _))
         val qn = s"wh_stream_src_${java.util.UUID.randomUUID()
           .toString.replace("-", "")}"
         // the band domain is ≤9 values by construction at every SF —
@@ -1003,20 +976,11 @@ object ReferenceQueries {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
         val fp = Artifacts.fingerprint(orders)
-        val path = Artifacts.key("wh_ordmrg", dir, orders)
         val cat = s"gmrg_$fp"
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.warehouse", path)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val w = maxK / 8 + 1
-        val tbl = s"$cat.db.orders"
-        val done = graft.sources.WarehouseMeta
-          .readManifest(s"$path/db/orders")
-          .exists(_.disposition == "UPDATE_COW")
-        if (!done) {
-          val fs = graft.sources.WarehouseMeta.fs(path)
-          fs.delete(new org.apache.hadoop.fs.Path(path), true)
+        val path = Artifacts.key("wh_catmrg", dir, orders)
+        Artifacts.materialize(path) { stage =>
+          val tbl = graftCatalog(s, cat + stage.stripPrefix(path), stage)
+          val (maxK, w) = keyBands(orders)
           s.sql(s"CREATE TABLE $tbl (o_orderkey BIGINT, " +
             "o_totalprice DOUBLE, band BIGINT) PARTITIONED BY (band)")
           val vw = s"ord_mrg_$fp"
@@ -1046,6 +1010,7 @@ object ReferenceQueries {
           s.sql(s"UPDATE $tbl SET o_totalprice = o_totalprice + 1000.0 " +
             "WHERE band = 0")
         }
+        val tbl = graftCatalog(s, cat, path)
         s.sql(
           s"""SELECT band, count(*) AS n_rows,
              |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
@@ -1093,26 +1058,19 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordmor", dir, orders)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val w = maxK / 8 + 1
-        val thr = maxK - w / 2
-        val banded = orders.withColumn("band", expr(s"o_orderkey div $w"))
-        val done = graft.sources.WarehouseMeta.readManifest(path)
-          .exists(m => m.generation == 2L && m.disposition == "DELETE_DV")
-        if (!done) {
-          val fs = graft.sources.WarehouseMeta.fs(path)
-          fs.delete(new org.apache.hadoop.fs.Path(path), true)
-          Sink.overwrite(banded.repartition(1), path,
-            format = "graft-warehouse",
-            options = Map("clusterBy" -> "band"))
-          // tier 1: zone-provable full band -> metadata drop
-          graft.sources.WarehouseDv.deleteWhereDv(s, path,
-            org.apache.spark.sql.sources.EqualTo("band", 0L))
-          // tier 2: straddles only the top band's file -> bitmap commit
-          graft.sources.WarehouseDv.deleteWhereDv(s, path,
-            org.apache.spark.sql.sources.GreaterThan("o_orderkey", thr))
-        }
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_ordmor2", dir, orders)) {
+            stage =>
+              val (maxK, w) = keyBands(orders)
+              loadBands(banded(orders, w), stage)
+              // tier 1: zone-provable full band -> metadata drop
+              graft.sources.WarehouseDv.deleteWhereDv(s, stage,
+                org.apache.spark.sql.sources.EqualTo("band", 0L))
+              // tier 2: straddles only the top band's file -> bitmap commit
+              graft.sources.WarehouseDv.deleteWhereDv(s, stage,
+                org.apache.spark.sql.sources.GreaterThan("o_orderkey",
+                  maxK - w / 2))
+          }
         Sink.read(s, path, "graft-warehouse")
           .groupBy("band")
           .agg(count(lit(1)).as("n_rows"),
@@ -1151,22 +1109,15 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordumor", dir, orders)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val w = maxK / 8 + 1
-        val banded = orders.withColumn("band", expr(s"o_orderkey div $w"))
-        val done = graft.sources.WarehouseMeta.readManifest(path)
-          .exists(_.disposition == "UPDATE_MOR")
-        if (!done) {
-          val fs = graft.sources.WarehouseMeta.fs(path)
-          fs.delete(new org.apache.hadoop.fs.Path(path), true)
-          Sink.overwrite(banded.repartition(1), path,
-            format = "graft-warehouse",
-            options = Map("clusterBy" -> "band"))
-          graft.sources.WarehouseDv.updateWhereMor(s, path,
-            org.apache.spark.sql.sources.LessThanOrEqual("band", 1L),
-            Map("o_totalprice" -> "o_totalprice + 500.0d"))
-        }
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_ordumor2", dir, orders)) {
+            stage =>
+              val (_, w) = keyBands(orders)
+              loadBands(banded(orders, w), stage)
+              graft.sources.WarehouseDv.updateWhereMor(s, stage,
+                org.apache.spark.sql.sources.LessThanOrEqual("band", 1L),
+                Map("o_totalprice" -> "o_totalprice + 500.0d"))
+          }
         Sink.read(s, path, "graft-warehouse")
           .groupBy("band")
           .agg(count(lit(1)).as("n_rows"),
@@ -1203,28 +1154,9 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordcdf", dir, orders)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val w = maxK / 8 + 1
-        val banded = orders.withColumn("band", expr(s"o_orderkey div $w"))
-        val done = graft.sources.WarehouseMeta.readManifest(path)
-          .exists(m => m.generation == 3L && m.disposition == "DELETE")
-        if (!done) {
-          // wipe any partial build: the feed needs the exact 4-gen tour
-          val fs = graft.sources.WarehouseMeta.fs(path)
-          fs.delete(new org.apache.hadoop.fs.Path(path), true)
-          Sink.overwrite(banded.filter(col("band") <= 3).repartition(1),
-            path, format = "graft-warehouse",
-            options = Map("clusterBy" -> "band"))
-          Sink.append(banded.filter(col("band") >= 4).repartition(1),
-            path, format = "graft-warehouse",
-            options = Map("clusterBy" -> "band"))
-          graft.sources.WarehouseCow.updateWhereCow(s, path,
-            org.apache.spark.sql.sources.LessThanOrEqual("band", 1L),
-            Map("o_totalprice" -> "o_totalprice + 500.0d"))
-          graft.sources.WarehouseDelete.deleteWhere(path,
-            org.apache.spark.sql.sources.EqualTo("band", 0L))
-        }
+        val path = Artifacts.materialize(
+            Artifacts.key("wh_ordcdf2", dir, orders))(
+          crudTour(s, orders, _, update = true))
         graft.sources.WarehouseCdc.tableChanges(s, path, 0L, 3L)
           .groupBy(col("_change_type").as("change_type"),
             col("_commit_generation").as("gen"))
@@ -1272,14 +1204,12 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordmeta", dir, orders)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val w = maxK / 8 + 1
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-          Sink.overwrite(orders
-            .withColumn("band", expr(s"o_orderkey div $w"))
-            .repartition(1), path, format = "graft-warehouse",
-            options = Map("clusterBy" -> "band"))
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_ordmeta2", dir, orders)) {
+            stage =>
+              val (_, w) = keyBands(orders)
+              loadBands(banded(orders, w), stage)
+          }
         Sink.read(s, path, "graft-warehouse")
           .select(col("band"), col("_file"), col("_pos"))
           .groupBy("band")
@@ -1311,27 +1241,9 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordhist", dir, orders)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val w = maxK / 8 + 1
-        val banded = orders.withColumn("band", expr(s"o_orderkey div $w"))
-        val done = graft.sources.WarehouseMeta.readManifest(path)
-          .exists(m => m.generation == 3L && m.disposition == "DELETE")
-        if (!done) {
-          val fs = graft.sources.WarehouseMeta.fs(path)
-          fs.delete(new org.apache.hadoop.fs.Path(path), true)
-          Sink.overwrite(banded.filter(col("band") <= 3).repartition(1),
-            path, format = "graft-warehouse",
-            options = Map("clusterBy" -> "band"))
-          Sink.append(banded.filter(col("band") >= 4).repartition(1),
-            path, format = "graft-warehouse",
-            options = Map("clusterBy" -> "band"))
-          graft.sources.WarehouseCow.updateWhereCow(s, path,
-            org.apache.spark.sql.sources.LessThanOrEqual("band", 1L),
-            Map("o_totalprice" -> "o_totalprice + 500.0d"))
-          graft.sources.WarehouseDelete.deleteWhere(path,
-            org.apache.spark.sql.sources.EqualTo("band", 0L))
-        }
+        val path = Artifacts.materialize(
+            Artifacts.key("wh_ordhist2", dir, orders))(
+          crudTour(s, orders, _, update = true))
         graft.sources.WarehouseCdc.history(s, path)
           .select("generation", "disposition", "n_live_rows")
           .orderBy("generation")
@@ -1372,18 +1284,17 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordbloom", dir, orders)
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-          Sink.overwrite(orders.repartition(8), path,
-            format = "graft-warehouse",
-            options = Map("bloomFilters" -> "o_orderkey",
-              "bloomBits" -> (1 << 21).toString))
-        val Array(kMin, kMax) = orders
-          .agg(min(col("o_orderkey")), max(col("o_orderkey"))).head() match {
-          case r => Array(r.getLong(0), r.getLong(1))
-        }
-        val kMid = orders.filter(col("o_orderkey") <= kMax / 2)
-          .agg(max(col("o_orderkey"))).head().getLong(0)
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_ordbloom2", dir, orders)) {
+            Sink.overwrite(orders.repartition(8), _,
+              format = "graft-warehouse",
+              options = Map("bloomFilters" -> "o_orderkey",
+                "bloomBits" -> (1 << 21).toString))
+          }
+        val Seq(kMin, kMax) =
+          keyBounds(orders, min(col("o_orderkey")), max(col("o_orderkey")))
+        val Seq(kMid) = keyBounds(
+          orders.filter(col("o_orderkey") <= kMax / 2), max(col("o_orderkey")))
         Sink.read(s, path, "graft-warehouse")
           .filter(col("o_orderkey")
             .isin(kMin, kMid, kMax, kMax + 12345L)) // last one: proven-absent
@@ -1413,24 +1324,9 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordscdf", dir, orders)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val w = maxK / 8 + 1
-        val banded = orders.withColumn("band", expr(s"o_orderkey div $w"))
-        val done = graft.sources.WarehouseMeta.readManifest(path)
-          .exists(m => m.generation == 2L && m.disposition == "DELETE")
-        if (!done) {
-          val fs = graft.sources.WarehouseMeta.fs(path)
-          fs.delete(new org.apache.hadoop.fs.Path(path), true)
-          Sink.overwrite(banded.filter(col("band") <= 3).repartition(1),
-            path, format = "graft-warehouse",
-            options = Map("clusterBy" -> "band"))
-          Sink.append(banded.filter(col("band") >= 4).repartition(1),
-            path, format = "graft-warehouse",
-            options = Map("clusterBy" -> "band"))
-          graft.sources.WarehouseDelete.deleteWhere(path,
-            org.apache.spark.sql.sources.EqualTo("band", 0L))
-        }
+        val path = Artifacts.materialize(
+            Artifacts.key("wh_ordscdf2", dir, orders))(
+          crudTour(s, orders, _, update = false))
         val qn = s"wh_stream_cdf_${java.util.UUID.randomUUID()
           .toString.replace("-", "")}"
         // the key domain is (change_type, generation) over a 3-commit
@@ -1490,20 +1386,11 @@ object ReferenceQueries {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
         val fp = Artifacts.fingerprint(orders)
-        val path = Artifacts.key("wh_ordcat", dir, orders)
         val cat = s"gcat_$fp"
-        s.conf.set(s"spark.sql.catalog.$cat",
-          "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.warehouse", path)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val w = maxK / 8 + 1
-        val tbl = s"$cat.db.orders"
-        val done = graft.sources.WarehouseMeta
-          .readManifest(s"$path/db/orders")
-          .exists(m => m.generation == 2L && m.disposition == "DELETE")
-        if (!done) {
-          val fs = graft.sources.WarehouseMeta.fs(path)
-          fs.delete(new org.apache.hadoop.fs.Path(path), true)
+        val path = Artifacts.key("wh_ordcat2", dir, orders)
+        Artifacts.materialize(path) { stage =>
+          val tbl = graftCatalog(s, cat + stage.stripPrefix(path), stage)
+          val (_, w) = keyBands(orders)
           s.sql(s"CREATE TABLE $tbl (o_orderkey BIGINT, " +
             "o_totalprice DOUBLE, band BIGINT) PARTITIONED BY (band)")
           val vw = s"ord_cat_$fp"
@@ -1512,6 +1399,7 @@ object ReferenceQueries {
             s"o_orderkey, o_totalprice, o_orderkey DIV $w FROM $vw")
           s.sql(s"DELETE FROM $tbl WHERE band = 0")
         }
+        val tbl = graftCatalog(s, cat, path)
         s.sql(
           s"""SELECT band,
              |  count(*) AS n_rows,
@@ -1556,27 +1444,21 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val src = Artifacts.key("wh_ordsink_src", dir, orders)
-        val dst = Artifacts.key("wh_ordsink_dst", dir, orders)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val w = maxK / 8 + 1
-        val banded = orders.withColumn("band", expr(s"o_orderkey div $w"))
-        if (graft.sources.WarehouseMeta.readManifest(src).isEmpty) {
-          Sink.overwrite(banded.filter(col("band") <= 2).repartition(2),
-            src, format = "graft-warehouse")
-          Sink.append(banded.filter(col("band").between(3, 5))
-            .repartition(2), src, format = "graft-warehouse")
-          Sink.append(banded.filter(col("band") >= 6).repartition(2),
-            src, format = "graft-warehouse")
-        }
-        val q = s.readStream.format("graft-warehouse").load(src)
-          .writeStream.format("graft-warehouse")
-          .option("checkpointLocation", s"${dst}_ckpt")
-          .option("path", dst)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Sink.read(s, dst, "graft-warehouse")
+        // source table, sink table and checkpoint: three subdirectories
+        // of one artifact
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_ordsink2", dir, orders)) {
+            stage =>
+              threeGenerations(orders, s"$stage/src")
+              s.readStream.format("graft-warehouse").load(s"$stage/src")
+                .writeStream.format("graft-warehouse")
+                .option("checkpointLocation", s"$stage/ckpt")
+                .option("path", s"$stage/dst")
+                .trigger(
+                  org.apache.spark.sql.streaming.Trigger.AvailableNow())
+                .start().awaitTermination()
+          }
+        Sink.read(s, s"$path/dst", "graft-warehouse")
           .groupBy("band")
           .agg(count(lit(1)).as("n_rows"),
             round(sum(col("o_totalprice").cast("decimal(18,2)"))
@@ -1604,21 +1486,16 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordupd", dir, orders)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val w = maxK / 8 + 1
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-          Sink.overwrite(
-            orders.withColumn("band", expr(s"o_orderkey div $w"))
-              .repartition(1),
-            path, format = "graft-warehouse",
-            options = Map("clusterBy" -> "band"))
-        if (graft.sources.WarehouseMeta.readManifest(path)
-            .exists(_.disposition != "UPDATE_COW"))
-          graft.sources.WarehouseCow.updateWhereCow(s, path,
-            org.apache.spark.sql.sources.LessThanOrEqual(
-              "o_orderkey", maxK / 4),
-            Map("o_totalprice" -> "o_totalprice + 500.0"))
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_ordupd2", dir, orders)) {
+            stage =>
+              val (maxK, w) = keyBands(orders)
+              loadBands(banded(orders, w), stage)
+              graft.sources.WarehouseCow.updateWhereCow(s, stage,
+                org.apache.spark.sql.sources.LessThanOrEqual(
+                  "o_orderkey", maxK / 4),
+                Map("o_totalprice" -> "o_totalprice + 500.0"))
+          }
         Sink.read(s, path, "graft-warehouse")
           .agg(count(lit(1)).as("n_orders"),
             min(col("o_orderkey")).as("min_key"),
@@ -1655,33 +1532,34 @@ object ReferenceQueries {
       (s, dir) => {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
-        val path = Artifacts.key("wh_ordevo2", dir, orders)
-        val maxK = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val (h1, h2) = (maxK / 3, 2 * (maxK / 3))
-        if (graft.sources.WarehouseMeta.readManifest(path).isEmpty) {
-          // vintage 1: two columns
-          Sink.overwrite(orders.filter(col("o_orderkey") <= h1)
-            .repartition(2), path, format = "graft-warehouse")
-          // +flag (no default): vintage 1 reads NULL
-          graft.sources.WarehouseEvolve.addColumn(path, "flag",
-            org.apache.spark.sql.types.LongType)
-          // vintage 2: three columns
-          Sink.append(orders.filter(col("o_orderkey") > h1 &&
-            col("o_orderkey") <= h2)
-            .withColumn("flag", col("o_orderkey") % 7), path,
-            format = "graft-warehouse")
-          // +src DEFAULT 'hist': vintages 1-2 read the default with
-          // zero IO (and truthful backfilled fnn lines)
-          graft.sources.WarehouseEvolve.addColumn(path, "src",
-            org.apache.spark.sql.types.StringType, Some("'hist'"))
-          // vintage 3: full four columns, live src
-          Sink.append(orders.filter(col("o_orderkey") > h2)
-            .withColumn("flag", col("o_orderkey") % 7)
-            .withColumn("src", lit("live")), path,
-            format = "graft-warehouse")
-          // RENAME flag -> tag: pure metadata rekey across all vintages
-          graft.sources.WarehouseEvolve.renameColumn(path, "flag", "tag")
-        }
+        val path =
+          Artifacts.materialize(Artifacts.key("wh_ordevo3", dir, orders)) {
+            stage =>
+              val (maxK, _) = keyBands(orders)
+              val (h1, h2) = (maxK / 3, 2 * (maxK / 3))
+              // vintage 1: two columns
+              Sink.overwrite(orders.filter(col("o_orderkey") <= h1)
+                .repartition(2), stage, format = "graft-warehouse")
+              // +flag (no default): vintage 1 reads NULL
+              graft.sources.WarehouseEvolve.addColumn(stage, "flag",
+                org.apache.spark.sql.types.LongType)
+              // vintage 2: three columns
+              Sink.append(orders.filter(col("o_orderkey") > h1 &&
+                col("o_orderkey") <= h2)
+                .withColumn("flag", col("o_orderkey") % 7), stage,
+                format = "graft-warehouse")
+              // +src DEFAULT 'hist': vintages 1-2 read the default with
+              // zero IO (and truthful backfilled fnn lines)
+              graft.sources.WarehouseEvolve.addColumn(stage, "src",
+                org.apache.spark.sql.types.StringType, Some("'hist'"))
+              // vintage 3: full four columns, live src
+              Sink.append(orders.filter(col("o_orderkey") > h2)
+                .withColumn("flag", col("o_orderkey") % 7)
+                .withColumn("src", lit("live")), stage,
+                format = "graft-warehouse")
+              // RENAME flag -> tag: pure metadata rekey across all vintages
+              graft.sources.WarehouseEvolve.renameColumn(stage, "flag", "tag")
+          }
         Sink.read(s, path, "graft-warehouse")
           .agg(count(lit(1)).as("n_orders"),
             count(col("tag")).as("n_tagged"),
@@ -1736,14 +1614,12 @@ object ReferenceQueries {
         val cust = Tables.read(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment"),
             pmod(col("c_custkey"), lit(64L)).as("bucket"))
-        def fixture(df: DataFrame, tag: String): String = {
-          val path = Artifacts.key(s"wh_spj$tag", dir, df)
-          if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-            Sink.overwrite(df.repartition(8, col("bucket")), path,
+        def fixture(df: DataFrame, tag: String): String =
+          Artifacts.materialize(Artifacts.key(s"wh_spj2$tag", dir, df)) {
+            Sink.overwrite(df.repartition(8, col("bucket")), _,
               format = "graft-warehouse",
               options = Map("clusterBy" -> "bucket"))
-          path
-        }
+          }
         val op = fixture(orders, "o")
         val cp = fixture(cust, "c")
         Sink.read(s, op, "graft-warehouse").as("o")
@@ -1800,11 +1676,89 @@ object ReferenceQueries {
   private def rangeClusteredOrders(s: SparkSession, dir: String): DataFrame = {
     val orders = Tables.read(s, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
-    val path = Artifacts.key("wh_ordrange", dir, orders)
-    if (graft.sources.WarehouseMeta.readManifest(path).isEmpty)
-      Sink.overwrite(orders.repartitionByRange(8, col("o_orderkey")),
-        path, format = "graft-warehouse")
+    val path =
+      Artifacts.materialize(Artifacts.key("wh_ordrange2", dir, orders)) {
+        Sink.overwrite(orders.repartitionByRange(8, col("o_orderkey")),
+          _, format = "graft-warehouse")
+      }
     Sink.read(s, path, "graft-warehouse")
+  }
+
+  /** The `o_orderkey` bounds a warehouse tour cuts its bands and probe
+    * keys from: one eager aggregate over `orders`, refused by name when
+    * `orders` holds no row (a zero-row min or max is NULL).
+    */
+  private def keyBounds(orders: DataFrame, bounds: Column*): Seq[Long] = {
+    val r = orders.agg(bounds.head, bounds.tail: _*).head()
+    require(!r.anyNull,
+      "warehouse tour needs a non-empty orders: no o_orderkey bound")
+    bounds.indices.map(r.getLong)
+  }
+
+  /** `(maxK, w)`: the largest order key, and the width of the 8 key bands
+    * (`band = o_orderkey div w`, bands 0-7) the warehouse tours cluster
+    * on. Fixture builds call it, so it runs once per build.
+    */
+  private def keyBands(orders: DataFrame): (Long, Long) = {
+    val Seq(maxK) = keyBounds(orders, max(col("o_orderkey")))
+    (maxK, maxK / 8 + 1)
+  }
+
+  /** `df` with its key band, `o_orderkey div w`. */
+  private def banded(df: DataFrame, w: Long): DataFrame =
+    df.withColumn("band", expr(s"o_orderkey div $w"))
+
+  /** Loads `df` at `root` clustered on `band`: one file per band, so each
+    * file's key zone is exactly its band.
+    */
+  private def loadBands(df: DataFrame, root: String): Unit =
+    Sink.overwrite(df.repartition(1), root, format = "graft-warehouse",
+      options = Map("clusterBy" -> "band"))
+
+  /** The streaming tours' source table at `root`: bands 0-2, 3-5 and 6-7
+    * of `orders` as three APPEND-readable generations of 2 files each.
+    */
+  private def threeGenerations(orders: DataFrame, root: String): Unit = {
+    val (_, w) = keyBands(orders)
+    val b = banded(orders, w)
+    Sink.overwrite(b.filter(col("band") <= 2).repartition(2),
+      root, format = "graft-warehouse")
+    Sink.append(b.filter(col("band").between(3, 5)).repartition(2),
+      root, format = "graft-warehouse")
+    Sink.append(b.filter(col("band") >= 6).repartition(2),
+      root, format = "graft-warehouse")
+  }
+
+  /** The CRUD tour the change-feed and history fixtures replay at
+    * `root`: bands 0-3 load (generation 0), bands 4-7 append (1), with
+    * `update` a copy-on-write `o_totalprice + 500` over bands 0-1 (2),
+    * then a metadata DELETE of band 0 (the last generation).
+    */
+  private def crudTour(s: SparkSession, orders: DataFrame, root: String,
+      update: Boolean): Unit = {
+    val (_, w) = keyBands(orders)
+    val b = banded(orders, w)
+    loadBands(b.filter(col("band") <= 3), root)
+    Sink.append(b.filter(col("band") >= 4).repartition(1),
+      root, format = "graft-warehouse", options = Map("clusterBy" -> "band"))
+    if (update)
+      graft.sources.WarehouseCow.updateWhereCow(s, root,
+        org.apache.spark.sql.sources.LessThanOrEqual("band", 1L),
+        Map("o_totalprice" -> "o_totalprice + 500.0d"))
+    graft.sources.WarehouseDelete.deleteWhere(root,
+      org.apache.spark.sql.sources.EqualTo("band", 0L))
+  }
+
+  /** Binds SQL catalog `name` to a `GraftCatalog` rooted at `root` and
+    * returns the name of its `db.orders` table. Spark caches one catalog
+    * plugin per name, so a name must keep one root for the life of a
+    * session: a fixture build binds a name of its own to its stage.
+    */
+  private def graftCatalog(s: SparkSession, name: String,
+      root: String): String = {
+    s.conf.set(s"spark.sql.catalog.$name", "graft.sources.GraftCatalog")
+    s.conf.set(s"spark.sql.catalog.$name.warehouse", root)
+    s"$name.db.orders"
   }
 
   private lazy val dateDimOracle: String =

@@ -919,8 +919,8 @@ object TpchQueries {
     // MERGE semantics (WHEN MATCHED update, WHEN NOT MATCHED insert) as one
     // anti-join + union: a 10%-of-keys changeset (prices revised) plus a
     // disjoint insert set merge into the orders snapshot. At scale the
-    // changeset side broadcasts; see ops.Merge.upsertPartitioned for the
-    // dynamic-partition-overwrite file path (spec-gated).
+    // changeset side broadcasts; the file-backed MERGE is the warehouse
+    // format's (sink_warehouse_merge, catalog_sql_merge).
     QueryDef("merge_upsert",
       (s, dir) => {
         val o = Tables.read(s, dir, "orders")

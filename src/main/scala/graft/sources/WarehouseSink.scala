@@ -61,8 +61,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * to one table are out of scope — the generation-numbered manifest makes
   * a lost race visible (a re-read shows the other job's generation), but
   * arbitration belongs to a catalog service this offline analog
-  * deliberately does not invent; the in-repo [[graft.ops.Txn]] layer
-  * demonstrates the optimistic-commit discipline where it matters.
+  * deliberately does not invent.
   */
 class WarehouseSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-warehouse"
@@ -100,9 +99,9 @@ class WarehouseSource extends TableProvider with DataSourceRegister {
 
 /** One warehouse table rooted at `path`. `generation` (read option) pins
   * scans to a PAST committed manifest — time travel for free out of the
-  * generation-numbered commit protocol (the Txn.readVersion idea at the
-  * warehouse boundary): any committed generation reads at latest-read
-  * cost, one manifest resolve, no log replay. Writes always commit on
+  * generation-numbered commit protocol (`scan_time_travel` reads two):
+  * any committed generation reads at latest-read cost, one manifest
+  * resolve, no log replay. Writes always commit on
   * top of the LATEST generation regardless of the option.
   */
 class WarehouseTable(path: String, schema0: StructType,

@@ -7,8 +7,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Artifacts, Tables}
+import graft.io.Sink
 import graft.ops.Graph
 import graft.queries.GraphFixtures
+import graft.sources.WarehouseMeta
 
 /** The persisted-artifact layer (graft.core.Artifacts): builds once,
   * keys on content (not on a row count), publishes atomically, and what
@@ -76,6 +78,87 @@ class ArtifactsSpec extends SparkSpec {
     assert(left.isEmpty, s"leaked: ${left.mkString(", ")}")
   }
 
+  test("a warehouse build that throws after its first commit leaves nothing") {
+    val src = spark.range(20).toDF("k")
+    val path = freshKey("whthrow", src)
+    val target = new File(path)
+    val e = intercept[IllegalStateException] {
+      Artifacts.materialize(path) { stage =>
+        Sink.overwrite(src, stage, format = "graft-warehouse")
+        // a committed generation, its job log and checksum files on disk
+        assert(WarehouseMeta.generations(stage) == Seq(0L))
+        assert(new File(stage, "_jobs").list().nonEmpty)
+        assert(new File(stage, "_manifest").list().exists(_.endsWith(".crc")))
+        throw new IllegalStateException("second load failed")
+      }
+    }
+    assert(e.getMessage == "second load failed")
+    assert(!target.exists())
+    val left = target.getParentFile.list().filter(_.startsWith(target.getName))
+    assert(left.isEmpty, s"leaked: ${left.mkString(", ")}")
+  }
+
+  /** The declared queries that read a table `Artifacts.materialize`
+    * publishes after one build of its whole write sequence. */
+  private val warehouseFixtureQueries = Seq(
+    "catalog_sql_merge", "catalog_sql_warehouse", "join_warehouse_spj",
+    "scan_time_travel", "scan_warehouse_agg", "scan_warehouse_agg_grouped",
+    "scan_warehouse_bloom_pruned", "scan_warehouse_changes",
+    "scan_warehouse_history", "scan_warehouse_limit",
+    "scan_warehouse_metadata_cols", "scan_warehouse_pruned",
+    "scan_warehouse_pruned_str", "scan_warehouse_runtime_pruned",
+    "scan_warehouse_topn", "sink_warehouse_compact",
+    "sink_warehouse_delete", "sink_warehouse_delete_cow",
+    "sink_warehouse_delete_mor", "sink_warehouse_evolve",
+    "sink_warehouse_merge", "sink_warehouse_update_cow",
+    "sink_warehouse_update_mor", "sink_warehouse_vacuum",
+    "stream_warehouse_changes", "stream_warehouse_merge",
+    "stream_warehouse_sink", "stream_warehouse_source")
+
+  test("every warehouse fixture builds once: the warm call only reads") {
+    // a private copy of the corpus: its data-dir tag is unique to this
+    // run, so every fixture builds cold, and the test removes what it built
+    val corpus = new File(scratch("corpus"))
+    corpus.mkdirs()
+    new File(sf).listFiles().foreach(f =>
+      java.nio.file.Files.copy(f.toPath, new File(corpus, f.getName).toPath))
+    val tag = s"_${Artifacts.dirTag(corpus.getPath)}_"
+    def ours = new File("/tmp").listFiles().toSeq
+      .filter(_.getName.contains(tag))
+    // every `/tmp/graft_*` entry, and every path under this corpus's
+    // artifacts (generations, job logs, data files)
+    def tmpState(): Set[String] = {
+      def walk(f: File, rel: String): Seq[String] =
+        rel +: Option(f.listFiles()).toSeq.flatten
+          .flatMap(c => walk(c, s"$rel/${c.getName}"))
+      new File("/tmp").listFiles().toSeq
+        .filter(_.getName.startsWith("graft_")).flatMap { f =>
+          if (f.getName.contains(tag)) walk(f, f.getName) else Seq(f.getName)
+        }.toSet
+    }
+    def results() = warehouseFixtureQueries.map(q =>
+      q -> SparkEntry.queries(q)(spark, corpus.getPath).collect().toSeq)
+    try {
+      val before = tmpState()
+      val cold = results()
+      val built = tmpState()
+      // one published artifact per fixture: 24 warehouse tours (the
+      // streaming sink's source, sink and checkpoint are one) + time travel
+      val published = (built -- before).filterNot(_.contains("/"))
+      assert(published.size == 25 &&
+        published.forall(_.startsWith("graft_wh_")), published)
+      val warm = results()
+      val after = tmpState()
+      warehouseFixtureQueries.indices.foreach(i =>
+        assert(warm(i) == cold(i), s"${cold(i)._1}: warm result differs"))
+      assert(after == built, "the warm call wrote: " +
+        s"added ${(after -- built).toSeq.sorted.take(10)}, " +
+        s"removed ${(built -- after).toSeq.sorted.take(10)}")
+      val stages = (after -- before).filter(_.contains("_stage_"))
+      assert(stages.isEmpty, s"stage left: ${stages.toSeq.sorted.take(10)}")
+    } finally ours.foreach(Artifacts.delete)
+  }
+
   test("persisted ≡ fresh on the first and the repeat call, every graph artifact") {
     val fresh = Tables.read(spark, sf, "lineitem")
       .join(Tables.read(spark, sf, "orders").select("o_orderkey", "o_custkey"),
@@ -108,19 +191,32 @@ class ArtifactsSpec extends SparkSpec {
 }
 
 /** Source lint: the persisted-artifact idiom has one home. Queries never
-  * publish by hand (no `renameTo(`, no `_stage_` directories), and the
-  * data-dir tag of artifact keys is computed in `core/Artifacts.scala`
-  * only, so the key format cannot drift from what the benchmark harness
-  * matches on.
+  * publish by hand (no `renameTo(`, no `_stage_` directories), never
+  * decide whether to build a table from its own manifest, and
+  * `graft-warehouse` is the only versioned table format; the data-dir tag
+  * of artifact keys is computed in `core/Artifacts.scala` only, so the
+  * key format cannot drift from what the benchmark harness matches on.
   */
 class ArtifactLintSpec extends AnyFunSuite {
-  import SourceLint.{hits, sources}
+  import SourceLint.{hits, matches, sources}
 
   test("queries publish no artifact by hand") {
     val queries = sources("src/main/scala/graft/queries")
     val found = hits(queries, "renameTo(") ++ hits(queries, "_stage_")
     assert(found.isEmpty,
       s"hand-rolled stage/rename publish (use graft.core.Artifacts): $found")
+  }
+
+  test("queries publish persisted tables only through Artifacts.materialize") {
+    // a build guard reads the table's own manifest to decide whether to
+    // build: an empty-manifest test, or a disposition test of its commits
+    val guards = matches(sources("src/main/scala/graft/queries"),
+      """readManifest\([^)]*\)\s*\.isEmpty|\.disposition\b""".r)
+    assert(guards.isEmpty,
+      s"manifest-read build guard (use Artifacts.materialize): $guards")
+    val txn = matches(sources("src/main/scala"), """\bTxn\b""".r)
+    assert(txn.isEmpty,
+      s"a second versioned table format (use graft-warehouse): $txn")
   }
 
   test("the artifact dir tag is computed in core/Artifacts.scala only") {

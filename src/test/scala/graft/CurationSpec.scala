@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Merge, Sampling, Similarity, TextAnalysis}
@@ -187,108 +185,6 @@ class MergeSpec extends SparkSpec {
     val plan = Merge.applyChangelog(log, Seq("k"), "seq", "op")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), plan)
-  }
-
-  test("partitioned upsert rewrites only affected partitions") {
-    val out = scratch("merge")
-    val target = Seq((1L, "2024-01-01", 10.0), (2L, "2024-01-01", 20.0),
-      (3L, "2024-01-02", 30.0)).toDF("k", "day", "v")
-    target.write.partitionBy("day").parquet(out)
-    val untouched = new java.io.File(s"$out/day=2024-01-02")
-      .listFiles().filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-
-    val source = Seq((2L, "2024-01-01", 22.0), (9L, "2024-01-01", 90.0))
-      .toDF("k", "day", "v")
-    Merge.upsertPartitioned(spark, out, source, Seq("k"), "day")
-
-    val after = spark.read.parquet(out).orderBy("k")
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(after.toSeq ===
-      Seq((1L, 10.0), (2L, 22.0), (3L, 30.0), (9L, 90.0)))
-    // the untouched partition's files were not rewritten
-    val untouchedAfter = new java.io.File(s"$out/day=2024-01-02")
-      .listFiles().filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    assert(untouchedAfter === untouched)
-  }
-
-  test("txn upsert: readers never see a half-written state; untouched files carried") {
-    import graft.ops.Txn
-    val root = scratch("txn")
-
-    // v0: initial snapshot across two partitions
-    val target = Seq((1L, "2024-01-01", 10.0), (2L, "2024-01-01", 20.0),
-      (3L, "2024-01-02", 30.0)).toDF("k", "day", "v")
-    assert(Txn.commit(spark, root, target, "day") === 0)
-    def snapshot(): Seq[(Long, Double)] = Txn.read(spark, root)
-      .orderBy("k").collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-    assert(snapshot() === Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)))
-
-    // simulate a writer that crashed mid-commit: v1 data files fully on
-    // disk, manifest never published — readers must still see v0 exactly
-    val orphan = new java.io.File(root, "data/v1/__p=2024-01-01")
-    orphan.mkdirs()
-    Seq((99L, "2024-01-01", 999.0)).toDF("k", "day", "v")
-      .write.mode("overwrite").parquet(orphan.getAbsolutePath)
-    // plus a torn manifest tmp that never got renamed
-    val tornTmp = new java.io.File(root, "_txn/.v1.manifest.tmp")
-    java.nio.file.Files.write(tornTmp.toPath, "garbage\thalf".getBytes)
-    assert(Txn.latestVersion(root) === 0)
-    assert(snapshot() === Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)))
-
-    // v1: a real merge commit touching only 2024-01-01 — retried OVER the
-    // crash debris (uncommitted v1 data + torn tmp), which recovery clobbers
-    val source = Seq((2L, "2024-01-01", 22.0), (9L, "2024-01-01", 90.0))
-      .toDF("k", "day", "v")
-    assert(Txn.upsertPartitioned(spark, root, source, Seq("k"), "day") === 1)
-    assert(snapshot() === Seq((1L, 10.0), (2L, 22.0), (3L, 30.0), (9L, 90.0)))
-    // the untouched partition's v0 files are carried forward, not rewritten
-    val v1Manifest = java.nio.file.Files
-      .readAllLines(new java.io.File(root, "_txn/v1.manifest").toPath)
-    assert(v1Manifest.asScala.exists(l =>
-      l.startsWith("2024-01-02\t") && l.contains("data/v0/")))
-    assert(!v1Manifest.asScala.exists(l =>
-      l.startsWith("2024-01-01\t") && l.contains("data/v0/")))
-
-    // time travel: v0 stays readable as-committed after v1 replaced rows
-    assert(Txn.readVersion(spark, root, 0).orderBy("k").collect()
-      .map(r => (r.getLong(0), r.getDouble(2))).toSeq ===
-      Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)))
-    intercept[IllegalArgumentException] {
-      Txn.readVersion(spark, root, 7)
-    }
-  }
-
-  test("txn vacuum: expired versions unreadable, shared files survive, latest intact") {
-    import graft.ops.Txn
-    val root = scratch("txn_vac")
-    val base = Seq((1L, "2024-01-01", 10.0), (3L, "2024-01-02", 30.0))
-      .toDF("k", "day", "v")
-    assert(Txn.commit(spark, root, base, "day") === 0)
-    // v1 and v2 each rewrite only 2024-01-01; the v0 file for 2024-01-02
-    // is carried forward by EVERY later version
-    Txn.upsertPartitioned(spark, root,
-      Seq((1L, "2024-01-01", 11.0)).toDF("k", "day", "v"), Seq("k"), "day")
-    Txn.upsertPartitioned(spark, root,
-      Seq((1L, "2024-01-01", 12.0)).toDF("k", "day", "v"), Seq("k"), "day")
-
-    assert(Txn.expireVersions(root, keepLast = 2) === Seq(0))
-    // v0 gone: manifest deleted, read fails cleanly
-    intercept[IllegalArgumentException] { Txn.readVersion(spark, root, 0) }
-    // v1/v2 fully readable — including the CARRIED-FORWARD v0 data file
-    // for 2024-01-02, which reachability kept even though v0 expired
-    assert(Txn.readVersion(spark, root, 1).orderBy("k").collect()
-      .map(r => (r.getLong(0), r.getDouble(2))).toSeq ===
-      Seq((1L, 11.0), (3L, 30.0)))
-    assert(Txn.read(spark, root).orderBy("k").collect()
-      .map(r => (r.getLong(0), r.getDouble(2))).toSeq ===
-      Seq((1L, 12.0), (3L, 30.0)))
-    // v1's now-unreferenced 2024-01-01 file dies with the next vacuum
-    assert(Txn.expireVersions(root, keepLast = 1) === Seq(1))
-    assert(Txn.read(spark, root).orderBy("k").collect()
-      .map(r => (r.getLong(0), r.getDouble(2))).toSeq ===
-      Seq((1L, 12.0), (3L, 30.0)))
-    // idempotent when nothing to expire
-    assert(Txn.expireVersions(root, keepLast = 1) === Seq())
   }
 }
 

@@ -25,4 +25,15 @@ object SourceLint {
       }.toList
       finally src.close()
     }
+
+  /** `path:line` of every match of `re` in `files`. Each file is matched
+    * as a whole, so a pattern may span lines.
+    */
+  def matches(files: Seq[File], re: scala.util.matching.Regex): Seq[String] =
+    files.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val text = try src.mkString finally src.close()
+      re.findAllMatchIn(text).map(m =>
+        s"${f.getPath}:${text.take(m.start).count(_ == '\n') + 1}").toList
+    }
 }

@@ -59,23 +59,6 @@ class StatsIndexSpec extends SparkSpec {
     assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
   }
 
-  test("incremental append indexes only the new files and equals a full rebuild") {
-    val path = scratch("statsidx_incr")
-    import spark.implicits._
-    Seq(1L, 5L, 9L).toDF("k").coalesce(1).write.parquet(path)
-    val base = StatsIndex.build(spark, path, Seq("k")).localCheckpoint()
-    // appending nothing returns the index unchanged (same reference)
-    assert(StatsIndex.append(spark, path, Seq("k"), base) eq base)
-    Seq(20L, 30L).toDF("k").coalesce(1).write.mode("append").parquet(path)
-    Seq(100L).toDF("k").coalesce(1).write.mode("append").parquet(path)
-    val incr = StatsIndex.append(spark, path, Seq("k"), base)
-    val full = StatsIndex.build(spark, path, Seq("k"))
-    assert(incr.count() === 3)
-    assert(incr.exceptAll(full).isEmpty && full.exceptAll(incr).isEmpty)
-    // and the appended index prunes correctly
-    assert(StatsIndex.candidateFiles(incr, "k", 25L, 40L).size === 1)
-  }
-
   test("files with null-only stats are kept conservatively; empty prune → empty frame") {
     val path = scratch("statsidx_nulls")
     import spark.implicits._
@@ -105,10 +88,7 @@ class StatsIndexSpec extends SparkSpec {
     // basename in each — the collision a basename-keyed index can't hold
     (1L to 8L).toDF("k").withColumn("p", col("k") % 2)
       .coalesce(1).write.partitionBy("p").parquet(path)
-    // checkpoint: the index is a materialized artifact (persisted next to
-    // the table in real use); a lazy plan would re-list the directory
-    // after the append below and double-count the new files
-    val stats = StatsIndex.build(spark, path, Seq("k")).localCheckpoint()
+    val stats = StatsIndex.build(spark, path, Seq("k"))
     val files = stats.select("file").collect().map(_.getString(0))
     assert(files.length === 2, files.mkString(","))
     assert(files.distinct.length === files.length, "file keys collided")
@@ -119,28 +99,5 @@ class StatsIndexSpec extends SparkSpec {
     val full = spark.read.parquet(path)
       .filter(col("k") >= 2L && col("k") <= 5L).select("k")
     assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
-    // incremental append sees new files inside partition subdirectories
-    (20L to 23L).toDF("k").withColumn("p", col("k") % 2)
-      .coalesce(1).write.mode("append").partitionBy("p").parquet(path)
-    val incr = StatsIndex.append(spark, path, Seq("k"), stats)
-    val rebuilt = StatsIndex.build(spark, path, Seq("k"))
-    assert(incr.exceptAll(rebuilt).isEmpty && rebuilt.exceptAll(incr).isEmpty)
-  }
-
-  test("append diffs a many-file table without collecting the index") {
-    val path = scratch("statsidx_many")
-    import spark.implicits._
-    spark.range(400).toDF("k").repartition(40).write.parquet(path)
-    val base = StatsIndex.build(spark, path, Seq("k")).localCheckpoint()
-    assert(base.count() === 40)
-    spark.range(1000, 1200).toDF("k").repartition(20)
-      .write.mode("append").parquet(path)
-    val incr = StatsIndex.append(spark, path, Seq("k"), base)
-    val rebuilt = StatsIndex.build(spark, path, Seq("k"))
-    assert(incr.count() === 60)
-    assert(incr.exceptAll(rebuilt).isEmpty && rebuilt.exceptAll(incr).isEmpty)
-    // only the 20 fresh files were newly scanned/stat'd; the base rows
-    // ride through untouched (same reference via unionByName legs)
-    assert(StatsIndex.candidateFiles(incr, "k", 1000L, 1199L).size === 20)
   }
 }
