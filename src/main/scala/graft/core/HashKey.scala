@@ -155,11 +155,14 @@ object GraftFunctions {
       graft.ops.BlocklistMask.fromExprs(e(0), e(1))))
 
   /** Optimizer rules: the HOF dot product folded into the `graft_dot`
-    * kernel, and pure range joins bin-bucketed into equi joins when
-    * `spark.graft.rangeJoin.binSize` is set (inert otherwise).
+    * kernel, single-lambda `transform` compiled into a loop, `DECIMAL(p<=18)`
+    * sums accumulated in two longs, and pure range joins bin-bucketed into
+    * equi joins when `spark.graft.rangeJoin.binSize` is set (inert
+    * otherwise).
     */
   val optimizerRules: Seq[Rule[LogicalPlan]] =
-    Seq(graft.plans.FoldVectorHofs, graft.plans.RangeBinJoin)
+    Seq(graft.plans.FoldVectorHofs, graft.plans.CompileTransform,
+      graft.plans.SumDecimalInLongs, graft.plans.RangeBinJoin)
 
   /** Planner strategies for the native operators that explicit calls
     * build: the as-of join and the global rank family.

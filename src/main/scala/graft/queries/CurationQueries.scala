@@ -218,25 +218,24 @@ object CurationQueries {
     // N-gram novelty of an incoming batch vs the standing corpus: what
     // fraction of the new batch's distinct bigram shingles were never
     // seen before (the staleness/freshness meter that decides whether
-    // another crawl of a source is worth the compute). Both sides
-    // collapse to DISTINCT shingle sets first (map-side-combinable;
-    // shuffle ∝ types, not tokens); the overlap is one key-joined
-    // aggregate. Batch = odd doc_ids, corpus = even — deterministic at
-    // every SF.
+    // another crawl of a source is worth the compute). One pass: the
+    // shingles group by type (map-side-combinable; shuffle ∝ types, not
+    // tokens) with a presence flag per half, and the three counts are
+    // conditional counts over the types, so an empty corpus is 0/0/0
+    // with a null rate. Batch = odd doc_ids, corpus = even —
+    // deterministic at every SF.
     QueryDef("curation_novelty",
       (s, dir) => {
-        val sh = graft.ops.TextOps.withTokens(
+        val types = graft.ops.TextOps.withTokens(
           Tables.read(s, dir, "documents"))
           .select(pmod(col("doc_id"), lit(2)).as("half"),
             explode(graft.ops.TextOps.bigramShingles(col("t"))).as("sh"))
-          .distinct()
-        val oldSh = sh.filter(col("half") === 0).select("sh")
-        val newSh = sh.filter(col("half") === 1).select("sh")
-        val nNew = newSh.agg(count(lit(1)).as("n_new_types"))
-        val nOld = oldSh.agg(count(lit(1)).as("n_old_types"))
-        val seen = newSh.join(oldSh, Seq("sh"), "left_semi")
-          .agg(count(lit(1)).as("n_seen"))
-        nNew.crossJoin(broadcast(nOld)).crossJoin(broadcast(seen))
+          .groupBy("sh")
+          .agg(max(col("half") === 0).as("in_old"),
+            max(col("half") === 1).as("in_new"))
+        types.agg(count(when(col("in_old"), true)).as("n_old_types"),
+            count(when(col("in_new"), true)).as("n_new_types"),
+            count(when(col("in_old") && col("in_new"), true)).as("n_seen"))
           .select(col("n_old_types"), col("n_new_types"), col("n_seen"),
             round((col("n_new_types") - col("n_seen")).cast("double") /
               col("n_new_types"), 6).as("novelty_rate"))

@@ -316,7 +316,10 @@ object ExtraQueries {
       (s, dir) => {
         val o = Tables.read(s, dir, "orders")
           .withColumn("o_orderdate", to_date(col("o_orderdate")))
-        val d0 = o.agg(min(col("o_orderdate"))).first().getDate(0).toLocalDate
+        val minDate = o.agg(min(col("o_orderdate"))).first()
+        require(!minDate.isNullAt(0),
+          "scan_stats_pruned needs a non-empty orders: no o_orderdate bound")
+        val d0 = minDate.getDate(0).toLocalDate
         val lo = java.sql.Date.valueOf(d0.plusYears(1))
         val hi = java.sql.Date.valueOf(d0.plusYears(2).minusDays(1))
         val root = Artifacts.materialize(Artifacts.key("zonemap", dir, o)) {
@@ -363,6 +366,8 @@ object ExtraQueries {
         val head = o.agg(
           min(col("o_custkey").cast("long")), max(col("o_custkey").cast("long")),
           min(col("o_dkey"))).first()
+        require(!head.anyNull, "scan_zorder_pruned needs a non-empty orders: " +
+          "no o_custkey/o_orderdate bound")
         val (ck0, ck1, d0) = (head.getLong(0), head.getLong(1), head.getLong(2))
         val (ckLo, ckHi) = (ck0, ck0 + (ck1 - ck0) / 8)
         val (dLo, dHi) = (d0 + 365L, d0 + 729L)

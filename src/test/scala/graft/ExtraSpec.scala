@@ -391,6 +391,20 @@ class ExtensionsSpec extends SparkSpec {
       val got = ext.sql("SELECT graft_md5_mod_1e9('hello|world') AS h")
         .collect().head.getLong(0)
       assert(got === 854764784L)
+      // both paths install the compiled-kernel rules: the extension at
+      // session build time, ensureRegistered through the experimental hook
+      val plan = ext.sql("SELECT sum(CAST(id AS DECIMAL(18,2))) AS s, " +
+        "max(transform(array(id), x -> x + 1)) AS t FROM range(4)")
+        .queryExecution.optimizedPlan
+      val kernels = plan.expressions.flatMap(_.collect {
+        case k: graft.core.Int128DecimalSum => k
+        case k: graft.plans.TransformLoop => k
+      })
+      assert(kernels.size === 2, s"rules not installed by GraftExtensions:\n$plan")
+      val hook = base.experimental.extraOptimizations
+      assert(hook.contains(graft.plans.CompileTransform) &&
+        hook.contains(graft.plans.SumDecimalInLongs),
+        s"rules not installed by ensureRegistered: $hook")
     } finally {
       SparkSession.setActiveSession(base)
       SparkSession.setDefaultSession(base)

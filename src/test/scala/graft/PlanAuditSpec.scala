@@ -342,4 +342,30 @@ class PlanAuditSpec extends SparkSpec {
         s"$q should never shuffle-join:\n$plan")
     }
   }
+
+  private def optimized(q: String) =
+    SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
+
+  test("text_chunk, ts_holt_forecast, curation_novelty: every transform " +
+    "is a compiled loop") {
+    for (q <- Seq("text_chunk", "ts_holt_forecast", "curation_novelty")) {
+      val plan = optimized(q)
+      assert(!plan.exists(_.expressions.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ArrayTransform]))),
+        s"$q plans an interpreted ArrayTransform:\n$plan")
+    }
+  }
+
+  test("agg_pareto_share, agg_gini, scan_warehouse_changes: no decimal sum " +
+    "keeps a DECIMAL(28,2) buffer") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    import org.apache.spark.sql.types.DecimalType
+    for (q <- Seq("agg_pareto_share", "agg_gini", "scan_warehouse_changes")) {
+      val plan = optimized(q)
+      val wide = plan.collect { case p => p.expressions.flatMap(_.collect {
+        case s: Sum if s.dataType == DecimalType(28, 2) => s
+      }) }.flatten
+      assert(wide.isEmpty, s"$q sums through DECIMAL(28,2):\n$plan")
+    }
+  }
 }
