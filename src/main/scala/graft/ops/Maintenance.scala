@@ -85,24 +85,26 @@ object Maintenance {
       parquetFiles(out).length.toLong, rows)
   }
 
-  /** OPTIMIZE for the `graft-warehouse` table (round-13): rewrite the
-    * CURRENT generation's rows into `targetFiles` write tasks as ONE
-    * atomic load job (WRITE_TRUNCATE on a fresh generation). Unlike the
-    * directory compactor above there is NO visibility window at all:
-    * readers plan against the old immutable files until the manifest
-    * swap, and every earlier generation stays time-travel readable
-    * ("retired from visibility, not rewritten"). Cluster layouts
-    * survive — the cluster writer re-splits one file per value inside
-    * each task, so a clustered table compacts to ≤ targetFiles×|values|
-    * files with the storage-partitioned-join invariant intact. Fresh
-    * per-file stats (zone maps, row counts, non-null counts, sums)
-    * stream with the rewrite, so every metadata serve keeps working on
-    * the compacted generation. Returns (filesBefore, filesAfter).
+  /** Full compaction of the `graft-warehouse` table (round-13): rewrite
+    * the CURRENT generation's rows into `targetFiles` write tasks as ONE
+    * replace commit that carries nothing (disposition `OPTIMIZE`, the
+    * same commit as the bin-packing [[optimizeWarehouse]] below). There
+    * is NO visibility window: readers plan against the old immutable
+    * files until the manifest swap, and every earlier generation stays
+    * time-travel readable ("retired from visibility, not rewritten").
+    * The change feed reads the commit as row-preserving: no row changes.
+    * Cluster layouts survive — the cluster writer re-splits one file per
+    * value inside each task, so a clustered table compacts to
+    * ≤ targetFiles×|values| files with the storage-partitioned-join
+    * invariant intact. Fresh per-file stats (zone maps, row counts,
+    * non-null counts, sums) stream with the rewrite, so every metadata
+    * serve keeps working on the compacted generation. Returns
+    * (filesBefore, filesAfter).
     *
-    * Concurrency: compaction is read-then-truncate, NOT compare-and-swap
+    * Concurrency: compaction is read-then-replace, NOT compare-and-swap
     * — a load job committing between this read and this commit would be
     * retired with the old generation (its rows still time-travel
-    * readable, but absent from the compacted head). Run OPTIMIZE in the
+    * readable, but absent from the compacted head). Run compaction in the
     * maintenance window, like every load-job warehouse does; a CAS'd
     * generation commit is the production extension point.
     */
@@ -110,26 +112,34 @@ object Maintenance {
       targetFiles: Int = 1): (Int, Int) = {
     require(targetFiles > 0, "targetFiles must be positive")
     val before = graft.sources.WarehouseMeta.current(root)
-    val df = graft.io.Sink.read(spark, root, "graft-warehouse")
-    // Clustered layout: repartition BY the cluster column, with the task
-    // count sized from the manifest's distinct part values (advice r13:
-    // a blind repartition(1) funnels every value into one task, and a
-    // table legitimately loaded with >1024 values across many tasks
-    // would trip the cluster writer's per-task cardinality cap mid-job).
-    // ~256 expected values per task keeps the hard 1024 cap improbable
-    // even under hash skew.
-    val repart = before.clusterBy match {
-      case Some(c) =>
-        val dv = before.parts.values.toSet.size
-        val tasks = math.max(targetFiles,
-          ((dv + 255) / 256).toInt).max(1)
-        df.repartition(tasks, org.apache.spark.sql.functions.col(c))
-      case None => df.repartition(targetFiles)
-    }
-    graft.io.Sink.overwrite(repart, root,
-      format = "graft-warehouse", options = before.layoutOptions)
-    val after = graft.sources.WarehouseMeta.readManifest(root).get
+    val after = rewriteFiles(spark, root, before, before.files, targetFiles)
     (before.files.size, after.files.size)
+  }
+
+  /** One `OPTIMIZE` replace commit: `files` of `m` rewrite in `tasks`
+    * write tasks, every other file carries by reference. A clustered
+    * table repartitions BY the cluster column, with the task count sized
+    * from `files`' distinct part values (advice r13: a blind
+    * repartition(1) funnels every value into one task, and a table
+    * legitimately loaded with >1024 values across many tasks would trip
+    * the cluster writer's per-task cardinality cap mid-job). ~256
+    * expected values per task keeps the hard 1024 cap improbable even
+    * under hash skew.
+    */
+  private def rewriteFiles(spark: SparkSession, root: String,
+      m: graft.sources.Manifest, files: List[String],
+      tasks: Int): graft.sources.Manifest = {
+    val df = graft.sources.WarehouseCow.readSubset(spark, root, files)
+    val repart = m.clusterBy match {
+      case Some(c) =>
+        val dv = files.flatMap(m.parts.get).toSet.size
+        df.repartition(math.max(tasks, (dv + 255) / 256).max(1),
+          org.apache.spark.sql.functions.col(c))
+      case None => df.repartition(tasks)
+    }
+    val rewritten = files.toSet
+    graft.sources.WarehouseRewrite.rewrite(root, m,
+      m.files.filterNot(rewritten), repart, "OPTIMIZE")
   }
 
   /** Result of one bin-packing OPTIMIZE: files before/after, how many
@@ -147,7 +157,7 @@ object Maintenance {
     * small tail's IO, not a full rewrite. The small subset reads through
     * the scan's `files` option (exactly those files, never the table),
     * rewrites as ONE atomic generation (disposition `OPTIMIZE`,
-    * [[graft.sources.WarehouseRewrite.commitRewrite]]), keeps cluster
+    * [[graft.sources.WarehouseRewrite.commitReplace]]), keeps cluster
     * layouts (re-split per value inside each task; task count sized from
     * the subset's distinct part values so the writer's cardinality cap
     * can't trip), and leaves every earlier generation time-travel
@@ -176,23 +186,9 @@ object Maintenance {
     // still needs its rewrite (materializing the deletions away)
     if (small.size <= 1 && small.forall(f => !m.dvs.contains(f)))
       return OptimizeStats(m.files.size, m.files.size, 0, m.files.size)
-    require(small.forall(!_.contains(",")),
-      "file name contains ',' — cannot pass through the files option")
-    val subset = spark.read.format("graft-warehouse")
-      .option("path", root).option("files", small.mkString(","))
-      .load()
-    val smallTotal = small.map(size).sum
-    val byBytes = math.max(1L, (smallTotal + targetBytes - 1) / targetBytes)
-      .toInt
-    val repart = m.clusterBy match {
-      case Some(c) =>
-        val dv = small.flatMap(m.parts.get).toSet.size
-        val tasks = math.max(byBytes, (dv + 255) / 256).max(1)
-        subset.repartition(tasks, org.apache.spark.sql.functions.col(c))
-      case None => subset.repartition(byBytes)
-    }
-    val after = graft.sources.WarehouseRewrite.commitRewrite(
-      spark, root, m, compliant, repart, "OPTIMIZE")
+    val byBytes = math.max(1L,
+      (small.map(size).sum + targetBytes - 1) / targetBytes).toInt
+    val after = rewriteFiles(spark, root, m, small, byBytes)
     OptimizeStats(m.files.size, after.files.size,
       after.files.size - compliant.size, compliant.size)
   }

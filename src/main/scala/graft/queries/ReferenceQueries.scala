@@ -645,7 +645,7 @@ object ReferenceQueries {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
         val path =
-          Artifacts.materialize(Artifacts.key("wh_ordopt2", dir, orders)) {
+          Artifacts.materialize(Artifacts.key("wh_ordopt3", dir, orders)) {
             stage =>
               // the steady-state streaming-sink shape: 2 big load files +
               // 6 per-trigger micro-batch appends (tiny residue slices; a
@@ -662,6 +662,8 @@ object ReferenceQueries {
               // n_files = 3 proves it (a whole-table rewrite could never
               // leave the 2 originals)
               val m = graft.sources.WarehouseMeta.readManifest(stage).get
+              require(m.rows.values.sum > 0L, "sink_warehouse_compact " +
+                "needs a non-empty orders: the loads landed no row")
               val fsys = graft.sources.WarehouseMeta.fs(stage)
               val maxLen = m.files.map(f => fsys.getFileStatus(
                 new Path(stage, f)).getLen).max
@@ -700,10 +702,11 @@ object ReferenceQueries {
         val orders = Tables.read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
         val path =
-          Artifacts.materialize(Artifacts.key("wh_ordvac2", dir, orders)) {
+          Artifacts.materialize(Artifacts.key("wh_ordvac3", dir, orders)) {
             stage =>
-              Sink.overwrite(orders.repartition(4), stage,
-                format = "graft-warehouse")
+              require(Sink.overwrite(orders.repartition(4), stage,
+                format = "graft-warehouse") > 0L, "sink_warehouse_vacuum " +
+                "needs a non-empty orders: the load landed no row")
               Sink.append(orders.filter(col("o_orderkey") % 1009 === 0)
                 .coalesce(1), stage, format = "graft-warehouse")
               graft.ops.Maintenance.compactWarehouse(s, stage,

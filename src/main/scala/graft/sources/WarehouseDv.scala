@@ -148,8 +148,8 @@ object WarehouseDv {
     val badCols = set.keys.filterNot(cols)
     require(badCols.isEmpty,
       s"SET names unknown column(s): ${badCols.mkString(",")}")
-    val affected = m.files.filter(f =>
-      WarehouseZoneMap.mightMatch(pred, m.stats.getOrElse(f, Map.empty)))
+    val (_, carry, _) = WarehouseZoneMap.classify(m, pred)
+    val affected = m.files.filterNot(carry.toSet) // drop ++ partial
     if (affected.isEmpty) return 0L
     val jobId = s"update_mor_${java.util.UUID.randomUUID().toString.take(8)}"
     WarehouseMeta.job(root, jobId, "RUNNING") { publish =>
@@ -159,7 +159,7 @@ object WarehouseDv {
         markOrdinals(spark, root, m, affected, cond, jobId)
       // leg 2: the updated rows re-append (LIVE rows only — the current
       // vectors apply to this read) as fresh files with full
-      // stats/layout/blooms, exactly like any load
+      // stats/layout/blooms, staged like any rewrite's
       val updatedRows = WarehouseCow.readSubset(spark, root, affected)
         .filter(cond)
         .select(m.schema.fields.map { fld =>
@@ -168,11 +168,12 @@ object WarehouseDv {
             case None => col(fld.name)
           }
         }.toIndexedSeq: _*)
-      val (tm, moved) =
-        WarehouseRewrite.viaScratch(spark, root, m, updatedRows, jobId)
-      val withNew = m.addFrom(tm, moved)
+      val withNew = WarehouseLoadJob.addStaged(root, jobId, m,
+        WarehouseRewrite.stage(root, m, updatedRows, jobId)
+          .filter(_.rows > 0L))
       publish(withNew.copy(generation = m.generation + 1, jobId = jobId,
         disposition = "UPDATE_MOR", dvs = withNew.dvs ++ newDvs))
+      WarehouseMeta.dropStaging(root, jobId)
       updated
     }
   }
@@ -188,12 +189,7 @@ object WarehouseDv {
       pred: Filter): Long = {
     val predCol = WarehouseCow.filterToColumn(pred) // refuse shapes first
     val m = WarehouseMeta.current(root)
-    val (fullDrop, rest) = m.files.partition { f =>
-      WarehouseZoneMap.mustMatch(pred, m.stats.getOrElse(f, Map.empty),
-        m.rows.get(f), m.nonNull.getOrElse(f, Map.empty))
-    }
-    val partial = rest.filter(f =>
-      WarehouseZoneMap.mightMatch(pred, m.stats.getOrElse(f, Map.empty)))
+    val (fullDrop, _, partial) = WarehouseZoneMap.classify(m, pred)
     require(fullDrop.forall(f => m.liveRows(f).isDefined),
       "dropped files lack exact row counts — the deleted-count " +
         "contract would be a guess")

@@ -17,12 +17,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     modification (SET exprs / merge clauses / delete filter) and
   *     writes the survivors back through the ordinary staged task
   *     writers (cluster split + bloom sidecars inherited);
-  *  3. the commit REPLACES exactly the scanned files with the staged
-  *     output in one atomic manifest generation
-  *     ([[WarehouseLoadJob.commitReplace]]) — every other file carries
-  *     by reference with all its metadata, time travel keeps the
-  *     pre-image, and the change data feed classifies the commit like
-  *     any other CoW generation.
+  *  3. the commit REPLACES exactly the scanned files with the output
+  *     staged in the table's own `_staging/<jobId>`, in one atomic
+  *     manifest generation — the same replace commit every other rewrite
+  *     publishes through ([[WarehouseRewrite.commitReplace]]): every
+  *     other file carries by reference with all its metadata, time travel
+  *     keeps the pre-image, and the change data feed classifies the
+  *     commit like any other CoW generation.
   *
   * At 100 TB this is the `UPDATE`/`MERGE` cost model a real table format
   * promises: IO proportional to the files the predicate can touch, one
@@ -74,8 +75,18 @@ class WarehouseReplaceGroupsWrite(root: String, info: LogicalWriteInfo,
       case RowLevelOperation.Command.DELETE => "DELETE_COW"
       case RowLevelOperation.Command.MERGE => "MERGE"
     }
-    WarehouseLoadJob.commitReplace(root, schema, jobId, disposition,
-      messages, scanned())
+    val m = WarehouseMeta.current(root)
+    val replaced = scanned().toSet
+    WarehouseRewrite.commitReplace(root, m, jobId, "RUNNING", disposition,
+        !replaced(_)) {
+      require(m.schema.simpleString == schema.simpleString,
+        s"row-level $jobId: schema drift — table has " +
+          s"${m.schema.simpleString}, write has ${schema.simpleString}")
+      val bad = replaced.filterNot(m.files.toSet)
+      require(bad.isEmpty, s"row-level $jobId: replaced files not in " +
+        s"generation ${m.generation}: ${bad.take(3).mkString(",")}")
+      WarehouseLoadJob.stagedFiles(messages)
+    }: Unit
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

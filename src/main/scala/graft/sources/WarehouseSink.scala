@@ -46,10 +46,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * One bracket publishes every generation: [[WarehouseMeta.job]] logs a
   * job's opening state, hands its body the only way to write a manifest,
-  * and ends the log in `DONE` or `ERROR <msg>`. Load jobs, row-level
-  * rewrites, deletes, deletion vectors, schema evolution, VACUUM and the
-  * catalog's CREATE TABLE all commit through it; [[Manifest.retain]] and
-  * [[Manifest.addFrom]] carry the per-file metadata across each commit.
+  * and ends the log in `DONE` or `ERROR <msg>`. Load jobs, rewrites,
+  * deletes, deletion vectors, schema evolution, VACUUM and the catalog's
+  * CREATE TABLE all commit through it. New data files enter a generation
+  * one way, [[WarehouseLoadJob.addStaged]]: every writer, rewrites
+  * included, stages into the table's own `_staging/<jobId>`, and its
+  * commit moves the staged files under `data/<jobId>/` — the load job
+  * ([[WarehouseLoadJob.commit]]), the replace commit every rewrite
+  * publishes through ([[WarehouseRewrite.commitReplace]]), or the
+  * merge-on-read update. [[Manifest.retain]] and [[Manifest.addFrom]]
+  * carry the per-file metadata across each commit.
   *
   * `graft.io.Sink.append/overwrite(format = "graft-warehouse")` route here
   * by short name (ServiceLoader registration); disposition can also be set
@@ -160,9 +166,9 @@ class WarehouseTable(path: String, schema0: StructType,
       TableCapability.STREAMING_WRITE)
 
   /** SQL `DELETE FROM` face: the filters AND together into one
-    * predicate; the metadata delete serves it when every file is
-    * zone-provable, otherwise the copy-on-write path rewrites only the
-    * partial files (same two-tier discipline as the programmatic API).
+    * predicate for [[WarehouseCow.deleteWhereCow]], which commits a
+    * metadata delete when every file is zone-provable and otherwise
+    * rewrites only the partial files.
     */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     scala.util.Try {
@@ -172,15 +178,8 @@ class WarehouseTable(path: String, schema0: StructType,
   override def deleteWhere(filters: Array[Filter]): Unit = {
     require(filters.nonEmpty,
       "DELETE without a WHERE clause should arrive as TRUNCATE")
-    val pred = filters.reduce[Filter](org.apache.spark.sql.sources.And(_, _))
-    try WarehouseDelete.deleteWhere(path, pred): Unit
-    catch {
-      case e: IllegalArgumentException
-          if e.getMessage != null &&
-            e.getMessage.contains("not file-provable") =>
-        WarehouseCow.deleteWhereCow(
-          org.apache.spark.sql.SparkSession.active, path, pred): Unit
-    }
+    WarehouseCow.deleteWhereCow(org.apache.spark.sql.SparkSession.active,
+      path, filters.reduce[Filter](org.apache.spark.sql.sources.And(_, _))): Unit
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -361,12 +360,25 @@ object WarehouseLoadJob {
       case _ => Nil
     }
 
-  /** Moves `staged` under `data/<jobId>/`; returns (staged path, committed
-    * path) pairs for [[Manifest.addFrom]]. */
-  private def moveStaged(root: String, jobId: String,
-      staged: Seq[StagedFile]): Seq[(String, String)] =
-    staged.map(_.path).zip(WarehouseMeta.moveUnder(root, jobId,
-      staged.map(s => (s.path, s.bloom.nonEmpty))))
+  /** `base` plus `staged`: each staged file moves with its bloom sidecar
+    * under `data/<jobId>/` and enters with its per-file metadata. The one
+    * way new files enter a generation. */
+  private[sources] def addStaged(root: String, jobId: String, base: Manifest,
+      staged: Seq[StagedFile]): Manifest = {
+    val f = WarehouseMeta.fs(root)
+    val dataDir = new Path(root, s"data/$jobId")
+    f.mkdirs(dataDir)
+    base.addFrom(Manifest.staged(staged), staged.map { s =>
+      val name = new Path(s.path).getName
+      require(f.rename(new Path(s.path), new Path(dataDir, name)),
+        s"job $jobId: cannot move ${s.path}")
+      if (s.bloom.nonEmpty)
+        require(f.rename(new Path(WarehouseBloom.sidecarPath(s.path)),
+          new Path(dataDir, s"$name.bloom")),
+          s"job $jobId: cannot move bloom sidecar of ${s.path}")
+      s.path -> s"data/$jobId/$name"
+    })
+  }
 
   def commit(root: String, schema: StructType, jobId: String,
       disposition: String, clusterBy: Option[String],
@@ -394,8 +406,6 @@ object WarehouseLoadJob {
       // a load job commits every staged file, zero-row ones included, so
       // a truncate, a WRITE_EMPTY or a streaming epoch of no rows still
       // opens a generation (a batch skips only a zero-row WRITE_APPEND)
-      val staged = stagedFiles(messages)
-      val moved = moveStaged(root, jobId, staged)
       val base = prev match {
         // the committed TABLE schema keeps the table's declared
         // nullability (field-wise OR with the load's): an append of
@@ -409,37 +419,10 @@ object WarehouseLoadJob {
         // first load or truncate: no file, entry or default carries over
         case _ => Manifest(-1L, schema, Nil, jobId, disposition)
       }
-      publish(base.addFrom(Manifest.staged(staged), moved).copy(
+      publish(addStaged(root, jobId, base, stagedFiles(messages)).copy(
         generation = prev.map(_.generation + 1).getOrElse(0L),
         jobId = jobId, disposition = disposition, clusterBy = clusterBy,
         bloomConf = bloomConf))
-      WarehouseMeta.dropStaging(root, jobId)
-    }
-
-  /** Replace-groups commit (SQL UPDATE / MERGE INTO / row-level DELETE):
-    * the staged files REPLACE `replaced` (the files the operation's scan
-    * planned — every row of those files came back through the write,
-    * modified or carried); every other committed file carries by
-    * reference with all its metadata. Same atomicity as a load job. */
-  def commitReplace(root: String, schema: StructType, jobId: String,
-      disposition: String, messages: Array[WriterCommitMessage],
-      replaced: Seq[String]): Unit =
-    WarehouseMeta.job(root, jobId, "RUNNING") { publish =>
-      val m = WarehouseMeta.current(root)
-      require(m.schema.simpleString == schema.simpleString,
-        s"row-level $jobId: schema drift — table has " +
-          s"${m.schema.simpleString}, write has ${schema.simpleString}")
-      val bad = replaced.filterNot(m.files.toSet)
-      require(bad.isEmpty, s"row-level $jobId: replaced files not in " +
-        s"generation ${m.generation}: ${bad.take(3).mkString(",")}")
-      // a replacement commits only files holding rows, and keeps the
-      // manifest's schema
-      val staged = stagedFiles(messages).filter(_.rows > 0L)
-      val moved = moveStaged(root, jobId, staged)
-      val rep = replaced.toSet
-      publish(m.retain(!rep(_)).addFrom(Manifest.staged(staged), moved)
-        .copy(generation = m.generation + 1, jobId = jobId,
-          disposition = disposition))
       WarehouseMeta.dropStaging(root, jobId)
     }
 
@@ -1452,6 +1435,19 @@ object WarehouseZoneMap {
     }
   }
 
+  /** `m`'s files under `pred`, each list in manifest order: (drop = the
+    * zone maps prove every row matches, carry = they prove none can,
+    * partial = everything else). Every DML entry point classifies here. */
+  def classify(m: Manifest, pred: Filter)
+      : (List[String], List[String], List[String]) = {
+    val (drop, rest) = m.files.partition(f => mustMatch(pred,
+      m.stats.getOrElse(f, Map.empty), m.rows.get(f),
+      m.nonNull.getOrElse(f, Map.empty)))
+    val (partial, carry) =
+      rest.partition(f => mightMatch(pred, m.stats.getOrElse(f, Map.empty)))
+    (drop, carry, partial)
+  }
+
   def mightMatch(f: Filter, stats: Map[String, ColStat]): Boolean = {
     def rng(col: String): Option[(Long, Long)] = stats.get(col) collect {
       case ColStat.Longs(lo, hi) => (lo, hi)
@@ -1658,14 +1654,6 @@ case class Manifest(generation: Long, schema: StructType,
       arity = add(arity, src.arity), blooms = add(blooms, src.blooms),
       dvs = add(dvs, src.dvs))
   }
-
-  /** Write options that make a rewrite keep this table's cluster layout
-    * and bloom index (fresh sidecars under the inherited config). */
-  def layoutOptions: Map[String, String] =
-    clusterBy.map("clusterBy" -> _).toMap ++
-      bloomConf.map { case (cols, bits) =>
-        Map("bloomFilters" -> cols.mkString(","), "bloomBits" -> bits.toString)
-      }.getOrElse(Map.empty)
 }
 
 object Manifest {
@@ -1738,12 +1726,9 @@ object WarehouseDelete {
     */
   def deleteWhere(root: String, pred: Filter): Long = {
     val m = WarehouseMeta.current(root)
-    val dropped = m.files.filter { f =>
-      val st = m.stats.getOrElse(f, Map.empty)
-      if (WarehouseZoneMap.mustMatch(pred, st, m.rows.get(f),
-          m.nonNull.getOrElse(f, Map.empty))) true
-      else if (!WarehouseZoneMap.mightMatch(pred, st)) false
-      else throw new IllegalArgumentException(
+    val (dropped, _, partial) = WarehouseZoneMap.classify(m, pred)
+    partial.headOption.foreach { f =>
+      throw new IllegalArgumentException(
         s"delete predicate $pred is not file-provable at $f " +
           "(zone maps prove neither full-match nor no-match) — a " +
           "metadata delete would drop or keep live rows; use a " +
@@ -1924,14 +1909,15 @@ object WarehouseEvolve {
 /** Copy-on-write row-level operations (round-14): the "use a
   * copy-on-write rewrite for partial deletes" guidance the metadata
   * DELETE's refusal message gives, implemented. Shared discipline:
-  * classify every committed file against the operation's key/predicate
-  * via the SAME zone maps the scan prunes with — files provably
-  * untouched carry into the new generation BY REFERENCE (zero IO),
-  * files provably all-deleted drop as metadata, and ONLY the provably-
-  * partial remainder rewrites (read through the scan's `files` option,
-  * committed atomically by [[WarehouseRewrite.commitRewrite]]). At
-  * 100 TB, deleting one customer's rows rewrites the handful of files
-  * whose zones straddle the predicate, not the table.
+  * classify every committed file against the operation's predicate
+  * ([[WarehouseZoneMap.classify]], the SAME zone maps the scan prunes
+  * with) — files provably untouched carry into the new generation BY
+  * REFERENCE (zero IO), files provably all-deleted drop as metadata, and
+  * ONLY the remainder rewrites: read through the scan's `files` option
+  * ([[readSubset]]), staged into the table's own `_staging/<jobId>` and
+  * published by [[WarehouseRewrite.commitReplace]]. At 100 TB, deleting
+  * one customer's rows rewrites the handful of files whose zones straddle
+  * the predicate, not the table.
   */
 object WarehouseCow {
   import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1960,7 +1946,9 @@ object WarehouseCow {
     }
   }
 
-  private[sources] def readSubset(spark: SparkSession, root: String,
+  /** Exactly `files` of the latest generation, read through the scan's
+    * `files` option. */
+  private[graft] def readSubset(spark: SparkSession, root: String,
       files: Seq[String]): DataFrame = {
     require(files.forall(!_.contains(",")),
       "file name contains ',' — cannot pass through the files option")
@@ -1987,9 +1975,8 @@ object WarehouseCow {
     val badCols = set.keys.filterNot(cols)
     require(badCols.isEmpty,
       s"SET names unknown column(s): ${badCols.mkString(",")}")
-    val (rewrite, carry) = m.files.partition { f =>
-      WarehouseZoneMap.mightMatch(pred, m.stats.getOrElse(f, Map.empty))
-    }
+    val (_, carry, _) = WarehouseZoneMap.classify(m, pred)
+    val rewrite = m.files.filterNot(carry.toSet) // drop ++ partial
     if (rewrite.isEmpty) return 0L // provably nothing to update
     val subset = readSubset(spark, root, rewrite)
     val cond = coalesce(predCol, lit(false))
@@ -2003,8 +1990,7 @@ object WarehouseCow {
         case None => col(f.name)
       }
     }.toIndexedSeq: _*)
-    WarehouseRewrite.commitRewrite(spark, root, m, carry, replacement,
-      "UPDATE_COW")
+    WarehouseRewrite.rewrite(root, m, carry, replacement, "UPDATE_COW")
     updated
   }
 
@@ -2019,16 +2005,7 @@ object WarehouseCow {
       pred: Filter): Long = {
     val predCol = filterToColumn(pred) // refuse unsupported shapes first
     val m = WarehouseMeta.current(root)
-    val grouped = m.files.groupBy { f =>
-      val st = m.stats.getOrElse(f, Map.empty)
-      if (WarehouseZoneMap.mustMatch(pred, st, m.rows.get(f),
-          m.nonNull.getOrElse(f, Map.empty))) "drop"
-      else if (!WarehouseZoneMap.mightMatch(pred, st)) "carry"
-      else "rewrite"
-    }
-    val drop = grouped.getOrElse("drop", Nil)
-    val carry = grouped.getOrElse("carry", Nil)
-    val rewrite = grouped.getOrElse("rewrite", Nil)
+    val (drop, carry, rewrite) = WarehouseZoneMap.classify(m, pred)
     require((drop ++ rewrite).forall(f => m.liveRows(f).isDefined),
       "affected files lack exact row counts (pre-upgrade manifest) — " +
         "refusing: the deleted-count contract would be a guess")
@@ -2036,8 +2013,8 @@ object WarehouseCow {
       return WarehouseDelete.deleteWhere(root, pred) // pure metadata edit
     val survivors = readSubset(spark, root, rewrite)
       .filter(not(coalesce(predCol, lit(false))))
-    val after = WarehouseRewrite.commitRewrite(spark, root, m, carry,
-      survivors, "DELETE_COW")
+    val after = WarehouseRewrite.rewrite(root, m, carry, survivors,
+      "DELETE_COW")
     val rewrittenOut = (after.files.toSet -- carry.toSet)
       .toSeq.map(after.rows).sum
     // LIVE counts: a deletion-vector'd row is already gone — neither a
@@ -2128,84 +2105,96 @@ object WarehouseMerge {
     }
     val replacement = (
       if (rewrite.isEmpty) winners
-      else {
-        require(rewrite.forall(!_.contains(",")),
-          "file name contains ',' — cannot pass through the files option")
-        spark.read.format("graft-warehouse")
-          .option("path", root).option("files", rewrite.mkString(","))
-          .load()
-          .join(broadcast(affectedKeys), Seq(key), "left_anti")
-          .unionByName(winners)
-      }).select(tableCols.map(col): _*)
-    val after = WarehouseRewrite.commitRewrite(spark, root, m, carry,
-      replacement, "MERGE")
+      else WarehouseCow.readSubset(spark, root, rewrite)
+        .join(broadcast(affectedKeys), Seq(key), "left_anti")
+        .unionByName(winners)).select(tableCols.map(col): _*)
+    val after = WarehouseRewrite.rewrite(root, m, carry, replacement,
+      "MERGE")
     MergeStats(carry.size, rewrite.size, after.files.size)
   }
 }
 
-/** Partial-rewrite commit (round-14): the shared primitive under
-  * bin-packing OPTIMIZE, copy-on-write DELETE, and MERGE — commit a new
-  * generation that carries `carry` files BY REFERENCE (zero copy, zero
-  * IO: the same path strings and per-file metadata move into the new
-  * manifest) and replaces everything else with the rows of `replacement`.
-  * The replacement writes through a SCRATCH warehouse table first, so
-  * per-file zone maps / row counts / sums / cluster splits stream with
-  * the task writers exactly like a load job; its committed files are then
-  * renamed under the real table's `data/<jobId>/` (O(files) metadata ops)
-  * and the swap is one atomic manifest rename. Readers see the old
-  * generation until that instant; any failure before it leaves the table
-  * untouched (scratch + orphaned data dir only, like an aborted load).
-  * Earlier generations stay time-travel readable — rewritten files are
-  * retired from visibility, never deleted.
+/** The replace commit (round-14): the one way a rewrite publishes —
+  * bin-packing OPTIMIZE, full compaction, copy-on-write UPDATE and
+  * DELETE, MERGE, and SQL UPDATE / MERGE INTO. A rewrite stages its
+  * replacement rows into the table's OWN `_staging/<jobId>` (through
+  * [[stage]], or through Spark's write tasks for SQL row-level DML), with
+  * per-file zone maps / row counts / sums / cluster splits / bloom
+  * sidecars streaming with the task writers exactly like a load job.
+  * [[commitReplace]] then publishes one generation that carries the kept
+  * files BY REFERENCE (zero copy, zero IO: the same path strings and
+  * per-file metadata move into the new manifest) and adds each staged
+  * file holding rows under `data/<jobId>/` (O(files) renames). Readers see
+  * the old generation until the manifest rename; a failure before it
+  * leaves the table untouched and `_staging/<jobId>` dropped. Earlier
+  * generations stay time-travel readable — replaced files are retired
+  * from visibility, never deleted.
   */
 object WarehouseRewrite {
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.DataFrame
 
-  /** Returns the new manifest. `carry` must be a subset of `m.files`;
-    * `replacement`'s columns must match the table schema (names + types,
-    * in order). Zero-row replacement files are dropped, not committed.
+  /** Under one job bracket opening `opening`: runs `staged` for the staged
+    * replacement files, then publishes `m` with only the files `keep`
+    * accepts plus every staged file holding rows, as generation
+    * `m.generation + 1` with `disposition`. The manifest's schema, cluster
+    * layout and bloom config carry over; carried files keep their
+    * evolution arity and deletion vectors. Returns the new manifest.
     */
-  def commitRewrite(spark: SparkSession, root: String, m: Manifest,
-      carry: List[String], replacement: DataFrame,
-      disposition: String): Manifest = {
-    val bad = carry.filterNot(m.files.toSet)
-    require(bad.isEmpty, s"carry names files not in generation " +
-      s"${m.generation}: ${bad.take(3).mkString(",")}")
+  def commitReplace(root: String, m: Manifest, jobId: String,
+      opening: String, disposition: String, keep: String => Boolean)(
+      staged: => Seq[StagedFile]): Manifest =
+    WarehouseMeta.job(root, jobId, opening) { publish =>
+      val out = WarehouseLoadJob.addStaged(root, jobId, m.retain(keep),
+        staged.filter(_.rows > 0L)).copy(generation = m.generation + 1,
+        jobId = jobId, disposition = disposition)
+      publish(out)
+      WarehouseMeta.dropStaging(root, jobId)
+      out
+    }
+
+  /** `replacement`'s rows replace every file of `m` outside `carry` (a
+    * subset of `m.files`): one [[commitReplace]] opening
+    * `PENDING <disposition>`. */
+  def rewrite(root: String, m: Manifest, carry: Seq[String],
+      replacement: DataFrame, disposition: String): Manifest = {
     val jobId =
       s"${disposition.toLowerCase}_${java.util.UUID.randomUUID().toString.take(8)}"
-    WarehouseMeta.job(root, jobId, s"PENDING $disposition") { publish =>
-      val (tm, moved) = viaScratch(spark, root, m, replacement, jobId)
-      // carried files keep their evolution arity and vectors; rewritten
-      // files were just written at the full current schema
-      val newM = m.retain(carry.toSet).addFrom(tm, moved).copy(
-        generation = m.generation + 1, jobId = jobId,
-        disposition = disposition)
-      publish(newM)
-      newM
-    }
+    commitReplace(root, m, jobId, s"PENDING $disposition", disposition,
+      carry.toSet)(stage(root, m, replacement, jobId))
   }
 
-  /** The scratch-table leg of a rewrite: writes `rows` to a scratch
-    * warehouse table with `m`'s cluster layout and bloom index, checks
-    * its schema against `m`'s, and moves its files that hold rows under
-    * `root`'s `data/<jobId>/`. Returns the scratch manifest and the
-    * (scratch path, committed path) moves for [[Manifest.addFrom]]; the
-    * scratch table is gone either way. */
-  private[sources] def viaScratch(spark: SparkSession, root: String,
-      m: Manifest, rows: DataFrame,
-      jobId: String): (Manifest, Seq[(String, String)]) = {
-    val tmpRoot = s"$root/_rewrite_tmp_${java.util.UUID.randomUUID()}"
-    try {
-      graft.io.Sink.overwrite(rows, tmpRoot, format = "graft-warehouse",
-        options = m.layoutOptions)
-      val tm = WarehouseMeta.current(tmpRoot)
-      require(tm.schema.simpleString == m.schema.simpleString,
-        s"rewrite schema drift — table has ${m.schema.simpleString}, " +
-          s"replacement wrote ${tm.schema.simpleString}")
-      val kept = tm.files.filter(f => tm.rows.getOrElse(f, 1L) > 0L)
-      (tm, kept.zip(WarehouseMeta.moveUnder(root, jobId, kept.map(f =>
-        (s"$tmpRoot/$f", tm.blooms.get(f).exists(_.nonEmpty))))))
-    } finally WarehouseMeta.fs(root).delete(new Path(tmpRoot), true): Unit
+  /** Stages `rows` into `root`'s own `_staging/<jobId>`: each partition
+    * runs through the table's [[WarehouseWriterFactory]] under `m`'s
+    * cluster layout and bloom index, as a load job's write task does. A
+    * failed task aborts its files, and a failed job drops the directory.
+    * `rows` must carry `m`'s column names and types, in order. */
+  private[sources] def stage(root: String, m: Manifest, rows: DataFrame,
+      jobId: String): Seq[StagedFile] = {
+    require(rows.schema.simpleString == m.schema.simpleString,
+      s"rewrite schema drift — table has ${m.schema.simpleString}, " +
+        s"replacement has ${rows.schema.simpleString}")
+    val factory = new WarehouseWriterFactory(root, s"$root/_staging/$jobId",
+      rows.schema, m.clusterBy, m.bloomConf)
+    val qe = rows.queryExecution
+    try WarehouseLoadJob.stagedFiles(
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+          Some(s"stage $jobId")) {
+        qe.toRdd.mapPartitionsWithIndex { (part, it) =>
+          val w = factory.createWriter(part,
+            org.apache.spark.TaskContext.get().taskAttemptId())
+          try {
+            it.foreach(w.write)
+            Iterator.single(w.commit())
+          } catch {
+            case e: Throwable => w.abort(); throw e
+          } finally w.close()
+        }.collect()
+      })
+    catch {
+      case e: Throwable =>
+        WarehouseMeta.dropStaging(root, jobId)
+        throw e
+    }
   }
 }
 
@@ -2423,7 +2412,7 @@ object WarehouseMeta {
     }
   }
 
-  /** Drops a load job's `_staging/<jobId>` upload directory. */
+  /** Drops a job's `_staging/<jobId>` upload directory. */
   private[sources] def dropStaging(root: String, jobId: String): Unit =
     fs(root).delete(new Path(root, s"_staging/$jobId"), true): Unit
 
@@ -2432,26 +2421,6 @@ object WarehouseMeta {
   private[sources] def abort(root: String, jobId: String): Unit = {
     dropStaging(root, jobId)
     logJobState(fs(root), root, jobId, "ABORTED")
-  }
-
-  /** Moves each absolute `(file, hasBloom)` — with its `.bloom` sidecar
-    * when it has one — under `data/<jobId>/`; returns the table-relative
-    * paths in order. */
-  private[sources] def moveUnder(root: String, jobId: String,
-      srcs: Seq[(String, Boolean)]): Seq[String] = {
-    val f = fs(root)
-    val dataDir = new Path(root, s"data/$jobId")
-    f.mkdirs(dataDir)
-    srcs.map { case (src, bloom) =>
-      val name = new Path(src).getName
-      require(f.rename(new Path(src), new Path(dataDir, name)),
-        s"job $jobId: cannot move $src")
-      if (bloom)
-        require(f.rename(new Path(WarehouseBloom.sidecarPath(src)),
-          new Path(dataDir, s"$name.bloom")),
-          s"job $jobId: cannot move bloom sidecar of $src")
-      s"data/$jobId/$name"
-    }
   }
 
   private def writeManifest(f: FileSystem, root: String, m: Manifest): Unit = {

@@ -30,7 +30,8 @@ case class WarehouseGenOffset(gen: Long) extends Offset {
   *
   *  - pure-append commits (`WRITE_APPEND` after the first load,
   *    `WRITE_EMPTY`, the first `WRITE_TRUNCATE`) → emit the added files;
-  *  - row-preserving commits (`OPTIMIZE` bin-packing, `ADD_COLUMN`,
+  *  - row-preserving commits (`OPTIMIZE`: bin-packing or full
+  *    compaction, `ADD_COLUMN`,
   *    `RENAME_COLUMN`) → emit NOTHING: the rewrite moved rows the stream
   *    already delivered (the `dataChange=false` idea, served from the
   *    disposition instead of a writer flag);

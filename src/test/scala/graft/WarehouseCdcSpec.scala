@@ -58,6 +58,18 @@ class WarehouseCdcSpec extends SparkSpec {
       (20 until 30).map(k => ("delete", 3L, k.toLong, 2.0)).toSet)
   }
 
+  test("a full compaction is row-preserving: the change feed across it " +
+    "is empty") {
+    val path = scratch("compact")
+    Sink.overwrite(spark.range(40).select(col("id").as("k"),
+      (col("id") * 0.5).as("v")).repartition(4), path,
+      format = "graft-warehouse")
+    Maintenance.compactWarehouse(spark, path, targetFiles = 1)
+    assert(changes(path, 0, 1).isEmpty)
+    val m = WarehouseMeta.readManifest(path).get
+    assert(m.generation === 1L && m.disposition === "OPTIMIZE")
+  }
+
   test("history lists retained generations with live counts and real " +
     "commit metadata; VACUUM shortens it") {
     val path = scratch("hist")

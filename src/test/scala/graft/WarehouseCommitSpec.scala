@@ -73,7 +73,12 @@ class WarehouseCommitSpec extends SparkSpec {
     ("vacuumWarehouse", "PENDING keep=1", 0, true, p =>
       Maintenance.vacuumWarehouse(p, keepGenerations = 1): Unit),
     ("CREATE TABLE", "PENDING create", 1, false, _ =>
-      spark.sql("CREATE TABLE gcommit.db.create_table (k BIGINT, m BIGINT)"): Unit))
+      spark.sql("CREATE TABLE gcommit.db.create_table (k BIGINT, m BIGINT)"): Unit),
+    ("compactWarehouse", "PENDING OPTIMIZE", 1, true, p =>
+      Maintenance.compactWarehouse(spark, p): Unit),
+    // m = 3 holds in some rows of every file: the copy-on-write tier
+    ("SQL DELETE FROM", "PENDING DELETE_COW", 1, true, _ =>
+      spark.sql("DELETE FROM gcommit.db.sql_delete_from WHERE m = 3"): Unit))
 
   test("every commit kind logs (opening, DONE), publishes its generations " +
     "and keeps per-file metadata keyed by committed files") {
@@ -119,5 +124,26 @@ class WarehouseCommitSpec extends SparkSpec {
     }
     assert(generation(path) === gen + 1)
     assert(WarehouseMeta.jobStates(path, "twice").last.startsWith("ERROR"))
+  }
+
+  test("a rewrite whose replacement throws in a task changes nothing and " +
+    "leaves no staged or data directory") {
+    val path = seeded("throwing_rewrite")
+    val before = WarehouseMeta.current(path)
+    val jobsBefore = WarehouseMeta.jobs(path).toSet
+    intercept[Exception] {
+      WarehouseCow.updateWhereCow(spark, path, EqualTo("m", 3L),
+        Map("m" -> "raise_error('boom')"))
+    }
+    assert(WarehouseMeta.current(path) === before)
+    val newJobs = WarehouseMeta.jobs(path).filterNot(jobsBefore)
+    assert(newJobs.size === 1, newJobs)
+    val job = newJobs.head
+    val states = WarehouseMeta.jobStates(path, job)
+    assert(states.size === 2 && states.head === "PENDING UPDATE_COW" &&
+      states(1).startsWith("ERROR "), states)
+    val fs = WarehouseMeta.fs(path)
+    for (dir <- Seq(s"_staging/$job", s"data/$job"))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(path, dir)), dir)
   }
 }
