@@ -29,16 +29,16 @@ object Tables {
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
     Catalog.forDir(sfDir).read(spark, name)
 
-  /** Memoized row count of one logical table — the sizing input the
+  /** Memoized row count of one logical table — the corpus size the
     * adaptive operators (bits-per-band, simhash block count, tf-idf's N)
-    * read at plan-construction time. The binding is immutable for the life of a session (the
-    * resolved-scan-memo invariant in [[Catalog.read]]), so the count is
-    * SessionMemo'd per (session, path): ONE metadata-cheap count job the
-    * first time any sizing rule asks, zero actions afterwards. This is
-    * metadata reuse in the nodesWithCount/fingerprint discipline, not
-    * result caching — consumers use the number only to pick operator
-    * parameters; every query action still computes its
-    * rows from the parquet inputs.
+    * take as a required argument at plan-construction time. The binding
+    * is immutable for the life of a session (the resolved-scan-memo
+    * invariant in [[Catalog.read]]), so the count is SessionMemo'd per
+    * (session, path): ONE metadata-cheap count job the first time any
+    * sizing rule asks, zero actions afterwards. This is metadata reuse,
+    * like the graph fixtures' memoized node counts, not result caching —
+    * consumers use the number only to pick operator parameters; every
+    * query action still computes its rows from the parquet inputs.
     */
   def rowCount(spark: SparkSession, sfDir: String, name: String): Long =
     SessionMemo(spark, s"tabcount_${path(sfDir, name)}")(

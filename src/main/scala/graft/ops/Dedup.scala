@@ -449,15 +449,12 @@ object Dedup {
   }
 
   /** SimHash blocking-collision candidates (pre-hamming-filter), exposed
-    * for the same PairAudit reason as [[lshCandidates]]. Block count from
-    * [[simhashNumBlocks]] unless forced (tests force the B=8 rung on
-    * small corpora to brute-force-gate it).
+    * for the same PairAudit reason as [[lshCandidates]]. `nBlocks` is a
+    * [[SimhashBlockLadder]] rung: [[simhashNumBlocks]] of the corpus size,
+    * or any rung a caller gates on its own.
     */
   private[graft] def simhashCandidates(docs: DataFrame,
-      knownCount: Option[Long] = None,
-      forceBlocks: Option[Int] = None): DataFrame = {
-    val nBlocks = forceBlocks.getOrElse(
-      simhashNumBlocks(knownCount.getOrElse(docs.count())))
+      nBlocks: Int): DataFrame = {
     val fps = simhashFingerprints(docs)
     val banded = fps.withColumn("bd",
       explode(array(simhashComboKeys(nBlocks).zipWithIndex.map {
@@ -480,13 +477,14 @@ object Dedup {
     * ladder rung), then the hamming filter. The default 3 keeps the
     * output tracking true near-dup density instead of growing
     * quadratically (hamming<=8 emitted 247k pairs at sf0.1; <=3 emits
-    * the actual duplicates).
+    * the actual duplicates). `nRows` is the corpus size the block count
+    * is sized from.
     */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-      knownCount: Option[Long] = None): DataFrame = {
+  def simhashPairs(docs: DataFrame, nRows: Long,
+      maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= SimhashMaxHamming,
       s"blocking is pigeonhole-exact only to hamming $SimhashMaxHamming")
-    simhashCandidates(docs, knownCount)
+    simhashCandidates(docs, simhashNumBlocks(nRows))
       .filter(col("hamming") <= maxHamming)
       .orderBy("doc_a", "doc_b")
   }

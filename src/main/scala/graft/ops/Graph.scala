@@ -12,6 +12,11 @@ import org.apache.spark.sql.functions._
   * partitioning, summation order, or engine — the same trick the
   * streaming sessionizer uses for its value sums. Float PageRank cannot
   * be oracle-checked exactly; fixed-point PageRank can.
+  *
+  * The iterative loops take their input prepared: already-distinct edges
+  * (directed or symmetric, as each says) and the node set and/or node
+  * count. `graft.queries.GraphFixtures` states that contract and publishes
+  * each prepared input once per corpus; no loop derives it again.
   */
 object Graph {
 
@@ -27,7 +32,8 @@ object Graph {
     */
   val BroadcastMaxNodes: Long = 2000000L
 
-  /** PageRank after `iters` rounds over `edges(src, dst)`.
+  /** PageRank after `iters` rounds over the DISTINCT directed edge set
+    * `edges(src, dst)`.
     * r_{t+1}(v) = 0.15 + 0.85 * Σ_{u→v} r_t(u) div outdeg(u), all in
     * scaled integers. Per iteration: one join on src (broadcast the
     * outdegree table — it's one row per distinct source) + one hash agg
@@ -35,34 +41,21 @@ object Graph {
     * with iters; for big graphs checkpoint every few rounds exactly as
     * [[Dedup.clusters]] does (localCheckpoint keeps lineage flat).
     *
+    * @param nodes every endpoint of `edges` (column `node`) with its row
+    *   count, which is the broadcast gate's input
     * @param broadcastMaxNodes gate for the per-round broadcast hints: the
-    *   hints apply only when the (checkpointed, already-counted) node set
-    *   is at most this many rows. A hint FORCES the broadcast regardless
+    *   hints apply only when the node set is at most this many rows. A hint FORCES the broadcast regardless
     *   of `autoBroadcastJoinThreshold`, so an ungated hint is a
     *   driver-OOM at 100× nodes; gated off, every round runs shuffle
     *   joins on the identical logical plan.
     */
-  def pagerank(edges: DataFrame, iters: Int,
-      broadcastMaxNodes: Long = BroadcastMaxNodes,
-      predistinct: Boolean = false,
-      nodesWithCount: Option[(DataFrame, Long)] = None): DataFrame = {
+  def pagerank(edges: DataFrame, nodes: (DataFrame, Long), iters: Int,
+      broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
     // materialize the loop invariants once (same trick as Dedup.clusters):
-    // without this every iteration re-derives edges/nodes/outdegree from
-    // the source scans — iters× recompute and a lineage that grows per round.
-    // `predistinct`: the caller hands the persisted directed-distinct
-    // fixture (GraphFixtures.edgesDistinct) — skip the per-query distinct
-    // shuffle (the seededDistances presymmetrized discipline, r15).
-    // `nodesWithCount`: the persisted node fixture + its memoized count —
-    // skip the per-query endpoint-union distinct AND the gate count.
-    val e0 = edges.select("src", "dst")
-    val e = (if (predistinct) e0 else e0.distinct()).localCheckpoint()
-    val (nodes, nNodes) = nodesWithCount match {
-      case Some((nd, n)) => (nd.select(col("node")), n)
-      case None =>
-        val nd = e.select(col("src").as("node"))
-          .union(e.select(col("dst"))).distinct().localCheckpoint()
-        (nd, nd.count())
-    }
+    // without this every iteration re-derives edges/outdegree from the
+    // source scans — iters× recompute and a lineage that grows per round.
+    val e = edges.select("src", "dst").localCheckpoint()
+    val nd = nodes._1.select(col("node"))
     // fresh alias for the key: outdeg derives from e, so joining back on
     // e("src") === outdeg("src") would resolve both sides to the SAME
     // attribute (a trivially-true predicate — a cross join in disguise)
@@ -73,20 +66,20 @@ object Graph {
     // node set fits the broadcast gate, both per-iteration joins broadcast
     // it and the EDGES NEVER SHUFFLE: each round is a map-side join over
     // the checkpointed edge partitions plus one partial-agg shuffle of
-    // ≤|nodes| rows per partition. The gate reads the node count off the
-    // ALREADY-CHECKPOINTED node set (a cheap count, paid once, not per
-    // round); past the gate the hints vanish and the same plan runs as
+    // ≤|nodes| rows per partition. The gate reads the node count handed
+    // in with the node set (counted once per corpus, not per round); past
+    // the gate the hints vanish and the same plan runs as
     // shuffle joins — degraded throughput, never a driver OOM.
     val hint: DataFrame => DataFrame =
-      if (nNodes <= broadcastMaxNodes) broadcast else identity
-    var ranks = nodes.withColumn("r", lit(Scale))
+      if (nodes._2 <= broadcastMaxNodes) broadcast else identity
+    var ranks = nd.withColumn("r", lit(Scale))
     for (_ <- 1 to iters) {
       val contribs = e
         .join(hint(ranks), col("node") === e("src"))
         .join(hint(outdeg), col("src") === col("od_src"))
         .select(col("dst").as("node"), expr("r div deg").as("c"))
         .groupBy("node").agg(sum(col("c")).as("contrib"))
-      ranks = nodes
+      ranks = nd
         .join(hint(contribs), Seq("node"), "left")
         .select(col("node"),
           (lit(BaseScaled) +
@@ -107,28 +100,20 @@ object Graph {
     *
     * Unnormalized restart (each seed gets the full (1−d)·Scale rather
     * than a 1/|S| share) — ranks scale linearly with |S|, ordering is
-    * unaffected, and the integer division stays exact.
+    * unaffected, and the integer division stays exact. Takes the same
+    * prepared input as [[pagerank]].
     */
-  def personalizedPagerank(edges: DataFrame, seeds: Column, iters: Int,
-      broadcastMaxNodes: Long = BroadcastMaxNodes,
-      predistinct: Boolean = false,
-      nodesWithCount: Option[(DataFrame, Long)] = None): DataFrame = {
-    // fixture hooks — see [[pagerank]]
-    val e0 = edges.select("src", "dst")
-    val e = (if (predistinct) e0 else e0.distinct()).localCheckpoint()
-    val (nodes, nNodes) = nodesWithCount match {
-      case Some((nd, n)) => (nd.select(col("node")), n)
-      case None =>
-        val nd = e.select(col("src").as("node"))
-          .union(e.select(col("dst"))).distinct().localCheckpoint()
-        (nd, nd.count())
-    }
+  def personalizedPagerank(edges: DataFrame, nodes: (DataFrame, Long),
+      seeds: Column, iters: Int,
+      broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
+    val e = edges.select("src", "dst").localCheckpoint()
+    val nd = nodes._1.select(col("node"))
     val outdeg = e.groupBy(col("src").as("od_src"))
       .agg(count(lit(1)).as("deg")).localCheckpoint()
     val hint: DataFrame => DataFrame =
-      if (nNodes <= broadcastMaxNodes) broadcast else identity
+      if (nodes._2 <= broadcastMaxNodes) broadcast else identity
     val restart = when(seeds, lit(BaseScaled)).otherwise(lit(0L))
-    var ranks = nodes.withColumn("r",
+    var ranks = nd.withColumn("r",
       when(seeds, lit(Scale)).otherwise(lit(0L)))
     for (_ <- 1 to iters) {
       val contribs = e
@@ -136,7 +121,7 @@ object Graph {
         .join(hint(outdeg), col("src") === col("od_src"))
         .select(col("dst").as("node"), expr("r div deg").as("c"))
         .groupBy("node").agg(sum(col("c")).as("contrib"))
-      ranks = nodes
+      ranks = nd
         .join(hint(contribs), Seq("node"), "left")
         .select(col("node"),
           (restart +
@@ -145,8 +130,9 @@ object Graph {
     ranks
   }
 
-  /** Hop distances from a landmark set over an undirected edge list by
-    * `rounds` of synchronous frontier relaxation (min-plus BFS):
+  /** Hop distances from a landmark set over the SYMMETRIC distinct edge
+    * set `edges` and its endpoint set `nodes` (column `node`, with its row
+    * count) by `rounds` of synchronous frontier relaxation (min-plus BFS):
     * dist_{t+1}(v) = min(dist_t(v), min_{u~v} dist_t(u) + 1). Exact for
     * every node within `rounds` hops; farther nodes keep the sentinel
     * (surface as hop −1). Per round: one join of the checkpointed edge
@@ -155,34 +141,15 @@ object Graph {
     * = the landmark eccentricity you care about, the standard
     * landmark-distance sketch for graph features at scale.
     */
-  def hopDistances(edges: DataFrame, sources: Column,
-      rounds: Int, broadcastMaxNodes: Long = BroadcastMaxNodes,
-      presymmetrized: Boolean = false,
-      nodesWithCount: Option[(DataFrame, Long)] = None): DataFrame = {
+  def hopDistances(edges: DataFrame, nodes: (DataFrame, Long),
+      sources: Column, rounds: Int,
+      broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
     val Unreached = 1000000L
-    // presymmetrized: persisted symmetric-distinct adjacency in, skip the
-    // per-query doubled-edge distinct (the seededDistances discipline).
-    // nodesWithCount: the persisted endpoint set + memoized count
-    // (GraphFixtures.nodesWithCount — symmetrization is endpoint-
-    // preserving, so the directed fixture's node set IS this graph's) —
-    // skip the per-query node distinct, its checkpoint, and the gate
-    // count action (the pagerank hook, r15).
-    val e =
-      if (presymmetrized) edges.select("src", "dst").localCheckpoint()
-      else edges.select("src", "dst")
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().localCheckpoint()
-    val (nodes, nNodes) = nodesWithCount match {
-      case Some((nd, n)) => (nd.select(col("node")), n)
-      case None =>
-        val nd =
-          e.select(col("src").as("node")).distinct().localCheckpoint()
-        (nd, nd.count())
-    }
+    val e = edges.select("src", "dst").localCheckpoint()
     val hint: DataFrame => DataFrame =
-      if (nNodes <= broadcastMaxNodes) broadcast else identity
-    var dist = nodes.withColumn("d",
-      when(sources, lit(0L)).otherwise(lit(Unreached)))
+      if (nodes._2 <= broadcastMaxNodes) broadcast else identity
+    var dist = nodes._1.select(col("node"),
+      when(sources, lit(0L)).otherwise(lit(Unreached)).as("d"))
     for (_ <- 1 to rounds) {
       val relax = e.join(hint(dist), col("node") === e("src"))
         .select(col("dst").as("node"), (col("d") + 1).as("nd"))
@@ -213,27 +180,15 @@ object Graph {
     * the ≤62-row broadcast seed table. Wider seed sets fall back to the
     * row-per-pair loop below. Both paths gate their per-round broadcast
     * on the ACTUAL frontier size (advice r12), not the node count.
+    *
+    * Input: the SYMMETRIC distinct edge set and its endpoint set `nodes`
+    * (column `node`). The seed filter's count is the only action before
+    * the rounds; it is also the termination gate.
     */
-  def seededDistances(edges: DataFrame, seeds: Column, rounds: Int,
-      broadcastMaxNodes: Long = BroadcastMaxNodes,
-      presymmetrized: Boolean = false,
-      prenodes: Option[DataFrame] = None): DataFrame = {
-    // presymmetrized: the caller hands the persisted symmetric-distinct
-    // adjacency (GraphFixtures.edgesSymDistinct) — the per-query doubled
-    // distinct, 85% of this operator's shuffle at the sf4 decade, is
-    // amortized into the fixture like the raw edge join itself.
-    // prenodes: the persisted endpoint set (GraphFixtures.nodesWithCount's
-    // frame) — skip the per-query node distinct + checkpoint; only the
-    // seed filter's count action remains (it is also the termination
-    // gate, so it cannot fold further).
-    val e =
-      if (presymmetrized) edges.select("src", "dst").localCheckpoint()
-      else edges.select("src", "dst")
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().localCheckpoint()
-    val nodes = prenodes.map(_.select(col("node"))).getOrElse(
-      e.select(col("src").as("node")).distinct().localCheckpoint())
-    val seedNodes = nodes.filter(seeds).localCheckpoint()
+  def seededDistances(edges: DataFrame, nodes: DataFrame, seeds: Column,
+      rounds: Int, broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
+    val e = edges.select("src", "dst").localCheckpoint()
+    val seedNodes = nodes.select(col("node")).filter(seeds).localCheckpoint()
     val nSeeds = seedNodes.count()
     if (nSeeds > 62)
       return seededDistancesRows(e, seedNodes, rounds, broadcastMaxNodes)
@@ -336,20 +291,12 @@ object Graph {
     * each extra round is one (groupBy → count, semi-join) pass over the
     * surviving edges — shuffle shrinks monotonically as edges peel away.
     * Returns the surviving nodes with their residual in-core degree.
+    *
+    * Input: the SYMMETRIC distinct edge set and its node count `nNodes`.
     */
-  def kcore(edges: DataFrame, k: Int, rounds: Int,
-      broadcastMaxNodes: Long = BroadcastMaxNodes,
-      presymmetrized: Boolean = false,
-      knownNodeCount: Option[Long] = None): DataFrame = {
-    // presymmetrized: caller hands the persisted symmetric-distinct
-    // adjacency (GraphFixtures.edgesSymDistinct) — skip the per-query
-    // doubled-edge distinct, the round-13 audit's 85%-of-shuffle item
-    // (the seededDistances discipline, applied here)
-    var e =
-      if (presymmetrized) edges.select("src", "dst").localCheckpoint()
-      else edges.select("src", "dst")
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().localCheckpoint()
+  def kcore(edges: DataFrame, nNodes: Long, k: Int, rounds: Int,
+      broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
+    var e = edges.select("src", "dst").localCheckpoint()
     // Broadcast gate, same discipline as pagerank: `keep` is one row per
     // SURVIVING node (≤ the initial node count, monotonically shrinking),
     // but Catalyst's post-aggregation size estimate tracks the edge set,
@@ -359,13 +306,6 @@ object Graph {
     // true node count the hint keeps the loop's rounds exchange-free for
     // `e` (cached scan + broadcast filter); past the gate a forced
     // broadcast would OOM, so the same plan runs as shuffle joins.
-    // knownNodeCount: the memoized endpoint count (GraphFixtures.
-    // nodesWithCount._2) — the gate reads a number instead of running a
-    // per-query distinct + count job; identical results either side of
-    // the gate (hints never change values), so the memoized count is
-    // exactly as safe as the counted one.
-    val nNodes = knownNodeCount.getOrElse(
-      e.select("src").distinct().count())
     val hint: DataFrame => DataFrame =
       if (nNodes <= broadcastMaxNodes) broadcast else identity
     for (_ <- 1 to rounds) {
@@ -389,14 +329,16 @@ object Graph {
       .filter(col("core_degree") >= k)
   }
 
-  /** Synchronous label-propagation community detection over an undirected
-    * edge list: every node starts labeled with its own id; each round,
-    * every node adopts the most frequent label among its neighbors AND
-    * itself, ties broken by the SMALLEST label. Classic async LPA is
-    * visit-order-dependent; this synchronous min-tie-break variant is a
-    * pure function of the graph, so a fixed `rounds` unrolls exactly in
-    * the oracle. The self-vote damps the 2-cycle oscillation synchronous
-    * neighbor-only updates exhibit on bipartite structure.
+  /** Synchronous label-propagation community detection over the SYMMETRIC
+    * distinct edge set `edges` and its endpoint set `nodes` (column
+    * `node`, with its row count): every node starts labeled with its own
+    * id; each round, every node adopts the most frequent label among its
+    * neighbors AND itself, ties broken by the SMALLEST label. Classic
+    * async LPA is visit-order-dependent; this synchronous min-tie-break
+    * variant is a pure function of the graph, so a fixed `rounds`
+    * unrolls exactly in the oracle. The self-vote damps the 2-cycle
+    * oscillation synchronous neighbor-only updates exhibit on bipartite
+    * structure.
     *
     * Scale shape per round: labels (one row per node, broadcast-gated on
     * the true node count — the pagerank/kcore discipline) join the edge
@@ -405,16 +347,12 @@ object Graph {
     * throughout, never a window sort. Returns (node, label) where label
     * is the community representative id.
     */
-  def labelPropagation(edges: DataFrame, rounds: Int,
-      broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
-    val e = edges.select("src", "dst")
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
-    val nNodes = e.select("src").distinct().count()
+  def labelPropagation(edges: DataFrame, nodes: (DataFrame, Long),
+      rounds: Int, broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
+    val e = edges.select("src", "dst").localCheckpoint()
     val hint: DataFrame => DataFrame =
-      if (nNodes <= broadcastMaxNodes) broadcast else identity
-    var labels = e.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint()
+      if (nodes._2 <= broadcastMaxNodes) broadcast else identity
+    var labels = nodes._1.select(col("node"), col("node").as("label"))
     for (_ <- 1 to rounds) {
       val votes = e
         .join(hint(labels.withColumnRenamed("node", "src")), Seq("src"))
@@ -565,28 +503,17 @@ object Graph {
     * joins), one dst/src-keyed partial agg (≤ |nodes| rows), one 1-row
     * max. Edges never shuffle inside the gate. Output: both role frames
     * ("hub" = src side, "authority" = dst side) with their final scores.
+    *
+    * Input: the DISTINCT directed edge set and its distinct sources `hubs`
+    * (column `node`, with its row count): the initial hub frame and the
+    * broadcast gate's input.
     */
-  def hits(edges: DataFrame, iters: Int,
-      broadcastMaxNodes: Long = BroadcastMaxNodes,
-      predistinct: Boolean = false,
-      hubsWithCount: Option[(DataFrame, Long)] = None): DataFrame = {
-    // predistinct: persisted directed-distinct fixture in — skip the
-    // per-query distinct shuffle (see [[pagerank]]).
-    // hubsWithCount: the persisted distinct-src set + memoized count
-    // (GraphFixtures.srcNodesWithCount) — skip the per-query src
-    // distinct, its checkpoint, and the gate count action.
-    val e0 = edges.select("src", "dst")
-    val e = (if (predistinct) e0 else e0.distinct()).localCheckpoint()
-    val (hubs0, nHubs) = hubsWithCount match {
-      case Some((nd, n)) => (nd.select(col("node")), n)
-      case None =>
-        val nd =
-          e.select(col("src").as("node")).distinct().localCheckpoint()
-        (nd, nd.count())
-    }
+  def hits(edges: DataFrame, hubs: (DataFrame, Long), iters: Int,
+      broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
+    val e = edges.select("src", "dst").localCheckpoint()
     val hint: DataFrame => DataFrame =
-      if (nHubs <= broadcastMaxNodes) broadcast else identity
-    var h = hubs0.withColumn("s", lit(HitsScale))
+      if (hubs._2 <= broadcastMaxNodes) broadcast else identity
+    var h = hubs._1.select(col("node"), lit(HitsScale).as("s"))
     var a: DataFrame = null
     for (_ <- 1 to iters) {
       val araw = e.join(hint(h), col("node") === e("src"))

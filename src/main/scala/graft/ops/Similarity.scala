@@ -157,10 +157,15 @@ object Similarity {
 
   /** Embedding width, read once from a single row — an O(1) driver lookup
     * (LocalLimit 1), not a data materialization. Callers that know the
-    * width statically can pass it to `lshBucket` directly.
+    * width statically can pass it to `lshBucket` directly. An empty corpus
+    * has no width, so every sizing rule built on it refuses by name.
     */
-  def embDims(emb: DataFrame, c: String = "embedding"): Int =
-    emb.select(size(col(c))).head.getInt(0)
+  def embDims(emb: DataFrame, c: String = "embedding"): Int = {
+    val first = emb.select(size(col(c))).head(1)
+    require(first.nonEmpty,
+      "embDims needs a non-empty embedding corpus: no vector to size")
+    first.head.getInt(0)
+  }
 
   /** ±1 hyperplane components for plane `p` (optionally inside band `band`)
     * over `dims` components, derived from the seeded hash of the public
@@ -270,23 +275,19 @@ object Similarity {
     * collect; swap in fully trained centroids (e.g. [[Clustering]] means)
     * without changing the plan shape — assignment stays a broadcast
     * argmax, probing stays a list-keyed join.
+    *
+    * @param lists the (vec_id, list_id) inverted-list index,
+    *   [[fitIvfLists]] under the same `nlists` and `seed`: the probe run
+    *   pays a list lookup, never the corpus-wide argmax window
     */
-  def ivfTopK(emb: DataFrame, nQueries: Int = 5, k: Int = 3,
-      nlists: Int = 16, nprobe: Int = 2,
-      seed: Option[Long] = None,
-      lists: Option[DataFrame] = None): DataFrame = {
+  def ivfTopK(emb: DataFrame, lists: DataFrame, nQueries: Int = 5,
+      k: Int = 3, nlists: Int = 16, nprobe: Int = 2,
+      seed: Option[Long] = None): DataFrame = {
     val e = emb.repartition(col("vec_id")).select(col("vec_id"),
       col("embedding"), norm(col("embedding")).as("nrm"))
     val cents = ivfSeedCentroids(e, nlists, seed)
-    // coarse assignment: nearest centroid by rounded cosine (tie:
-    // cent_id) — or, when a persisted (vec_id, list_id) index is handed
-    // in (the ann_recall fixture discipline), a plain join: the probe
-    // run pays the list lookup, never the corpus-wide argmax window
-    val assigned = lists match {
-      case Some(ls) => e.join(ls, Seq("vec_id"))
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("list_id"))
-      case None => ivfSeedAssign(e, cents)
-    }
+    val assigned = e.join(lists, Seq("vec_id"))
+      .select(col("vec_id"), col("embedding"), col("nrm"), col("list_id"))
     // queries probe their nprobe nearest lists
     val wProbe = Window.partitionBy("query_id")
       .orderBy(col("ccos").desc, col("cent_id"))
@@ -330,33 +331,25 @@ object Similarity {
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv"),
         col("nrm").as("cnrm"))
 
-  /** Coarse assignment: nearest seed centroid by rounded cosine, cent_id
-    * tie-break — the one corpus-wide argmax window in the IVF build. */
-  private def ivfSeedAssign(e: DataFrame, cents: DataFrame): DataFrame = {
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cent_id"))
-    e.join(broadcast(cents))
-      .withColumn("ccos",
-        cosFrom(dot(col("embedding"), col("cv")), col("nrm"), col("cnrm")))
-      .withColumn("crank", row_number().over(wAssign))
-      .filter(col("crank") === 1)
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("cent_id").as("list_id"))
-  }
-
-  /** Fit ONLY the inverted-list assignment of [[ivfTopK]]'s seed-rule
-    * quantizer — the (vec_id, list_id) index a production deployment
-    * persists once per corpus so probe runs never re-pay the corpus-wide
-    * argmax. Feed back via `ivfTopK(lists = Some(...))`; results are
-    * identical by construction (the probe path re-derives the same seed
-    * centroids from their rule).
+  /** Fit the inverted-list assignment of [[ivfTopK]]'s seed-rule
+    * quantizer: each vector's nearest seed centroid by rounded cosine,
+    * cent_id tie-break — the one corpus-wide argmax window in the IVF
+    * build, and the (vec_id, list_id) index a production deployment
+    * persists once per corpus. [[ivfTopK]] takes it as `lists` and
+    * re-derives the same seed centroids from their rule for its probes.
     */
   def fitIvfLists(emb: DataFrame, nlists: Int = 16,
       seed: Option[Long] = None): DataFrame = {
     val e = emb.repartition(col("vec_id")).select(col("vec_id"),
       col("embedding"), norm(col("embedding")).as("nrm"))
-    ivfSeedAssign(e, ivfSeedCentroids(e, nlists, seed))
-      .select(col("vec_id"), col("list_id"))
+    val wAssign = Window.partitionBy("vec_id")
+      .orderBy(col("ccos").desc, col("cent_id"))
+    e.join(broadcast(ivfSeedCentroids(e, nlists, seed)))
+      .withColumn("ccos",
+        cosFrom(dot(col("embedding"), col("cv")), col("nrm"), col("cnrm")))
+      .withColumn("crank", row_number().over(wAssign))
+      .filter(col("crank") === 1)
+      .select(col("vec_id"), col("cent_id").as("list_id"))
   }
 
   /** Recall@k of the two approximate indexes against the exact baseline —
@@ -366,11 +359,12 @@ object Similarity {
     * expensive |Q|×N scan) and each approximate result semi-joins against
     * it on (query, neighbor); everything downstream of the three top-k
     * frames is a few-row agg, so the cost is the three indexes
-    * themselves.
+    * themselves. The trained artifacts come in: `lists` from
+    * [[fitIvfLists]] (16 lists), `codebooks` and `codes` from [[fitPq]]
+    * (8 subspaces).
     */
-  def annRecall(emb: DataFrame, nQueries: Int = 5, k: Int = 3,
-      ivfLists: Option[DataFrame] = None,
-      pqTrained: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+  def annRecall(emb: DataFrame, lists: DataFrame, codebooks: DataFrame,
+      codes: DataFrame, nQueries: Int = 5, k: Int = 3): DataFrame = {
     val exact = bruteForceTopK(emb, nQueries, k)
       .select("query_id", "neighbor_id").localCheckpoint()
     val exactN = exact.agg(count(lit(1)).as("n_exact"))
@@ -379,33 +373,22 @@ object Similarity {
         .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
         .agg(count(lit(1)).as("n_hit"))
         .select(lit(name).as("method"), col("n_hit"))
-    hits(ivfTopK(emb, nQueries, k, nlists = 16, nprobe = 2,
-        lists = ivfLists), "ivf")
+    hits(ivfTopK(emb, lists, nQueries, k, nlists = 16, nprobe = 2), "ivf")
       .unionByName(hits(lshTopK(emb, nQueries, k, bits = 4), "lsh"))
       .unionByName(hits(multiProbeTopK(emb, nQueries, k, bits = 6),
         "multiprobe"))
-      .unionByName(hits(pqTopK(emb, nQueries, k, trained = pqTrained), "pq"))
+      .unionByName(hits(pqTopK(emb, codebooks, codes, nQueries, k), "pq"))
       .crossJoin(broadcast(exactN))
       .select(col("method"), col("n_hit"), col("n_exact"),
         round(col("n_hit").cast("double") / col("n_exact"), 6).as("recall"))
       .orderBy("method")
   }
 
-  /** IVF with a TRAINED coarse quantizer: centroids come from
-    * [[Clustering.kmeansFit]] (exact-DECIMAL Lloyd) instead of the first-k
-    * seed vectors — the production shape for a 100 TB ANN index, where the
-    * quantizer is fit to the data distribution so the inverted lists are
-    * balanced and probes hit the dense regions. Assignment and probing run
-    * in the SAME exploded-decimal space as the trainer (decimal dots,
-    * double division rounded to 6 — bit-consistent across engines and
-    * partitionings); the final exact rank inside the probed lists runs in
-    * array space like [[ivfTopK]]. Centroid frames stay broadcast-sized;
-    * the corpus never collects.
-    */
   /** Fit ONLY the coarse quantizer (the centroid table, nlists×dims rows
     * of DECIMAL components) — the artifact a production index persists
     * once per corpus and every probe run loads instead of re-fitting.
-    * Feed the result back through `ivfTrainedTopK(centroids = Some(...))`.
+    * [[ivfTrainedTopK]], [[ivfAssign]] and [[ivfAppend]] take it as
+    * `centroids`.
     */
   def fitQuantizer(emb: DataFrame, nlists: Int = 8, iters: Int = 1,
       exploded: Option[DataFrame] = None): DataFrame =
@@ -430,25 +413,23 @@ object Similarity {
     * Determinism: the whole fit/encode/score path is the exploded-DECIMAL
     * discipline (argmin on exact decimals, means re-quantized once, ADC
     * partials exact) — bit-identical across engines/partitionings.
+    *
+    * The trained artifacts come in: `codebooks` and `codes` from
+    * [[fitPq]] under the same `m`, so a probe run pays only the query-side
+    * explode and the ADC scan, never the corpus-wide train/encode passes.
     */
-  def pqTopK(emb: DataFrame, nQueries: Int = 5, k: Int = 3,
-      m: Int = 8, ksub: Int = 4,
-      trained: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+  def pqTopK(emb: DataFrame, codebooks: DataFrame, codes: DataFrame,
+      nQueries: Int = 5, k: Int = 3, m: Int = 8): DataFrame = {
     val dims = embDims(emb)
     require(dims % m == 0, s"dims $dims not divisible by $m subspaces")
     val dsub = dims / m
-    // trained artifacts — (codebooks, codes) — either fit in-plan or
-    // handed in from a persisted fixture (the ann_recall discipline:
-    // probe runs pay only the query-side explode + the ADC scan, never
-    // the corpus-wide train/encode passes)
-    val (cen1, codes) = trained.getOrElse(fitPq(emb, m, ksub))
     val lut = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"),
         posexplode(col("embedding")).as(Seq("dim", "x")))
       .select(col("query_id"), expr(s"dim div $dsub").as("m"),
         expr(s"dim % $dsub").as("dm"),
         col("x").cast("double").cast("decimal(12,8)").as("xq"))
-      .join(broadcast(cen1), Seq("m", "dm"))
+      .join(broadcast(codebooks), Seq("m", "dm"))
       .groupBy("query_id", "m", "cluster")
       .agg(sum((col("xq") - col("cd")) * (col("xq") - col("cd"))).as("pd"))
     val adc = codes.join(broadcast(lut), Seq("m", "cluster"))
@@ -527,19 +508,28 @@ object Similarity {
     // FILTER of one frame — the decimal cast is row-wise, so
     // explodeDecimal(emb).filter(p) ≡ explodeDecimal(emb.filter(p)))
     val ex = exploded.getOrElse(Clustering.explodeDecimal(emb))
+    rankedLists(ex, centroids).filter(col("rn") === 1)
+      .select(col("vec_id"), col("cluster").as("list_id"))
+  }
+
+  /** Every (vector, trained list) pair of the exploded-decimal corpus `ex`
+    * with its rank `rn` per vector: rounded cosine desc, cluster
+    * tie-break, decimal dots and norms. `rn = 1` is the assignment,
+    * `rn <= nprobe` a query's probe lists.
+    */
+  private def rankedLists(ex: DataFrame, centroids: DataFrame): DataFrame = {
     val vnorm = ex.groupBy("vec_id")
       .agg(sqrt(sum(col("xq") * col("xq")).cast("double")).as("vnrm"))
     val cnorm = centroids.groupBy("cluster")
       .agg(sqrt(sum(col("cd") * col("cd")).cast("double")).as("cnrm"))
     val dots = ex.join(broadcast(centroids), "dim")
       .groupBy("vec_id", "cluster").agg(sum(col("xq") * col("cd")).as("dt"))
-    val ccos = dots.join(vnorm, "vec_id").join(broadcast(cnorm), "cluster")
-      .withColumn("ccos",
-        round(col("dt").cast("double") / (col("vnrm") * col("cnrm")), 6))
     val w = Window.partitionBy("vec_id")
       .orderBy(col("ccos").desc, col("cluster"))
-    ccos.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("cluster").as("list_id"))
+    dots.join(vnorm, "vec_id").join(broadcast(cnorm), "cluster")
+      .withColumn("ccos",
+        round(col("dt").cast("double") / (col("vnrm") * col("cnrm")), 6))
+      .withColumn("rn", row_number().over(w))
   }
 
   /** Incremental IVF index maintenance: append a new vector batch to a
@@ -611,33 +601,25 @@ object Similarity {
       .unionByName(moved)
   }
 
-  def ivfTrainedTopK(emb: DataFrame, nQueries: Int = 5, k: Int = 3,
-      nlists: Int = 8, nprobe: Int = 2, iters: Int = 1,
-      centroids: Option[DataFrame] = None): DataFrame = {
-    // a persisted quantizer skips the Lloyd iterations entirely — the
-    // exploded corpus is still needed for assignment, but that is one
-    // map-side explode, not an iterative fit
-    val (ex, cen) = centroids match {
-      case Some(c) => (Clustering.explodeDecimal(emb), c)
-      case None =>
-        val (e, _, c) = Clustering.kmeansFit(emb, nlists, iters, None)
-        (e, c)
-    }
-    val vnorm = ex.groupBy("vec_id")
-      .agg(sqrt(sum(col("xq") * col("xq")).cast("double")).as("vnrm"))
-    val cnorm = cen.groupBy("cluster")
-      .agg(sqrt(sum(col("cd") * col("cd")).cast("double")).as("cnrm"))
-    val dots = ex.join(broadcast(cen), "dim")
-      .groupBy("vec_id", "cluster").agg(sum(col("xq") * col("cd")).as("dt"))
-    val ccos = dots.join(vnorm, "vec_id").join(broadcast(cnorm), "cluster")
-      .withColumn("ccos",
-        round(col("dt").cast("double") / (col("vnrm") * col("cnrm")), 6))
-    val wA = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cluster"))
-    val assignedLists = ccos.withColumn("rn", row_number().over(wA))
-      .filter(col("rn") === 1).select(col("vec_id"), col("cluster").as("list_id"))
-    val probeLists = ccos.filter(col("vec_id") < nQueries)
-      .withColumn("rn", row_number().over(wA)).filter(col("rn") <= nprobe)
+  /** IVF with a TRAINED coarse quantizer: `centroids` come from
+    * [[fitQuantizer]] (exact-DECIMAL Lloyd) instead of the first-k seed
+    * vectors — the production shape for a 100 TB ANN index, where the
+    * quantizer is fit to the data distribution so the inverted lists are
+    * balanced and probes hit the dense regions. Assignment and probing run
+    * in the SAME exploded-decimal space as the trainer (decimal dots,
+    * double division rounded to 6 — bit-consistent across engines and
+    * partitionings); the final exact rank inside the probed lists runs in
+    * array space like [[ivfTopK]]. Centroid frames stay broadcast-sized;
+    * the corpus never collects, and a probe run pays one map-side explode,
+    * never an iterative fit.
+    */
+  def ivfTrainedTopK(emb: DataFrame, centroids: DataFrame,
+      nQueries: Int = 5, k: Int = 3, nprobe: Int = 2): DataFrame = {
+    val ranked = rankedLists(Clustering.explodeDecimal(emb), centroids)
+    val assignedLists = ranked.filter(col("rn") === 1)
+      .select(col("vec_id"), col("cluster").as("list_id"))
+    val probeLists = ranked
+      .filter(col("vec_id") < nQueries && col("rn") <= nprobe)
       .select(col("vec_id").as("query_id"), col("cluster").as("list_id"))
 
     val e = emb.repartition(col("vec_id")).select(col("vec_id"),
@@ -780,18 +762,15 @@ object Similarity {
     * 100× scale-up: bands give OR-amplified recall, adaptive bits hold
     * per-bucket candidate density constant so the self-join stays ∝ N.
     *
-    * The sizing count runs EAGERLY at plan-construction time. For a bare
-    * parquet scan that is metadata-cheap (row-group counts; no column data
-    * is read) — but a filtered/derived `emb` pays a full pass, and every
-    * caller pays it independently. Callers that already know the corpus
-    * size (a StatsIndex total, a prior `.count()`, a persisted manifest)
-    * should pass it via `knownCount` and the probe is skipped entirely
-    * (round-6 advice).
+    * The corpus size `nRows` is a required input of the sizing rule: the
+    * caller reads it where it is cheap and shared (`Tables.rowCount` for a
+    * declared table, a prior `.count()` for a derived frame), so the
+    * operator never runs a sizing probe of its own.
     */
-  def embeddingNearDupsAdaptive(emb: DataFrame, threshold: Double = 0.35,
-      bands: Int = 4, knownCount: Option[Long] = None): DataFrame =
+  def embeddingNearDupsAdaptive(emb: DataFrame, nRows: Long,
+      threshold: Double = 0.35, bands: Int = 4): DataFrame =
     embeddingNearDupsBanded(emb, threshold, bands,
-      adaptiveBitsPerBand(knownCount.getOrElse(emb.count())))
+      adaptiveBitsPerBand(nRows))
 
   /** [[embeddingNearDups]] (the didactic SINGLE-bucket blocking baseline)
     * with its width chosen by the same [[adaptiveBitsPerBand]] rule —
@@ -805,12 +784,12 @@ object Similarity {
     * blocking shrinks as bits grow — the OR-amplified
     * [[embeddingNearDupsAdaptive]] banded family is the recall-correct
     * production path, and `dedup_minhash_recall`/`ann_recall` measure
-    * that tradeoff on the declared surface.
+    * that tradeoff on the declared surface. `nRows` is the corpus size,
+    * as for [[embeddingNearDupsAdaptive]].
     */
-  def embeddingNearDupsAdaptiveSingle(emb: DataFrame,
-      threshold: Double = 0.35, knownCount: Option[Long] = None): DataFrame =
-    embeddingNearDups(emb, threshold,
-      adaptiveBitsPerBand(knownCount.getOrElse(emb.count()), minBits = 4))
+  def embeddingNearDupsAdaptiveSingle(emb: DataFrame, nRows: Long,
+      threshold: Double = 0.35): DataFrame =
+    embeddingNearDups(emb, threshold, adaptiveBitsPerBand(nRows, minBits = 4))
 
   /** Hard-triplet mining for metric-learning batches: per anchor, the
     * HARDEST positive (same label, MINIMUM cosine — the same-class pair
@@ -881,9 +860,10 @@ object Similarity {
     * Output is the per-cluster census (cluster_id, n_vecs, n_dropped,
     * dropped_id_sum) — domain-bounded (k rows), so the gate stays small
     * at any SF while hashing every drop decision through the id sum.
+    * `nRows` is the corpus size, as for [[embeddingNearDupsAdaptive]].
     */
-  def semanticDedup(emb: DataFrame, k: Int = 8, threshold: Double = 0.35,
-      knownCount: Option[Long] = None): DataFrame = {
+  def semanticDedup(emb: DataFrame, nRows: Long, k: Int = 8,
+      threshold: Double = 0.35): DataFrame = {
     val e = emb.select(col("vec_id"), col("embedding"),
       norm(col("embedding")).as("nrm"))
     val cent = e.filter(col("vec_id") < k)
@@ -897,8 +877,7 @@ object Similarity {
         .orderBy(col("ccos").desc, col("cid")))) // k-row frames: bounded
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cid"))
-    val bits = adaptiveBitsPerBand(knownCount.getOrElse(emb.count()),
-      minBits = 4)
+    val bits = adaptiveBitsPerBand(nRows, minBits = 4)
     val dims = embDims(emb)
     val bk = asg.withColumn("bucket",
       lshBucket(col("embedding"), bits, dims))

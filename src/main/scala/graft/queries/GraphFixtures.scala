@@ -24,10 +24,25 @@ import graft.ops.Graph
   *    two source tables (no join, no shuffle), so a regenerated table at
   *    the same path can never serve a stale artifact;
   *  - **raw-equivalent content**: the edge fixture stores the EXACT join
-  *    output (directed, duplicates preserved), so every consumer's
-  *    semantics — including multiplicity-sensitive ones — are unchanged;
-  *    the downstream distinct/symmetrize each operator already does still
-  *    runs, it just starts from a parquet scan instead of a join.
+  *    output (directed, duplicates preserved), so multiplicity-sensitive
+  *    consumers read it unchanged.
+  *
+  * **The iterative operators' input contract.** The loops in
+  * [[graft.ops.Graph]] never distinct, symmetrize, collect a node set or
+  * count one themselves; every caller hands them the prepared input, and
+  * these fixtures are how declared queries prepare it:
+  *  - `pagerank`, `personalizedPagerank` and `hits` take the DIRECTED
+  *    distinct edge set ([[edgesDistinct]]);
+  *  - `hopDistances`, `seededDistances`, `kcore` and `labelPropagation`
+  *    take the SYMMETRIC distinct edge set ([[edgesSymDistinct]]: both
+  *    orientations of every edge, each once);
+  *  - alongside it, the node frame (column `node`) and/or its row count:
+  *    every endpoint ([[nodesWithCount]]; symmetrizing keeps the endpoint
+  *    set, so one node fixture serves both edge sets), or, for `hits`, the
+  *    distinct sources ([[srcNodesWithCount]]). The count is the
+  *    per-round broadcast gate's input.
+  * A caller with other edges (a spec, a subgraph) prepares the same four
+  * things in plan: distinct, symmetrize, endpoint set, count.
   *
   * The label-propagation fixture layers the same idiom one level up: LP
   * labels are deterministic given (edges, rounds) — synchronous rounds,
@@ -129,12 +144,13 @@ object GraphFixtures {
         .distinct()
     }
 
-  /** Deterministic label-propagation labels over [[edges]] after `rounds`
-    * synchronous self-vote min-tie-break rounds — fit once per
-    * (corpus, rounds), shared by the community and modularity queries.
+  /** Deterministic label-propagation labels over [[edgesSymDistinct]]
+    * after `rounds` synchronous self-vote min-tie-break rounds — fit once
+    * per (corpus, rounds), shared by the community and modularity queries.
     */
   def lpLabels(s: SparkSession, dir: String, rounds: Int): DataFrame =
     Artifacts.parquet(s, path(s, dir, s"lp$rounds")) {
-      Graph.labelPropagation(edges(s, dir), rounds)
+      Graph.labelPropagation(edgesSymDistinct(s, dir),
+        nodesWithCount(s, dir), rounds)
     }
 }

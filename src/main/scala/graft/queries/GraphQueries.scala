@@ -193,9 +193,8 @@ object GraphQueries {
     // be a skew trap).
     QueryDef("graph_hits",
       (s, dir) => {
-        val out = Graph.hits(GraphFixtures.edgesDistinct(s, dir), 2,
-            predistinct = true,
-            hubsWithCount = Some(GraphFixtures.srcNodesWithCount(s, dir)))
+        val out = Graph.hits(GraphFixtures.edgesDistinct(s, dir),
+            GraphFixtures.srcNodesWithCount(s, dir), 2)
           .select(col("role"), concat(
             when(col("node") % 2 === 0, "s").otherwise("c"),
             (col("node") / 2).cast("long").cast("string")).as("node"),
@@ -221,9 +220,8 @@ object GraphQueries {
     QueryDef("graph_ppr",
       (s, dir) => {
         Graph.personalizedPagerank(GraphFixtures.edgesDistinct(s, dir),
-            col("node") % 2 === 0 && col("node").between(2, 8),
-            PrIters, predistinct = true,
-            nodesWithCount = Some(GraphFixtures.nodesWithCount(s, dir)))
+            GraphFixtures.nodesWithCount(s, dir),
+            col("node") % 2 === 0 && col("node").between(2, 8), PrIters)
           .filter(col("r") > 0)
           .select(concat(
             when(col("node") % 2 === 0, "s").otherwise("c"),
@@ -246,9 +244,8 @@ object GraphQueries {
         // is the family-shared persisted fixture (GraphFixtures.edges):
         // at sf2+ the lineitem⋈orders build is a full shuffle join, paid
         // once per corpus instead of once per graph query.
-        Graph.pagerank(GraphFixtures.edgesDistinct(s, dir), PrIters,
-            predistinct = true,
-            nodesWithCount = Some(GraphFixtures.nodesWithCount(s, dir)))
+        Graph.pagerank(GraphFixtures.edgesDistinct(s, dir),
+            GraphFixtures.nodesWithCount(s, dir), PrIters)
           .select(concat(
             when(col("node") % 2 === 0, "s").otherwise("c"),
             (col("node") / 2).cast("long").cast("string")).as("node"),
@@ -266,8 +263,8 @@ object GraphQueries {
     QueryDef("graph_hop_distance",
       (s, dir) => {
         Graph.hopDistances(GraphFixtures.edgesSymDistinct(s, dir),
-            col("node") < 5, rounds = 4, presymmetrized = true,
-            nodesWithCount = Some(GraphFixtures.nodesWithCount(s, dir)))
+            GraphFixtures.nodesWithCount(s, dir), col("node") < 5,
+            rounds = 4)
           .groupBy("hop").agg(count(lit(1)).as("n_nodes"))
           .orderBy("hop")
       },
@@ -298,8 +295,8 @@ object GraphQueries {
     QueryDef("graph_closeness",
       (s, dir) => {
         Graph.seededDistances(GraphFixtures.edgesSymDistinct(s, dir),
-            col("node") < 5, rounds = 4, presymmetrized = true,
-            prenodes = Some(GraphFixtures.nodesWithCount(s, dir)._1))
+            GraphFixtures.nodesWithCount(s, dir)._1, col("node") < 5,
+            rounds = 4)
           .filter(col("d") > 0)
           .groupBy("seed")
           .agg(count(lit(1)).as("n_reached"),
@@ -408,10 +405,8 @@ object GraphQueries {
     // oracle unrolls the identical rounds.
     QueryDef("graph_kcore",
       (s, dir) => {
-        Graph.kcore(GraphFixtures.edgesSymDistinct(s, dir), k = 8,
-            rounds = 3, presymmetrized = true,
-            knownNodeCount =
-              Some(GraphFixtures.nodesWithCount(s, dir)._2))
+        Graph.kcore(GraphFixtures.edgesSymDistinct(s, dir),
+            GraphFixtures.nodesWithCount(s, dir)._2, k = 8, rounds = 3)
           .groupBy("core_degree").agg(count(lit(1)).as("n_nodes"))
           .orderBy("core_degree")
       },

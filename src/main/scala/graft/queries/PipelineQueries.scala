@@ -447,7 +447,7 @@ object PipelineQueries {
 
     QueryDef("dedup_simhash",
       (s, dir) => Dedup.simhashPairs(Tables.read(s, dir, "documents"),
-        knownCount = Some(Tables.rowCount(s, dir, "documents"))),
+        Tables.rowCount(s, dir, "documents")),
       Some(simhashOracle)),
 
     QueryDef("dedup_ngram_jaccard",
@@ -474,7 +474,7 @@ object PipelineQueries {
     QueryDef("dedup_embedding",
       (s, dir) => Similarity.embeddingNearDupsAdaptiveSingle(
         Tables.read(s, dir, "embeddings"),
-        knownCount = Some(Tables.rowCount(s, dir, "embeddings"))),
+        Tables.rowCount(s, dir, "embeddings")),
       Some(s"""WITH ${adaptiveBitsCte(4)},
               |bk AS (SELECT vec_id, embedding,
               |  ${nrmSql("embedding")} AS nrm,
@@ -588,7 +588,7 @@ object PipelineQueries {
       (s, dir) => {
         val pairs = Similarity.embeddingNearDupsAdaptive(
           Tables.read(s, dir, "embeddings"),
-          knownCount = Some(Tables.rowCount(s, dir, "embeddings")))
+          Tables.rowCount(s, dir, "embeddings"))
         val sym = pairs
           .select(col("vec_a").as("node"), col("vec_b").as("nb"),
             col("cos_sim"))
@@ -699,8 +699,8 @@ object PipelineQueries {
     // 4096) the rule floors at 6 bits ≡ the former fixed setting.
     QueryDef("dedup_embedding_banded",
       (s, dir) => Similarity.embeddingNearDupsAdaptive(
-        Tables.read(s, dir, "embeddings"), threshold = 0.35, bands = 4,
-        knownCount = Some(Tables.rowCount(s, dir, "embeddings"))),
+        Tables.read(s, dir, "embeddings"),
+        Tables.rowCount(s, dir, "embeddings"), threshold = 0.35, bands = 4),
       Some(bandedEmbeddingOracle)),
 
     // Threshold-calibration curve for embedding dedup: candidate-pair
@@ -712,8 +712,8 @@ object PipelineQueries {
     QueryDef("dedup_threshold_curve",
       (s, dir) => {
         val pairs = Similarity.embeddingNearDupsAdaptive(
-          Tables.read(s, dir, "embeddings"), threshold = 0.0, bands = 4,
-          knownCount = Some(Tables.rowCount(s, dir, "embeddings")))
+          Tables.read(s, dir, "embeddings"),
+          Tables.rowCount(s, dir, "embeddings"), threshold = 0.0, bands = 4)
         val byBucket = pairs
           .withColumn("bucket", floor(col("cos_sim") * 20).cast("long"))
           .groupBy("bucket").agg(count(lit(1)).as("n_pairs"))
@@ -831,8 +831,11 @@ object PipelineQueries {
               |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin)),
 
     QueryDef("ann_ivf",
-      (s, dir) => Similarity.ivfTopK(Tables.read(s, dir, "embeddings"),
-        nQueries = 5, k = 3, nlists = 16, nprobe = 2),
+      (s, dir) => {
+        val emb = Tables.read(s, dir, "embeddings")
+        Similarity.ivfTopK(emb, Similarity.fitIvfLists(emb, nlists = 16),
+          nQueries = 5, k = 3, nlists = 16, nprobe = 2)
+      },
       Some(ivfOracle)),
 
     // IVF with a kmeans-TRAINED coarse quantizer (the production 100 TB
@@ -854,8 +857,8 @@ object PipelineQueries {
             Artifacts.key("ivfq", dir, emb.select("vec_id", "embedding"))) {
           Similarity.fitQuantizer(emb, nlists = 8, iters = 1)
         }
-        Similarity.ivfTrainedTopK(emb, nQueries = 5, k = 3, nlists = 8,
-          nprobe = 2, iters = 1, centroids = Some(centroids))
+        Similarity.ivfTrainedTopK(emb, centroids, nQueries = 5, k = 3,
+          nprobe = 2)
       },
       Some(ivfTrainedOracle())),
 
@@ -1003,10 +1006,8 @@ object PipelineQueries {
       (s, dir) => {
         val root = annArtifactsRoot(s, dir)
         Similarity.pqTopK(Tables.read(s, dir, "embeddings"),
-          nQueries = 5, k = 3,
-          trained = Some((
-            Artifacts.scan(s, s"$root/pq_codebooks"),
-            Artifacts.scan(s, s"$root/pq_codes"))))
+          Artifacts.scan(s, s"$root/pq_codebooks"),
+          Artifacts.scan(s, s"$root/pq_codes"), nQueries = 5, k = 3)
       },
       Some(pqOracle())),
 
@@ -1080,11 +1081,9 @@ object PipelineQueries {
       (s, dir) => {
         val root = annArtifactsRoot(s, dir)
         Similarity.annRecall(Tables.read(s, dir, "embeddings"),
-          nQueries = 5, k = 3,
-          ivfLists = Some(Artifacts.scan(s, s"$root/ivf_lists")),
-          pqTrained = Some((
-            Artifacts.scan(s, s"$root/pq_codebooks"),
-            Artifacts.scan(s, s"$root/pq_codes"))))
+          Artifacts.scan(s, s"$root/ivf_lists"),
+          Artifacts.scan(s, s"$root/pq_codebooks"),
+          Artifacts.scan(s, s"$root/pq_codes"), nQueries = 5, k = 3)
       },
       Some(annRecallOracle)),
 
@@ -1332,7 +1331,7 @@ object PipelineQueries {
     QueryDef("dedup_semantic",
       (s, dir) => Similarity.semanticDedup(
         Tables.read(s, dir, "embeddings"),
-        knownCount = Some(Tables.rowCount(s, dir, "embeddings"))),
+        Tables.rowCount(s, dir, "embeddings")),
       Some(s"""WITH ${adaptiveBitsCte(4)},
               |e AS (SELECT vec_id, embedding, ${nrmSql("embedding")} AS nrm
               |  FROM embeddings),

@@ -117,7 +117,8 @@ object PairAudit {
 
     val ops: Seq[(String, () => (Long, Long))] = Seq(
       "dedup_simhash" ->
-        (() => breakdown(Dedup.simhashCandidates(docs), "doc_a", "doc_b")),
+        (() => breakdown(Dedup.simhashCandidates(docs,
+          Dedup.simhashNumBlocks(docs.count())), "doc_a", "doc_b")),
       "dedup_ngram_jaccard+containment" ->
         (() => breakdown(Dedup.lshCandidates(docs), "doc_a", "doc_b")),
       "join_fuzzy" ->

@@ -165,28 +165,26 @@ class ArtifactsSpec extends SparkSpec {
         col("l_orderkey") === col("o_orderkey"))
       .select((col("l_suppkey") * 2).as("src"),
         (col("o_custkey") * 2 + 1).as("dst"))
-    val dist = fresh.distinct()
-    val nodes = dist.select(col("src").as("node"))
-      .unionByName(dist.select(col("dst").as("node"))).distinct()
+    val g = PreparedGraph(fresh)
     val cases: Seq[(String, () => DataFrame, DataFrame)] = Seq(
       // duplicates preserved: the edge list is the raw join output
       ("edges", () => GraphFixtures.edges(spark, sf), fresh),
-      ("edgedist", () => GraphFixtures.edgesDistinct(spark, sf), dist),
+      ("edgedist", () => GraphFixtures.edgesDistinct(spark, sf), g.directed),
       ("edgesym", () => GraphFixtures.edgesSymDistinct(spark, sf),
-        dist.unionByName(dist.select(col("dst").as("src"),
-          col("src").as("dst"))).distinct()),
-      ("nodes", () => GraphFixtures.nodesWithCount(spark, sf)._1, nodes),
+        g.symmetric),
+      ("nodes", () => GraphFixtures.nodesWithCount(spark, sf)._1, g.nodes._1),
       ("srcnodes", () => GraphFixtures.srcNodesWithCount(spark, sf)._1,
-        dist.select(col("src").as("node")).distinct()),
+        g.hubs._1),
       ("lp3", () => GraphFixtures.lpLabels(spark, sf, rounds = 3),
-        Graph.labelPropagation(fresh, rounds = 3)))
+        Graph.labelPropagation(g.symmetric, g.nodes, rounds = 3)))
     cases.foreach { case (kind, persisted, expected) =>
       val want = rows(expected)
       assert(want.nonEmpty, kind)
       assert(rows(persisted()) == want, s"$kind: first call")
       assert(rows(persisted()) == want, s"$kind: second call")
     }
-    assert(GraphFixtures.nodesWithCount(spark, sf)._2 == nodes.count())
+    assert(GraphFixtures.nodesWithCount(spark, sf)._2 == g.nodes._2)
+    assert(GraphFixtures.srcNodesWithCount(spark, sf)._2 == g.hubs._2)
   }
 }
 

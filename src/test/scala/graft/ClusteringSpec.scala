@@ -62,13 +62,14 @@ class ClusteringSpec extends SparkSpec {
   test("persisted quantizer: parquet-roundtripped centroids reproduce the fresh fit") {
     val emb = Tables.read(spark, sf, "embeddings")
     val fresh = graft.ops.Similarity
-      .ivfTrainedTopK(emb, nQueries = 3, k = 3, nlists = 4, nprobe = 2)
+      .ivfTrainedTopK(emb, graft.ops.Similarity.fitQuantizer(emb, nlists = 4),
+        nQueries = 3, k = 3, nprobe = 2)
       .collect().map(_.toSeq).toSeq
     val dir = scratch("quantizer_spec")
     graft.ops.Similarity.fitQuantizer(emb, nlists = 4).write.parquet(dir)
     val cached = graft.ops.Similarity
-      .ivfTrainedTopK(emb, nQueries = 3, k = 3, nlists = 4, nprobe = 2,
-        centroids = Some(spark.read.parquet(dir)))
+      .ivfTrainedTopK(emb, spark.read.parquet(dir), nQueries = 3, k = 3,
+        nprobe = 2)
       .collect().map(_.toSeq).toSeq
     // DECIMAL components survive the parquet roundtrip bit-exactly, so
     // the probe results must be identical, not merely close

@@ -16,7 +16,7 @@ class DataSelectionSpec extends SparkSpec {
   private lazy val docs = Tables.read(spark, sf, "documents")
 
   test("semanticDedup: census conserves the corpus; drops stay in-cluster") {
-    val census = Similarity.semanticDedup(emb).collect()
+    val census = Similarity.semanticDedup(emb, emb.count()).collect()
     assert(census.map(_.getLong(1)).sum === emb.count(),
       "every vector lands in exactly one cluster")
     assert(census.forall(r => r.getLong(2) <= r.getLong(1)),
@@ -34,7 +34,8 @@ class DataSelectionSpec extends SparkSpec {
     // reconstruct one dropped pair set with brute force on the small SF:
     // every (cluster, bucket) pair with cos >= 0.35 — the census's
     // n_dropped must equal the distinct higher-ids of that set per cluster
-    val census = Similarity.semanticDedup(emb, threshold = 0.999).collect()
+    val census = Similarity.semanticDedup(emb, emb.count(), threshold = 0.999)
+      .collect()
     // at an impossible threshold nothing drops (no exact duplicates in
     // the generator's embedding table)
     assert(census.map(_.getLong(2)).sum === 0L)

@@ -34,7 +34,8 @@ class GraphFixturesSpec extends SparkSpec {
   }
 
   test("LP label fixture ≡ fresh labelPropagation") {
-    val fresh = Graph.labelPropagation(freshEdges, rounds = 3)
+    val g = PreparedGraph(freshEdges)
+    val fresh = Graph.labelPropagation(g.symmetric, g.nodes, rounds = 3)
       .orderBy("node").collect()
     val fixture = GraphFixtures.lpLabels(spark, sf, rounds = 3)
       .orderBy("node").collect()

@@ -4,8 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{Graph, Scd2}
 
-/** Structural invariants of the graph/SCD2 operators (the oracle pins the
-  * exact values; these pin the shape on hand-built frames).
+/** Structural invariants and hand-computed values of the graph/SCD2
+  * operators on hand-built frames (the oracle pins the values on the
+  * order graph). The iterative loops take prepared input, built here by
+  * [[PreparedGraph]].
   */
 class GraphSpec extends SparkSpec {
 
@@ -14,7 +16,9 @@ class GraphSpec extends SparkSpec {
     // path 1-2-3-4 plus disconnected island 10-11
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("src", "dst")
-    val d = Graph.seededDistances(edges, col("node") <= 2, rounds = 3)
+    val g = PreparedGraph(edges)
+    val d = Graph.seededDistances(g.symmetric, g.nodes._1, col("node") <= 2,
+        rounds = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
       .toMap
     assert(d((1L, 1L)) === 0L && d((1L, 2L)) === 1L)
@@ -31,7 +35,9 @@ class GraphSpec extends SparkSpec {
     import spark.implicits._
     // star: 1 -> {2,3,4}; 2..4 are sinks, 1 has no in-edges
     val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("src", "dst")
-    val r = Graph.pagerank(edges, 2).as[(Long, Long)].collect().toMap
+    val g = PreparedGraph(edges)
+    val r = Graph.pagerank(g.directed, g.nodes, 2)
+      .as[(Long, Long)].collect().toMap
     assert(r.size === 4)
     // source node: no in-edges => exactly the 0.15 floor every round
     assert(r(1L) === Graph.BaseScaled)
@@ -45,7 +51,8 @@ class GraphSpec extends SparkSpec {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L))
       .toDF("src", "dst")
-    val hinted = Graph.pagerank(edges, 2)
+    val g = PreparedGraph(edges)
+    val hinted = Graph.pagerank(g.directed, g.nodes, 2)
     // past the gate (broadcastMaxNodes = 0) the hints must vanish; with
     // auto-broadcast disabled the SAME logical plan has to degrade to
     // SortMergeJoin/ShuffledHashJoin — this is what saves the driver at
@@ -55,7 +62,8 @@ class GraphSpec extends SparkSpec {
     val saved = confs.map(k => k -> spark.conf.getOption(k))
     confs.foreach(spark.conf.set(_, "-1"))
     try {
-      val gated = Graph.pagerank(edges, 2, broadcastMaxNodes = 0L)
+      val gated = Graph.pagerank(g.directed, g.nodes, 2,
+        broadcastMaxNodes = 0L)
       val rows = gated.as[(Long, Long)].collect().toMap
       val plan = gated.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastHashJoin"), plan)
@@ -67,6 +75,63 @@ class GraphSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  test("personalizedPagerank: restart mass only on seeds, exact fixed-point ranks") {
+    import spark.implicits._
+    // 1 -> {2, 3}, 2 -> 3, plus an unseeded island 7 -> 8; seed = {1}
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (7L, 8L)).toDF("src", "dst")
+    val g = PreparedGraph(edges)
+    val r = Graph.personalizedPagerank(g.directed, g.nodes,
+        col("node") === 1L, iters = 2)
+      .as[(Long, Long)].collect().toMap
+    // round 1: r1 = 0.15, r2 = r3 = 0.85 * (1.0 div 2) = 0.425
+    // round 2: r2 = 0.85 * (0.15 div 2) = 0.06375,
+    //          r3 = 0.85 * (0.15 div 2 + 0.425 div 1) = 0.425
+    assert(r === Map(1L -> 150000000L, 2L -> 63750000L, 3L -> 425000000L,
+      7L -> 0L, 8L -> 0L))
+  }
+
+  test("hits: exact max-renormed hub and authority scores") {
+    import spark.implicits._
+    // hubs 1 -> {3, 4}, 2 -> 3; the duplicate edge must not count twice
+    val edges = Seq((1L, 3L), (1L, 4L), (2L, 3L), (2L, 3L)).toDF("src", "dst")
+    val g = PreparedGraph(edges)
+    val got = Graph.hits(g.directed, g.hubs, iters = 2)
+      .as[(String, Long, Long)].collect()
+      .map { case (role, n, s) => (role, n) -> s }.toMap
+    // round 1: a = (3: 2e6, 4: 1e6) / 2e6 -> (1e6, 500000);
+    //          h = (1: 1.5e6, 2: 1e6) / 1.5e6 -> (1e6, 666666)
+    // round 2: a = (3: 1666666, 4: 1e6) / 1666666 -> (1e6, 600000);
+    //          h = (1: 1.6e6, 2: 1e6) / 1.6e6 -> (1e6, 625000)
+    assert(got === Map(("hub", 1L) -> 1000000L, ("hub", 2L) -> 625000L,
+      ("authority", 3L) -> 1000000L, ("authority", 4L) -> 600000L))
+  }
+
+  test("hopDistances: hops within the round bound, -1 beyond it and off-component") {
+    import spark.implicits._
+    // path 1-2-3-4 plus island 10-11; source {1}, two rounds
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("src", "dst")
+    val g = PreparedGraph(edges)
+    val hop = Graph.hopDistances(g.symmetric, g.nodes, col("node") === 1L,
+        rounds = 2)
+      .as[(Long, Long)].collect().toMap
+    assert(hop === Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> -1L,
+      10L -> -1L, 11L -> -1L))
+  }
+
+  test("kcore: synchronous peel cascades one layer per round") {
+    import spark.implicits._
+    // triangle 1-2-3 with the tail 3-4-5, k = 2: round 1 peels 5, round 2
+    // peels 4 (its degree fell to 1), leaving the triangle
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
+      .toDF("src", "dst")
+    val g = PreparedGraph(edges)
+    def core(rounds: Int) = Graph.kcore(g.symmetric, g.nodes._2, k = 2,
+        rounds = rounds)
+      .as[(Long, Long)].collect().toMap
+    assert(core(1) === Map(1L -> 2L, 2L -> 2L, 3L -> 3L))
+    assert(core(2) === Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
   }
 
   test("scd2: changed keys get a closed old version and one current new one") {
@@ -130,7 +195,8 @@ class GraphSpec extends SparkSpec {
       for (a <- ids; b <- ids if a < b) yield (a, b)
     val edges = (clique(0L to 4L) ++ clique(10L to 14L) :+ (4L, 10L))
       .toDF("src", "dst")
-    val got = Graph.labelPropagation(edges, rounds = 3)
+    val g = PreparedGraph(edges)
+    val got = Graph.labelPropagation(g.symmetric, g.nodes, rounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // each clique converges to its minimum id; the bridge doesn't merge them
     assert((0L to 4L).forall(got(_) == 0L), s"clique A: $got")
@@ -146,8 +212,12 @@ class GraphSpec extends SparkSpec {
       .select((col("l_suppkey") * 2).as("src"),
         (col("o_custkey") * 2 + 1).as("dst"))
       .filter(col("src") < 400) // deterministic subgraph, not limit()
-    val a = Graph.labelPropagation(edges.repartition(1), rounds = 2)
-    val b = Graph.labelPropagation(edges.repartition(13), rounds = 2)
+    def lp(e: org.apache.spark.sql.DataFrame) = {
+      val g = PreparedGraph(e)
+      Graph.labelPropagation(g.symmetric, g.nodes, rounds = 2)
+    }
+    val a = lp(edges.repartition(1))
+    val b = lp(edges.repartition(13))
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 

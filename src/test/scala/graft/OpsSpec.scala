@@ -56,7 +56,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash: identical docs have hamming 0") {
-    val pairs = Dedup.simhashPairs(docs, maxHamming = 0)
+    val pairs = Dedup.simhashPairs(docs, docs.count(), maxHamming = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(pairs.contains((1L, 2L)))
   }
@@ -88,7 +88,7 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(brute.nonEmpty, "fixture corpus must contain near-dups")
     for (b <- Dedup.SimhashBlockLadder) {
-      val blocked = Dedup.simhashCandidates(corpus, forceBlocks = Some(b))
+      val blocked = Dedup.simhashCandidates(corpus, b)
         .filter(col("hamming") <= Dedup.SimhashMaxHamming)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(blocked === brute, s"rung B=$b lost or invented pairs")
@@ -204,7 +204,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("seeded IVF quantizer: sampled centroids, shape intact, measurable recall") {
     val emb = graft.core.Tables.read(spark, sf, "embeddings")
-    val out = Similarity.ivfTopK(emb, nQueries = 3, k = 3,
+    val lists = Similarity.fitIvfLists(emb, nlists = 16, seed = Some(7L))
+    val out = Similarity.ivfTopK(emb, lists, nQueries = 3, k = 3,
       nlists = 16, nprobe = 2, seed = Some(7L)).collect()
     // each query yields exactly k neighbors with dense ranks, self excluded
     assert(out.length === 9)
@@ -216,7 +217,9 @@ class SimilaritySpec extends SparkSpec {
 
   test("PQ: dense ranks, self excluded, nonzero brute-force overlap, repartition-stable") {
     val emb = graft.core.Tables.read(spark, sf, "embeddings")
-    val pq = Similarity.pqTopK(emb, nQueries = 3, k = 5).collect()
+    val (codebooks, codes) = Similarity.fitPq(emb)
+    val pq = Similarity.pqTopK(emb, codebooks, codes, nQueries = 3, k = 5)
+      .collect()
     assert(pq.length === 15)
     assert(pq.forall(r => r.getLong(2) != r.getLong(0))) // self excluded
     assert(pq.groupBy(_.getLong(0)).values
@@ -234,14 +237,19 @@ class SimilaritySpec extends SparkSpec {
     val hits = pq.map(r => (r.getLong(0), r.getLong(2))).count(exact)
     assert(hits > 0, s"PQ found none of the exact top-5 pairs")
 
-    val again = Similarity.pqTopK(emb.repartition(7), nQueries = 3, k = 5)
+    val emb7 = emb.repartition(7)
+    val (codebooks7, codes7) = Similarity.fitPq(emb7)
+    val again = Similarity.pqTopK(emb7, codebooks7, codes7, nQueries = 3,
+        k = 5)
       .collect().map(_.toSeq)
     assert(pq.map(_.toSeq).toSeq === again.toSeq)
   }
 
   test("annRecall: one row per method, recall in [0,1], hits bounded by exact") {
     val emb = graft.core.Tables.read(spark, sf, "embeddings")
-    val rows = Similarity.annRecall(emb, nQueries = 3, k = 3).collect()
+    val (codebooks, codes) = Similarity.fitPq(emb)
+    val rows = Similarity.annRecall(emb, Similarity.fitIvfLists(emb),
+        codebooks, codes, nQueries = 3, k = 3).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(rows.map(_._1).toSeq === Seq("ivf", "lsh", "multiprobe", "pq"))
     rows.foreach { case (m, hit, exact, recall) =>
@@ -261,6 +269,13 @@ class SimilaritySpec extends SparkSpec {
       .as[Long].collect().toSeq
     assert(b1 === b2)
     assert(b1.forall(b => b >= 0 && b < 16))
+  }
+
+  test("embDims refuses an empty corpus by name") {
+    val empty = graft.core.Tables.read(spark, sf, "embeddings").limit(0)
+    val e = intercept[IllegalArgumentException](Similarity.embDims(empty))
+    assert(e.getMessage.contains(
+      "embDims needs a non-empty embedding corpus: no vector to size"))
   }
 
   test("banded near-dups are a superset of any single band's pairs") {
@@ -315,7 +330,8 @@ class SimilaritySpec extends SparkSpec {
   test("adaptive near-dups == fixed 6-bit banded at sub-4096 corpus sizes") {
     val emb = graft.core.Tables.read(spark, sf, "embeddings")
     assert(emb.count() <= 4096L)
-    val a = Similarity.embeddingNearDupsAdaptive(emb).collect().map(_.toSeq)
+    val a = Similarity.embeddingNearDupsAdaptive(emb, emb.count())
+      .collect().map(_.toSeq)
     val b = Similarity.embeddingNearDupsBanded(emb,
       threshold = 0.35, bands = 4, bitsPerBand = 6).collect().map(_.toSeq)
     assert(a.toSeq === b.toSeq)
